@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** q199 epoch-cost probe (VERDICT r12 next #3 — the unmet r11 #2 "done"
   * criterion): run the streaming dedup ingest over a scaled corpus with
@@ -43,14 +43,7 @@ object EpochCostProbe {
     val slices = sys.env.get("SPARK_GRAFT_EPOCH_SLICES").map(_.toInt).getOrElse(8)
     val filesPerEpoch = sys.env.get("SPARK_GRAFT_EPOCH_FILES").map(_.toInt)
     val compactEvery = sys.env.get("SPARK_GRAFT_EPOCH_COMPACT").map(_.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-epochcost", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     filesPerEpoch.foreach(n =>
       spark.conf.set("spark.graft.state.filesPerEpoch", n.toString))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Per-query measurement harness for the optimization rounds: run the
   * named queries (args) against SPARK_GRAFT_SF_DIR with the epoch trace
@@ -11,20 +11,18 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.QueryProbe q236_cluster_family_release [more...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   *      SPARK_GRAFT_PROBE_RUNS (default 2), SPARK_GRAFT_PROBE_PLAN=1 to
-  *      dump .explain("formatted") instead of timing.
+  *      run each query once and dump its executed (AQE-final)
+  *      .explain("formatted") plan instead of timing,
+  *      SPARK_GRAFT_PROBE_JOBS=1 to attribute every Spark job and SQL
+  *      execution to its call site, SPARK_GRAFT_PROBE_CONF="k=v;k=v" to
+  *      A/B session confs.
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder("graft-probe", cpus)
     // SPARK_GRAFT_PROBE_CONF="k=v;k=v" — A/B one conf change at a time
     // (empty or '='-less segments — a trailing ';' — are skipped, not a
     // MatchError; ADVICE r19)
@@ -67,8 +65,15 @@ object QueryProbe {
       val fn = qs.getOrElse(name, sys.error(s"unknown query $name"))
       if (sys.env.contains("SPARK_GRAFT_PROBE_PLAN")) {
         println(s"== PLAN $name ==")
-        println(fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        val df = fn(spark, sfDir)
+        df.collect() // finalize AQE so the printed plan is the executed one
+        // the repair fingerprint uses control-char concat separators, which
+        // leak into the printed plan and make the output "binary" to
+        // grep/diff tooling — render them as visible hex escapes instead
+        println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          .flatMap(c => if (c < 0x20 && c != '\n' && c != '\t' && c != '\r')
+            f"\\x${c.toInt}%02x" else c.toString))
       } else (1 to runs).foreach { i =>
         operators.Dedup.epochTrace.clear()
         jobLog.clear()

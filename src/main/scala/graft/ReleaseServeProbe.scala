@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** q227 probe-seam split (VERDICT r18 next #7): the q227 gate pays TWO
   * forced-hot store builds + the coordinated release + the fusion per
@@ -28,14 +28,7 @@ object ReleaseServeProbe {
     require(args.length >= 2, "usage: ReleaseServeProbe <artifact> <dir> [dir...]")
     val artifact = args(0)
     val dirs = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-releaseserve", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def num(v: Double, digits: Int): String =
       String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 
 /** Empirical scale validation (VERDICT r2 next-round #1): every scale
   * claim in this repo is otherwise proven only by plan shape at sf0.1.
@@ -144,14 +145,7 @@ object ScaleBench {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val artifact = if (args.length > 2) args(2) else "scale_r05.json"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-scalebench", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     buildReplica(spark, base, out)

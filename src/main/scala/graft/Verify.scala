@@ -1,24 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts encoding has drifted across driver data regenerations
-      // (nanos-long -> TIMESTAMP_NTZ micros); graft.core.Tables
-      // .tsAsTimestamp normalizes every encoding at the loader. This
-      // config only matters for the nanos-long generation (a no-op on
-      // NTZ files) — SchemaDriftSpec pins the current encoding.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder("graft-verify", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_ONLY takes FULL query names

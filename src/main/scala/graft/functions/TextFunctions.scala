@@ -66,8 +66,8 @@ object TextFunctions {
     * codegen kernel ([[graft.plans.StopHitsExpr]]) — the higher-order
     * `size(filter(toks, x -> x IN (...)))` form is CodegenFallback
     * (interpreted lambda per element) and dominated the per-document
-    * scoring cost at corpus scale. Callers must have run
-    * `graft.plans.GraftExtensions.register(s)` on the session. */
+    * scoring cost at corpus scale. The function is injected into every
+    * session [[graft.core.GraftSession]] builds. */
   def stopHits(toksCol: String, words: Seq[String]): Column = {
     val list = words.map(w => s"'$w'").mkString(", ")
     expr(s"stop_hits($toksCol, array($list))")

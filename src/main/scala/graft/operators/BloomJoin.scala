@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
 import graft.functions.Dec._
-import graft.plans.GraftExtensions
 
 /** Bloom-filter-pruned join (SURVEY.md §2.11 scale posture).
   *
@@ -61,7 +60,6 @@ object BloomJoin {
       |FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
       |WHERE o.o_orderpriority = '1-URGENT'
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    GraftExtensions.register(s)
     val urgent = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")

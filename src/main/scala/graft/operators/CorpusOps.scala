@@ -172,7 +172,6 @@ object CorpusOps {
          |WHERE quality_score >= 2 AND predicted = 'en'
          |  AND ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 2 = 0
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.plans.GraftExtensions.register(s) // native stop_hits
       val docs = Tables.documents(s, d)
       val keeper = docs
         .groupBy(md5(trim(col("text"))).as("h"))
@@ -599,7 +598,6 @@ object CorpusOps {
   val q130 = QueryDef(
     "q130_bloom_decontaminate",
     contaminationOracle) { (s, d) =>
-    graft.plans.GraftExtensions.register(s)
     val sh = Tables.documents(s, d)
       .withColumn("t", tokens(col("text")))
       .withColumn("g", explode(shinglesN("t", 8)))
@@ -670,7 +668,6 @@ object CorpusOps {
   val q213 = QueryDef(
     "q213_incremental_decontamination",
     contaminationOracle) { (s, d) =>
-    graft.plans.GraftExtensions.register(s)
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val (bench, prune) = benchGramSet(docs)
     val root = java.nio.file.Files.createTempDirectory("graft-contam")
@@ -719,7 +716,6 @@ object CorpusOps {
       rowsPerFile: Long = EventsOps.OuterStageRowsPerFile, slices: Int = 2)(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val (bench, prune) = benchGramSet(docs)
     val root = java.nio.file.Files.createTempDirectory("graft-contam-stream")
@@ -749,7 +745,7 @@ object CorpusOps {
     * pruned on exactly this signal); it is q63's contamination idea lifted
     * from doc-vs-benchmark to slice-vs-slice.
     *
-    * Scale posture (reworked r14 — ProbeQ157 attributed ~all of the 10×
+    * Scale posture (reworked r14 — a stage probe attributed ~all of the 10×
     * growth, 4.22× in scale_r13_10x.json, to the corpus-wide self-join on
     * the gram key): the exploded grams cross ONE shuffle, a groupBy(g)
     * whose per-gram state is the SET of sources containing g — bounded by

@@ -1530,12 +1530,9 @@ object Dedup {
     * append chain reaches the shared trigger, collapse it with the
     * layout-PRESERVING clustered compaction — cluster-key file ranges
     * stay disjoint so the serving prunes survive, and the epoch ledger
-    * survives so replays still no-op. After the collapse the table sits
-    * in the single-directory steady state, so its statistics are handed
-    * to Catalyst's CBO ([[graft.sources.TableStore.registerCbo]]) —
-    * serving-path joins over a maintained store plan on analyzed
-    * row/NDV stats instead of defaults (VERDICT r15 next #6). */
-  /** `limitOverride` threads an explicit per-caller policy (a lineage
+    * survives so replays still no-op.
+    *
+    * `limitOverride` threads an explicit per-caller policy (a lineage
     * gate forcing compactions mid-build) WITHOUT touching the shared
     * session conf — toggling `spark.graft.state.autoCompactVersions`
     * globally raced concurrent gates on the same session (ADVICE r16). */
@@ -1548,11 +1545,6 @@ object Dedup {
       st.compactClustered(name, clusterCols,
         math.max(StateFilesFloor, st.fileCount(name) / 2),
         retainVersions)
-      // stats for the serving joins' keys only — the cluster columns ARE
-      // the store's join/filter keys, and NDV-profiling payload columns
-      // (signatures, postings) pays a per-column pass for stats no plan
-      // reads
-      st.registerCbo(name, clusterCols); ()
     }
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
 import graft.functions.CleanFunctions
-import graft.plans.GraftExtensions
 
 /** Queries exercising the native Catalyst expressions and the skew-safe
   * aggregation pattern.
@@ -17,7 +16,6 @@ object NativeOps {
     "q56_native_uuid5",
     s"""SELECT o_orderkey, ${CleanFunctions.uuid5Sql("order", "o_orderkey")} AS order_uuid
        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    GraftExtensions.register(s)
     Tables.orders(s, d).createOrReplaceTempView("orders")
     s.sql("SELECT o_orderkey, uuid5('order', CAST(o_orderkey AS STRING)) AS order_uuid " +
       "FROM orders ORDER BY o_orderkey")
@@ -32,7 +30,6 @@ object NativeOps {
   val q57 = QueryDef(
     "q57_native_cosine_topk",
     Similarity.topkIdsOracleSql(k = 5, nQueries = 10)) { (s, d) =>
-    GraftExtensions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", expr("dot_f64(v, v)"))

@@ -578,9 +578,9 @@ object SearchOps {
     finally { rows.unpersist(); () }
     // shared auto-compaction policy (one helper across the state/index/
     // ivf stores — ADVICE r15 #3): layout-preserving collapse, ledger
-    // survives, stats handed to the CBO after the collapse; compactLimit
-    // and retainVersions thread per-caller policies without touching the
-    // session conf (VERDICT r16 ADVICE / r17 next #4)
+    // survives; compactLimit and retainVersions thread per-caller
+    // policies without touching the session conf (VERDICT r16 ADVICE /
+    // r17 next #4)
     Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "index",
       Seq("kind", "w", "doc_id"), compactLimit, retainVersions)
   }
@@ -1106,8 +1106,7 @@ object SearchOps {
   /** One epoch of chunk-index maintenance: chunk + tokenize the batch
     * and commit postings + chunk sidecar + stats partial as ONE
     * ledgered, READ-FREE append (replay no-ops); the shared
-    * auto-compaction policy collapses long chains layout-preservingly
-    * and hands stats to the CBO. */
+    * auto-compaction policy collapses long chains layout-preservingly. */
   private[graft] def chunkIndexIngestEpoch(st: graft.sources.TableStore)(
       batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit = {
     if (st.batchCommitted("chunkindex", epoch)) return

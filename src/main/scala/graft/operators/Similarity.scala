@@ -851,8 +851,8 @@ object Similarity {
     finally { rows.unpersist(); () }
     // shared auto-compaction policy (one helper across the state/index/
     // ivf stores — ADVICE r15 #3): layout-preserving collapse, ledger
-    // survives, stats handed to the CBO after the collapse; compactLimit
-    // threads a per-caller policy without touching the session conf
+    // survives; compactLimit threads a per-caller policy without touching
+    // the session conf
     Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "ivf",
       Seq("kind", "label", "vec_id", "i"), compactLimit)
   }

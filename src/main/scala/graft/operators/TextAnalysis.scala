@@ -56,7 +56,6 @@ object TextAnalysis {
          |SELECT doc_id, lang, score_de, score_en, score_es, score_fr, score_zh,
          |  CASE $caseChain END AS predicted
          |FROM best ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.plans.GraftExtensions.register(s) // native stop_hits
       var df = Tables.documents(s, d).withColumn("t", tokens(col("text")))
       for ((lang, words) <- StopWords)
         df = df.withColumn(s"score_$lang", stopHits("t", words).cast("long"))
@@ -94,7 +93,6 @@ object TextAnalysis {
       |   + CASE WHEN n_tokens >= 15 THEN 1 ELSE 0 END
       |   + CASE WHEN n_punct * 10 <= n_tokens THEN 1 ELSE 0 END) AS quality_score
       |FROM feat ORDER BY doc_id""".stripMargin) { (s, d) =>
-    graft.plans.GraftExtensions.register(s) // native stop_hits
     Tables.documents(s, d)
       .withColumn("t", tokens(col("text")))
       .select(col("doc_id"),
@@ -587,7 +585,6 @@ object TextAnalysis {
          |LEFT JOIN col_t c ON c.predicted = r.lang
          |LEFT JOIN diag g ON g.lang = r.lang
          |ORDER BY 1""".stripMargin) { (s, d) =>
-      graft.plans.GraftExtensions.register(s) // native stop_hits
       var df = Tables.documents(s, d).withColumn("t", tokens(col("text")))
       for ((lang, words) <- StopWords)
         df = df.withColumn(s"score_$lang", stopHits("t", words).cast("long"))

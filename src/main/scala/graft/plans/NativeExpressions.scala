@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expressions (SURVEY.md §7.2 "optional niceties"):
   * implemented as `BinaryExpression`s whose codegen is a single static
@@ -142,14 +142,24 @@ case class StopHitsExpr(child: Expression, words: Seq[String])
     copy(child = newChild)
 }
 
-/** Registration: both as a `SparkSessionExtensions` injector (for
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) and as an
-  * idempotent on-session registrar for sessions the driver already built. */
+/** Registration as a `SparkSessionExtensions` injector.
+  * [[graft.core.GraftSession]] installs it on every session it builds, and
+  * `newSession()`/`cloneSession()` inherit the injected functions, so each
+  * function is registered exactly once per session.
+  *
+  * Besides the graft kernels this exposes Spark's own (non-public-API)
+  * bloom-filter pair — the exact expressions AQE's runtime row-level
+  * filtering injects — so operators can build an explicit semi-join
+  * bloom prune where the optimizer can't see the opportunity:
+  * `bloom_agg(xxhash64(k), estItems)` → binary sketch;
+  * `bloom_might_contain(sketch, xxhash64(k))` → boolean prune. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.uuid5Fn)
     ext.injectFunction(GraftExtensions.dotF64Fn)
     ext.injectFunction(GraftExtensions.stopHitsFn)
+    ext.injectFunction(GraftExtensions.bloomAggFn)
+    ext.injectFunction(GraftExtensions.bloomMightContainFn)
   }
 }
 
@@ -193,24 +203,12 @@ object GraftExtensions {
     new ExpressionInfo(classOf[StopHitsExpr].getName, "stop_hits"),
     (children: Seq[Expression]) => mkStopHits(children))
 
-  /** Register the native functions on an existing session (idempotent).
-    *
-    * Besides the graft kernels this exposes Spark's own (non-public-API)
-    * bloom-filter pair — the exact expressions AQE's runtime row-level
-    * filtering injects — so operators can build an explicit semi-join
-    * bloom prune where the optimizer can't see the opportunity:
-    * `bloom_agg(xxhash64(k), estItems)` → binary sketch;
-    * `bloom_might_contain(sketch, xxhash64(k))` → boolean prune. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("uuid5", es => Uuid5Expr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_f64", es => DotF64Expr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("stop_hits", es => mkStopHits(es), "built-in")
-    reg.createOrReplaceTempFunction("bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(es(0), es(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      es => new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)),
-      "built-in")
-  }
+  private val bloomAggFn = (
+    FunctionIdentifier("bloom_agg"),
+    new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_agg"),
+    (children: Seq[Expression]) => new BloomFilterAggregate(children(0), children(1)))
+  private val bloomMightContainFn = (
+    FunctionIdentifier("bloom_might_contain"),
+    new ExpressionInfo(classOf[BloomFilterMightContain].getName, "bloom_might_contain"),
+    (children: Seq[Expression]) => new BloomFilterMightContain(children(0), children(1)))
 }

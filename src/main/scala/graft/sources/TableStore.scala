@@ -837,7 +837,7 @@ final class TableStore(spark: SparkSession, root: String) {
       case None =>
         val addCols = readAddCols(name, v)
         if (addCols.isEmpty)
-          cboTable(name, v).getOrElse(spark.read.parquet(dataPath(name, v)))
+          spark.read.parquet(dataPath(name, v))
         else fillAddCols(spark.read.parquet(dataPath(name, v)), addCols, v)
     }
   }
@@ -1710,11 +1710,9 @@ final class TableStore(spark: SparkSession, root: String) {
       .map { l =>
         l.split("\t", -1) match {
           case Array(label, ver) => label -> ver.toInt
-          // HARD failure, deliberately asymmetric with the cbo marker's
-          // degrade-to-plain-read: a cbo sidecar lost to corruption only
-          // costs plan quality, but a pin line silently DROPPED here
-          // would let the very next vacuum delete the protected snapshot
-          // — an unrecoverable data loss no later read could detect.
+          // HARD failure: a pin line silently DROPPED here would let the
+          // very next vacuum delete the protected snapshot — an
+          // unrecoverable data loss no later read could detect.
           // Writes are tmp+ATOMIC_MOVE, so a torn line means external
           // interference; stopping is the only safe answer.
           case other => sys.error(s"corrupt pin line in $p: ${other.mkString("\\t")}")
@@ -1772,7 +1770,7 @@ final class TableStore(spark: SparkSession, root: String) {
   }
 
   // §2.1 S10 — VACUUM ANALYZE analog: refresh statistics for planning
-  // (row count + on-disk bytes; a real catalog would feed these to CBO)
+  // (row count + on-disk bytes)
   // and drop superseded versions (the VACUUM half). PINNED versions
   // ([[pinVersion]]) are exempt: their data dirs and read-path sidecars
   // survive so time travel to a named snapshot outlives maintenance.
@@ -1869,94 +1867,6 @@ final class TableStore(spark: SparkSession, root: String) {
           statsExactRowCount(name).getOrElse(table(name).count()), bytes, v)
     }
   }
-
-  /** Feed this table's statistics to Catalyst's cost-based optimizer:
-    * registers an EXTERNAL parquet catalog table over the current
-    * version's data directory and runs `ANALYZE … FOR ALL COLUMNS`, so
-    * row counts and per-column NDVs drive filter-selectivity estimates
-    * and join-strategy choice once `spark.sql.cbo.enabled` is on —
-    * [[analyze]] computes stats for the store's own planning; this is
-    * the bridge that hands them to Spark's planner. Returns the catalog
-    * table name to query via `spark.table`.
-    *
-    * Requires the single-directory steady state (fresh CREATE, or after
-    * [[compact]] + [[analyze]]) with no pending ADD COLUMN defaults: a
-    * version-chained or partitioned table must be compacted first —
-    * refusing beats registering a LOCATION that silently misses
-    * manifest-stitched rows. */
-  /** `cols` restricts the ANALYZE to the named columns (the serving
-    * paths' join/filter keys) — at scale, NDV-profiling every payload
-    * column of a maintained store is the expensive part of the pass and
-    * buys the planner nothing it uses; empty = ALL COLUMNS (the
-    * original, for callers that want the full profile). */
-  def registerCbo(name: String, cols: Seq[String] = Nil): String = {
-    val v = currentVersion(name)
-    require(v >= 0, s"no such table: $name")
-    require(readManifest(name, v).isEmpty,
-      s"registerCbo($name): version-chained/partitioned table — compact() first " +
-        "(a single LOCATION cannot express a manifest-stitched file set)")
-    require(readAddCols(name, v).isEmpty,
-      s"registerCbo($name): pending ADD COLUMN defaults are applied at read " +
-        "time and would be missing from a raw catalog scan — compact() first")
-    // store-unique catalog name: maintained stores live in per-store
-    // roots (often tempdirs), and two stores compacting a same-named
-    // table concurrently must not fight over one catalog entry
-    val cat = s"graft_cbo_${name}_${Integer.toHexString(root.hashCode)}"
-    spark.sql(s"DROP TABLE IF EXISTS `$cat`")
-    spark.sql(s"CREATE TABLE `$cat` USING parquet LOCATION '${dataPath(name, v)}'")
-    val colSpec =
-      if (cols.isEmpty) "FOR ALL COLUMNS"
-      else s"FOR COLUMNS ${cols.map(c => s"`$c`").mkString(", ")}"
-    spark.sql(s"ANALYZE TABLE `$cat` COMPUTE STATISTICS $colSpec")
-    // durable marker: ANY handle over this root (stores are re-opened
-    // per call throughout the suite) routes [[table]] through the
-    // analyzed catalog relation while this exact version is current, so
-    // serving-path joins plan on row/NDV statistics instead of defaults.
-    // tmp + ATOMIC_MOVE: a plain Files.write can tear under a crash and
-    // a torn marker must never poison every later table() read
-    val tmp = Paths.get(s"${cboFile(name)}.tmp")
-    Files.write(tmp, s"$cat\t$v".getBytes)
-    Files.move(tmp, cboFile(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    cat
-  }
-
-  private def cboFile(name: String) = Paths.get(s"$root/$name/cbo.cat")
-
-  /** The catalog-backed read for a version that was CBO-registered: same
-    * files, but the relation carries ANALYZE'd statistics. Any append or
-    * rewrite bumps the version and silently falls back to the plain
-    * path read until the next registration — stats can go missing, never
-    * stale. */
-  private def cboTable(name: String, v: Int): Option[DataFrame] = {
-    val p = cboFile(name)
-    if (!Files.exists(p)) return None
-    // Try-wrapped end to end: a torn/corrupt marker (or any catalog
-    // hiccup) degrades to the plain path read — stats can go missing,
-    // never break table()
-    scala.util.Try {
-      new String(Files.readAllBytes(p)).trim.split("\t", -1) match {
-        case Array(cat, ver) if ver.toInt == v && spark.catalog.tableExists(cat) &&
-            catalogLocationIs(cat, dataPath(name, v)) =>
-          Some(spark.table(cat))
-        case _ => None
-      }
-    }.toOption.flatten
-  }
-
-  /** Does catalog table `cat` point at exactly `path`? The catalog name
-    * embeds only a 32-bit hash of the store root, so two roots with a
-    * same-named table can collide on the entry; version-matching alone
-    * would then silently serve the OTHER store's files. The LOCATION
-    * check makes a collision degrade to the plain path read instead. */
-  private def catalogLocationIs(cat: String, path: String): Boolean =
-    scala.util.Try {
-      val loc = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(cat))
-        .location
-      Paths.get(loc.getPath).toAbsolutePath.normalize ==
-        Paths.get(path).toAbsolutePath.normalize
-    }.getOrElse(false)
 
   /** §2.1 S11 — catalog introspection (the reference reads pg_constraint,
     * All-Tasks-of-SQL.sql:33-36): list tables with their constraints. */

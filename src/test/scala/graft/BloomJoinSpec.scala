@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.BloomJoin
-import graft.plans.GraftExtensions
 
 /** Bloom-pruned join (q96): the prune is visible in the physical plan on
   * the fact side, never drops a matching row (bloom has no false
@@ -36,7 +35,6 @@ class BloomJoinSpec extends SparkSpec {
   }
 
   test("prunePredicate keeps every true match and actually prunes") {
-    GraftExtensions.register(spark)
     val fact = Tables.lineitem(spark, sf).select("l_orderkey")
     val dim = Tables.orders(spark, sf)
       .filter(col("o_orderkey") % 100 === 0).select("o_orderkey")
@@ -52,7 +50,6 @@ class BloomJoinSpec extends SparkSpec {
   }
 
   test("an empty build side disables the prune instead of dropping rows") {
-    GraftExtensions.register(spark)
     val dim = Tables.orders(spark, sf).filter(lit(false)).select("o_orderkey")
     BloomJoin.prunePredicate(dim, col("l_orderkey"), 10000L) shouldBe None
   }

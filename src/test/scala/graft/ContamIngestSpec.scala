@@ -34,7 +34,6 @@ class ContamIngestSpec extends SparkSpec {
   }
 
   test("epoch appends accumulate to the monolithic verdict set; replays no-op") {
-    graft.plans.GraftExtensions.register(spark)
     val docs = mkDocs
     val (bench, prune) = CorpusOps.benchGramSet(docs)
     val st = new TableStore(spark, tempDir("graft-contam-spec").toString)
@@ -62,7 +61,6 @@ class ContamIngestSpec extends SparkSpec {
   }
 
   test("the live foreachBatch sink flags contamination as batches arrive") {
-    graft.plans.GraftExtensions.register(spark)
     implicit val sqlCtx = spark.sqlContext
     val docs = mkDocs
     val (bench, prune) = CorpusOps.benchGramSet(docs)
@@ -94,7 +92,6 @@ class ContamIngestSpec extends SparkSpec {
   }
 
   test("a replayed contam epoch no-ops on the ledger after a crash-restart") {
-    graft.plans.GraftExtensions.register(spark)
     val docs = mkDocs
     val (bench, prune) = CorpusOps.benchGramSet(docs)
     val corpus = docs.filter(col("doc_id") >= 50)

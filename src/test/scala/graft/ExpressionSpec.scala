@@ -4,13 +4,11 @@ import org.apache.spark.sql.functions._
 import graft.functions.CleanFunctions
 import graft.operators.Similarity
 import graft.operators.NativeOps
-import graft.plans.GraftExtensions
 
 class ExpressionSpec extends SparkSpec {
   import spark.implicits._
 
   test("native uuid5 expression matches the built-in composition bit-for-bit") {
-    GraftExtensions.register(spark)
     val df = Seq("a", "b", "key-42").toDF("k")
     val rows = df.select(
       CleanFunctions.uuid5("ns", col("k")).as("composed"),
@@ -19,13 +17,11 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("native dot_f64 fuses into codegen and matches a manual dot product") {
-    GraftExtensions.register(spark)
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")
     val d = df.select(expr("dot_f64(a, b)")).head.getDouble(0)
     d shouldBe (1.0 * 4 + 2.0 * 5 + 3.0 * 6) +- 1e-12
     // codegen path over a real scan (literals get constant-folded):
     // the projection executes inside WholeStageCodegen without fallback
-    GraftExtensions.register(spark)
     val scan = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .selectExpr("vec_id", "dot_f64(embedding, embedding) AS nrm")
     scan.collect().length shouldBe 500
@@ -35,7 +31,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("stop_hits rejects malformed word lists with a clear message (ADVICE r10)") {
-    GraftExtensions.register(spark)
     val df = Seq("the quick fox").toDF("t")
       .select(split(col("t"), " ").as("toks"), col("t"))
     // null element in the folded literal list

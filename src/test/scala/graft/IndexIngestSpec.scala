@@ -89,48 +89,6 @@ class IndexIngestSpec extends SparkSpec {
     stats.getLong(1) shouldBe 24L * 9L
   }
 
-  test("maintenance hands analyzed stats to the planner: serving joins see row counts") {
-    val st = new TableStore(spark, tempDir("graft-index-cbo").toString)
-    SearchOps.buildSearchIndex(st, docsDf().limit(0))
-    val confKey = "spark.graft.state.autoCompactVersions"
-    val prevTrig = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "2")
-    try {
-      (0 until 2).foreach { e =>
-        val batch = docsDf((0 until 6).map { i =>
-          val id = e * 10L + i
-          (id, (0 until 8).map(j => f"c${(e * 6 + i) % 12}%02d_$j").mkString(" ") + " shared")
-        }: _*)
-        SearchOps.indexIngestEpoch(st)(batch, e.toLong)
-      }
-    } finally prevTrig match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
-    }
-    // the policy compacted and registered: table() is catalog-backed with
-    // ANALYZE'd statistics attached
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    val idx = st.table("index")
-    val rels = idx.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation if l.catalogTable.isDefined => l
-    }
-    rels should not be empty
-    val stats = rels.head.catalogTable.get.stats
-    stats shouldBe defined
-    stats.get.rowCount shouldBe defined
-    // a serving-shape join (postings ⋈ doc lengths) now plans with a
-    // row-count estimate instead of defaults
-    val prevCbo = spark.conf.get("spark.sql.cbo.enabled")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      val join = idx.filter(col("kind") === 0).select("doc_id", "w", "tf")
-        .join(idx.filter(col("kind") === 1).select("doc_id", "dl"), "doc_id")
-      join.queryExecution.optimizedPlan.stats.rowCount shouldBe defined
-    } finally spark.conf.set("spark.sql.cbo.enabled", prevCbo)
-    // the serving results are unchanged by the catalog routing
-    SearchOps.bm25FromIndex(st, Seq("c00_0"), 3).collect() should not be empty
-  }
-
   test("a live stream maintains the index through the foreachBatch sink") {
     implicit val sqlCtx = spark.sqlContext
     val st = new TableStore(spark, tempDir("graft-index-stream").toString)

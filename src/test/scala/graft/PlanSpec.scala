@@ -334,44 +334,6 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("CBO: analyzed catalog stats flip the dim join from shuffle to broadcast") {
-    // TableStore.registerCbo hands ANALYZE'd row/NDV stats to Catalyst;
-    // under spark.sql.cbo.enabled an equality filter is estimated at
-    // rows/ndv, dropping the filtered dim below the broadcast threshold.
-    // Without those stats the same filtered scan keeps its file-size
-    // estimate (above threshold) and the join must shuffle — the flip IS
-    // the stats working.
-    import org.apache.spark.sql.functions.{col, concat, lit, md5}
-    val st = new graft.sources.TableStore(spark,
-      tempDir("graft-cbo").toString)
-    val dim = spark.range(4000).select(col("id").as("key"),
-      (col("id") % 40).as("grp"),
-      md5(concat(col("id").cast("string"), lit("pad"))).as("pad"))
-    st.create("cbodim", dim)
-    val cat = st.registerCbo("cbodim")
-    val fact = spark.range(500000).toDF("key")
-    val prevCbo = spark.conf.get("spark.sql.cbo.enabled")
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (20 * 1024).toString)
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      val noStats = fact.join(st.table("cbodim").filter(col("grp") === 7), "key")
-      planOf(noStats) should include("SortMergeJoin")
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      val withStats = fact.join(spark.table(cat).filter(col("grp") === 7), "key")
-      planOf(withStats) should include("BroadcastHashJoin")
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", prevCbo)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.sql(s"DROP TABLE IF EXISTS `$cat`")
-    }
-    // a manifest-stitched (partitioned) table must refuse registration —
-    // one LOCATION cannot express its file set
-    st.createPartitioned("cbopart",
-      spark.range(4).select(col("id"), (col("id") % 2).as("par")), "par")
-    an[IllegalArgumentException] should be thrownBy st.registerCbo("cbopart")
-  }
-
   test("whole-stage codegen covers the q01 pipeline") {
     val df = Analytics.q01.build(spark, sf)
     df.collect() // AQE finalizes the plan only on execution

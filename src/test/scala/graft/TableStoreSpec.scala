@@ -343,24 +343,4 @@ class TableStoreSpec extends SparkSpec {
     st.table("t").as[(Long, String)].collect() shouldBe Seq((1L, "a"))
   }
 
-  test("a corrupt CBO marker degrades table() to the plain read (ADVICE r16)") {
-    val root = tempDir("graft-store-cbo").toString
-    val st = new TableStore(spark, root)
-    st.create("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    st.registerCbo("t")
-    st.table("t").count() shouldBe 2 // catalog-backed read works
-    // torn / garbage marker: every shape must fall back, never throw
-    Seq("garbage-no-tab", "cat\tnot-a-number", "").foreach { junk =>
-      Files.write(java.nio.file.Paths.get(s"$root/t/cbo.cat"), junk.getBytes)
-      st.table("t").count() shouldBe 2
-    }
-    // a marker whose catalog entry points at ANOTHER location (the
-    // 32-bit root-hash collision shape) is refused, not trusted
-    val other = new TableStore(spark, tempDir("graft-store-cbo2").toString)
-    other.create("t", Seq((9L, "z")).toDF("id", "v"))
-    val foreignCat = other.registerCbo("t")
-    Files.write(java.nio.file.Paths.get(s"$root/t/cbo.cat"),
-      s"$foreignCat\t0".getBytes)
-    st.table("t").orderBy("id").collect().map(_.getLong(0)).toSeq shouldBe Seq(1L, 2L)
-  }
 }
