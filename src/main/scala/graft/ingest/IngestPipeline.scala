@@ -1,8 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import graft.constraints.Constraints
 import graft.functions.CleanFunctions._
 
 /** The reference's per-entity ingest/clean pipeline (SURVEY.md §3.2):
@@ -15,8 +16,8 @@ import graft.functions.CleanFunctions._
   * row — `clean + quarantined = input`; re-running over already-ingested
   * data is a no-op (ON CONFLICT DO NOTHING idempotence).
   *
-  * Scale: all stages are narrow maps or broadcast anti-joins against
-  * parent key sets; nothing is collected to the driver.
+  * Scale: all stages are narrow maps or broadcast existence joins
+  * against parent key sets; nothing is collected to the driver.
   */
 object IngestPipeline {
 
@@ -71,26 +72,26 @@ object IngestPipeline {
   }
 
   /** Stage 4: heal referential integrity — either quarantine orphans or
-    * keep them (placeholder-parent strategy, reference TC:758-768). */
+    * keep them (placeholder-parent strategy, reference TC:758-768). An
+    * orphan flag per FK edge tests membership in the (broadcast) parent
+    * key set as an existence join, one scan per output. */
   def healParents(df: DataFrame, spec: EntitySpec): (DataFrame, DataFrame) =
     if (spec.parents.isEmpty || spec.healOrphans) (df, df.limit(0))
     else {
-      // left-join per FK edge against the parent key set (broadcast),
-      // collected into one "is orphan" flag column
-
-      var marked = df
-      var flags = Seq.empty[Column]
-      for (((fkCol, (refCol, parentDf)), i) <- spec.parents.toSeq.zipWithIndex) {
-        val keys = parentDf.select(normalizeUuid(col(refCol)).as(fkCol)).distinct()
-          .withColumn(s"__p$i", lit(true))
-        marked = marked.join(broadcast(keys),
-          Seq(fkCol), "left")
-        flags = flags :+ (col(fkCol).isNotNull && col(s"__p$i").isNull)
-      }
+      val edges = spec.parents.toSeq
+      val (marked, flags) = Constraints.withOrphanFlags(df, edges.map { case (fkCol, (refCol, parentDf)) =>
+        Seq(fkCol) -> broadcast(parentDf.select(normalizeUuid(col(refCol))))
+      })
       val orphan = flags.reduce(_ || _)
-      val keep = marked.filter(!orphan).drop(spec.parents.toSeq.indices.map(i => s"__p$i"): _*)
-      val quarantined = marked.filter(orphan).drop(spec.parents.toSeq.indices.map(i => s"__p$i"): _*)
-      (keep, quarantined)
+      // each FK column first, as the per-edge USING joins this replaced
+      // laid the columns out — tables created from the clean frame keep
+      // that order
+      val order = edges.map(_._1).foldLeft(df.columns.toSeq) { (cols, fk) =>
+        val (key, rest) = cols.partition(_.equalsIgnoreCase(fk))
+        key ++ rest
+      }
+      (marked.filter(!orphan).select(order.map(col): _*),
+        marked.filter(orphan).select(order.map(col): _*))
     }
 
   /** Stage 5: conform text → typed (reference TC:280-292 casts); any

@@ -39,7 +39,15 @@ object FileStats {
     * hasNonNull=false means every value in the file is NULL. */
   final case class ColStat(kind: String, hasNonNull: Boolean, min: String, max: String)
 
-  final case class FileStat(relPath: String, rows: Long, cols: Map[String, ColStat])
+  /** `schema`: the file's Spark schema as JSON — the footer's
+    * `org.apache.spark.sql.parquet.row.metadata` value, the exact string
+    * Spark's schema inference reads — or None for files no Spark writer
+    * produced. */
+  final case class FileStat(relPath: String, rows: Long, cols: Map[String, ColStat],
+                            schema: Option[String] = None)
+
+  /** Footer key-value entry holding a Spark writer's schema JSON. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   // ---- footer reading -------------------------------------------------
 
@@ -94,7 +102,8 @@ object FileStats {
           }
         perCol(name) = merge(perCol.get(name), cur)
       }
-      FileStat(relPath, rows, perCol.collect { case (c, Some(s)) => c -> s }.toMap)
+      FileStat(relPath, rows, perCol.collect { case (c, Some(s)) => c -> s }.toMap,
+        Option(md.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
     } finally reader.close()
   }
 
@@ -249,16 +258,32 @@ object FileStats {
 
   // ---- persistence (TSV; string values URL-encoded to stay line-safe) --
 
-  def render(stats: Seq[FileStat]): String =
-    stats.flatMap { f =>
+  /** One sidecar per version dir. Its first line is `S\t<schema>` when
+    * every file carries the same Spark schema (one write's files always
+    * do); sidecars without that line — written before schemas were
+    * recorded, or over foreign files — still parse, and [[schemaLine]]
+    * answers None for them. */
+  def render(stats: Seq[FileStat]): String = {
+    val schema = stats.map(_.schema).distinct match {
+      case Seq(Some(json)) => Seq(s"S\t${enc(json)}")
+      case _ => Nil
+    }
+    (schema ++ stats.flatMap { f =>
       val head = s"F\t${f.relPath}\t${f.rows}"
       head +: f.cols.toSeq.sortBy(_._1).map { case (c, s) =>
         s"C\t${f.relPath}\t$c\t${s.kind}\t${if (s.hasNonNull) 1 else 0}\t${enc(s.min)}\t${enc(s.max)}"
       }
-    }.mkString("\n")
+    }).mkString("\n")
+  }
+
+  /** The shared Spark schema JSON from a sidecar's first line, if
+    * [[render]] recorded one. */
+  def schemaLine(firstLine: String): Option[String] =
+    Option(firstLine).filter(_.startsWith("S\t")).map(l => dec(l.substring(2)))
 
   def parse(body: String): Seq[FileStat] = {
     val lines = body.split("\n").toSeq.filter(_.nonEmpty)
+    val schema = lines.headOption.flatMap(schemaLine)
     val rows = lines.collect { case l if l.startsWith("F\t") =>
       val a = l.split("\t"); a(1) -> a(2).toLong
     }.toMap
@@ -267,7 +292,7 @@ object FileStats {
       a(1) -> (a(2) -> ColStat(a(3), a(4) == "1", dec(a(5)), dec(a(6))))
     }.groupBy(_._1).view.mapValues(_.map(_._2).toMap).toMap
     rows.toSeq.sortBy(_._1).map { case (p, n) =>
-      FileStat(p, n, cols.getOrElse(p, Map.empty))
+      FileStat(p, n, cols.getOrElse(p, Map.empty), schema)
     }
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.constraints.Constraints._
 
 /** Copy-on-write parquet table store: the reference's mutable-table
@@ -180,7 +181,7 @@ final class TableStore(spark: SparkSession, root: String) {
   // orphaned claim without racing real Spark jobs in the test
   private[graft] def publishFrom(name: String, df: DataFrame, expected: Int): Unit = {
     lastRead.get.update(name, expected)
-    publish(name, df)
+    publish(name, df); ()
   }
   /** Plant a LIVE claim (registered in-flight, as a real writer's). */
   private[graft] def claimForTest(name: String, v: Int): Unit = claimVersion(name, v)
@@ -201,8 +202,9 @@ final class TableStore(spark: SparkSession, root: String) {
     * snapshot+1 and must be claimed first, so a concurrent writer that
     * advanced the chain since this transform read its input makes this
     * throw [[TableStore.ConcurrentWriteException]] instead of silently
-    * overwriting the other writer's committed rows. */
-  private def publish(name: String, df: DataFrame): Unit = {
+    * overwriting the other writer's committed rows. Returns the version
+    * it committed; its snapshot was that version minus one. */
+  private def publish(name: String, df: DataFrame): Int = {
     val v0 = lastRead.get.getOrElse(name, currentVersion(name))
     val v = v0 + 1
     claimVersion(name, v)
@@ -213,6 +215,7 @@ final class TableStore(spark: SparkSession, root: String) {
       carryAddCols(name, v)
       carryConstraintsFile(name, v)
       flipVersion(name, v)
+      v
     } catch {
       case e: Throwable => releaseClaim(name, v); throw e
     } finally lastRead.get.remove(name)
@@ -342,17 +345,6 @@ final class TableStore(spark: SparkSession, root: String) {
     * O(batch): the new version dir holds only the batch's files, prior
     * data is reused via manifest entries; [[compact]] collapses long
     * chains. */
-  /** Column order of snapshot v, cached by (name, version) — the version
-    * key makes staleness impossible (any mutation flips the version).
-    * appendBatch needs ONLY the column order from the current snapshot,
-    * and re-running full parquet schema inference across the whole
-    * manifest chain on every epoch made each append ~linearly slower as
-    * the chain grew (r11 cost profile: 0.32 s → 0.56 s over 4 appends). */
-  private val columnsCache =
-    new scala.collection.concurrent.TrieMap[(String, Int), Seq[String]]
-  private def currentColumns(name: String, v: Int): Seq[String] =
-    columnsCache.getOrElseUpdate((name, v), table(name).columns.toSeq)
-
   def appendBatch(name: String, batchId: Long, rows: DataFrame,
                   appId: String = ""): Boolean = {
     requireValidAppId(appId)
@@ -362,7 +354,7 @@ final class TableStore(spark: SparkSession, root: String) {
     val v = v0 + 1
     claimVersion(name, v) // CAS before any data write (see publish)
     try {
-    val batch = rows.select(currentColumns(name, v0).map(col): _*)
+    val batch = rows.select(table(name).columns.map(col).toSeq: _*)
     val m = readManifest(name, v0) match {
       case Some(prev) if prev.partCol.nonEmpty =>
         // partitioned append (events-by-date continuous ingest): the batch
@@ -522,7 +514,9 @@ final class TableStore(spark: SparkSession, root: String) {
   // v{N}.stats sidecar; scanSkipping consults them to drop whole files
   // for selective predicates before Spark lists a single row. The layer
   // below partition pruning: inside surviving partitions, most files of
-  // a sorted/clustered table don't overlap a selective range.
+  // a sorted/clustered table don't overlap a selective range. The same
+  // footers carry the files' Spark schema, which the sidecar records so
+  // reads never submit a schema-inference job (see [[readParquet]]).
   // ------------------------------------------------------------------
 
   private def statsFile(name: String, v: Int) = Paths.get(s"$root/$name/v$v.stats")
@@ -544,11 +538,44 @@ final class TableStore(spark: SparkSession, root: String) {
     Files.write(statsFile(name, v), FileStats.render(stats).getBytes)
   }
 
-  /** Current snapshot's files as (path relative to the table dir, owning
+  /** Spark schema of version dir `vd`'s files as its stats sidecar
+    * recorded it; None for sidecars written before schemas were recorded
+    * and for dirs without one. */
+  private def dirSchema(name: String, vd: String): Option[StructType] = {
+    val p = statsFile(name, vd.stripPrefix("v").toInt)
+    if (!Files.exists(p)) None
+    else {
+      val in = Files.newBufferedReader(p)
+      val json = try FileStats.schemaLine(in.readLine()) finally in.close()
+      json.flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+        .collect { case st: StructType => st }
+    }
+  }
+
+  /** `spark.read.parquet(paths)` over files lying in the version dirs
+    * `dirs`. When every dir's sidecar recorded a schema and they agree
+    * (nullability aside: Spark reads every file column as nullable), the
+    * reader gets it up front and plans without the inference job Spark
+    * submits otherwise, even for one file; partition columns are still
+    * discovered from the paths. Older sidecars and foreign files infer,
+    * as before. */
+  private def readParquet(name: String, dirs: Seq[String],
+                          basePath: Option[String] = None)(paths: String*): DataFrame = {
+    val reader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    val schemas = dirs.distinct.map(dirSchema(name, _))
+    val known = if (schemas.forall(_.isDefined)) schemas.flatten else Nil
+    known.map(nullable).distinct match {
+      case Seq(st) => reader.schema(st).parquet(paths: _*)
+      case _ => reader.parquet(paths: _*)
+    }
+  }
+
+  private def nullable(st: StructType): StructType =
+    StructType(st.fields.map(_.copy(nullable = true)))
+
+  /** Version `v`'s files as (path relative to the table dir, owning
     * version dir). */
-  private def currentFiles(name: String): Seq[(String, String)] = {
-    val v = currentVersion(name)
-    require(v >= 0, s"no such table: $name")
+  private def filesAt(name: String, v: Int): Seq[(String, String)] = {
     val tableDir = Paths.get(s"$root/$name")
     def rel(p: java.nio.file.Path) = tableDir.relativize(p).toString
     readManifest(name, v) match {
@@ -560,6 +587,13 @@ final class TableStore(spark: SparkSession, root: String) {
       case None =>
         listParquetFiles(Paths.get(dataPath(name, v))).map(p => rel(p) -> s"v$v")
     }
+  }
+
+  /** Current snapshot's files (see [[filesAt]]). */
+  private def currentFiles(name: String): Seq[(String, String)] = {
+    val v = currentVersion(name)
+    require(v >= 0, s"no such table: $name")
+    filesAt(name, v)
   }
 
   /** Scan with file-level skipping: read only files whose min/max stats
@@ -635,9 +669,9 @@ final class TableStore(spark: SparkSession, root: String) {
       : (DataFrame, FileStats.ScanReport) =
     scanSkippingIn(name, ranges, valueCol, values)
 
-  /** Parsed stats sidecars of the current snapshot's files, keyed by
-    * rel path — shared by [[scanWhere]] and the metadata-only counters
-    * below. Pure file reads, no Spark job. */
+  /** Parsed stats sidecars of a snapshot's `files`, keyed by rel path —
+    * shared by [[scanWhere]] and the metadata-only counters below. Pure
+    * file reads, no Spark job. */
   private def currentStats(name: String,
       files: Seq[(String, String)]): Map[String, FileStats.FileStat] =
     files.map(_._2).distinct.flatMap { vd =>
@@ -645,24 +679,34 @@ final class TableStore(spark: SparkSession, root: String) {
       if (Files.exists(p)) FileStats.parse(new String(Files.readAllBytes(p))) else Nil
     }.map(f => f.relPath -> f).toMap
 
-  /** Exact current-snapshot row count from the stats sidecars alone —
-    * Some only when EVERY current file has a recorded stat (parquet
-    * footer row counts are exact), None if any file is foreign/unstated.
-    * The no-Spark-job fast path [[analyze]] takes instead of a count()
-    * scan: a maintenance pass that just compacted a table should not pay
-    * a full re-read to report the row count its own write already knew. */
-  /** Exact row count of the current snapshot from the stats sidecars —
-    * Some only when EVERY current file has a recorded parquet-footer
-    * count, else None (caller falls back to a count() scan). INVARIANT
-    * this exactness rests on: table() applies no row-level filtering —
-    * a read path that ever adds tombstones/constraints must route
-    * analyze() back through count() (ADVICE r19). */
-  private def statsExactRowCount(name: String): Option[Long] = {
-    val files = currentFiles(name)
+  /** Exact row count of version `v` from the stats sidecars alone (parquet
+    * footer counts are exact) — Some only when EVERY file of `v` has a
+    * recorded stat, None if any is foreign/unstated, and the caller falls
+    * back to a count() scan. No Spark job: [[analyze]] reports a
+    * just-compacted table's rows without re-reading it, and [[insert]],
+    * [[upsert]], [[mergeInto]] and [[delete]] derive their returned counts
+    * as rows(v) − rows(v − 1) of the version they published instead of
+    * re-executing the statement.
+    *
+    * INVARIANT this exactness rests on: table() applies no row-level
+    * filtering — a read path that ever adds tombstones/constraints must
+    * route analyze() and those DML return values back through count()
+    * (ADVICE r19). */
+  private def statsExactRowCount(name: String, v: Int): Option[Long] = {
+    val files = filesAt(name, v)
     val stats = currentStats(name, files)
     val known = files.flatMap { case (rel, _) => stats.get(rel).map(_.rows) }
     if (known.size == files.size) Some(known.sum) else None
   }
+
+  /** Rows the publish of version `v` added to its snapshot v − 1
+    * (negative when it removed rows), from the stats alone; None when
+    * either version has an unstated file — the caller then counts the
+    * statement's inputs, which stay readable: the snapshot is not
+    * vacuumed by a publish. */
+  private def growth(name: String, v: Int): Option[Long] =
+    for (after <- statsExactRowCount(name, v); before <- statsExactRowCount(name, v - 1))
+      yield after - before
 
   /** Total rows of the current snapshot, summed from the per-file stats
     * sidecars — metadata only, no Spark job. Files whose stats a writer
@@ -710,11 +754,11 @@ final class TableStore(spark: SparkSession, root: String) {
         // union — the planning term that would otherwise grow with every
         // epoch of an incremental store
         if (deltas.isEmpty && kept.forall(_._1.count(_ == '/') == 1))
-          spark.read.parquet(kept.map { case (rel, _) => s"$root/$name/$rel" }: _*)
+          readParquet(name, kept.map(_._2))(kept.map { case (rel, _) => s"$root/$name/$rel" }: _*)
         else kept.groupBy(_._2).toSeq.sortBy(_._1).map { case (vd, fs) =>
           fillAddCols(
-            spark.read.option("basePath", s"$root/$name/$vd")
-              .parquet(fs.map { case (rel, _) => s"$root/$name/$rel" }: _*),
+            readParquet(name, Seq(vd), Some(s"$root/$name/$vd"))(
+              fs.map { case (rel, _) => s"$root/$name/$rel" }: _*),
             deltas, vd.stripPrefix("v").toInt)
         }.reduce(_ unionByName _)
       }
@@ -820,7 +864,6 @@ final class TableStore(spark: SparkSession, root: String) {
   // §2.1 S3/S4 — CREATE TABLE [AS SELECT]
   def create(name: String, df: DataFrame, constraints: Seq[Constraint] = Nil): Unit = {
     metas(name) = Meta(constraints)
-    columnsCache.keys.filter(_._1 == name).foreach(columnsCache.remove) // see drop()
     Files.createDirectories(Paths.get(s"$root/$name"))
     publish(name, df)
     // persisted only once the table committed: a failed CREATE leaves no
@@ -834,11 +877,8 @@ final class TableStore(spark: SparkSession, root: String) {
     lastRead.get.update(name, v) // snapshot a later publish CASes against
     readManifest(name, v) match {
       case Some(m) => readEntries(name, v, m.entries)
-      case None =>
-        val addCols = readAddCols(name, v)
-        if (addCols.isEmpty)
-          spark.read.parquet(dataPath(name, v))
-        else fillAddCols(spark.read.parquet(dataPath(name, v)), addCols, v)
+      case None => fillAddCols(readParquet(name, Seq(s"v$v"))(dataPath(name, v)),
+        readAddCols(name, v), v)
     }
   }
 
@@ -856,10 +896,6 @@ final class TableStore(spark: SparkSession, root: String) {
     if (cascade) dependents(name).foreach(drop(_, cascade = true))
     metas.remove(name)
     lastRead.get.remove(name) // a re-created table starts a fresh chain
-    // a re-created table restarts its version chain at v0, so (name, v)
-    // keys from the previous incarnation would otherwise serve a stale
-    // column order to appendBatch
-    columnsCache.keys.filter(_._1 == name).foreach(columnsCache.remove)
     val dir = Paths.get(s"$root/$name")
     if (Files.exists(dir)) {
       import scala.jdk.CollectionConverters._
@@ -875,7 +911,9 @@ final class TableStore(spark: SparkSession, root: String) {
   }
 
   /** §2.9 D5 / §2.1 S5-S7 — INSERT with optional ON CONFLICT (pk) DO
-    * NOTHING: anti-join on the PK before union. Defaults are filled. */
+    * NOTHING: anti-join on the PK before union. Defaults are filled.
+    * Returns the rows inserted, read off the stats of the published
+    * version, so the batch runs once (in the write). */
   def insert(name: String, rows: DataFrame, onConflictDoNothing: Boolean = false): Long = {
     val cur = table(name)
     val cs = constraintsOf(name)
@@ -890,9 +928,8 @@ final class TableStore(spark: SparkSession, root: String) {
             .dropDuplicates(pk)
         case None => withDefaults
       }
-    val n = incoming.count()
-    publish(name, cur.unionByName(incoming))
-    n
+    val v = publish(name, cur.unionByName(incoming))
+    growth(name, v).getOrElse(incoming.count())
   }
 
   /** §2.9 D5+ — upsert (INSERT … ON CONFLICT (pk) DO UPDATE / MERGE):
@@ -907,7 +944,8 @@ final class TableStore(spark: SparkSession, root: String) {
     *
     * Scale: one broadcast of the batch against the table for the matched
     * rewrite + one anti-join for the inserts — the fact table is scanned,
-    * never shuffled. */
+    * never shuffled. The batch is checked by one aggregate; the insert
+    * count comes from the published version's stats. */
   def upsert(name: String, rows: DataFrame): (Long, Long) = {
     val cur = table(name)
     val cs = constraintsOf(name)
@@ -915,8 +953,9 @@ final class TableStore(spark: SparkSession, root: String) {
       throw new IllegalArgumentException(s"upsert requires a PRIMARY KEY on $name"))
     val batch = applyDefaults(rows.select(cur.columns.map(col).toSeq: _*), cs).cache()
     try {
-    val nBatch = batch.count()
-    val nDistinctPk = batch.select(pk.map(col): _*).distinct().count()
+    // size + key uniqueness in one job, as in mergeInto
+    val chk = batch.agg(count(lit(1)), count_distinct(struct(pk.map(col): _*))).head()
+    val (nBatch, nDistinctPk) = (chk.getLong(0), chk.getLong(1))
     require(nDistinctPk == nBatch,
       s"upsert batch carries ${nBatch - nDistinctPk} duplicate PK rows; " +
         "ON CONFLICT DO UPDATE cannot update the same row twice")
@@ -930,10 +969,12 @@ final class TableStore(spark: SparkSession, root: String) {
         when(col("__matched"), col(s"__new_$c")).otherwise(col(c)).as(c)
       else col(c)
     }.toSeq: _*)
-    val nMatched = batch.join(cur.select(pk.map(col): _*), pk, "left_semi").count()
     val inserted = batch.join(cur.select(pk.map(col): _*), pk, "left_anti")
-    publish(name, updated.unionByName(inserted))
-    (nMatched, nBatch - nMatched)
+    // the matched rewrite keeps the table's row count (batch keys are
+    // unique), so the version grew by exactly the inserted rows
+    val v = publish(name, updated.unionByName(inserted))
+    val nInserted = growth(name, v).getOrElse(inserted.count())
+    (nBatch - nInserted, nInserted)
     } finally batch.unpersist() // also on require/publish failure
   }
 
@@ -1048,11 +1089,14 @@ final class TableStore(spark: SparkSession, root: String) {
             .otherwise(0L))).head()
         val nMatched = mr.getLong(0)
         val nDeleted = if (mr.isNullAt(1)) 0L else mr.getLong(1)
-        // count the INSERT leg directly: nSrc - nMatched would mix units
-        // when the TARGET carries duplicate join keys (nMatched counts
-        // target rows, nSrc counts source rows) and can go negative
-        val nInserted = if (insertUnmatched) inserted.count() else 0L
-        publish(name, out.unionByName(inserted))
+        val v = publish(name, out.unionByName(inserted))
+        // the INSERT leg is the version's growth plus the deleted target
+        // rows — counted in rows, never as nSrc - nMatched, which mixes
+        // units when the TARGET carries duplicate join keys (nMatched
+        // counts target rows, nSrc source rows) and can go negative
+        val nInserted =
+          if (insertUnmatched) growth(name, v).map(_ + nDeleted).getOrElse(inserted.count())
+          else 0L
         (nMatched - nDeleted, nDeleted, nInserted)
       }
     } finally srcFull.unpersist()
@@ -1093,15 +1137,24 @@ final class TableStore(spark: SparkSession, root: String) {
   /** §2.9 D3 + §2.8 C2 — DELETE … WHERE with FK action propagation:
     * children with CASCADE delete their matching rows (recursively);
     * children with SET NULL null their FK columns; RESTRICT throws if any
-    * child still references a deleted row. */
+    * child still references a deleted row. A table no foreign key points
+    * at has nothing to propagate: its delete is the one write, and the
+    * count comes from the published version's stats. */
   def delete(name: String, pred: Column): Long = {
     val cur = table(name)
-    val doomed = cur.filter(pred).cache()
-    val nDeleted = doomed.count()
-    if (nDeleted > 0) propagate(name, doomed)
-    publish(name, cur.filter(!coalesce(pred, lit(false))))
-    doomed.unpersist()
-    nDeleted
+    val kept = cur.filter(!coalesce(pred, lit(false)))
+    if (dependents(name).isEmpty) {
+      val v = publish(name, kept)
+      growth(name, v).map(-_).getOrElse(cur.filter(pred).count())
+    } else {
+      val doomed = cur.filter(pred).cache()
+      try {
+        val nDeleted = doomed.count()
+        if (nDeleted > 0) propagate(name, doomed)
+        publish(name, kept)
+        nDeleted
+      } finally doomed.unpersist() // also when RESTRICT or the publish throws
+    }
   }
 
   private def propagate(parentName: String, doomedParents: DataFrame): Unit = {
@@ -1212,14 +1265,14 @@ final class TableStore(spark: SparkSession, root: String) {
     // planning cost per read that dominates long-chain epochs; without
     // deltas or partition subdirs it buys nothing.
     if (deltas.isEmpty && entries.forall(_._1 == "."))
-      spark.read.parquet(entries.map { case (_, vd) => s"$root/$name/$vd" }: _*)
+      readParquet(name, entries.map(_._2))(entries.map { case (_, vd) => s"$root/$name/$vd" }: _*)
     else entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (vd, es) =>
       val raw =
         if (es.exists(_._1 == "."))
-          spark.read.parquet(s"$root/$name/$vd")
+          readParquet(name, Seq(vd))(s"$root/$name/$vd")
         else
-          spark.read.option("basePath", s"$root/$name/$vd")
-            .parquet(es.map { case (sub, _) => s"$root/$name/$vd/$sub" }: _*)
+          readParquet(name, Seq(vd), Some(s"$root/$name/$vd"))(
+            es.map { case (sub, _) => s"$root/$name/$vd/$sub" }: _*)
       fillAddCols(raw, deltas, vd.stripPrefix("v").toInt)
     }.reduce(_ unionByName _)
   }
@@ -1513,7 +1566,7 @@ final class TableStore(spark: SparkSession, root: String) {
         require(Files.exists(p),
           s"$name version $v was vacuumed; time travel only reaches " +
             "versions analyze() has not reclaimed")
-        fillAddCols(spark.read.parquet(p.toString), readAddCols(name, v), v)
+        fillAddCols(readParquet(name, Seq(s"v$v"))(p.toString), readAddCols(name, v), v)
     }
     df
   }
@@ -1848,7 +1901,7 @@ final class TableStore(spark: SparkSession, root: String) {
                  else Paths.get(s"$root/$name/$vd/$sub"))
         }.sum
         TableStore.TableStats(
-          statsExactRowCount(name).getOrElse(table(name).count()), bytes, v)
+          statsExactRowCount(name, v).getOrElse(table(name).count()), bytes, v)
       case None =>
         val bytes = sizeOf(Paths.get(dataPath(name, v)))
         val protectedDirs = pinnedEntries.map(_._2).toSet
@@ -1864,7 +1917,7 @@ final class TableStore(spark: SparkSession, root: String) {
           dropSidecars(old)
         }
         TableStore.TableStats(
-          statsExactRowCount(name).getOrElse(table(name).count()), bytes, v)
+          statsExactRowCount(name, v).getOrElse(table(name).count()), bytes, v)
     }
   }
 

@@ -72,6 +72,48 @@ class IngestPipelineSpec extends SparkSpec {
     healed.clean.count() shouldBe 2
   }
 
+  test("healParents keeps and quarantines exactly the per-edge join reference's rows") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    def sameAsReference(df: org.apache.spark.sql.DataFrame, spec: EntitySpec): (Long, Long) = {
+      val (keep, quarantined) = IngestPipeline.healParents(df, spec)
+      val (refKeep, refQuarantined) = ConstraintsReference.healParents(df, spec)
+      keep.columns.toSeq shouldBe refKeep.columns.toSeq
+      quarantined.columns.toSeq shouldBe refQuarantined.columns.toSeq
+      rows(keep) shouldBe rows(refKeep)
+      rows(quarantined) shouldBe rows(refQuarantined)
+      (keep.count(), quarantined.count())
+    }
+    val o1 = "898ca408-050f-4a22-9b07-6e5ed27ab201"
+    val o2 = "898ca408-050f-4a22-9b07-6e5ed27ab202"
+    val p1 = "898ca408-050f-4a22-9b07-6e5ed27ab301"
+    // parent keys as stored: padded, upper-case, repeated
+    val customers = Seq(s" ${upperCust} ", goodCust, goodCust).toDF("customerid")
+    val orders = Seq(o1, s"  ${o2.toUpperCase}").toDF("orderid")
+    val products = Seq(p1).toDF("productid")
+    val orderSpec = EntitySpec("orders", "orderid", Map("orderid" -> AsUuid),
+      parents = Map("customerid" -> ("customerid", customers)))
+    val staged = Seq(
+      ("898ca408-050f-4a22-9b07-6e5ed27ab211", "x", goodCust),
+      ("898ca408-050f-4a22-9b07-6e5ed27ab212", "y", upperCust.toLowerCase),
+      ("898ca408-050f-4a22-9b07-6e5ed27ab213", "z", "898ca408-050f-4a22-9b07-6e5ed27ab999"),
+      ("898ca408-050f-4a22-9b07-6e5ed27ab214", "w", null)
+    ).toDF("orderid", "note", "customerid")
+    sameAsReference(staged, orderSpec) shouldBe ((3L, 1L))
+    // two edges, the orphan on either one quarantines the row
+    val detailSpec = EntitySpec("order_details", "orderdetailid", Map("orderdetailid" -> AsUuid),
+      parents = Map("orderid" -> ("orderid", orders), "productid" -> ("productid", products)))
+    val details = Seq(
+      ("d1", 2, o1, p1),
+      ("d2", 1, o2, p1),
+      ("d3", 5, o1, "898ca408-050f-4a22-9b07-6e5ed27ab399"),
+      ("d4", 1, "898ca408-050f-4a22-9b07-6e5ed27ab299", p1),
+      ("d5", 3, null, null)
+    ).toDF("orderdetailid", "quantity", "orderid", "productid")
+    sameAsReference(details, detailSpec) shouldBe ((3L, 2L))
+    // the dirty customers fixture has no parents: nothing to heal
+    sameAsReference(dirtyCustomers, custSpec) shouldBe ((4L, 0L))
+  }
+
   test("verifyCounts emits the staging/clean/quarantine dashboard") {
     val r = IngestPipeline.run(dirtyCustomers, custSpec)
     val counts = IngestPipeline.verifyCounts(dirtyCustomers, r)

@@ -22,7 +22,48 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     p
   }
 
+  /** Spark jobs `body` submits from this thread (broadcast and subquery
+    * jobs included: they inherit its local properties), and the distinct
+    * SQL executions — one per action — they belong to. Listener events
+    * arrive asynchronously but in order, so a marked sentinel job run
+    * afterwards flushes them. */
+  def sparkActivity(body: => Any): SparkSpec.Activity = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.activity"
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        prop(key) match {
+          case Some("body") =>
+            jobs.incrementAndGet()
+            prop("spark.sql.execution.root.id").orElse(prop("spark.sql.execution.id"))
+              .foreach(executions.add)
+          case Some("sentinel") => flushed.countDown()
+          case _ => ()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def marked(tag: String)(f: => Any): Unit = {
+        sc.setLocalProperty(key, tag)
+        try f finally sc.setLocalProperty(key, null)
+      }
+      marked("body")(body)
+      marked("sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
+      SparkSpec.Activity(jobs.get, executions.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit =
     try specTempDirs.foreach(graft.operators.EventsOps.rmTree)
     finally super.afterAll()
+}
+
+object SparkSpec {
+  final case class Activity(jobs: Int, sqlExecutions: Int)
 }

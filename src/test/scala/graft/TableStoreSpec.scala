@@ -1,9 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.constraints.Constraints._
-import graft.sources.TableStore
+import graft.sources.{FileStats, TableStore}
 
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -341,6 +344,132 @@ class TableStoreSpec extends SparkSpec {
     }
     st.liveVersions("t").max shouldBe v0 // version pointer untouched
     st.table("t").as[(Long, String)].collect() shouldBe Seq((1L, "a"))
+  }
+
+  /** Run `body` over sidecars without their schema line — the layout of
+    * stores written before schemas were recorded — then restore them. */
+  private def withoutSchemaLines[A](st: TableStore)(body: => A): A = {
+    val sidecars = Files.walk(Paths.get(st.rootDir)).iterator().asScala
+      .filter(_.toString.endsWith(".stats")).toSeq
+    val saved = sidecars.map(p => p -> Files.readAllBytes(p))
+    saved.foreach { case (p, b) =>
+      Files.write(p, new String(b).split("\n").filterNot(_.startsWith("S\t")).mkString("\n").getBytes)
+    }
+    try body finally saved.foreach { case (p, b) => Files.write(p, b) }
+  }
+
+  /** `read`'s schema comes from the stats sidecars without a Spark job,
+    * and equals the schema Spark infers when the sidecars have none. */
+  private def schemaWithoutJobs(st: TableStore)(read: => DataFrame): StructType = {
+    var schema: StructType = null
+    sparkActivity { schema = read.schema }.jobs shouldBe 0
+    val inferred = withoutSchemaLines(st) {
+      var s: StructType = null
+      sparkActivity { s = read.schema }.jobs should be > 0
+      s
+    }
+    schema shouldBe inferred
+    schema
+  }
+
+  private val typed = Seq(
+    (1, BigDecimal("10.50"), java.sql.Date.valueOf("2024-01-05"), true, "a"),
+    (2, BigDecimal("0.01"), null, false, null)
+  ).toDF("id", "price", "day", "flag", "name")
+    .withColumn("price", col("price").cast("decimal(12,2)"))
+
+  test("table() takes the schema from the stats sidecar: no job, inference's answer") {
+    val st = freshStore()
+    st.create("t", typed, Seq(PrimaryKey(Seq("id"))))
+    val s0 = schemaWithoutJobs(st)(st.table("t"))
+    s0 shouldBe spark.read.parquet(s"${st.rootDir}/t/v0").schema
+    s0.map(f => f.name -> f.dataType.simpleString) shouldBe Seq("id" -> "int",
+      "price" -> "decimal(12,2)", "day" -> "date", "flag" -> "boolean", "name" -> "string")
+    st.addColumn("t", "score", "int", "7")
+    schemaWithoutJobs(st)(st.table("t")).fieldNames.last shouldBe "score"
+    st.insert("t", Seq((3, BigDecimal("1.00"), java.sql.Date.valueOf("2024-02-01"), true, "c", 1))
+      .toDF("id", "price", "day", "flag", "name", "score")
+      .withColumn("price", col("price").cast("decimal(12,2)")))
+    st.dropColumn("t", "flag")
+    st.renameColumn("t", "name", "label")
+    schemaWithoutJobs(st)(st.table("t")).fieldNames.toSeq shouldBe
+      Seq("id", "price", "day", "label", "score")
+    st.table("t").orderBy("id").select("label", "score").collect().map(r =>
+      (r.getString(0), r.getInt(1))).toSeq shouldBe Seq(("a", 7), (null, 7), ("c", 1))
+  }
+
+  test("sidecar schemas hold across append chains, partitions and pinned versions") {
+    val st = freshStore()
+    st.create("a", typed.limit(1))
+    st.appendBatch("a", 0L, typed)
+    st.appendBatch("a", 1L, typed.filter(col("id") === 2))
+    schemaWithoutJobs(st)(st.table("a"))
+    schemaWithoutJobs(st)(st.scanSkipping("a", Seq(FileStats.ColumnRange("id", Some(2), None)))._1)
+    st.table("a").count() shouldBe 4
+
+    st.createPartitioned("ev", typed, "name")
+    st.updateWherePruned("ev", col("id") === 1, Map("flag" -> lit(false)))
+    schemaWithoutJobs(st)(st.table("ev")).fieldNames.last shouldBe "name"
+
+    st.create("p", typed)
+    val pinned = st.pinVersion("p", "release")
+    st.update("p", col("id") === 1, Map("name" -> lit("z")))
+    st.addColumn("p", "extra", "string", "'x'")
+    st.analyze("p")
+    schemaWithoutJobs(st)(st.tableAt("p", pinned)) shouldBe
+      spark.read.parquet(s"${st.rootDir}/p/v$pinned").schema
+    schemaWithoutJobs(st)(st.tableAtPin("p", "release"))
+    schemaWithoutJobs(st)(st.table("p")).fieldNames.last shouldBe "extra"
+  }
+
+  test("a store whose stats sidecars have no schema line still reads") {
+    val st = freshStore()
+    st.create("t", typed)
+    st.appendBatch("t", 0L, typed)
+    withoutSchemaLines(st) {
+      st.table("t").count() shouldBe 4
+      st.insert("t", typed) shouldBe 2
+    }
+    st.table("t").count() shouldBe 6
+  }
+
+  test("DML counts are the same from the stats and from the count() fallback") {
+    for (dropStats <- Seq(false, true)) {
+      val st = freshStore()
+      // a missing sidecar on the snapshot forces the count() fallback
+      def snapshot(name: String): Unit =
+        if (dropStats) Files.delete(Paths.get(st.rootDir, name, s"v${st.currentVersionOf(name)}.stats"))
+      st.create("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq(PrimaryKey(Seq("id"))))
+      snapshot("t")
+      st.insert("t", Seq((2L, "dup"), (3L, "c"), (3L, "dup-in-batch")).toDF("id", "v"),
+        onConflictDoNothing = true) shouldBe 1
+      snapshot("t")
+      st.insert("t", Seq((4L, "d"), (5L, "e")).toDF("id", "v")) shouldBe 2
+      snapshot("t")
+      st.upsert("t", Seq((2L, "B"), (6L, "f")).toDF("id", "v")) shouldBe ((1L, 1L))
+      snapshot("t")
+      st.mergeInto("t", Seq((1L, "KILL"), (3L, "C"), (7L, "g")).toDF("id", "v"), Seq("id"),
+        matchedUpdate = Map("v" -> TableStore.src("v")),
+        matchedDelete = Some(TableStore.src("v") === "KILL")) shouldBe ((1L, 1L, 1L))
+      snapshot("t")
+      st.delete("t", col("id") >= 6L) shouldBe 2
+      snapshot("t")
+      st.delete("t", col("id") === 99L) shouldBe 0
+      st.table("t").orderBy("id").as[(Long, String)].collect().toSeq shouldBe
+        Seq((2L, "B"), (3L, "C"), (4L, "d"), (5L, "e"))
+    }
+  }
+
+  test("a refused RESTRICT delete releases its cached rows") {
+    val st = freshStore()
+    st.create("categories", Seq((1, "fruit")).toDF("catid", "name"),
+      Seq(PrimaryKey(Seq("catid"))))
+    st.create("subcategories", Seq((10, 1)).toDF("subid", "catid"),
+      Seq(ForeignKey(Seq("catid"), "categories", Seq("catid"), Restrict)))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    an[IllegalStateException] should be thrownBy
+      st.delete("categories", col("catid") === 1)
+    spark.sparkContext.getPersistentRDDs.size shouldBe before
   }
 
 }
