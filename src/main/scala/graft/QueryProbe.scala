@@ -1,12 +1,16 @@
 package graft
 
 import graft.core.GraftSession
+import graft.obs.Trace
 
-/** Per-query measurement harness for the optimization rounds: run the
-  * named queries (args) against SPARK_GRAFT_SF_DIR with the epoch trace
-  * on, timing each run and draining the per-epoch walls, so a slow
-  * maintained-store gate decomposes into its epoch/maintenance/serve
-  * parts instead of one opaque number. Same session shape as Bench.
+/** The per-query measurement harness: run the named queries (args)
+  * against SPARK_GRAFT_SF_DIR, timing each run inside a
+  * [[graft.obs.Trace]] capture and printing its events after the run's
+  * `[probe]` line — per-epoch walls, phase walls (q227's build/serve),
+  * pruned store reads (files read of files total) and dedup candidate
+  * counts — so a slow maintained-store gate decomposes into its
+  * epoch/maintenance/serve parts instead of one opaque number. Same
+  * session shape as Bench.
   *
   * Usage: runMain graft.QueryProbe q236_cluster_family_release [more...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
@@ -34,7 +38,6 @@ object QueryProbe {
     })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.props("graft.epochTrace") = "1"
     // Per-job attribution: call site + wall per Spark job, so a slow gate
     // decomposes into its actions (SPARK_GRAFT_PROBE_JOBS=1 to print).
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
@@ -75,10 +78,9 @@ object QueryProbe {
           .flatMap(c => if (c < 0x20 && c != '\n' && c != '\t' && c != '\r')
             f"\\x${c.toInt}%02x" else c.toString))
       } else (1 to runs).foreach { i =>
-        operators.Dedup.epochTrace.clear()
         jobLog.clear()
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
+        val (n, events) = Trace.capture(fn(spark, sfDir).count())
         val dt = (System.nanoTime() - t0) / 1e9
         if (sys.env.contains("SPARK_GRAFT_PROBE_JOBS")) {
           Thread.sleep(200) // let listener drain
@@ -99,16 +101,17 @@ object QueryProbe {
             println(f"[jobs]   $tot%7.2f s  n=$cnt%-4d $site")
           }
         }
-        val epochs = {
-          val b = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-          var e = operators.Dedup.epochTrace.poll()
-          while (e != null) { b += e; e = operators.Dedup.epochTrace.poll() }
-          b.sortBy(_._1)
-        }
-        val ep = epochs.map { case (e, t) => f"e$e=$t%.2f" }.mkString(" ")
-        println(f"[probe] $name run$i: $dt%.2f s rows=$n epochs: $ep")
+        println(f"[probe] $name run$i: $dt%.2f s rows=$n")
+        events.foreach(e => println("[trace]   " + render(e)))
       }
     }
     spark.stop()
+  }
+
+  private def render(e: Trace.Event): String = e match {
+    case Trace.Epoch(epoch, sec) => f"epoch $epoch: $sec%.2f s"
+    case Trace.Phase(name, sec) => f"phase $name: $sec%.2f s"
+    case Trace.StoreRead(tag, total, read) => s"read $tag: $read/$total files"
+    case Trace.Candidates(n) => s"candidates: $n"
   }
 }

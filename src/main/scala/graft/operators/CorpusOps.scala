@@ -485,7 +485,7 @@ object CorpusOps {
             // bounded replay: the volume-derived q183 width for
             // batch-bounded admission
             batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(s, EventsOps.planBytes(docs) / 4).toString)
+              EventsOps.replayWidth(EventsOps.planBytes(docs) / 4).toString)
             gate.admit(batch, epoch)
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

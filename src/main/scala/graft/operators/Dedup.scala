@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
 import graft.functions.TextFunctions._
+import graft.obs.Trace
 
 /** Deduplication suite for a training-data pipeline (SURVEY.md §7.1 step 9):
   * exact, n-gram Jaccard, MinHash+LSH, SimHash. Each returns the same
@@ -181,7 +182,13 @@ object Dedup {
     * [[buildLshVerifiedPairs]]'s caches and localCheckpoint registered,
     * captured so [[releaseLshCache]] can unpersist exactly those blocks
     * (a localCheckpointed Dataset exposes no unpersist of its own). */
-  private[graft] final case class MemoEntry(df: DataFrame, rddIds: Set[Int])
+  private[graft] final case class MemoEntry(df: DataFrame, rddIds: Set[Int]) {
+    /** Unpersist exactly the blocks the build registered. */
+    def release(): Unit = {
+      val sc = df.sparkSession.sparkContext
+      rddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
+    }
+  }
 
   /** Run `build` and record which persistent RDDs it newly registered.
     * Memo builds are serialized under the memo lock, so the before/after
@@ -214,9 +221,8 @@ object Dedup {
   private[graft] def releaseLshCache(dir: String): Unit =
     lshPairsMemo.synchronized {
       import scala.jdk.CollectionConverters._
-      for (perDir <- lshPairsMemo.values.asScala; e <- perDir.remove(dir);
-           sc = e.df.sparkSession.sparkContext; id <- e.rddIds)
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true))
+      for (perDir <- lshPairsMemo.values.asScala; e <- perDir.remove(dir))
+        e.release()
     }
 
   /** Release every memoized corpus (the session-shutdown hygiene hook). */
@@ -276,8 +282,7 @@ object Dedup {
   //    (boilerplate repeats in time), which doc_id order exploits and a
   //    hash would destroy. Pruning bites once the store outgrows the
   //    batch (files per candidate ≫ 1); the deployment lever is docs per
-  //    file — EpochCostProbe's store_reads series shows the measured
-  //    skip counts.
+  //    file.
   //  - BAND rows sort by [[bandBucket]] — (band, bv-prefix) packed into
   //    one long, ORDER-ALIGNED with the (band, bv) join key — and are
   //    probed with the batch's sorted band-key set exactly like the
@@ -316,26 +321,6 @@ object Dedup {
   private[graft] def bucketLayout(df: DataFrame, files: Int, keys: String*): DataFrame =
     df.repartitionByRange(files, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
-
-  /** (tag, filesTotal, filesRead) of each pruned store read, recorded when
-    * the `graft.epochTrace` system property is set — the file-skip
-    * evidence consumed by EpochCostProbe and the skipping specs. */
-  private[graft] val skipTrace =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Int)]()
-
-  /** Per-kernel-call candidate-doc cardinality, recorded under the same
-    * `graft.epochTrace` property — its own queue, NOT a [[skipTrace]]
-    * row (ADVICE r14: the r14 probe overloaded files_total/files_read
-    * with a row count, mixing units in the artifact's store_reads
-    * series). One entry per materialized kernel call, in execution
-    * order, so EpochCostProbe aligns it with epochs. */
-  private[graft] val candTrace =
-    new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-
-  private def recordSkip(tag: String, rep: graft.sources.FileStats.ScanReport): Unit =
-    if (sys.props.contains("graft.epochTrace")) {
-      skipTrace.add((tag, rep.filesTotal, rep.filesRead)); ()
-    }
 
   /** Materialize `df` eagerly and truncate its lineage — the suite's
     * checkpoint seam (VERDICT r14 next #3). Default: `localCheckpoint`,
@@ -685,11 +670,11 @@ object Dedup {
           val bbl = batchBandsLocal(s, newSig)
           val (bands, bandRep) = store.scanSkippingIds("bands", Nil,
             "bkt", bbl.map(_._1).getOrElse(batchBandKeys(newSig)))
-          recordSkip("bands", bandRep)
+          Trace.storeRead("bands", bandRep)
           incrementalLshKernelPruned(s, bands, {
             case Some(ids) =>
               val (th, rep) = store.scanSkippingIds("shh", Nil, "doc_id", ids)
-              recordSkip("shh", rep)
+              Trace.storeRead("shh", rep)
               th.select(col("doc_id"), col("h"))
             case None => store.table("shh").select(col("doc_id"), col("h"))
           }, newSig, newTh, batchBands = bbl.map(_._2))
@@ -886,13 +871,13 @@ object Dedup {
           .collect().map(_.getLong(0))
         if (probe.length <= maxBroadcastCand) {
           val n = probe.length.toLong
-          if (sys.props.contains("graft.epochTrace")) { candTrace.add(n); () }
+          Trace.record(Trace.Candidates(n))
           java.util.Arrays.sort(probe)
           import s.implicits._
           (broadcast(probe.toSeq.toDF("doc_id")), Some(probe), Some(n))
         } else {
           val n = candDocsBase.count()
-          if (sys.props.contains("graft.epochTrace")) { candTrace.add(n); () }
+          Trace.record(Trace.Candidates(n))
           (candDocsBase, None, Some(n))
         }
       }
@@ -1357,20 +1342,16 @@ object Dedup {
     * 2 epochs, q201's 4) stay at the floor and pay ZERO layout tax,
     * while a probe/deployment store ramps from its 4th batch on (the
     * early coarse layers become a vanishing fraction, and
-    * auto-compaction re-clusters them anyway). An explicit `spark.graft
-    * .state.filesPerEpoch` (read off `s` so a stream's cloned-session
-    * conf governs its own appends) still overrides — the
-    * reproducibility lever the probes use. */
-  private def sizedStateFiles(s: SparkSession, storeRows: Long,
-      batchRows: Long, candidates: Option[Long]): Int =
-    s.conf.getOption("spark.graft.state.filesPerEpoch").map(_.toInt).getOrElse {
-      val c = candidates.getOrElse(0L)
-      if (c <= 0L || batchRows <= 0L || storeRows < 4L * batchRows) StateFilesFloor
-      else {
-        val f = math.ceil(2.0 * batchRows * c / storeRows)
-        math.max(StateFilesFloor.toDouble, math.min(StateFilesCap.toDouble, f)).toInt
-      }
+    * auto-compaction re-clusters them anyway). */
+  private def sizedStateFiles(storeRows: Long, batchRows: Long,
+      candidates: Option[Long]): Int = {
+    val c = candidates.getOrElse(0L)
+    if (c <= 0L || batchRows <= 0L || storeRows < 4L * batchRows) StateFilesFloor
+    else {
+      val f = math.ceil(2.0 * batchRows * c / storeRows)
+      math.max(StateFilesFloor.toDouble, math.min(StateFilesCap.toDouble, f)).toInt
     }
+  }
 
   private[graft] def stateSig(state: DataFrame): DataFrame =
     state.filter(col("kind") === 2)
@@ -1392,7 +1373,7 @@ object Dedup {
     val (df, rep) = st.scanSkippingIds("state",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(3), Some(3))),
       "bkt", keys)
-    recordSkip("state.bands", rep)
+    Trace.storeRead("state.bands", rep)
     df.select("doc_id", "n", "band", "bv")
   }
 
@@ -1405,7 +1386,7 @@ object Dedup {
       val (df, rep) = st.scanSkippingIds("state",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
         "doc_id", cand)
-      recordSkip("state.shh", rep)
+      Trace.storeRead("state.shh", rep)
       df.select("doc_id", "h")
     case None => stateTh(st.table("state"))
   }
@@ -1420,13 +1401,6 @@ object Dedup {
       stateLayout(stateFrame(sig, th, th.select("doc_id").limit(0))))
     finally { sig.unpersist(); th.unpersist(); () }
   }
-
-  /** Per-epoch wall-clock trace of [[dedupIngestEpoch]], recorded when the
-    * `graft.epochTrace` system property is set. The q199 epoch-cost probe
-    * (VERDICT r12 next #3) reads per-epoch walls from here to show epoch
-    * cost tracks BATCH size, not accumulated store size. */
-  private[graft] val epochTrace =
-    new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
 
   /** The q199 per-epoch dedup-admission step, shared with the restart
     * spec. Batch docs check against EVERY previously seen doc's
@@ -1443,13 +1417,8 @@ object Dedup {
     * own ledger check remains the write-side authority). There is no
     * partial-commit window to reason about: one table, one flip. */
   private[graft] def dedupIngestEpoch(st0: graft.sources.TableStore)(
-      batch: DataFrame, epoch: Long): Unit = {
-    val t0 = System.nanoTime()
-    try dedupIngestEpochBody(st0)(batch, epoch)
-    finally if (sys.props.contains("graft.epochTrace")) {
-      epochTrace.add((epoch, (System.nanoTime() - t0) / 1e9)); ()
-    }
-  }
+      batch: DataFrame, epoch: Long): Unit =
+    Trace.epoch(epoch)(dedupIngestEpochBody(st0)(batch, epoch))
 
   private def dedupIngestEpochBody(st0: graft.sources.TableStore)(
       batch: DataFrame, epoch: Long): Unit = {
@@ -1489,7 +1458,7 @@ object Dedup {
         finally k.release()
       // batch size off the already-populated newTh cache (shingle rows
       // dominate the state frame, so they ARE the layout-relevant count)
-      val files = sizedStateFiles(s, storeRows, newTh.count(), k.candCount)
+      val files = sizedStateFiles(storeRows, newTh.count(), k.candCount)
       st.appendBatch("state", epoch,
         stateLayout(stateFrame(newSig, newTh, cut), files))
       maybeAutoCompact(s, st, k.candCount)
@@ -1601,9 +1570,9 @@ object Dedup {
 
   /** q199 body; `rowsPerFile` sizes the staged replay files (specs pass a
     * tiny value to force the multi-file aligned-batch path at test scale). */
-  private[graft] def q199Impl(rowsPerFile: Long = EventsOps.OuterStageRowsPerFile,
-      slices: Int = 2)(
+  private[graft] def q199Impl(rowsPerFile: Long = EventsOps.OuterStageRowsPerFile)(
       s: SparkSession, d: String): DataFrame = {
+    val slices = 2
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
     val storeRoot = java.nio.file.Files.createTempDirectory("graft-dedup-ingest")
@@ -1616,16 +1585,13 @@ object Dedup {
         val nFiles = math.max(1L,
           math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
         // slice rule (VERDICT r12 next #7, the q149/q187 StreamSliceHours
-        // pattern): `slices` doc_id slices × nFiles aligned files,
-        // default 2. Two epochs are
+        // pattern): 2 doc_id slices × nFiles aligned files. Two epochs are
         // the minimum that exercises cross-epoch dedup (stored-vs-batch
         // pairs over the epoch boundary) — the dominant per-epoch costs
         // (batch shingling, verify checkpoint, state append, microbatch
         // bookkeeping) are fixed per EPOCH, so the r12-era 4 slices paid
         // 2× that toll for no additional coverage; corpora large enough to
         // need finer batches raise nFiles via rowsPerFile instead.
-        // EpochCostProbe passes a higher slice count to watch per-epoch
-        // wall against a growing store.
         val width = EventsOps.stageAligned(streamDir,
           EventsOps.slicedStages(docs, col("doc_id"), lo, hi, slices), nFiles)
         val sinkName = "q199_dedup_sink"
@@ -1645,7 +1611,7 @@ object Dedup {
             // width (ADVICE r12); the clone persists across epochs, the
             // set is idempotent.
             batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(s,
+              EventsOps.replayWidth(
                 EventsOps.planBytes(docs) / math.max(1, slices)).toString)
             dedupIngestEpoch(st)(batch, epoch)
           }
@@ -1847,7 +1813,7 @@ object Dedup {
       val (df, rep) = st.scanSkippingIds("state",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(4), Some(4))),
         "doc_id", e)
-      recordSkip("state.labels", rep)
+      Trace.storeRead("state.labels", rep)
       df.select(col("doc_id"), col("h").as("component"))
     case None =>
       st.table("state").filter(col("kind") === 4)
@@ -1902,7 +1868,7 @@ object Dedup {
       val (m, rep) = st.scanSkippingIds("state",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(5), Some(5))),
         "doc_id", ids)
-      recordSkip("state.maps", rep)
+      Trace.storeRead("state.maps", rep)
       // min over re-emitted rows picks the furthest-resolved target
       val step = m.select(col("doc_id").as("component"), col("h").as("nc"))
         .groupBy("component").agg(min(col("nc")).as("nc"))
@@ -1943,7 +1909,7 @@ object Dedup {
       val (m, rep) = st.scanSkippingIds("state",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(5), Some(5))),
         "doc_id", ids)
-      recordSkip("state.maps", rep)
+      Trace.storeRead("state.maps", rep)
       import s.implicits._
       // min over re-emitted rows picks the furthest-resolved target; the
       // semi-join restricts the scan's file-granular SUPERSET to the ids
@@ -2016,13 +1982,8 @@ object Dedup {
     * moment the text is in hand. */
   private[graft] def clusterIngestEpoch(st0: graft.sources.TableStore,
       meta: Option[DataFrame => DataFrame] = None)(
-      batch: DataFrame, epoch: Long): Unit = {
-    val t0 = System.nanoTime()
-    try clusterIngestEpochBody(st0, meta)(batch, epoch)
-    finally if (sys.props.contains("graft.epochTrace")) {
-      epochTrace.add((epoch, (System.nanoTime() - t0) / 1e9)); ()
-    }
-  }
+      batch: DataFrame, epoch: Long): Unit =
+    Trace.epoch(epoch)(clusterIngestEpochBody(st0, meta)(batch, epoch))
 
   private def clusterIngestEpochBody(st0: graft.sources.TableStore,
       meta: Option[DataFrame => DataFrame])(
@@ -2120,7 +2081,7 @@ object Dedup {
       // optional per-doc metadata (kinds >= 6) — batch-bounded expression
       // work at arrival time (the only moment the text is in hand)
       val metaRows = meta.map(f => f(batch))
-      val files = sizedStateFiles(s, storeRows, newTh.count(), k.candCount)
+      val files = sizedStateFiles(storeRows, newTh.count(), k.candCount)
       st.appendBatch("state", epoch,
         stateLayout(clusterStateFrame(newSig, newTh, labelRows, maps, metaRows),
           files))
@@ -2159,7 +2120,7 @@ object Dedup {
     val (ldf, rep) = st.scanSkippingIds("state",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(4), Some(4))),
       "doc_id", eps)
-    recordSkip("state.labels", rep)
+    Trace.storeRead("state.labels", rep)
     val rawArr = ldf.select(col("doc_id"), col("h").as("component"))
       .join(broadcast(eps.toSeq.toDF("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(min(col("component")).as("component"))

@@ -535,7 +535,7 @@ object DedupClusters {
       val root = perDir.getOrElseUpdate(d, {
         val st = new graft.sources.TableStore(s,
           java.nio.file.Files.createTempDirectory("graft-cluster-ingest").toString)
-        ingestClusterEpochs(st, s, d, slices = 4)
+        ingestClusterEpochs(st, s, d)
         st.rootDir
       })
       new graft.sources.TableStore(s, root)
@@ -573,17 +573,17 @@ object DedupClusters {
       size(graft.functions.TextFunctions.tokens(col("text")))
         .cast("long").as("ntok"))
 
-  /** Feed the documents table into `st` as `slices` equal doc_id-ordered
+  /** Feed the documents table into `st` as 4 equal doc_id-ordered
     * epochs of [[Dedup.clusterIngestEpoch]] (quality/token/digest
     * metadata riding as kind-6/7 sidecar rows), each epoch also stamping
     * its [[cardRows]] into the `card` table. The card append commits
     * AFTER the state flip under the same epoch id on its own ledger (the
     * dedup sink's multi-table discipline): a crash between the two
-    * replays to state-no-op + card-apply, so the pair converges. Shared
-    * by the memoized q203–q205/q214 store and the epoch-cost probe's
-    * cluster arm. */
+    * replays to state-no-op + card-apply, so the pair converges. Builds
+    * the memoized q203–q205/q214 store. */
   private[graft] def ingestClusterEpochs(st: graft.sources.TableStore,
-      s: org.apache.spark.sql.SparkSession, d: String, slices: Int): Unit = {
+      s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+    val slices = 4
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
     Dedup.buildDedupState(st, docs.limit(0))
@@ -609,20 +609,6 @@ object DedupClusters {
       st.pinVersion("state", "epoch1")
       st.pinVersion("card", "epoch1"); ()
     }
-  }
-
-  /** Probe seam: the q203 ingest at an arbitrary slice count over a
-    * FRESH (never memoized) store — EpochCostProbe's cluster arm.
-    * Returns the final maintained-label count; the store is deleted
-    * before returning. */
-  private[graft] def clusterProbeIngest(slices: Int)(
-      s: org.apache.spark.sql.SparkSession, d: String): Long = {
-    val root = java.nio.file.Files.createTempDirectory("graft-cluster-probe")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
-      ingestClusterEpochs(st, s, d, slices)
-      Dedup.clusterLabels(st).count()
-    } finally EventsOps.rmTree(root)
   }
 
   /** Drop the memoized cluster store for `dir` (all sessions) and delete

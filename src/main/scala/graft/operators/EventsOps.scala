@@ -161,7 +161,7 @@ object EventsOps {
       val nFiles = math.max(1L, math.min(32L, nRows / rowsPerFile + 1)).toInt
       // bounded replay, volume-derived (the q183 rule's scale-adaptive
       // form): width from the per-slice input estimate, floor 8
-      val epochWidth = replayWidth(s, planBytes(rows) / math.max(1, slices))
+      val epochWidth = replayWidth(planBytes(rows) / math.max(1, slices))
       val width = stageAligned(streamDir,
         slicedStages(rows, key, lo, hi, slices), nFiles)
       s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
@@ -183,26 +183,28 @@ object EventsOps {
   }
 
   /** Estimated bytes of a frame from optimizer statistics (for parquet
-    * scans: the file bytes) — metadata only, no job. */
+    * scans: the file bytes) — metadata only, no job. A frame without
+    * statistics (an RDD-backed frame, say) reports Spark's
+    * `spark.sql.defaultSizeInBytes` sentinel; that is unknown volume,
+    * not real volume, so it counts as 0 and a width derived from it
+    * stays at the floor — not at the 2048 cap, nor negative where two
+    * such estimates are added. */
   private[graft] def planBytes(df: org.apache.spark.sql.DataFrame): Long = {
-    val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (b > BigInt(Long.MaxValue)) Long.MaxValue else b.toLong
+    val qe = df.queryExecution
+    val b = qe.optimizedPlan.stats.sizeInBytes
+    if (b >= BigInt(qe.sparkSession.sessionState.conf.defaultSizeInBytes)) 0L
+    else b.toLong
   }
 
   /** Scale-adaptive bounded-replay shuffle width (guide §2.2/§2.4,
-    * VERDICT r19 #2): max(8, estBytes / target), target =
-    * `spark.graft.replay.targetPartitionBytes` (default 64 MiB), capped
-    * at 2048. The bench-scale floor stays the q183 8-partition rule
-    * (every SF in /root/testdata derives width 8, so bench plans are
-    * unchanged), while 10×/100× replicas — and deployment-scale epochs —
-    * grow the width with the volume instead of pinning SF-proportional
-    * epoch shuffles at a constant. */
-  private[graft] def replayWidth(s: org.apache.spark.sql.SparkSession,
-      estBytes: Long): Int = {
-    val target = s.conf.getOption("spark.graft.replay.targetPartitionBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    math.min(2048L, math.max(8L, estBytes / math.max(1L, target) + 1L)).toInt
-  }
+    * VERDICT r19 #2): max(8, estBytes / 64 MiB), capped at 2048. The
+    * bench-scale floor stays the q183 8-partition rule (every test
+    * scale factor derives width 8, so bench plans are unchanged),
+    * while 10×/100× replicas — and deployment-scale epochs — grow the
+    * width with the volume instead of pinning SF-proportional epoch
+    * shuffles at a constant. */
+  private[graft] def replayWidth(estBytes: Long): Int =
+    math.min(2048L, math.max(8L, estBytes / (64L << 20) + 1L)).toInt
 
   /** Width for the serve/report phase of a replay-width gate: serve legs
     * join STORE-wide frames (the whole ingested corpus), so their width
@@ -211,7 +213,7 @@ object EventsOps {
     * Sets the CLONE's conf; the next action plans with it. */
   private[graft] def serveWidth(c: org.apache.spark.sql.SparkSession,
       estBytes: Long): Unit = {
-    c.conf.set("spark.sql.shuffle.partitions", replayWidth(c, estBytes).toString)
+    c.conf.set("spark.sql.shuffle.partitions", replayWidth(estBytes).toString)
     ()
   }
 
@@ -236,7 +238,7 @@ object EventsOps {
     s.conf.getAll.foreach { case (k, v) =>
       try c.conf.set(k, v) catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
-    val w = if (estEpochBytes < 0L) 8 else replayWidth(s, estEpochBytes)
+    val w = if (estEpochBytes < 0L) 8 else replayWidth(estEpochBytes)
     c.conf.set("spark.sql.shuffle.partitions", w.toString)
     body(c)
   }
@@ -1087,7 +1089,7 @@ object EventsOps {
       try {
         // bounded replay: state shuffle sized to the replayed volume
         s.conf.set("spark.sql.shuffle.partitions",
-          replayWidth(s, planBytes(raw)).toString)
+          replayWidth(planBytes(raw)).toString)
         val q = EventStream.sessionRollup(stream).writeStream
           .format("memory").queryName(sinkName).outputMode("complete")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1288,7 +1290,7 @@ object EventsOps {
       try {
         // bounded replay: state shuffle sized to the replayed volume
         s.conf.set("spark.sql.shuffle.partitions",
-          replayWidth(s, planBytes(raw)).toString)
+          replayWidth(planBytes(raw)).toString)
         val q = stream
           .groupBy(window(col("ts"), "1 hour").getField("start").as("hour_start"),
             col("event_type"))

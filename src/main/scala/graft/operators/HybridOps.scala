@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
+import graft.obs.Trace
 
 /** Hybrid retrieval with an ANN dense leg — the shape a production
   * retrieval stack actually runs at 100 TB (VERDICT r16 next #2): the
@@ -206,10 +207,9 @@ object HybridOps {
     * the fusion joins two ≤ 50-row rankings. */
   /** q227's BUILD side: both maintained stores ingested as four epochs
     * with the compaction policy forced hot, and the coordinated release
-    * pinned after epoch 1. Factored out of the gate so the
-    * release-serving probe ([[graft.ReleaseServeProbe]]) can time the
-    * build and the serving read SEPARATELY (VERDICT r18 next #7).
-    * Returns the catalog holding the "yesterday" release. */
+    * pinned after epoch 1. The gate traces it as its `build` phase,
+    * apart from the `serve` phase of [[servePinnedStack]]. Returns the
+    * catalog holding the "yesterday" release. */
   private[graft] def buildPinnedStack(s: org.apache.spark.sql.SparkSession,
       d: String, idxRoot: String, ivfRoot: String, catRoot: String)
       : graft.sources.ReleaseCatalog = {
@@ -276,12 +276,12 @@ object HybridOps {
     val ivfRoot = java.nio.file.Files.createTempDirectory("graft-relivf")
     val catRoot = java.nio.file.Files.createTempDirectory("graft-relcat")
     try {
-      val cat = buildPinnedStack(s, d,
-        idxRoot.toString, ivfRoot.toString, catRoot.toString)
+      val cat = Trace.phase("build")(buildPinnedStack(s, d,
+        idxRoot.toString, ivfRoot.toString, catRoot.toString))
       // serve reads the pinned store-wide snapshots — full-volume width
       EventsOps.serveWidth(s, inBytes)
       // pinned frame: the store roots are deleted in the finally below
-      Dedup.pin(servePinnedStack(cat))
+      Trace.phase("serve")(Dedup.pin(servePinnedStack(cat)))
     } finally {
       EventsOps.rmTree(idxRoot); EventsOps.rmTree(ivfRoot)
       EventsOps.rmTree(catRoot)

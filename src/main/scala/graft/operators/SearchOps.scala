@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
 import graft.functions.TextFunctions._
+import graft.obs.Trace
 
 /** Inverted-index operators: build token→postings lists and answer
   * conjunctive (AND) term queries by posting intersection — the index
@@ -567,23 +568,25 @@ object SearchOps {
   private[graft] def indexIngestEpoch(st: graft.sources.TableStore,
       compactLimit: Option[Int] = None,
       retainVersions: Option[Int] = None)(
-      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit = {
-    if (st.batchCommitted("index", epoch)) return
-    // persist before the range layout: repartitionByRange SAMPLES its
-    // child with a separate job, so an unpersisted postings frame would
-    // pay the tokenize+explode+aggregate subtree twice per epoch
-    val rows = indexRows(batch).persist()
-    try st.appendBatch("index", epoch,
-      Dedup.bucketLayout(rows, 8, "kind", "w", "doc_id"))
-    finally { rows.unpersist(); () }
-    // shared auto-compaction policy (one helper across the state/index/
-    // ivf stores — ADVICE r15 #3): layout-preserving collapse, ledger
-    // survives; compactLimit and retainVersions thread per-caller
-    // policies without touching the session conf (VERDICT r16 ADVICE /
-    // r17 next #4)
-    Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "index",
-      Seq("kind", "w", "doc_id"), compactLimit, retainVersions)
-  }
+      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit =
+    Trace.epoch(epoch) {
+      if (!st.batchCommitted("index", epoch)) {
+        // persist before the range layout: repartitionByRange SAMPLES its
+        // child with a separate job, so an unpersisted postings frame
+        // would pay the tokenize+explode+aggregate subtree twice per epoch
+        val rows = indexRows(batch).persist()
+        try st.appendBatch("index", epoch,
+          Dedup.bucketLayout(rows, 8, "kind", "w", "doc_id"))
+        finally { rows.unpersist(); () }
+        // shared auto-compaction policy (one helper across the state/
+        // index/ivf stores — ADVICE r15 #3): layout-preserving collapse,
+        // ledger survives; compactLimit and retainVersions thread
+        // per-caller policies without touching the session conf
+        // (VERDICT r16 ADVICE / r17 next #4)
+        Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "index",
+          Seq("kind", "w", "doc_id"), compactLimit, retainVersions)
+      }
+    }
 
   private def indexRows(batch: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -617,9 +620,7 @@ object SearchOps {
     val (df, rep) = st.scanSkippingValues("index",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
-    if (sys.props.contains("graft.epochTrace")) {
-      Dedup.skipTrace.add(("index.postings", rep.filesTotal, rep.filesRead)); ()
-    }
+    Trace.storeRead("index.postings", rep)
     df.filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select("w", "doc_id", "tf")
   }
@@ -665,9 +666,7 @@ object SearchOps {
       val (df, rep) = st.scanSkippingIds("index",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
         "doc_id", ids)
-      if (sys.props.contains("graft.epochTrace")) {
-        Dedup.skipTrace.add(("index.doclen", rep.filesTotal, rep.filesRead)); ()
-      }
+      Trace.storeRead("index.doclen", rep)
       df.filter(col("kind") === 1).select(col("doc_id"), col("dl"))
     } else st.table("index").filter(col("kind") === 1)
       .select(col("doc_id"), col("dl"))
@@ -778,75 +777,6 @@ object SearchOps {
         sum(col("n_docs")).cast("double")).as("avgdl"),
         sum(col("n_docs")).cast("double").as("n"))
     okapiRank(tf, dfreq, dl, stats, k)
-  }
-
-  /** Probe seam (EpochCostProbe's index arm): ingest the documents table
-    * into a FRESH index store as `slices` doc_id-ordered epochs — each
-    * epoch's wall recorded on [[Dedup.epochTrace]]; appends are read-free
-    * so flat walls are by construction, and the interesting trace is the
-    * SERVING side: one [[bm25FromIndex]] probe at the end, whose
-    * postings/doc-length file prunes land on [[Dedup.skipTrace]].
-    * Returns the served row count; the store is deleted before
-    * returning. */
-  private[graft] def indexProbeIngest(slices: Int)(
-      s: org.apache.spark.sql.SparkSession, d: String): Long = {
-    val root = java.nio.file.Files.createTempDirectory("graft-index-probe")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          val t0 = System.nanoTime()
-          indexIngestEpoch(st)(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          if (sys.props.contains("graft.epochTrace")) {
-            Dedup.epochTrace.add((e.toLong, (System.nanoTime() - t0) / 1e9)); ()
-          }
-        }
-      }
-      bm25FromIndex(st, Seq("dup", "window"), 20).count()
-    } finally EventsOps.rmTree(root)
-  }
-
-  /** EpochCostProbe's PINNED-index arm: [[indexProbeIngest]] with the
-    * compaction policy forced hot (compactLimit = 2 — every epoch's
-    * append trips a compaction + vacuum) and a retention pin taken after
-    * epoch 0 and HELD through all of them. Flat per-epoch walls
-    * demonstrate a pin costs STORAGE (the pinned snapshot's bytes),
-    * never epoch time — the vacuum merely skips the pinned dirs. The
-    * pinned snapshot is read back at the end (loud failure if any
-    * vacuum touched it) before the serving probe. */
-  private[graft] def pinnedIndexProbeIngest(slices: Int)(
-      s: org.apache.spark.sql.SparkSession, d: String): Long = {
-    val root = java.nio.file.Files.createTempDirectory("graft-index-pin-probe")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          val t0 = System.nanoTime()
-          indexIngestEpoch(st, compactLimit = Some(2))(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          if (e == 0) { st.pinVersion("index", "epoch0"); () }
-          if (sys.props.contains("graft.epochTrace")) {
-            Dedup.epochTrace.add((e.toLong, (System.nanoTime() - t0) / 1e9)); ()
-          }
-        }
-        // the pin must have survived every compaction's vacuum
-        st.tableAtPin("index", "epoch0").count()
-      }
-      bm25FromIndex(st, Seq("dup", "window"), 20).count()
-    } finally EventsOps.rmTree(root)
   }
 
   // One maintained index store per (session, dir) — the q203-family
@@ -1135,9 +1065,7 @@ object SearchOps {
     val (tfScan, rep) = st.scanSkippingValues("chunkindex",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
-    if (sys.props.contains("graft.epochTrace")) {
-      Dedup.skipTrace.add(("chunkindex.postings", rep.filesTotal, rep.filesRead)); ()
-    }
+    Trace.storeRead("chunkindex.postings", rep)
     val tf = Dedup.pin(tfScan
       .filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select(col("doc_id"), col("chunk_id"), col("w"),
@@ -1152,9 +1080,7 @@ object SearchOps {
         val (df, lrep) = st.scanSkippingIds("chunkindex",
           Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
           "doc_id", ids)
-        if (sys.props.contains("graft.epochTrace")) {
-          Dedup.skipTrace.add(("chunkindex.lens", lrep.filesTotal, lrep.filesRead)); ()
-        }
+        Trace.storeRead("chunkindex.lens", lrep)
         df.filter(col("kind") === 1)
           .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
       } else idx.filter(col("kind") === 1)

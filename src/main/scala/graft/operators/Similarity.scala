@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
+import graft.obs.Trace
 
 /** Similarity search over the embedding column (`Array[Float]`, 64-dim).
   *
@@ -841,21 +842,23 @@ object Similarity {
     * epoch ledger. */
   private[graft] def ivfIngestEpoch(st: graft.sources.TableStore,
       compactLimit: Option[Int] = None)(
-      batch: DataFrame, epoch: Long): Unit = {
-    if (st.batchCommitted("ivf", epoch)) return
-    // persist before the range layout — repartitionByRange's sampling
-    // job would otherwise re-run the component explode per epoch
-    val rows = ivfRows(batch).persist()
-    try st.appendBatch("ivf", epoch,
-      Dedup.bucketLayout(rows, 8, "kind", "label", "vec_id", "i"))
-    finally { rows.unpersist(); () }
-    // shared auto-compaction policy (one helper across the state/index/
-    // ivf stores — ADVICE r15 #3): layout-preserving collapse, ledger
-    // survives; compactLimit threads a per-caller policy without touching
-    // the session conf
-    Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "ivf",
-      Seq("kind", "label", "vec_id", "i"), compactLimit)
-  }
+      batch: DataFrame, epoch: Long): Unit =
+    Trace.epoch(epoch) {
+      if (!st.batchCommitted("ivf", epoch)) {
+        // persist before the range layout — repartitionByRange's sampling
+        // job would otherwise re-run the component explode per epoch
+        val rows = ivfRows(batch).persist()
+        try st.appendBatch("ivf", epoch,
+          Dedup.bucketLayout(rows, 8, "kind", "label", "vec_id", "i"))
+        finally { rows.unpersist(); () }
+        // shared auto-compaction policy (one helper across the state/
+        // index/ivf stores — ADVICE r15 #3): layout-preserving collapse,
+        // ledger survives; compactLimit threads a per-caller policy
+        // without touching the session conf
+        Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "ivf",
+          Seq("kind", "label", "vec_id", "i"), compactLimit)
+      }
+    }
 
   /** Create the (empty) list table [[ivfIngestEpoch]] appends to. */
   private[graft] def buildIvfStore(st: graft.sources.TableStore,
@@ -879,9 +882,7 @@ object Similarity {
     val (lists, rep) = st.scanSkippingIds("ivf",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "label", probed)
-    if (sys.props.contains("graft.epochTrace")) {
-      Dedup.skipTrace.add(("ivf.lists", rep.filesTotal, rep.filesRead)); ()
-    }
+    Trace.storeRead("ivf.lists", rep)
     val el = lists
       .filter(col("kind") === 0 && col("label").isin(probed.map(Long.box): _*))
       .select(col("vec_id"), col("label"), col("i"), col("xd").as("c"))
@@ -1074,11 +1075,18 @@ object Similarity {
       // ONE pinned store-wide assignment feeds the pre-probe AND (when
       // the threshold fires) the recluster's first Lloyd step — the
       // probe's argmin over the same snapshot IS that step, so the
-      // policy never pays the assignment join twice per fire
-      val assign = Dedup.pin(ivfCurrentAssign(st))
-      val (n, mis, ppm) = stats(ivfMisassignmentFrom(st, assign))
-      val maintain = epoch == 0L || ppm > limit
-      if (maintain) reclusterIvf(st, precomputedAssign = Some(assign))
+      // policy never pays the assignment join twice per fire. Its
+      // blocks are released once both have run: the post-probe reads
+      // the rewritten store, not this assignment.
+      val assign = Dedup.trackedBuild(batch.sparkSession,
+        Dedup.pin(ivfCurrentAssign(st)))
+      val ((n, mis, ppm), maintain) =
+        try {
+          val pre = stats(ivfMisassignmentFrom(st, assign.df))
+          val fire = epoch == 0L || pre._3 > limit
+          if (fire) reclusterIvf(st, precomputedAssign = Some(assign.df))
+          (pre, fire)
+        } finally assign.release()
       val (_, postMis, postPpm) =
         if (maintain) stats(ivfMisassignment(st)) else (n, mis, ppm)
       (n, mis, ppm, maintain && epoch > 0L, postMis, postPpm)
@@ -1240,9 +1248,7 @@ object Similarity {
       val (lists, rep) = st.scanSkippingIds("ivf",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
         "label", labels)
-      if (sys.props.contains("graft.epochTrace")) {
-        Dedup.skipTrace.add((tag, rep.filesTotal, rep.filesRead)); ()
-      }
+      Trace.storeRead(tag, rep)
       lists.filter(col("kind") === 0 && col("label").isin(labels.map(Long.box): _*))
         .select(col("vec_id"), col("label"), col("i"), col("xd"))
     }

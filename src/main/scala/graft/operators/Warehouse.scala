@@ -387,7 +387,7 @@ object Warehouse {
           // bounded replay: batch-bounded merge shuffles at the
           // volume-derived q183 width
           batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-            EventsOps.replayWidth(s, EventsOps.planBytes(ev) / 4).toString)
+            EventsOps.replayWidth(EventsOps.planBytes(ev) / 4).toString)
           scd2Refresh(st, "dim")(batch, epoch)
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -458,7 +458,7 @@ object Warehouse {
             // bounded replay: the volume-derived q183 width for
             // batch-bounded appends
             batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(s, EventsOps.planBytes(ev) / 4).toString)
+              EventsOps.replayWidth(EventsOps.planBytes(ev) / 4).toString)
             st.appendBatch("ev", epoch, batch)
             // mid-stream maintenance: collapse the 2-epoch chain while
             // epochs 2 and 3 are still inbound

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import graft.obs.Trace
 import graft.operators.Dedup
 import graft.sources.TableStore
 import graft.streaming.DedupIngest
@@ -165,44 +166,36 @@ class DedupSinkPlanSpec extends SparkSpec {
     epochs.dropRight(1).zipWithIndex.foreach { case (b, e) =>
       Dedup.dedupIngestEpoch(st)(b, e.toLong)
     }
-    sys.props("graft.epochTrace") = "1"
-    Dedup.skipTrace.clear()
-    try {
-      val qes = captureQueryExecutions {
-        Dedup.dedupIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
-      }
-      import scala.jdk.CollectionConverters._
-      // candidate cardinality lives in its own candTrace queue (ADVICE
-      // r14) — the skip trace holds ONLY store reads
-      val skips = Dedup.skipTrace.iterator().asScala.toSeq
-      // exactly 2 pruned store reads per epoch: the band probe + the
-      // candidate-hash probe. (Scan NODE count is not the invariant — a
-      // pruned read over an append chain unions one scan node per
-      // version dir, so nodes grow with epochs; reads and files don't.)
-      skips.map(_._1).sorted shouldBe Seq("state.bands", "state.shh")
-      // the candidate docs' bucket set covers a fraction of the grown
-      // store: the kind-0 read must schedule strictly fewer files than
-      // the snapshot holds (file-level pruning is REAL, not just a
-      // row-group filter)
-      val shh = skips.filter(_._1 == "state.shh")
-      shh.foreach { case (_, total, read) =>
-        withClue(s"shh skip $read/$total: ") { read should be < total }
-      }
-      // and skipped files are NEVER touched: every store file any executed
-      // scan read this epoch arrived through those 2 pruned reads — an
-      // r12-style wrapper regression (an extra action re-executing a
-      // store-scan subtree) doubles this count and fails here
-      executedStoreScanFiles(qes, st.rootDir) shouldBe skips.map(_._3).sum
-      // replay of the committed epoch is FREE: no store scan at all
-      // (ADVICE r13 — the ledger is consulted before any LSH work)
-      val replayQes = captureQueryExecutions {
-        Dedup.dedupIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
-      }
-      executedStoreScans(replayQes, st.rootDir) shouldBe 0
-    } finally {
-      sys.props.remove("graft.epochTrace")
-      Dedup.skipTrace.clear()
+    val (qes, events) = Trace.capture(captureQueryExecutions {
+      Dedup.dedupIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
+    })
+    // candidate cardinality is its own event type (ADVICE r14) — the
+    // store reads hold ONLY store reads
+    val skips = storeReads(events)
+    // exactly 2 pruned store reads per epoch: the band probe + the
+    // candidate-hash probe. (Scan NODE count is not the invariant — a
+    // pruned read over an append chain unions one scan node per
+    // version dir, so nodes grow with epochs; reads and files don't.)
+    skips.map(_._1).sorted shouldBe Seq("state.bands", "state.shh")
+    // the candidate docs' bucket set covers a fraction of the grown
+    // store: the kind-0 read must schedule strictly fewer files than
+    // the snapshot holds (file-level pruning is REAL, not just a
+    // row-group filter)
+    val shh = skips.filter(_._1 == "state.shh")
+    shh.foreach { case (_, total, read) =>
+      withClue(s"shh skip $read/$total: ") { read should be < total }
     }
+    // and skipped files are NEVER touched: every store file any executed
+    // scan read this epoch arrived through those 2 pruned reads — an
+    // r12-style wrapper regression (an extra action re-executing a
+    // store-scan subtree) doubles this count and fails here
+    executedStoreScanFiles(qes, st.rootDir) shouldBe skips.map(_._3).sum
+    // replay of the committed epoch is FREE: no store scan at all
+    // (ADVICE r13 — the ledger is consulted before any LSH work)
+    val replayQes = captureQueryExecutions {
+      Dedup.dedupIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
+    }
+    executedStoreScans(replayQes, st.rootDir) shouldBe 0
   }
 
   test("q203 cluster epoch: every store read is traced and pruned, free replay") {
@@ -224,52 +217,46 @@ class DedupSinkPlanSpec extends SparkSpec {
     epochs.dropRight(1).zipWithIndex.foreach { case (b, e) =>
       Dedup.clusterIngestEpoch(st)(b, e.toLong)
     }
-    sys.props("graft.epochTrace") = "1"
-    Dedup.skipTrace.clear()
-    try {
-      val qes = captureQueryExecutions {
-        Dedup.clusterIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
+    val (qes, events) = Trace.capture(captureQueryExecutions {
+      Dedup.clusterIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
+    })
+    val skips = storeReads(events)
+    // one epoch's pruned store reads: the kernel's band + hash probes,
+    // ONE kind-4 label read for the endpoint set, and the kind-5
+    // mapping walk (one read per hop; no mappings exist before this
+    // epoch, so the walk terminates after its first — empty — read)
+    skips.map(_._1).sorted shouldBe
+      Seq("state.bands", "state.labels", "state.maps", "state.shh")
+    // the grown store file-prunes the candidate-hash AND label reads
+    Seq("state.shh", "state.labels").foreach { tag =>
+      skips.filter(_._1 == tag).foreach { case (_, total, read) =>
+        withClue(s"$tag skip $read/$total: ") { read should be < total }
       }
-      import scala.jdk.CollectionConverters._
-      val skips = Dedup.skipTrace.iterator().asScala.toSeq
-      // one epoch's pruned store reads: the kernel's band + hash probes,
-      // ONE kind-4 label read for the endpoint set, and the kind-5
-      // mapping walk (one read per hop; no mappings exist before this
-      // epoch, so the walk terminates after its first — empty — read)
-      skips.map(_._1).sorted shouldBe
-        Seq("state.bands", "state.labels", "state.maps", "state.shh")
-      // the grown store file-prunes the candidate-hash AND label reads
-      Seq("state.shh", "state.labels").foreach { tag =>
-        skips.filter(_._1 == tag).foreach { case (_, total, read) =>
-          withClue(s"$tag skip $read/$total: ") { read should be < total }
-        }
-      }
-      // no untraced store I/O: every file an executed scan read arrived
-      // through the traced pruned reads. The mapping walk's terminal read
-      // may exceed the executed count: its (near-)empty pruned scan
-      // materializes as an AQE stage that empty-relation propagation then
-      // drops from the FINAL plan, so its files are traced but absent
-      // from executed-plan metrics — hence a bound, not equality, with
-      // the slack capped at exactly that read's traced files
-      val traced = skips.map(_._3.toLong).sum
-      val mapsTraced = skips.filter(_._1 == "state.maps").map(_._3.toLong).sum
-      val executed = executedStoreScanFiles(qes, st.rootDir)
-      executed should be <= traced
-      executed should be >= traced - mapsTraced
-      // the epoch did its job: the cluster re-rooted at 10 and the old
-      // root was absorbed by a mapping row
-      Dedup.clusterLabels(st).collect()
-        .map(r => r.getLong(1)).toSet shouldBe Set(10L)
-      Dedup.stateMappings(st.table("state")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)) should contain(50L -> 10L)
-      // replay of the committed epoch is FREE: no store scan at all
-      val replayQes = captureQueryExecutions {
-        Dedup.clusterIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
-      }
-      executedStoreScans(replayQes, st.rootDir) shouldBe 0
-    } finally {
-      sys.props.remove("graft.epochTrace")
-      Dedup.skipTrace.clear()
     }
+    // no untraced store I/O: every file an executed scan read arrived
+    // through the traced pruned reads. The mapping walk's terminal read
+    // may exceed the executed count: its (near-)empty pruned scan
+    // materializes as an AQE stage that empty-relation propagation then
+    // drops from the FINAL plan, so its files are traced but absent
+    // from executed-plan metrics — hence a bound, not equality, with
+    // the slack capped at exactly that read's traced files
+    val traced = skips.map(_._3.toLong).sum
+    val mapsTraced = skips.filter(_._1 == "state.maps").map(_._3.toLong).sum
+    val executed = executedStoreScanFiles(qes, st.rootDir)
+    executed should be <= traced
+    executed should be >= traced - mapsTraced
+    // replay of the committed epoch is FREE: no store scan at all. It
+    // runs before the label checks below: their store reads report to
+    // the listener asynchronously and must not land in this capture
+    val replayQes = captureQueryExecutions {
+      Dedup.clusterIngestEpoch(st)(epochs.last, (epochs.size - 1).toLong)
+    }
+    executedStoreScans(replayQes, st.rootDir) shouldBe 0
+    // the epoch did its job: the cluster re-rooted at 10 and the old
+    // root was absorbed by a mapping row
+    Dedup.clusterLabels(st).collect()
+      .map(r => r.getLong(1)).toSet shouldBe Set(10L)
+    Dedup.stateMappings(st.table("state")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)) should contain(50L -> 10L)
   }
 }

@@ -150,6 +150,20 @@ class EventsOpsSpec extends SparkSpec {
     }
   }
 
+  test("an RDD-backed frame's unknown size plans the floor replay width") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L), Row(2L))),
+      StructType(Seq(StructField("id", LongType))))
+    val est = operators.EventsOps.planBytes(df)
+    operators.EventsOps.replayWidth(est) shouldBe 8
+    // q227 adds two estimates: unknown volume must not overflow the sum
+    operators.EventsOps.replayWidth(est + est) shouldBe 8
+    // a parquet scan keeps its real file bytes
+    operators.EventsOps.planBytes(graft.core.Tables.events(spark, dir)) should be > 0L
+  }
+
   test("q155 drift: counts conserve and ppm shares sum to ~1e6 per half") {
     val rows = operators.EventsOps.q155.build(spark, dir).collect()
     val total = graft.core.Tables.events(spark, dir).count()

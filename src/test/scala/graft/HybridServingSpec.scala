@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.obs.Trace
 import graft.operators.{HybridOps, SearchOps, Similarity}
 
 /** q217 — the ANN-dense-leg RRF hybrid: both legs must serve from the
@@ -14,28 +15,20 @@ class HybridServingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     // warm the memoized stores so the traced run records ONLY serving reads
     HybridOps.q217.build(spark, dir).collect()
-    sys.props("graft.epochTrace") = "1"
-    graft.operators.Dedup.skipTrace.clear()
-    val rows =
-      try HybridOps.q217.build(spark, dir).collect()
-      finally {
-        import scala.jdk.CollectionConverters._
-        val traces = graft.operators.Dedup.skipTrace.iterator().asScala.toSeq
-        sys.props.remove("graft.epochTrace")
-        graft.operators.Dedup.skipTrace.clear()
-        // dense leg: only the probed cluster's list files are scheduled
-        val ivf = traces.filter(_._1 == "ivf.lists")
-        ivf should not be empty
-        ivf.foreach { case (_, total, read) =>
-          withClue(s"ivf.lists $read/$total: ") { read should be < total }
-        }
-        // lexical leg: only the query terms' posting files are scheduled
-        val post = traces.filter(_._1 == "index.postings")
-        post should not be empty
-        post.foreach { case (_, total, read) =>
-          withClue(s"index.postings $read/$total: ") { read should be < total }
-        }
-      }
+    val (rows, events) = Trace.capture(HybridOps.q217.build(spark, dir).collect())
+    val traces = storeReads(events)
+    // dense leg: only the probed cluster's list files are scheduled
+    val ivf = traces.filter(_._1 == "ivf.lists")
+    ivf should not be empty
+    ivf.foreach { case (_, total, read) =>
+      withClue(s"ivf.lists $read/$total: ") { read should be < total }
+    }
+    // lexical leg: only the query terms' posting files are scheduled
+    val post = traces.filter(_._1 == "index.postings")
+    post should not be empty
+    post.foreach { case (_, total, read) =>
+      withClue(s"index.postings $read/$total: ") { read should be < total }
+    }
     rows should have size 10
     val recall = rows.head.getAs[Double]("recall_10")
     rows.map(_.getAs[Double]("recall_10")).distinct.toSeq shouldBe Seq(recall)
@@ -62,21 +55,12 @@ class HybridServingSpec extends SparkSpec {
       SearchOps.termWorkload(st, nQ = 10, perQuery = 3)
     // serving: the posting read file-prunes to the workload's terms, and
     // every query gets its own dense 1..k ranking
-    sys.props("graft.epochTrace") = "1"
-    graft.operators.Dedup.skipTrace.clear()
-    val rows =
-      try SearchOps.bm25PerQueryFromIndex(st, wl, 10).collect()
-      finally {
-        import scala.jdk.CollectionConverters._
-        val traces = graft.operators.Dedup.skipTrace.iterator().asScala.toSeq
-        sys.props.remove("graft.epochTrace")
-        graft.operators.Dedup.skipTrace.clear()
-        val post = traces.filter(_._1 == "index.postings")
-        post should not be empty
-        post.foreach { case (_, total, read) =>
-          withClue(s"index.postings $read/$total: ") { read should be <= total }
-        }
-      }
+    val (rows, events) = Trace.capture(SearchOps.bm25PerQueryFromIndex(st, wl, 10).collect())
+    val post = storeReads(events).filter(_._1 == "index.postings")
+    post should not be empty
+    post.foreach { case (_, total, read) =>
+      withClue(s"index.postings $read/$total: ") { read should be <= total }
+    }
     rows should not be empty
     rows.groupBy(_.getAs[Long]("query_id")).foreach { case (q, rs) =>
       withClue(s"query $q: ") {

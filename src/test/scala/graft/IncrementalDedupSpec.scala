@@ -115,21 +115,14 @@ class IncrementalDedupSpec extends SparkSpec {
     before shouldBe Set((1L, 900L))
     Dedup.compactSignatureStore(st, minFiles = 8)
     // chain collapsed: every table back to a single live version's files
-    sys.props("graft.epochTrace") = "1"
-    Dedup.skipTrace.clear()
-    try {
-      pairsNow() shouldBe before
-      import scala.jdk.CollectionConverters._
-      val shh = Dedup.skipTrace.iterator().asScala.toSeq.filter(_._1 == "shh")
-      shh should not be empty
-      // the compacted store still file-prunes: the 2 candidate docs hit
-      // a strict subset of the 8 clustered files
-      shh.foreach { case (_, total, read) =>
-        withClue(s"shh skip $read/$total: ") { read should be < total }
-      }
-    } finally {
-      sys.props.remove("graft.epochTrace")
-      Dedup.skipTrace.clear()
+    val (after, events) = graft.obs.Trace.capture(pairsNow())
+    after shouldBe before
+    val shh = storeReads(events).filter(_._1 == "shh")
+    shh should not be empty
+    // the compacted store still file-prunes: the 2 candidate docs hit
+    // a strict subset of the 8 clustered files
+    shh.foreach { case (_, total, read) =>
+      withClue(s"shh skip $read/$total: ") { read should be < total }
     }
     // the ledger survived: a replayed sink epoch still no-ops
     val n = st.table("sig").count()

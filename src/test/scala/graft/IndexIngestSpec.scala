@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.obs.Trace
 import graft.operators.SearchOps
 import graft.sources.TableStore
 
@@ -67,19 +68,13 @@ class IndexIngestSpec extends SparkSpec {
 
     // the serving path's doc-length read prunes to the MATCHED docs —
     // both traced reads schedule fewer files than the snapshot holds
-    sys.props("graft.epochTrace") = "1"
-    graft.operators.Dedup.skipTrace.clear()
-    try {
-      SearchOps.bm25FromIndex(st, Seq("w00_0"), 5).collect() should not be empty
-      import scala.jdk.CollectionConverters._
-      val reads = graft.operators.Dedup.skipTrace.iterator().asScala.toSeq
-      reads.map(_._1).sorted shouldBe Seq("index.doclen", "index.postings")
-      reads.foreach { case (tag, total, read) =>
-        withClue(s"$tag $read/$total: ") { read should be < total }
-      }
-    } finally {
-      sys.props.remove("graft.epochTrace")
-      graft.operators.Dedup.skipTrace.clear()
+    val (served, events) =
+      Trace.capture(SearchOps.bm25FromIndex(st, Seq("w00_0"), 5).collect())
+    served should not be empty
+    val reads = storeReads(events)
+    reads.map(_._1).sorted shouldBe Seq("index.doclen", "index.postings")
+    reads.foreach { case (tag, total, read) =>
+      withClue(s"$tag $read/$total: ") { read should be < total }
     }
 
     // the maintained stats partials sum to the corpus truth
@@ -235,20 +230,12 @@ class IndexIngestSpec extends SparkSpec {
         Seq(99L -> "never lands").toDF("doc_id", "text"), 1L)
       st.table("chunkindex").count() shouldBe rows
       // both serving reads schedule fewer files than the snapshot holds
-      sys.props("graft.epochTrace") = "1"
-      graft.operators.Dedup.skipTrace.clear()
-      try {
-        SearchOps.chunkBm25FromIndex(st, Seq("needle"), 5).collect()
-        import scala.jdk.CollectionConverters._
-        val reads = graft.operators.Dedup.skipTrace.iterator().asScala.toSeq
-          .filter(_._1.startsWith("chunkindex."))
-        reads.map(_._1).sorted shouldBe Seq("chunkindex.lens", "chunkindex.postings")
-        reads.foreach { case (tag, total, read) =>
-          withClue(s"$tag $read/$total: ") { read should be < total }
-        }
-      } finally {
-        sys.props.remove("graft.epochTrace")
-        graft.operators.Dedup.skipTrace.clear()
+      val (_, events) =
+        Trace.capture(SearchOps.chunkBm25FromIndex(st, Seq("needle"), 5).collect())
+      val reads = storeReads(events).filter(_._1.startsWith("chunkindex."))
+      reads.map(_._1).sorted shouldBe Seq("chunkindex.lens", "chunkindex.postings")
+      reads.foreach { case (tag, total, read) =>
+        withClue(s"$tag $read/$total: ") { read should be < total }
       }
     } finally q.stop()
   }

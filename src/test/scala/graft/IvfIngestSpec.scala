@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.obs.Trace
 import graft.operators.Similarity
 import graft.sources.TableStore
 
@@ -43,39 +44,23 @@ class IvfIngestSpec extends SparkSpec {
     // the 2 query vectors land in 2 of the 8 labels, so the probe must
     // schedule strictly fewer files than the snapshot holds (the
     // inverted-list seek is REAL file skipping, not a post-scan filter)
-    sys.props("graft.epochTrace") = "1"
-    graft.operators.Dedup.skipTrace.clear()
-    try {
-      val out = Similarity.ivfProbe(st, nQueries = 2, k = 3).collect()
-      out should not be empty
-      import scala.jdk.CollectionConverters._
-      val probe = graft.operators.Dedup.skipTrace.iterator().asScala.toSeq
-        .filter(_._1 == "ivf.lists")
-      probe should have size 1
-      val (_, total, read) = probe.head
-      withClue(s"ivf.lists $read/$total: ") { read should be < total }
-    } finally {
-      sys.props.remove("graft.epochTrace")
-      graft.operators.Dedup.skipTrace.clear()
-    }
+    val (out, events) = Trace.capture(Similarity.ivfProbe(st, nQueries = 2, k = 3).collect())
+    out should not be empty
+    val probe = storeReads(events).filter(_._1 == "ivf.lists")
+    probe should have size 1
+    val (_, total, read) = probe.head
+    withClue(s"ivf.lists $read/$total: ") { read should be < total }
 
     // layout-preserving compaction: chain collapses, results and the
     // prune both survive
     st.compactClustered("ivf", Seq("kind", "label", "vec_id", "i"), 8)
     val before = Similarity.ivfProbe(st, nQueries = 2, k = 3).collect().toSeq
-    sys.props("graft.epochTrace") = "1"
-    graft.operators.Dedup.skipTrace.clear()
-    try {
-      Similarity.ivfProbe(st, nQueries = 2, k = 3).collect().toSeq shouldBe before
-      import scala.jdk.CollectionConverters._
-      val probe = graft.operators.Dedup.skipTrace.iterator().asScala.toSeq
-        .filter(_._1 == "ivf.lists")
-      val (_, total, read) = probe.head
-      withClue(s"post-compact ivf.lists $read/$total: ") { read should be < total }
-    } finally {
-      sys.props.remove("graft.epochTrace")
-      graft.operators.Dedup.skipTrace.clear()
-    }
+    val (after, compactedEvents) =
+      Trace.capture(Similarity.ivfProbe(st, nQueries = 2, k = 3).collect().toSeq)
+    after shouldBe before
+    val compactedProbe = storeReads(compactedEvents).filter(_._1 == "ivf.lists")
+    val (_, cTotal, cRead) = compactedProbe.head
+    withClue(s"post-compact ivf.lists $cRead/$cTotal: ") { cRead should be < cTotal }
   }
 
   private def vecRows(ids: Seq[Long]) = ids.map { id =>
@@ -380,5 +365,21 @@ class IvfIngestSpec extends SparkSpec {
         if (e > 0) ppm should be < Similarity.DriftLimitPpm
       }
     }
+  }
+
+  test("managed epochs release the pinned store-wide assignment") {
+    val st = new TableStore(spark, tempDir("graft-ivf-managed-pins").toString)
+    Similarity.buildIvfStore(st, vecRows(Nil).toDF("vec_id", "label", "embedding"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // epoch 0 bootstraps (the recluster consumes the assignment); the
+    // later epochs only probe it
+    (0 until 4).foreach { e =>
+      Similarity.ivfIngestEpochManaged(st, Some(Similarity.DriftLimitPpm))(
+        vecRows(e * 8L until (e + 1) * 8L).toDF("vec_id", "label", "embedding"),
+        e.toLong)
+    }
+    // ids, not a count: blocks other suites left behind may be cleaned
+    // meanwhile, which must not mask a new pin
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 }

@@ -59,6 +59,11 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The (tag, filesTotal, filesRead) store reads among captured trace
+    * events, in record order. */
+  def storeReads(events: Seq[graft.obs.Trace.Event]): Seq[(String, Int, Int)] =
+    events.collect { case graft.obs.Trace.StoreRead(tag, total, read) => (tag, total, read) }
+
   override def afterAll(): Unit =
     try specTempDirs.foreach(graft.operators.EventsOps.rmTree)
     finally super.afterAll()
