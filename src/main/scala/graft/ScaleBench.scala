@@ -150,10 +150,12 @@ object ScaleBench {
 
     buildReplica(spark, base, out)
 
-    // SPARK_GRAFT_COLD_MEMO=1: release the memoized LSH pair frames and
-    // co-purchase graph before EVERY timed run, so best-of-2 times the
-    // cold build instead of warm cache reads — the honest mode for the
-    // memoized families (q48/q71/q131, graph q141/q154/q160/q161/q164)
+    // SPARK_GRAFT_COLD_MEMO=1: release the memoized LSH pair frames, the
+    // co-purchase graph and every memoized store (Epochs.release: the
+    // index, chunk, IVF, cluster and q90 signature stores) before EVERY
+    // timed run, so best-of-2 times the cold build instead of warm cache
+    // reads — the honest mode for the memoized families (q48/q71/q131,
+    // graph q141/q154/q160/q161/q164, the maintained stores)
     // that SCALE.md r5 had to exclude from the 100× probe. Releases go
     // through the spec-tested lifecycle API between runs (never inside a
     // running plan, which would free checkpointed blocks mid-lineage).
@@ -163,10 +165,7 @@ object ScaleBench {
         if (coldMemo) {
           operators.Dedup.releaseLshCache(dir)
           operators.Extras.releaseGraphMemo(dir)
-          operators.DedupClusters.releaseClusterStore(dir)
-          operators.SearchOps.releaseSearchIndex(dir)
-          operators.SearchOps.releaseChunkIndex(dir)
-          operators.Similarity.releaseIvfStore(dir)
+          operators.Epochs.release(dir)
         }
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir).count()

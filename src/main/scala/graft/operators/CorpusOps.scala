@@ -459,44 +459,13 @@ object CorpusOps {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("ntok"))
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-admit-store")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-admit-stage")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-admit-store") { st =>
       admitCreateTables(st, docs)
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = math.max(1L,
-          math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
-        // four strict doc_id quarter-range slices (the q189 staging shape)
-        val width = EventsOps.stageAligned(streamDir,
-          EventsOps.slicedStages(docs, col("doc_id"), lo, hi, 4), nFiles)
-        val sinkName = "q191_admit_sink"
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        val gate = new AdmissionGate(st, budget)
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", width.toString)
-          .parquet(streamDir.toString)
-          .writeStream
-          .queryName(sinkName)
-          .outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-            // bounded replay: the volume-derived q183 width for
-            // batch-bounded admission
-            batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(EventsOps.planBytes(docs) / 4).toString)
-            gate.admit(batch, epoch)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // pin the result before the finally removes the store root
-      admittedRows(st).orderBy("doc_id").localCheckpoint(true)
-    } finally {
-      EventsOps.rmTree(streamDir)
-      EventsOps.rmTree(storeRoot)
+      val gate = new AdmissionGate(st, budget)
+      // four strict doc_id quarter-range slices (the q189 staging shape)
+      Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), 4), rowsPerFile,
+        "q191_admit_sink")(gate.admit)
+      admittedRows(st).orderBy("doc_id")
     }
   }
 
@@ -670,29 +639,14 @@ object CorpusOps {
     contaminationOracle) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val (bench, prune) = benchGramSet(docs)
-    val root = java.nio.file.Files.createTempDirectory("graft-contam")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    try Epochs.scratchStore(s, "graft-contam") { st =>
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
-      val r = corpus.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          decontamIngestEpoch(st, bench, prune)(corpus.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-        }
-      }
-      // pinned: the store root is deleted in the finally below
-      Dedup.pin(st.table("contam").orderBy("doc_id", "bench_id"))
-    } finally {
-      bench.unpersist()
-      EventsOps.rmTree(root)
-    }
+      Epochs.direct(Epochs.slice(corpus, col("doc_id"), 4))(
+        decontamIngestEpoch(st, bench, prune))
+      st.table("contam").orderBy("doc_id", "bench_id")
+    } finally { bench.unpersist(); () }
   }
 
   /** q219: decontamination under a REAL `writeStream` — q213's verdict
@@ -718,24 +672,15 @@ object CorpusOps {
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val (bench, prune) = benchGramSet(docs)
-    val root = java.nio.file.Files.createTempDirectory("graft-contam-stream")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    try Epochs.scratchStore(s, "graft-contam-stream") { st =>
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
-      val r = corpus.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, corpus, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q219_contam_sink")(
-          graft.streaming.ContamIngest.contamIngestSink(st, bench, prune))
-      // pinned: the store root is deleted in the finally below
-      Dedup.pin(st.table("contam").orderBy("doc_id", "bench_id"))
-    } finally {
-      bench.unpersist()
-      EventsOps.rmTree(root)
-    }
+      Epochs.streamed(s, Epochs.slice(corpus, col("doc_id"), slices), rowsPerFile,
+        "q219_contam_sink")(
+        graft.streaming.ContamIngest.contamIngestSink(st, bench, prune))
+      st.table("contam").orderBy("doc_id", "bench_id")
+    } finally { bench.unpersist(); () }
   }
 
   /** q157: cross-source containment matrix — for every ordered source

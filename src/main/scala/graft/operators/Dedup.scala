@@ -905,29 +905,11 @@ object Dedup {
     IncrementalLshKernel(cand0, candTh, pairs, candCount)
   }
 
-  // weak session keys for the same reason as lshPairsMemo: a stopped
-  // session must stay collectible. The memo value is the store's ROOT PATH
-  // (a String), NOT the TableStore — a TableStore holds its SparkSession,
-  // and a WeakHashMap whose values strongly reach their own keys never
-  // collects anything. A fresh handle over the existing directory is free.
-  private val sigStoreMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, String]]()
-
+  /** The q90 signature store for `d` (corpus = doc_id % 5 ≠ 0),
+    * memoized per session. */
   private def corpusStore(s: SparkSession, d: String): graft.sources.TableStore =
-    sigStoreMemo.synchronized {
-      val perDir = {
-        val cur = sigStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               sigStoreMemo.put(s, m); m }
-      }
-      val root = perDir.getOrElseUpdate(d, {
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-sigstore").toString)
-        buildSignatureStore(st, Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0))
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
+    Epochs.memo(s, d, "graft-sigstore") { st =>
+      buildSignatureStore(st, Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0))
     }
 
   /** Incremental dedup gate: corpus = doc_id % 5 ≠ 0 (signatures persisted
@@ -1417,10 +1399,6 @@ object Dedup {
     * own ledger check remains the write-side authority). There is no
     * partial-commit window to reason about: one table, one flip. */
   private[graft] def dedupIngestEpoch(st0: graft.sources.TableStore)(
-      batch: DataFrame, epoch: Long): Unit =
-    Trace.epoch(epoch)(dedupIngestEpochBody(st0)(batch, epoch))
-
-  private def dedupIngestEpochBody(st0: graft.sources.TableStore)(
       batch: DataFrame, epoch: Long): Unit = {
     val s = batch.sparkSession
     // re-home the store handle on the BATCH's session (the stream's clone
@@ -1572,64 +1550,24 @@ object Dedup {
     * tiny value to force the multi-file aligned-batch path at test scale). */
   private[graft] def q199Impl(rowsPerFile: Long = EventsOps.OuterStageRowsPerFile)(
       s: SparkSession, d: String): DataFrame = {
-    val slices = 2
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-dedup-ingest")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-dedup-stage")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-dedup-ingest") { st =>
       buildDedupState(st, docs.limit(0)) // empty state: the stream bootstraps it
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = math.max(1L,
-          math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
-        // slice rule (VERDICT r12 next #7, the q149/q187 StreamSliceHours
-        // pattern): 2 doc_id slices × nFiles aligned files. Two epochs are
-        // the minimum that exercises cross-epoch dedup (stored-vs-batch
-        // pairs over the epoch boundary) — the dominant per-epoch costs
-        // (batch shingling, verify checkpoint, state append, microbatch
-        // bookkeeping) are fixed per EPOCH, so the r12-era 4 slices paid
-        // 2× that toll for no additional coverage; corpora large enough to
-        // need finer batches raise nFiles via rowsPerFile instead.
-        val width = EventsOps.stageAligned(streamDir,
-          EventsOps.slicedStages(docs, col("doc_id"), lo, hi, slices), nFiles)
-        val sinkName = "q199_dedup_sink"
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", width.toString)
-          .parquet(streamDir.toString)
-          .writeStream
-          .queryName(sinkName)
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            // bounded replay: per-epoch shuffles carry batch/candidate-
-            // bounded rows only, so session width (32) over-slices them —
-            // the q183 replay rule, volume-derived. Set on the STREAM'S
-            // cloned session (batch.sparkSession), never the shared one,
-            // so a concurrent query on the caller's session keeps its
-            // width (ADVICE r12); the clone persists across epochs, the
-            // set is idempotent.
-            batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(
-                EventsOps.planBytes(docs) / math.max(1, slices)).toString)
-            dedupIngestEpoch(st)(batch, epoch)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      // 2 doc_id slices × nFiles aligned files. Two epochs are the
+      // minimum that exercises cross-epoch dedup (stored-vs-batch pairs
+      // over the epoch boundary) — the dominant per-epoch costs (batch
+      // shingling, verify checkpoint, state append, microbatch
+      // bookkeeping) are fixed per EPOCH, so more slices pay that toll
+      // for no additional coverage; corpora large enough to need finer
+      // batches raise nFiles via rowsPerFile instead.
+      Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), 2), rowsPerFile,
+        "q199_dedup_sink")(dedupIngestEpoch(st))
       val cuts = stateCuts(st.table("state")).distinct()
       Tables.documents(s, d)
         .join(cuts, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("source"),
           size(tokens(col("text"))).cast("long").as("n_tokens"))
         .orderBy("doc_id")
-        // pinned: the store root is deleted in the finally below
-        .transform(pin)
-    } finally {
-      EventsOps.rmTree(streamDir)
-      EventsOps.rmTree(storeRoot)
     }
   }
 
@@ -1666,23 +1604,13 @@ object Dedup {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-dedup-compact")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-dedup-compact") { st =>
       buildDedupState(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          dedupIngestEpoch(st)(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          // maintenance mid-run: collapse the 3-version chain and restore
-          // the prune layout; epochs 2-3 dedupe against the compacted store
-          if (e == 1) compactSignatureStore(st)
-        }
+      Epochs.direct(Epochs.slice(docs, col("doc_id"), 4)) { (batch, e) =>
+        dedupIngestEpoch(st)(batch, e)
+        // maintenance mid-run: collapse the 3-version chain and restore
+        // the prune layout; epochs 2-3 dedupe against the compacted store
+        if (e == 1L) compactSignatureStore(st)
       }
       // serve phase joins the store-wide cut set against the whole corpus
       // — width from the full input volume, not the epoch's
@@ -1693,9 +1621,7 @@ object Dedup {
         .select(col("doc_id"), col("source"),
           size(tokens(col("text"))).cast("long").as("n_tokens"))
         .orderBy("doc_id")
-        // pinned: the store root is deleted in the finally below
-        .transform(pin)
-    } finally EventsOps.rmTree(storeRoot)
+    }
     }
   }
 
@@ -1733,26 +1659,14 @@ object Dedup {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-dedup-policy")
     val confKey = "spark.graft.state.autoCompactVersions"
     val prev = s.conf.getOption(confKey)
     s.conf.set(confKey, "3")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    try Epochs.scratchStore(s, "graft-dedup-policy") { st =>
       buildDedupState(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          // no maintenance call anywhere: the policy inside the epoch
-          // fires whenever the chain reaches the configured trigger
-          dedupIngestEpoch(st)(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-        }
-      }
+      // no maintenance call anywhere: the policy inside the epoch
+      // fires whenever the chain reaches the configured trigger
+      Epochs.direct(Epochs.slice(docs, col("doc_id"), 4))(dedupIngestEpoch(st))
       // serve phase is store-wide ⋈ corpus — full-volume width
       EventsOps.serveWidth(s, inBytes)
       val cuts = stateCuts(st.table("state")).distinct()
@@ -1761,14 +1675,11 @@ object Dedup {
         .select(col("doc_id"), col("source"),
           size(tokens(col("text"))).cast("long").as("n_tokens"))
         .orderBy("doc_id")
-        // pinned: the store root is deleted in the finally below
-        .transform(pin)
     } finally {
       prev match {
         case Some(v) => s.conf.set(confKey, v)
         case None => s.conf.unset(confKey)
       }
-      EventsOps.rmTree(storeRoot)
     }
     }
   }
@@ -1982,11 +1893,6 @@ object Dedup {
     * moment the text is in hand. */
   private[graft] def clusterIngestEpoch(st0: graft.sources.TableStore,
       meta: Option[DataFrame => DataFrame] = None)(
-      batch: DataFrame, epoch: Long): Unit =
-    Trace.epoch(epoch)(clusterIngestEpochBody(st0, meta)(batch, epoch))
-
-  private def clusterIngestEpochBody(st0: graft.sources.TableStore,
-      meta: Option[DataFrame => DataFrame])(
       batch: DataFrame, epoch: Long): Unit = {
     val s = batch.sparkSession
     val st = new graft.sources.TableStore(s, st0.rootDir)

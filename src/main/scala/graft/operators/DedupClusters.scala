@@ -510,36 +510,14 @@ object DedupClusters {
     * kind-5 mapping row, never rewritten, so no epoch ever touches
     * store-proportional label state. Readback resolves the mapping
     * closure once, at query time. */
-  // One cluster-maintained store per (session, dir), built by whichever
-  // of q203/q204 runs first — the corpusStore/lshPairsMemo discipline:
-  // the ingest is the expensive part, and both gates read the SAME state
-  // the way two dashboard queries share one warehouse table. Weak session
-  // keys + root-path values so a stopped session stays collectible.
-  private val clusterStoreMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
-
   /** The documents table ingested as four doc_id-ordered epochs through
-    * [[Dedup.clusterIngestEpoch]], with the q156 quality score carried as
-    * kind-6 per-doc metadata (computed at arrival — the only moment the
-    * text is in hand; q204 never re-touches the corpus). */
+    * [[Dedup.clusterIngestEpoch]] ([[ingestClusterEpochs]]), memoized
+    * per session: whichever of q203/q204/q205/q214/q221/q222 runs first
+    * pays the ingest, and all read the SAME state the way two dashboard
+    * queries share one warehouse table. */
   private def clusterIngestedStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    clusterStoreMemo.synchronized {
-      val perDir = {
-        val cur = clusterStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               clusterStoreMemo.put(s, m); m }
-      }
-      val root = perDir.getOrElseUpdate(d, {
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-cluster-ingest").toString)
-        ingestClusterEpochs(st, s, d)
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
+    Epochs.memo(s, d, "graft-cluster-ingest")(ingestClusterEpochs(_, s, d))
 
   /** Arrival-time per-doc metadata for the maintained aggregates, in the
     * clusterIngestEpoch sidecar shape (doc_id, kind, bkt, h, n):
@@ -581,46 +559,27 @@ object DedupClusters {
     * dedup sink's multi-table discipline): a crash between the two
     * replays to state-no-op + card-apply, so the pair converges. Builds
     * the memoized q203–q205/q214 store. */
-  private[graft] def ingestClusterEpochs(st: graft.sources.TableStore,
+  private def ingestClusterEpochs(st: graft.sources.TableStore,
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val slices = 4
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
     Dedup.buildDedupState(st, docs.limit(0))
     st.create("card", cardRows(docs.limit(0)))
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    if (r.getLong(2) > 0L) {
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val step = (hi - lo) / slices + 1
-      (0 until slices).foreach { e =>
-        val batch = docs.filter(col("doc_id") >= lo + e * step &&
-          col("doc_id") < lo + (e + 1) * step)
-        Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e.toLong)
-        st.appendBatch("card", e.toLong, cardRows(batch)); ()
-        // retention pin after epoch 1: the snapshot q221/q222 serve
-        // ("yesterday's corpus release"), carried through any later
-        // compaction's vacuum by the pin contract
-        if (e == 1) {
-          st.pinVersion("state", "epoch1")
-          st.pinVersion("card", "epoch1"); ()
-        }
-      }
-    } else {
+    val sl = Epochs.slice(docs, col("doc_id"), 4)
+    def pinEpoch1(): Unit = {
       st.pinVersion("state", "epoch1")
       st.pinVersion("card", "epoch1"); ()
     }
-  }
-
-  /** Drop the memoized cluster store for `dir` (all sessions) and delete
-    * its tempdir — the honest-timing hook ScaleBench's cold mode uses so
-    * q203 pays its full ingest at every measured scale (and the rewrite
-    * hook for anyone regenerating parquet under a previously-read dir). */
-  private[graft] def releaseClusterStore(dir: String): Unit =
-    clusterStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- clusterStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
+    Epochs.direct(sl) { (batch, e) =>
+      Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e)
+      st.appendBatch("card", e, cardRows(batch))
+      // retention pin after epoch 1: the snapshot q221/q222 serve
+      // ("yesterday's corpus release"), carried through any later
+      // compaction's vacuum by the pin contract
+      if (e == 1L) pinEpoch1()
     }
+    if (sl.epochs == 0) pinEpoch1()
+  }
 
   val q203 = QueryDef(
     "q203_incremental_cluster_ingest",
@@ -725,20 +684,14 @@ object DedupClusters {
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val root = java.nio.file.Files.createTempDirectory("graft-cluster-stream")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    Epochs.scratchStore(s, "graft-cluster-stream") { st =>
       Dedup.buildDedupState(st, docs.limit(0))
       st.create("card", cardRows(docs.limit(0)))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          sinkName)(graft.streaming.DedupIngest.clusterIngestSink(st,
-            meta = Some(clusterDocMeta), card = Some(("card", cardRows))))
-      // pinned frame: the store root is deleted in the finally below
-      Dedup.pin(serve(st))
-    } finally EventsOps.rmTree(root)
+      Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), slices), rowsPerFile,
+        sinkName)(graft.streaming.DedupIngest.clusterIngestSink(st,
+          meta = Some(clusterDocMeta), card = Some(("card", cardRows))))
+      serve(st)
+    }
   }
 
   /** q224: the maintained CLUSTER store under a REAL `writeStream` —
@@ -929,43 +882,31 @@ object DedupClusters {
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
-    val root = java.nio.file.Files.createTempDirectory("graft-cluster-release")
-    val catRoot = java.nio.file.Files.createTempDirectory("graft-cluster-relcat")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
-      val cat = new graft.sources.ReleaseCatalog(catRoot.toString, s)
+    Epochs.scratch("graft-cluster-release", "graft-cluster-relcat") { roots =>
+      val st = new graft.sources.TableStore(s, roots(0))
+      val cat = new graft.sources.ReleaseCatalog(roots(1), s)
       Dedup.buildDedupState(st, docs.limit(0))
       st.create("card", cardRows(docs.limit(0)))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      var pinned = false
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val step = (hi - lo) / 4 + 1
-        (0 until 4).foreach { e =>
-          // the ingestClusterEpochs shape with the release swapped in for
-          // the two parallel pins, and BOTH tables' compaction forced hot
-          val batch = docs.filter(col("doc_id") >= lo + e * step &&
-            col("doc_id") < lo + (e + 1) * step)
-          Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e.toLong)
-          st.appendBatch("card", e.toLong, cardRows(batch))
-          // the claim under gate is pin SURVIVAL: only the post-pin
-          // epochs need their policy compactions (each one's vacuum
-          // would reclaim the release's snapshots were they unpinned);
-          // pre-pin compactions would prove nothing and double the cost
-          if (e >= 2) {
-            Dedup.maybeAutoCompactClustered(s, st, "state",
-              Seq("kind", "bkt", "doc_id"), Some(2))
-            Dedup.maybeAutoCompactClustered(s, st, "card", Seq("doc_id"), Some(2))
-          }
-          if (e == 1) {
-            // ONE durable record binds the snapshot PAIR that ships as
-            // this corpus release — labels and card under one name
-            cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
-            pinned = true
-          }
+      val sl = Epochs.slice(docs, col("doc_id"), 4)
+      Epochs.direct(sl) { (batch, e) =>
+        // the ingestClusterEpochs shape with the release swapped in for
+        // the two parallel pins, and BOTH tables' compaction forced hot
+        Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e)
+        st.appendBatch("card", e, cardRows(batch))
+        // the claim under gate is pin SURVIVAL: only the post-pin
+        // epochs need their policy compactions (each one's vacuum
+        // would reclaim the release's snapshots were they unpinned);
+        // pre-pin compactions would prove nothing and double the cost
+        if (e >= 2L) {
+          Dedup.maybeAutoCompactClustered(s, st, "state",
+            Seq("kind", "bkt", "doc_id"), Some(2))
+          Dedup.maybeAutoCompactClustered(s, st, "card", Seq("doc_id"), Some(2))
         }
+        // ONE durable record binds the snapshot PAIR that ships as
+        // this corpus release — labels and card under one name
+        if (e == 1L) cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
       }
-      if (!pinned) cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
+      if (sl.epochs == 0) cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
       // serving reads the release's store-wide snapshots — full-volume width
       EventsOps.serveWidth(s, inBytes)
       val labels = Dedup.clusterLabelsFrom(cat.tableAt("corpus-r1", "state"))
@@ -976,9 +917,9 @@ object DedupClusters {
       val card = CorpusOps.datasetCard(
         cat.tableAt("corpus-r1", "card")
           .select("source", "lang", "n_chars", "ntok"))
-      // pinned frame: the store root is deleted in the finally below
+      // pinned frame: the store roots are deleted when this returns
       Dedup.pin(card.crossJoin(broadcast(summ)).orderBy("source"))
-    } finally { EventsOps.rmTree(root); EventsOps.rmTree(catRoot) }
+    }
     }
   }
 

@@ -135,53 +135,6 @@ object EventsOps {
     else math.min(32L, math.max(2L,
       (hi - lo) / (sliceHours * 3600L * 1000000L) + 1)).toInt
 
-  /** The shared staged-replay driver behind every streamed maintained-
-    * store gate (q209 text index, q210 IVF lists, q218 chunk index, q219
-    * contamination — VERDICT r16 next #7: the per-gate builders had
-    * re-implemented this scaffold and the replay discipline could
-    * drift): stage `rows` as `slices` strict `key`-sliced stages of
-    * aligned parquet files, then drive `sink` through a REAL
-    * `writeStream.foreachBatch` file-source replay (`maxFilesPerTrigger`
-    * = stage width, AvailableNow), so micro-batch sessions, epoch ids
-    * and replay-on-restart are on the gated path. `nRows`/`rowsPerFile`
-    * size the per-stage file count (specs pass a tiny rowsPerFile to
-    * force the multi-file aligned-batch path); the 8-partition
-    * bounded-replay rule (q183) is applied on the stream's CLONED
-    * session only. Blocks until the replay drains; the staging dir is
-    * always removed. */
-  private[graft] def stagedReplayDrive(
-      s: org.apache.spark.sql.SparkSession,
-      rows: org.apache.spark.sql.DataFrame,
-      key: org.apache.spark.sql.Column,
-      lo: Long, hi: Long, nRows: Long,
-      rowsPerFile: Long, slices: Int, sinkName: String)(
-      sink: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit = {
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft-$sinkName")
-    try {
-      val nFiles = math.max(1L, math.min(32L, nRows / rowsPerFile + 1)).toInt
-      // bounded replay, volume-derived (the q183 rule's scale-adaptive
-      // form): width from the per-slice input estimate, floor 8
-      val epochWidth = replayWidth(planBytes(rows) / math.max(1, slices))
-      val width = stageAligned(streamDir,
-        slicedStages(rows, key, lo, hi, slices), nFiles)
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      val q = s.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", width.toString)
-        .parquet(streamDir.toString)
-        .writeStream
-        .queryName(sinkName)
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-          batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-            epochWidth.toString)
-          sink(batch, epoch)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally rmTree(streamDir)
-  }
-
   /** Estimated bytes of a frame from optimizer statistics (for parquet
     * scans: the file bytes) — metadata only, no job. A frame without
     * statistics (an RDD-backed frame, say) reports Spark's
@@ -219,7 +172,7 @@ object EventsOps {
 
   /** Run `body` under the bounded-replay shuffle width the streamed
     * epoch sinks already get from their foreachBatch clone (the q183
-    * 8-partition rule, see [[stagedReplayDrive]]): the DIRECT-ingest
+    * 8-partition rule, see [[Epochs.streamed]]): the DIRECT-ingest
     * gates (q201/q202/q228/q232/q234/q236…) drive the same
     * batch-bounded epochs without a stream, so their epoch shuffles
     * were planned at session width — 32 slices over candidate-bounded

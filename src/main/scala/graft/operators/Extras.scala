@@ -46,17 +46,6 @@ object Extras {
     org.apache.spark.sql.SparkSession,
     scala.collection.mutable.Map[String, GraphMemoEntry]]()
 
-  /** Every memo dir ever created, independent of the session map — the
-    * JVM-exit safety net. The lifecycle API ([[releaseGraphMemo]]) is
-    * for long-lived service sessions; Bench/Verify/test JVMs never call
-    * it, and a parquet memo (unlike the pre-r10 localCheckpoint blocks)
-    * would otherwise outlive the JVM as permanent /tmp litter. rmTree on
-    * an already-released dir is a no-op. */
-  private val allMemoDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  sys.addShutdownHook {
-    allMemoDirs.forEach(p => EventsOps.rmTree(p))
-  }
-
   /** Memo parquet dir for `dir` in session `s`, if built (spec hook). */
   private[graft] def graphMemoDir(s: org.apache.spark.sql.SparkSession,
       d: String): Option[java.nio.file.Path] =
@@ -74,9 +63,9 @@ object Extras {
       }
     }
     perDir.getOrElseUpdate(d, {
-      val memoDir = java.nio.file.Files.createTempDirectory("graft-graph-memo")
-      allMemoDirs.add(memoDir)
-      new GraphMemoEntry(memoDir)
+      // deleted at JVM exit unless released first: Bench/Verify/test
+      // JVMs never call the lifecycle API (releaseGraphMemo)
+      new GraphMemoEntry(Epochs.memoRoot("graft-graph-memo"))
     })
   }
 

@@ -220,35 +220,21 @@ object HybridOps {
     SearchOps.buildSearchIndex(idxSt, docs.limit(0))
     Similarity.buildIvfStore(ivfSt, vecs.limit(0))
     val cat = new graft.sources.ReleaseCatalog(catRoot, s)
-    val rd = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val rv = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-    val slices = 4
-    var pinned = false
-    (0 until slices).foreach { e =>
-      // each table slices its OWN id range (the q216 cut formula);
-      // an empty table simply contributes empty epochs
-      if (rd.getLong(2) > 0L) {
-        val (lo, hi) = (rd.getLong(0), rd.getLong(1))
-        val step = (hi - lo) / slices + 1
-        SearchOps.indexIngestEpoch(idxSt, compactLimit = Some(2))(
-          docs.filter(col("doc_id") >= lo + e * step &&
-            col("doc_id") < lo + (e + 1) * step), e.toLong)
-      }
-      if (rv.getLong(2) > 0L) {
-        val (lo, hi) = (rv.getLong(0), rv.getLong(1))
-        val step = (hi - lo) / slices + 1
-        Similarity.ivfIngestEpoch(ivfSt, compactLimit = Some(2))(
-          vecs.filter(col("vec_id") >= lo + e * step &&
-            col("vec_id") < lo + (e + 1) * step), e.toLong)
-      }
+    // each table slices its OWN id range (the q216 cut formula); an
+    // empty table simply contributes empty epochs
+    val sd = Epochs.slice(docs, col("doc_id"), 4)
+    val sv = Epochs.slice(vecs, col("vec_id"), 4)
+    Epochs.run(math.max(sd.epochs, sv.epochs)) { e =>
+      if (sd.epochs > 0)
+        SearchOps.indexIngestEpoch(idxSt, compactLimit = Some(2))(sd.batch(e), e.toLong)
+      if (sv.epochs > 0)
+        Similarity.ivfIngestEpoch(ivfSt, compactLimit = Some(2))(sv.batch(e), e.toLong)
       // ONE coordinated release across both stores — the snapshot
       // pair that served together, under one durable record
-      if (e == 1) {
-        cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
-        pinned = true
-      }
+      if (e == 1) cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
     }
-    if (!pinned) cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
+    if (sd.epochs == 0 && sv.epochs == 0)
+      cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
     cat
   }
 
@@ -272,19 +258,13 @@ object HybridOps {
     val inBytes = EventsOps.planBytes(graft.core.Tables.documents(s0, d)) +
       EventsOps.planBytes(graft.core.Tables.embeddings(s0, d))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
-    val idxRoot = java.nio.file.Files.createTempDirectory("graft-relidx")
-    val ivfRoot = java.nio.file.Files.createTempDirectory("graft-relivf")
-    val catRoot = java.nio.file.Files.createTempDirectory("graft-relcat")
-    try {
+    Epochs.scratch("graft-relidx", "graft-relivf", "graft-relcat") { roots =>
       val cat = Trace.phase("build")(buildPinnedStack(s, d,
-        idxRoot.toString, ivfRoot.toString, catRoot.toString))
+        roots(0), roots(1), roots(2)))
       // serve reads the pinned store-wide snapshots — full-volume width
       EventsOps.serveWidth(s, inBytes)
-      // pinned frame: the store roots are deleted in the finally below
+      // pinned frame: the store roots are deleted when this returns
       Trace.phase("serve")(Dedup.pin(servePinnedStack(cat)))
-    } finally {
-      EventsOps.rmTree(idxRoot); EventsOps.rmTree(ivfRoot)
-      EventsOps.rmTree(catRoot)
     }
     }
   }

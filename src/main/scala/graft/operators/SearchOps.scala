@@ -569,23 +569,21 @@ object SearchOps {
       compactLimit: Option[Int] = None,
       retainVersions: Option[Int] = None)(
       batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit =
-    Trace.epoch(epoch) {
-      if (!st.batchCommitted("index", epoch)) {
-        // persist before the range layout: repartitionByRange SAMPLES its
-        // child with a separate job, so an unpersisted postings frame
-        // would pay the tokenize+explode+aggregate subtree twice per epoch
-        val rows = indexRows(batch).persist()
-        try st.appendBatch("index", epoch,
-          Dedup.bucketLayout(rows, 8, "kind", "w", "doc_id"))
-        finally { rows.unpersist(); () }
-        // shared auto-compaction policy (one helper across the state/
-        // index/ivf stores — ADVICE r15 #3): layout-preserving collapse,
-        // ledger survives; compactLimit and retainVersions thread
-        // per-caller policies without touching the session conf
-        // (VERDICT r16 ADVICE / r17 next #4)
-        Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "index",
-          Seq("kind", "w", "doc_id"), compactLimit, retainVersions)
-      }
+    if (!st.batchCommitted("index", epoch)) {
+      // persist before the range layout: repartitionByRange SAMPLES its
+      // child with a separate job, so an unpersisted postings frame
+      // would pay the tokenize+explode+aggregate subtree twice per epoch
+      val rows = indexRows(batch).persist()
+      try st.appendBatch("index", epoch,
+        Dedup.bucketLayout(rows, 8, "kind", "w", "doc_id"))
+      finally { rows.unpersist(); () }
+      // shared auto-compaction policy (one helper across the state/
+      // index/ivf stores — ADVICE r15 #3): layout-preserving collapse,
+      // ledger survives; compactLimit and retainVersions thread
+      // per-caller policies without touching the session conf
+      // (VERDICT r16 ADVICE / r17 next #4)
+      Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "index",
+        Seq("kind", "w", "doc_id"), compactLimit, retainVersions)
     }
 
   private def indexRows(batch: org.apache.spark.sql.DataFrame)
@@ -779,51 +777,15 @@ object SearchOps {
     okapiRank(tf, dfreq, dl, stats, k)
   }
 
-  // One maintained index store per (session, dir) — the q203-family
-  // memo discipline: whichever of q206/q207 runs first pays the 4-epoch
-  // build, both serve from the same store (weak session keys, root-path
-  // values).
-  private val indexStoreMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
-
+  /** The maintained index store for `d`, memoized per session: whichever
+    * of q206/q207 (or the hybrid gates) runs first pays the 4-epoch
+    * build, all serve from the same store. */
   private[graft] def maintainedIndex(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    indexStoreMemo.synchronized {
-      val perDir = {
-        val cur = indexStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               indexStoreMemo.put(s, m); m }
-      }
-      val root = perDir.getOrElseUpdate(d, {
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-search-index").toString)
-        buildSearchIndex(st, docs.limit(0))
-        val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-        if (r.getLong(2) > 0L) {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          val slices = 4
-          val step = (hi - lo) / slices + 1
-          (0 until slices).foreach { e =>
-            indexIngestEpoch(st)(docs.filter(
-              col("doc_id") >= lo + e * step &&
-                col("doc_id") < lo + (e + 1) * step), e.toLong)
-          }
-        }
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
-
-  /** Drop the memoized index store for `dir` (all sessions) and delete
-    * its tempdir — ScaleBench's cold-timing hook. */
-  private[graft] def releaseSearchIndex(dir: String): Unit =
-    indexStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- indexStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
+    Epochs.memo(s, d, "graft-search-index") { st =>
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      buildSearchIndex(st, docs.limit(0))
+      Epochs.direct(Epochs.slice(docs, col("doc_id"), 4))(indexIngestEpoch(st))
     }
 
   /** q206: INCREMENTAL BM25 index maintenance — q101's ranked retrieval
@@ -878,24 +840,18 @@ object SearchOps {
 
   /** q209 body; `rowsPerFile` sizes the staged replay files (specs pass
     * a tiny value to force the multi-file aligned-batch path). One call
-    * into the shared [[EventsOps.stagedReplayDrive]] scaffold. */
+    * into the shared [[Epochs.streamed]] replay. */
   private[graft] def streamedIndexImpl(
       rowsPerFile: Long = EventsOps.OuterStageRowsPerFile, slices: Int = 2)(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-index-stream")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-index-stream") { st =>
       buildSearchIndex(st, docs.limit(0))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q209_index_sink")(graft.streaming.IndexIngest.indexIngestSink(st))
-      // pinned: the store root is deleted in the finally below
-      Dedup.pin(bm25FromIndex(st, Seq("dup", "window"), 20))
-    } finally EventsOps.rmTree(storeRoot)
+      Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), slices), rowsPerFile,
+        "q209_index_sink")(graft.streaming.IndexIngest.indexIngestSink(st))
+      bm25FromIndex(st, Seq("dup", "window"), 20)
+    }
   }
 
   /** q218: the maintained CHUNK index under a REAL `writeStream` — the
@@ -918,19 +874,12 @@ object SearchOps {
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-chunk-stream")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-chunk-stream") { st =>
       buildChunkIndex(st, docs.limit(0))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q218_chunkindex_sink")(
-          graft.streaming.IndexIngest.chunkIndexIngestSink(st))
-      // pinned: the store root is deleted in the finally below
-      Dedup.pin(chunkBm25FromIndex(st, Seq("dup", "window"), 10))
-    } finally EventsOps.rmTree(storeRoot)
+      Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), slices), rowsPerFile,
+        "q218_chunkindex_sink")(graft.streaming.IndexIngest.chunkIndexIngestSink(st))
+      chunkBm25FromIndex(st, Seq("dup", "window"), 10)
+    }
   }
 
   /** [[tfidfWeights]] recomputed from the maintained store alone: tf is
@@ -1103,49 +1052,14 @@ object SearchOps {
       .orderBy(col("score").desc, col("doc_id"), col("chunk_id")).limit(k)
   }
 
-  // one maintained chunk store per (session, dir) — the q206 memo
-  // discipline (weak session keys, root-path values)
-  private val chunkStoreMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
-
+  /** The maintained chunk store for `d`, memoized per session (the q206
+    * discipline). */
   private def maintainedChunkIndex(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    chunkStoreMemo.synchronized {
-      val perDir = {
-        val cur = chunkStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               chunkStoreMemo.put(s, m); m }
-      }
-      val root = perDir.getOrElseUpdate(d, {
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-chunk-index").toString)
-        buildChunkIndex(st, docs.limit(0))
-        val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-        if (r.getLong(2) > 0L) {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          val slices = 4
-          val step = (hi - lo) / slices + 1
-          (0 until slices).foreach { e =>
-            chunkIndexIngestEpoch(st)(docs.filter(
-              col("doc_id") >= lo + e * step &&
-                col("doc_id") < lo + (e + 1) * step), e.toLong)
-          }
-        }
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
-
-  /** ScaleBench's cold-timing hook: drop the memoized chunk store for
-    * `dir` (all sessions) and delete its tempdir. */
-  private[graft] def releaseChunkIndex(dir: String): Unit =
-    chunkStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- chunkStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
+    Epochs.memo(s, d, "graft-chunk-index") { st =>
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      buildChunkIndex(st, docs.limit(0))
+      Epochs.direct(Epochs.slice(docs, col("doc_id"), 4))(chunkIndexIngestEpoch(st))
     }
 
   /** q215: MAINTAINED chunk-BM25 index — q165's passage retrieval (the
@@ -1229,33 +1143,21 @@ object SearchOps {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft-index-tt")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    Epochs.scratchStore(s, "graft-index-tt") { st =>
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      var pinnedAny = false
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          // compactLimit = 2: every epoch's append trips a REAL policy
-          // compaction (+ vacuum) — the pin must carry the snapshot
-          // through them, which is exactly what this gate checks
-          indexIngestEpoch(st, compactLimit = Some(2))(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          if (e == 1) { st.pinVersion("index", "epoch1"); pinnedAny = true }
-        }
+      val sl = Epochs.slice(docs, col("doc_id"), 4)
+      Epochs.direct(sl) { (batch, e) =>
+        // compactLimit = 2: every epoch's append trips a REAL policy
+        // compaction (+ vacuum) — the pin must carry the snapshot
+        // through them, which is exactly what this gate checks
+        indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
+        if (e == 1L) st.pinVersion("index", "epoch1")
       }
-      if (!pinnedAny) st.pinVersion("index", "epoch1") // empty-corpus shape
+      if (sl.epochs == 0) st.pinVersion("index", "epoch1") // empty-corpus shape
       // serve phase reads the store-wide snapshot — full-volume width
       EventsOps.serveWidth(s, inBytes)
-      // pinned frame: the store root is deleted in the finally below
-      Dedup.pin(bm25FromSnapshot(st.tableAtPin("index", "epoch1"),
-        Seq("dup", "window"), 20))
-    } finally EventsOps.rmTree(root)
+      bm25FromSnapshot(st.tableAtPin("index", "epoch1"), Seq("dup", "window"), 20)
+    }
     }
   }
 
@@ -1288,40 +1190,28 @@ object SearchOps {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft-index-window")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    Epochs.scratchStore(s, "graft-index-window") { st =>
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      var windowV = -1
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          indexIngestEpoch(st, compactLimit = Some(2),
-            retainVersions = Some(6))(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          // remember the BARE version number — no pin, no label; only
-          // the retention window carries it through epochs 2 and 3
-          if (e == 1) windowV = st.currentVersionOf("index")
-        }
+      val versions = Epochs.direct(Epochs.slice(docs, col("doc_id"), 4)) { (batch, e) =>
+        indexIngestEpoch(st, compactLimit = Some(2),
+          retainVersions = Some(6))(batch, e)
+        // remember the BARE version number — no pin, no label; only
+        // the retention window carries it through epochs 2 and 3
+        st.currentVersionOf("index")
       }
-      if (windowV < 0) windowV = st.currentVersionOf("index") // empty-corpus shape
+      // epoch 1's version; the empty-corpus shape reads the current one
+      val windowV = versions.lift(1).getOrElse(st.currentVersionOf("index"))
       // serve phase reads the store-wide snapshot — full-volume width
       EventsOps.serveWidth(s, inBytes)
-      // pinned frame: the store root is deleted in the finally below
-      Dedup.pin(bm25FromSnapshot(st.tableAt("index", windowV),
-        Seq("dup", "window"), 20))
-    } finally EventsOps.rmTree(root)
+      bm25FromSnapshot(st.tableAt("index", windowV), Seq("dup", "window"), 20)
+    }
     }
   }
 
   /** q231: a RELEASE PINNED MID-STREAM (the 19th streaming gate) —
     * q216's retention story composed with q209's streaming discipline:
     * the index builds under a REAL `writeStream` (the shared
-    * [[EventsOps.stagedReplayDrive]] scaffold, four strict doc_id
+    * [[Epochs.streamed]] replay, four strict doc_id
     * stages), the sink runs each micro-batch through the forced-hot
     * compaction policy (compactLimit = 2), and the pin lands INSIDE the
     * `foreachBatch` callback the moment epoch 1 commits — the
@@ -1339,27 +1229,19 @@ object SearchOps {
     "q231_streamed_pinned_index",
     twoStageBm25OracleSql) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft-index-stream-pin")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    Epochs.scratchStore(s, "graft-index-stream-pin") { st =>
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2),
-          EventsOps.OuterStageRowsPerFile, 4, "q231_pinned_index_sink") {
-          (batch, e) =>
-            indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
-            // the pin is PART of the ingest: taken in the same
-            // micro-batch that published the post-epoch-1 version
-            if (e == 1L) { st.pinVersion("index", "epoch1"); () }
-        }
+      Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), 4),
+        EventsOps.OuterStageRowsPerFile, "q231_pinned_index_sink") { (batch, e) =>
+        indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
+        // the pin is PART of the ingest: taken in the same
+        // micro-batch that published the post-epoch-1 version
+        if (e == 1L) { st.pinVersion("index", "epoch1"); () }
+      }
       if (!st.pinnedVersions("index").contains("epoch1"))
         st.pinVersion("index", "epoch1") // empty-corpus shape
-      // pinned frame: the store root is deleted in the finally below
-      Dedup.pin(bm25FromSnapshot(st.tableAtPin("index", "epoch1"),
-        Seq("dup", "window"), 20))
-    } finally EventsOps.rmTree(root)
+      bm25FromSnapshot(st.tableAtPin("index", "epoch1"), Seq("dup", "window"), 20)
+    }
   }
 
   val all: Seq[QueryDef] =

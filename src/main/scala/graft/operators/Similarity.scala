@@ -843,21 +843,19 @@ object Similarity {
   private[graft] def ivfIngestEpoch(st: graft.sources.TableStore,
       compactLimit: Option[Int] = None)(
       batch: DataFrame, epoch: Long): Unit =
-    Trace.epoch(epoch) {
-      if (!st.batchCommitted("ivf", epoch)) {
-        // persist before the range layout — repartitionByRange's sampling
-        // job would otherwise re-run the component explode per epoch
-        val rows = ivfRows(batch).persist()
-        try st.appendBatch("ivf", epoch,
-          Dedup.bucketLayout(rows, 8, "kind", "label", "vec_id", "i"))
-        finally { rows.unpersist(); () }
-        // shared auto-compaction policy (one helper across the state/
-        // index/ivf stores — ADVICE r15 #3): layout-preserving collapse,
-        // ledger survives; compactLimit threads a per-caller policy
-        // without touching the session conf
-        Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "ivf",
-          Seq("kind", "label", "vec_id", "i"), compactLimit)
-      }
+    if (!st.batchCommitted("ivf", epoch)) {
+      // persist before the range layout — repartitionByRange's sampling
+      // job would otherwise re-run the component explode per epoch
+      val rows = ivfRows(batch).persist()
+      try st.appendBatch("ivf", epoch,
+        Dedup.bucketLayout(rows, 8, "kind", "label", "vec_id", "i"))
+      finally { rows.unpersist(); () }
+      // shared auto-compaction policy (one helper across the state/
+      // index/ivf stores — ADVICE r15 #3): layout-preserving collapse,
+      // ledger survives; compactLimit threads a per-caller policy
+      // without touching the session conf
+      Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "ivf",
+        Seq("kind", "label", "vec_id", "i"), compactLimit)
     }
 
   /** Create the (empty) list table [[ivfIngestEpoch]] appends to. */
@@ -1120,53 +1118,18 @@ object Similarity {
       .orderBy("query_id", "rk")
   }
 
-  // one maintained list store per (session, dir) — the maintained-family
-  // memo discipline (weak session keys, root-path values)
-  private val ivfStoreMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, String]]()
-
+  /** The maintained list store for `d`, memoized per session: the
+    * embeddings ingested as four vec_id epochs with a layout-preserving
+    * compaction after epoch 1 — the oracle gates across it (q201's
+    * discipline applied to the ANN lists). */
   private[graft] def maintainedIvf(s: SparkSession, d: String): graft.sources.TableStore =
-    ivfStoreMemo.synchronized {
-      val perDir = {
-        val cur = ivfStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               ivfStoreMemo.put(s, m); m }
+    Epochs.memo(s, d, "graft-ivf") { st =>
+      val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
+      buildIvfStore(st, vecs.limit(0))
+      Epochs.direct(Epochs.slice(vecs, col("vec_id"), 4)) { (batch, e) =>
+        ivfIngestEpoch(st)(batch, e)
+        if (e == 1L) st.compactClustered("ivf", Seq("kind", "label", "vec_id", "i"), 8)
       }
-      val root = perDir.getOrElseUpdate(d, {
-        val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-ivf").toString)
-        buildIvfStore(st, vecs.limit(0))
-        val r = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-        if (r.getLong(2) > 0L) {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          val slices = 4
-          val step = (hi - lo) / slices + 1
-          (0 until slices).foreach { e =>
-            ivfIngestEpoch(st)(vecs.filter(
-              col("vec_id") >= lo + e * step &&
-                col("vec_id") < lo + (e + 1) * step), e.toLong)
-            // maintenance mid-run: collapse the chain with the
-            // layout-preserving clustered compaction — the oracle gates
-            // across it (q201's discipline applied to the ANN lists)
-            if (e == 1)
-              st.compactClustered("ivf", Seq("kind", "label", "vec_id", "i"), 8)
-          }
-        }
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
-
-  /** ScaleBench's cold-timing hook: drop the memoized list store for
-    * `dir` (all sessions) and delete its tempdir. */
-  private[graft] def releaseIvfStore(dir: String): Unit =
-    ivfStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- ivfStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
     }
 
   /** q208: MAINTAINED IVF index — q51's probe-1 ANN served from inverted
@@ -1198,18 +1161,12 @@ object Similarity {
       rowsPerFile: Long = EventsOps.OuterStageRowsPerFile, slices: Int = 2)(
       s: SparkSession, d: String): DataFrame = {
     val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-ivf-stream")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-ivf-stream") { st =>
       buildIvfStore(st, vecs.limit(0))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, vecs, col("vec_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q210_ivf_sink")(graft.streaming.IndexIngest.ivfIngestSink(st))
-      // pinned: the store root is deleted in the finally below
-      Dedup.pin(ivfProbe(st, nQueries = 20, k = 3))
-    } finally EventsOps.rmTree(storeRoot)
+      Epochs.streamed(s, Epochs.slice(vecs, col("vec_id"), slices), rowsPerFile,
+        "q210_ivf_sink")(graft.streaming.IndexIngest.ivfIngestSink(st))
+      ivfProbe(st, nQueries = 20, k = 3)
+    }
   }
 
   /** q223: MULTI-PROBE ANN served from the maintained IVF store — the
@@ -1427,21 +1384,15 @@ object Similarity {
     * Returns false for an empty corpus (nothing ingested). Shared by
     * the recluster gate and the drift-probe gate so the drifted-store
     * shape can never diverge between them. */
-  private def ingestDriftedIvf(st: graft.sources.TableStore,
-      raw: DataFrame, r: org.apache.spark.sql.Row): Boolean = {
+  private def ingestDriftedIvf(st: graft.sources.TableStore, raw: DataFrame): Boolean = {
     buildIvfStore(st, raw.limit(0))
-    if (r.getLong(2) == 0L) return false
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
-    val step = (hi - lo) / 4 + 1
+    val sl = Epochs.slice(raw, col("vec_id"), 4)
+    if (sl.epochs == 0) return false
     val k = raw.agg(max("label")).head().getAs[Number](0).intValue() + 1
     val drifted = raw.withColumn("label",
-      when(col("vec_id") >= lo + 2 * step && col("vec_id") % 5 === 0,
+      when(col("vec_id") >= sl.start(2) && col("vec_id") % 5 === 0,
         (col("label") + 1) % k).otherwise(col("label")))
-    (0 until 4).foreach { e =>
-      ivfIngestEpoch(st)(drifted.filter(
-        col("vec_id") >= lo + e * step &&
-          col("vec_id") < lo + (e + 1) * step), e.toLong)
-    }
+    Epochs.direct(sl.over(drifted))(ivfIngestEpoch(st))
     true
   }
 
@@ -1455,11 +1406,8 @@ object Similarity {
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val nQ = 10
     val raw = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = raw.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-recluster")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
-      val empty = !ingestDriftedIvf(st, raw, r)
+    Epochs.scratchStore(s, "graft-ivf-recluster") { st =>
+      val empty = !ingestDriftedIvf(st, raw)
       // everything from here on is store-wide (recall sweeps, recluster
       // rewrite, exact baseline) — full-volume width
       EventsOps.serveWidth(s, inBytes)
@@ -1499,7 +1447,7 @@ object Similarity {
             "recall_after", "mean_before", "mean_after", "non_regressed")
           .orderBy("query_id")
       }
-    } finally EventsOps.rmTree(root)
+    }
     }
   }
 
@@ -1583,11 +1531,8 @@ object Similarity {
       Tables.embeddings(s0, d).select("vec_id", "label", "embedding"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val raw = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = raw.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-driftprobe")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
-      ingestDriftedIvf(st, raw, r)
+    Epochs.scratchStore(s, "graft-ivf-driftprobe") { st =>
+      ingestDriftedIvf(st, raw)
       // the probes and the recluster rewrite are store-wide — full-volume
       // width from here on
       EventsOps.serveWidth(s, inBytes)
@@ -1600,13 +1545,12 @@ object Similarity {
         .select(col("n_vectors"), col("mis").as("mis_before")))
       reclusterIvf(st, precomputedAssign = Some(assign))
       val after = ivfMisassignment(st).select(col("mis").as("mis_after"))
-      // pinned frame: the store root is deleted in the finally below
-      Dedup.pin(before.crossJoin(broadcast(after))
+      before.crossJoin(broadcast(after))
         .select(col("n_vectors"), col("mis_before"),
           expr("mis_before * 1000000 div greatest(n_vectors, 1)").as("drift_before_ppm"),
           col("mis_after"),
-          expr("mis_after * 1000000 div greatest(n_vectors, 1)").as("drift_after_ppm")))
-    } finally EventsOps.rmTree(root)
+          expr("mis_after * 1000000 div greatest(n_vectors, 1)").as("drift_after_ppm"))
+    }
     }
   }
 
@@ -1802,42 +1746,36 @@ object Similarity {
     import s.implicits._
     val nQ = 10
     val raw = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = raw.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
+    val sl = Epochs.slice(raw, col("vec_id"), 4)
     val emptyTrace = Seq.empty[(Int, Long, Long, Long, Int, Long, Long)]
     def traceDf(rows: Seq[(Int, Long, Long, Long, Int, Long, Long)]) =
       rows.toDF("epoch", "n_vectors", "mis", "ppm", "fired", "post_mis", "post_ppm")
-    if (r.getLong(2) == 0L) {
+    if (sl.epochs == 0) {
       traceDf(emptyTrace)
         .withColumn("recall_maintained", lit(0.0))
         .withColumn("recall_frozen", lit(0.0))
         .withColumn("non_regressed", lit(1))
     } else {
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val step = (hi - lo) / 4 + 1
       // the distribution shift: every component of the second epoch
       // group's vectors moves by +0.15 IN THE DOUBLE DOMAIN (before the
       // decimal cast), so both engines round the identical double; the
       // undrifted branch applies the same double cast for type parity
       val drifted = raw.withColumn("embedding",
-        when(col("vec_id") >= lo + 2 * step,
+        when(col("vec_id") >= sl.start(2),
           transform(col("embedding"), x => x.cast("double") + lit(0.15)))
           .otherwise(transform(col("embedding"), x => x.cast("double"))))
-      val rootM = java.nio.file.Files.createTempDirectory("graft-ivf-policy")
-      val rootF = java.nio.file.Files.createTempDirectory("graft-ivf-frozen")
-      try {
-        val stM = new graft.sources.TableStore(s, rootM.toString)
-        val stF = new graft.sources.TableStore(s, rootF.toString)
+      Epochs.scratch("graft-ivf-policy", "graft-ivf-frozen") { roots =>
+        val stM = new graft.sources.TableStore(s, roots(0))
+        val stF = new graft.sources.TableStore(s, roots(1))
         buildIvfStore(stM, drifted.limit(0))
         buildIvfStore(stF, drifted.limit(0))
-        def batch(e: Int) = drifted.filter(
-          col("vec_id") >= lo + e * step && col("vec_id") < lo + (e + 1) * step)
-        val trace = (0 until 4).map { e =>
+        // each epoch feeds the policy-managed store and the frozen
+        // baseline (no policy, no training) the same batch
+        val trace = Epochs.direct(sl.over(drifted)) { (batch, e) =>
           val Some((n, mis, ppm, fired, postMis, postPpm)) =
-            ivfIngestEpochManaged(stM, Some(DriftLimitPpm))(batch(e), e.toLong)
-          (e, n, mis, ppm, if (fired) 1 else 0, postMis, postPpm)
-        }
-        (0 until 4).foreach { e => // frozen baseline: no policy, no training
-          ivfIngestEpochManaged(stF, None)(batch(e), e.toLong); ()
+            ivfIngestEpochManaged(stM, Some(DriftLimitPpm))(batch, e)
+          ivfIngestEpochManaged(stF, None)(batch, e)
+          (e.toInt, n, mis, ppm, if (fired) 1 else 0, postMis, postPpm)
         }
         // recall sweeps + the exact baseline are store/corpus-wide —
         // full-volume width from here on
@@ -1864,16 +1802,16 @@ object Similarity {
           .crossJoin(recallOf(stF, "recall_frozen"))
           .withColumn("non_regressed",
             (col("recall_maintained") >= col("recall_frozen")).cast("int"))
-        // pinned frame: the store roots are deleted in the finally below
+        // pinned frame: the store roots are deleted when this returns
         Dedup.pin(traceDf(trace).crossJoin(broadcast(rec)).orderBy("epoch"))
-      } finally { EventsOps.rmTree(rootM); EventsOps.rmTree(rootF) }
+      }
     }
     }
   }
 
   /** q235's oracle: the composite partition a mid-stream recluster
     * leaves behind, recomputed monolithically — the first THREE strict
-    * replay stages (the [[graft.operators.EventsOps.stagedReplayDrive]]
+    * replay stages (the [[graft.operators.Epochs.streamed]]
     * cut formula: vec_id <= lo + (hi-lo)*3//4, drift on
     * vec_id > lo + (hi-lo)*2//4) reassigned by one Lloyd step against
     * their arrival-label centroids, the FOURTH stage keeping its
@@ -1953,24 +1891,19 @@ object Similarity {
     "q235_streamed_recluster",
     streamedReclusterOracleSql) { (s, d) =>
     val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-stream-recluster")
-    try {
-      val st = new graft.sources.TableStore(s, root.toString)
+    Epochs.scratchStore(s, "graft-ivf-stream-recluster") { st =>
       buildIvfStore(st, vecs.limit(0))
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
+      val sl = Epochs.slice(vecs, col("vec_id"), 4)
+      if (sl.epochs > 0) {
         val k = vecs.agg(max("label")).head().getAs[Number](0).intValue() + 1
         val drifted = vecs.withColumn("label",
-          when(col("vec_id") > lo + (hi - lo) * 2 / 4 && col("vec_id") % 5 === 0,
+          when(col("vec_id") > sl.lo + (sl.hi - sl.lo) * 2 / 4 && col("vec_id") % 5 === 0,
             (col("label") + 1) % k).otherwise(col("label")))
-        EventsOps.stagedReplayDrive(s, drifted, col("vec_id"),
-          lo, hi, r.getLong(2), EventsOps.OuterStageRowsPerFile, 4,
+        Epochs.streamed(s, sl.over(drifted), EventsOps.OuterStageRowsPerFile,
           "q235_recluster_sink")(streamedReclusterSink(st))
       }
-      // pinned frame: the store root is deleted in the finally below
-      Dedup.pin(ivfProbe(st, nQueries = 20, k = 3))
-    } finally EventsOps.rmTree(root)
+      ivfProbe(st, nQueries = 20, k = 3)
+    }
   }
 
   /** The q235 sink: per-batch ingest with forced-hot compaction, plus

@@ -344,7 +344,6 @@ object Warehouse {
     * tiny value to force the multi-file aligned-batch path at test scale). */
   private[graft] def q189Impl(rowsPerFile: Long = EventsOps.OuterStageRowsPerFile)(
       s0: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    import graft.sources.TableStore
     // the whole gate is replay-bounded (staging, per-batch merges, the
     // final dim read) — run it under the volume-derived replay width
     // like the other maintained-store gates; q189's outer body used to
@@ -354,55 +353,20 @@ object Warehouse {
     val evBytes = EventsOps.planBytes(Tables.events(s0, d)
       .select("event_id", "ts", "user_id", "event_type", "value"))
     EventsOps.withReplayWidth(s0, evBytes / 4) { s =>
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-scd2-stream")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-scd2-stage")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-scd2-ckpt")
-    try {
-      val st = new TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-scd2-stream") { st =>
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
-        count(lit(1))).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val nFiles = math.max(1L,
-        math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
-      // four strict quarter-range slices, width-aligned by stageAligned
-      // (a slice whose rows fit fewer parquet parts — empty partitions
-      // are skipped by the writer — is padded, so maxFilesPerTrigger
-      // boundaries always put ONE whole slice per micro-batch)
-      val width = EventsOps.stageAligned(streamDir,
-        EventsOps.slicedStages(ev, unix_micros(col("ts")), lo, hi, 4), nFiles)
       // empty dimension: the first refresh bootstraps it
       scd2CreateDim(st, "dim", ev)
-      // q188's refresh per micro-batch, epoch-ledgered (see scd2Refresh):
-      // a restarted batch re-offering its id no-ops instead of re-merging
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", width.toString)
-        .parquet(streamDir.toString)
-        .writeStream
-        .queryName("q189_scd2_sink")
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-          // bounded replay: batch-bounded merge shuffles at the
-          // volume-derived q183 width
-          batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-            EventsOps.replayWidth(EventsOps.planBytes(ev) / 4).toString)
-          scd2Refresh(st, "dim")(batch, epoch)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // four strict quarter-range slices of the event time; q188's
+      // refresh per micro-batch, epoch-ledgered (see scd2Refresh): a
+      // restarted batch re-offering its id no-ops instead of re-merging
+      Epochs.streamed(s, Epochs.slice(ev, unix_micros(col("ts")), 4), rowsPerFile,
+        "q189_scd2_sink")(scd2Refresh(st, "dim"))
       // serve reads the store-wide dimension — full-volume width
       EventsOps.serveWidth(s, evBytes)
-      // pin: the store root is deleted in the finally below
       st.table("dim").select("user_id", "tier", "valid_from", "valid_to")
         .orderBy("user_id", "tier")
-        .localCheckpoint(true)
-    } finally {
-      EventsOps.rmTree(streamDir)
-      EventsOps.rmTree(ckptDir)
-      EventsOps.rmTree(storeRoot)
     }
     }
   }
@@ -431,54 +395,21 @@ object Warehouse {
       |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
     import graft.functions.Dec._
-    import graft.sources.TableStore
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-compact-stream")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-compact-stage")
-    try {
-      val st = new TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-compact-stream") { st =>
       val ev = Tables.events(s, d).select("event_id", "ts", "event_type", "value")
-      val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
-        count(lit(1))).head()
       st.create("ev", ev.limit(0))
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = math.max(1L, math.min(32L,
-          r.getLong(2) / EventsOps.OuterStageRowsPerFile + 1)).toInt
-        val width = EventsOps.stageAligned(streamDir,
-          EventsOps.slicedStages(ev, unix_micros(col("ts")), lo, hi, 4), nFiles)
-        val sinkName = "q200_compact_sink"
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", width.toString)
-          .parquet(streamDir.toString)
-          .writeStream
-          .queryName(sinkName)
-          .outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-            // bounded replay: the volume-derived q183 width for
-            // batch-bounded appends
-            batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(EventsOps.planBytes(ev) / 4).toString)
-            st.appendBatch("ev", epoch, batch)
-            // mid-stream maintenance: collapse the 2-epoch chain while
-            // epochs 2 and 3 are still inbound
-            if (epoch == 1L) { st.compact("ev"); () }
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      Epochs.streamed(s, Epochs.slice(ev, unix_micros(col("ts")), 4),
+        EventsOps.OuterStageRowsPerFile, "q200_compact_sink") { (batch, epoch) =>
+        st.appendBatch("ev", epoch, batch)
+        // mid-stream maintenance: collapse the 2-epoch chain while
+        // epochs 2 and 3 are still inbound
+        if (epoch == 1L) { st.compact("ev"); () }
       }
       st.table("ev")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           sum(d4(col("value"))).cast("double").as("value_sum"))
         .orderBy("event_type")
-        // pin: the store root is deleted in the finally below
-        .localCheckpoint(true)
-    } finally {
-      EventsOps.rmTree(streamDir)
-      EventsOps.rmTree(storeRoot)
     }
   }
 

@@ -36,9 +36,10 @@ class DedupSinkPlanSpec extends SparkSpec {
   private val base =
     "the quick brown fox jumps over the lazy dog again and again today friends"
 
-  /** Capture query executions while `body` runs; returns them after the
-    * async listener bus drains (poll-until-stable — the bus has no public
-    * flush). */
+  /** Capture the query executions of `body`: the listener bus is
+    * drained before the listener registers (so executions that ended
+    * earlier cannot land in the capture) and again after `body` (so all
+    * of its own have arrived). */
   private def captureQueryExecutions(body: => Unit): Seq[QueryExecution] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val l = new QueryExecutionListener {
@@ -47,17 +48,11 @@ class DedupSinkPlanSpec extends SparkSpec {
       }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    drainListenerBus()
     spark.listenerManager.register(l)
     try {
       body
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(200)
-        val n = seen.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
+      drainListenerBus()
     } finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
     seen.iterator().asScala.toSeq

@@ -62,20 +62,29 @@ class MemoLifecycleSpec extends SparkSpec {
   }
 
   test("store-memo release hooks are idempotent and a rebuild still serves exactly") {
-    import graft.operators.{SearchOps, Similarity}
+    import graft.operators.{Epochs, SearchOps, Similarity}
     // index store (q206 family): release drops the tempdir-backed memo;
     // the next gate call pays a fresh build and must answer identically
     val before = SearchOps.q206.build(spark, sf).collect().map(_.toSeq)
-    SearchOps.releaseSearchIndex(sf)
-    SearchOps.releaseSearchIndex(sf) // idempotent on an already-released dir
+    Epochs.release(sf)
+    Epochs.release(sf) // idempotent on an already-released dir
     SearchOps.q206.build(spark, sf).collect().map(_.toSeq).toSeq shouldBe before.toSeq
     // ivf store (q208): same contract
     val ivfBefore = Similarity.q208.build(spark, sf).collect().map(_.toSeq)
-    Similarity.releaseIvfStore(sf)
-    Similarity.releaseIvfStore(sf)
+    Epochs.release(sf)
+    Epochs.release(sf)
     Similarity.q208.build(spark, sf).collect().map(_.toSeq).toSeq shouldBe ivfBefore.toSeq
+    // q90's signature store: release deletes its root too
+    val q90Before = Dedup.q90.build(spark, sf).collect().map(_.toSeq)
+    val sigRoot = Epochs.memoized(spark, sf).get("graft-sigstore")
+    sigRoot should not be None
+    java.nio.file.Files.exists(java.nio.file.Paths.get(sigRoot.get)) shouldBe true
+    Epochs.release(sf)
+    java.nio.file.Files.exists(java.nio.file.Paths.get(sigRoot.get)) shouldBe false
+    Epochs.memoized(spark, sf) shouldBe empty
+    Dedup.q90.build(spark, sf).collect().map(_.toSeq).toSeq shouldBe q90Before.toSeq
+    Epochs.release(sf)
     // releases of a never-memoized dir are safe no-ops
-    SearchOps.releaseChunkIndex("/nonexistent")
-    graft.operators.DedupClusters.releaseClusterStore("/nonexistent")
+    Epochs.release("/nonexistent")
   }
 }

@@ -25,37 +25,48 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   /** Spark jobs `body` submits from this thread (broadcast and subquery
     * jobs included: they inherit its local properties), and the distinct
     * SQL executions — one per action — they belong to. Listener events
-    * arrive asynchronously but in order, so a marked sentinel job run
-    * afterwards flushes them. */
+    * arrive asynchronously, so the bus is drained after `body`. */
   def sparkActivity(body: => Any): SparkSpec.Activity = {
     val sc = spark.sparkContext
-    val key = "graft.spec.activity"
     val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
-        prop(key) match {
-          case Some("body") =>
-            jobs.incrementAndGet()
-            prop("spark.sql.execution.root.id").orElse(prop("spark.sql.execution.id"))
-              .foreach(executions.add)
-          case Some("sentinel") => flushed.countDown()
-          case _ => ()
+        if (prop(SparkSpec.MarkKey).contains("body")) {
+          jobs.incrementAndGet()
+          prop("spark.sql.execution.root.id").orElse(prop("spark.sql.execution.id"))
+            .foreach(executions.add)
         }
       }
     }
     sc.addSparkListener(listener)
     try {
-      def marked(tag: String)(f: => Any): Unit = {
-        sc.setLocalProperty(key, tag)
-        try f finally sc.setLocalProperty(key, null)
-      }
-      marked("body")(body)
-      marked("sentinel")(sc.parallelize(Seq(1), 1).count())
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
+      SparkSpec.marked(sc, "body")(body)
+      drainListenerBus()
       SparkSpec.Activity(jobs.get, executions.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Block until every listener event posted before this call has been
+    * delivered. Events reach the shared listener queue in order (SQL
+    * execution ends, and so `QueryExecutionListener` calls, included), so
+    * once a marked sentinel job's start arrives, everything before it
+    * has arrived too. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"sentinel-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).flatMap(p => Option(p.getProperty(SparkSpec.MarkKey)))
+            .contains(tag)) seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      SparkSpec.marked(sc, tag)(sc.parallelize(Seq(1), 1).count())
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the sentinel job")
     } finally sc.removeSparkListener(listener)
   }
 
@@ -71,4 +82,12 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 
 object SparkSpec {
   final case class Activity(jobs: Int, sqlExecutions: Int)
+
+  /** Local property that tags the jobs a spec submits. */
+  private val MarkKey = "graft.spec.activity"
+
+  private def marked(sc: org.apache.spark.SparkContext, tag: String)(f: => Any): Unit = {
+    sc.setLocalProperty(MarkKey, tag)
+    try f finally sc.setLocalProperty(MarkKey, null)
+  }
 }
