@@ -34,10 +34,14 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** A local session whose warehouse dir is private to this JVM and
+    * deleted when it exits. */
   def local(appName: String = "graft-test", cores: Int = 4): SparkSession = {
+    val warehouse = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-warehouse-${ProcessHandle.current().pid()}")
+    graft.operators.Epochs.deleteAtExit(warehouse)
     val s = builder(appName, cores)
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-${ProcessHandle.current().pid()}")
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

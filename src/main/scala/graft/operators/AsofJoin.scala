@@ -164,7 +164,7 @@ object AsofJoin {
     // accepted corpora materialize once for the self-join's two sides;
     // the second explode the guard costs them is linear and tiny next to
     // the join — the refusal path staying storage-free wins the trade
-    val binned = binnedPlan.localCheckpoint(true)
+    val binned = Dedup.pin(binnedPlan)
     val a = binned.select(col("sk"), col("pk"), col("cell"), col("ok").as("ok_a"),
       col("ln").as("ln_a"), col("s").as("s_a"), col("e").as("e_a"))
     val b = binned.select(col("sk"), col("pk"), col("cell"), col("ok").as("ok_b"),

@@ -945,7 +945,7 @@ object CorpusOps {
   private[graft] def globalRowIndex(df: org.apache.spark.sql.DataFrame,
       order: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val buckets = rangeBuckets(df, order: _*).localCheckpoint(true)
+    val buckets = Dedup.pin(rangeBuckets(df, order: _*))
     val offsets = buckets.groupBy("__b").agg(count(lit(1)).as("__bn"))
       .withColumn("__off", coalesce(sum(col("__bn")).over(
         Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -1016,9 +1016,7 @@ object CorpusOps {
        |  CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
        |FROM sh GROUP BY shard ORDER BY shard""".stripMargin) { (s, d) =>
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-shard-store")
-    try {
-      val st = new graft.sources.TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-shard-store") { st =>
       writeShards(st, shardPlan(s, d, payload = Seq("source", "text")))
       st.table("shards")
         .select(col("shard").cast("long").as("shard"), col("doc_id"),
@@ -1029,9 +1027,7 @@ object CorpusOps {
           sum(col("doc_id")).cast("long").as("sum_doc_id"),
           sum(length(col("text")).cast("long")).cast("long").as("sum_chars"))
         .orderBy("shard")
-        // pin: the store root is deleted in the finally below
-        .localCheckpoint(true)
-    } finally EventsOps.rmTree(storeRoot)
+    }
   }
 
   /** Number of curriculum phases for q197 — fixed so the oracle SQL and

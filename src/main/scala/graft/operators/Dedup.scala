@@ -322,8 +322,9 @@ object Dedup {
     df.repartitionByRange(files, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
 
-  /** Materialize `df` eagerly and truncate its lineage — the suite's
-    * checkpoint seam (VERDICT r14 next #3). Default: `localCheckpoint`,
+  /** Materialize `df` eagerly and truncate its lineage — the engine's
+    * one checkpoint seam (VERDICT r14 next #3): no other file pins a
+    * frame (EpochsSpec's source guard). Default: `localCheckpoint`,
     * whose blocks are executor-local and unreplicated — exactly right
     * for the single-JVM local[*] topology this library benches on, but
     * LOST on executor failure in a multi-executor deployment. Setting
@@ -721,10 +722,12 @@ object Dedup {
     * broadcast if runtime stats allow. ~4M ids ≈ tens of MB broadcast. */
   private[graft] val MaxBroadcastCandidateDocs = 4000000L
 
-  // ceiling+1 as an Int LIMIT, overflow-safe for ceilings near Long.MaxValue
-  // (ceiling + 1L would wrap to Long.MinValue and .toInt to 0 — limit(0))
-  private[graft] def boundedProbeLimit(ceiling: Long): Int =
-    if (ceiling >= Int.MaxValue - 1L) Int.MaxValue else (ceiling + 1L).toInt
+  /** ceiling+1 as an Int LIMIT. A ceiling whose +1 does not fit an Int
+    * is refused: no probe may collect that many rows to the driver. */
+  private[graft] def boundedProbeLimit(ceiling: Long): Int = {
+    require(ceiling < Int.MaxValue - 1L, s"probe ceiling $ceiling exceeds the driver collect bound")
+    (ceiling + 1L).toInt
+  }
 
   /** [[incrementalLshKernelPruned]] over plain signature frames — the
     * compatibility seam for callers (and plan specs) holding a raw

@@ -160,24 +160,24 @@ object DmlQueries {
       |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM base))
       |SELECT o_orderkey, o_orderpriority, CAST(price AS DOUBLE) AS o_totalprice
       |FROM merged ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    val st = new graft.sources.TableStore(s,
-      java.nio.file.Files.createTempDirectory("graft-upsert").toString)
-    val base = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        d2(col("o_totalprice")).as("o_totalprice"))
-    st.create("orders_t", base,
-      Seq(graft.constraints.Constraints.PrimaryKey(Seq("o_orderkey"))))
-    val batch = base.filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), lit("UPSERTED").as("o_orderpriority"),
-        (col("o_totalprice") + 100).cast(Money).as("o_totalprice"))
-      .unionByName(base.filter(col("o_orderkey") % 13 === 0)
-        .select((col("o_orderkey") + 20000000L).as("o_orderkey"),
-          lit("NEWROW").as("o_orderpriority"), col("o_totalprice")))
-    st.upsert("orders_t", batch)
-    st.table("orders_t")
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        col("o_totalprice").cast("double").as("o_totalprice"))
-      .orderBy("o_orderkey")
+    Epochs.scratchStore(s, "graft-upsert") { st =>
+      val base = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_orderpriority"),
+          d2(col("o_totalprice")).as("o_totalprice"))
+      st.create("orders_t", base,
+        Seq(graft.constraints.Constraints.PrimaryKey(Seq("o_orderkey"))))
+      val batch = base.filter(col("o_orderkey") % 7 === 0)
+        .select(col("o_orderkey"), lit("UPSERTED").as("o_orderpriority"),
+          (col("o_totalprice") + 100).cast(Money).as("o_totalprice"))
+        .unionByName(base.filter(col("o_orderkey") % 13 === 0)
+          .select((col("o_orderkey") + 20000000L).as("o_orderkey"),
+            lit("NEWROW").as("o_orderpriority"), col("o_totalprice")))
+      st.upsert("orders_t", batch)
+      st.table("orders_t")
+        .select(col("o_orderkey"), col("o_orderpriority"),
+          col("o_totalprice").cast("double").as("o_totalprice"))
+        .orderBy("o_orderkey")
+    }
   }
 
   /** §2.9 D5++ — the FULL 3-clause MERGE (q87 covers the 2-clause upsert):
@@ -214,31 +214,31 @@ object DmlQueries {
       |SELECT o_orderkey, o_orderpriority, CAST(price AS DOUBLE) AS o_totalprice
       |FROM merged ORDER BY o_orderkey""".stripMargin) { (s, d) =>
     import graft.sources.TableStore
-    val st = new TableStore(s,
-      java.nio.file.Files.createTempDirectory("graft-merge").toString)
-    val base = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        d2(col("o_totalprice")).as("o_totalprice"))
-    st.create("orders_t", base,
-      Seq(graft.constraints.Constraints.PrimaryKey(Seq("o_orderkey"))))
-    val source = base.filter(col("o_orderkey") % 11 === 0)
-      .select(col("o_orderkey"), lit("KILL").as("o_orderpriority"), col("o_totalprice"))
-      .unionByName(base.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 11 =!= 0)
-        .select(col("o_orderkey"), lit("MERGED").as("o_orderpriority"),
-          (col("o_totalprice") + 50).cast(Money).as("o_totalprice")))
-      .unionByName(base.filter(col("o_orderkey") % 13 === 0)
-        .select((col("o_orderkey") + 30000000L).as("o_orderkey"),
-          lit("NEWROW").as("o_orderpriority"), col("o_totalprice")))
-    st.mergeInto("orders_t", source, Seq("o_orderkey"),
-      matchedUpdate = Map(
-        "o_orderpriority" -> TableStore.src("o_orderpriority"),
-        "o_totalprice" -> TableStore.src("o_totalprice")),
-      matchedDelete = Some(TableStore.src("o_orderpriority") === "KILL"),
-      insertUnmatched = true)
-    st.table("orders_t")
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        col("o_totalprice").cast("double").as("o_totalprice"))
-      .orderBy("o_orderkey")
+    Epochs.scratchStore(s, "graft-merge") { st =>
+      val base = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_orderpriority"),
+          d2(col("o_totalprice")).as("o_totalprice"))
+      st.create("orders_t", base,
+        Seq(graft.constraints.Constraints.PrimaryKey(Seq("o_orderkey"))))
+      val source = base.filter(col("o_orderkey") % 11 === 0)
+        .select(col("o_orderkey"), lit("KILL").as("o_orderpriority"), col("o_totalprice"))
+        .unionByName(base.filter(col("o_orderkey") % 5 === 0 && col("o_orderkey") % 11 =!= 0)
+          .select(col("o_orderkey"), lit("MERGED").as("o_orderpriority"),
+            (col("o_totalprice") + 50).cast(Money).as("o_totalprice")))
+        .unionByName(base.filter(col("o_orderkey") % 13 === 0)
+          .select((col("o_orderkey") + 30000000L).as("o_orderkey"),
+            lit("NEWROW").as("o_orderpriority"), col("o_totalprice")))
+      st.mergeInto("orders_t", source, Seq("o_orderkey"),
+        matchedUpdate = Map(
+          "o_orderpriority" -> TableStore.src("o_orderpriority"),
+          "o_totalprice" -> TableStore.src("o_totalprice")),
+        matchedDelete = Some(TableStore.src("o_orderpriority") === "KILL"),
+        insertUnmatched = true)
+      st.table("orders_t")
+        .select(col("o_orderkey"), col("o_orderpriority"),
+          col("o_totalprice").cast("double").as("o_totalprice"))
+        .orderBy("o_orderkey")
+    }
   }
 
   /** §2.9 D6+ / CDC — snapshot diff through TIME TRAVEL: load orders,
@@ -270,33 +270,33 @@ object DmlQueries {
       |FROM base WHERE o_orderkey % 11 = 0
       |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
     import graft.sources.TableStore
-    val st = new TableStore(s,
-      java.nio.file.Files.createTempDirectory("graft-diff").toString)
-    val base = Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        d2(col("o_totalprice")).as("o_totalprice"))
-    st.create("t", base,
-      Seq(graft.constraints.Constraints.PrimaryKey(Seq("o_orderkey"))))
-    val v0 = st.liveVersions("t").max
-    val source = base.filter(col("o_orderkey") % 7 === 0 || col("o_orderkey") % 13 === 0)
-      .select(col("o_orderkey"), lit("CHANGED").as("o_orderpriority"),
-        (col("o_totalprice") + 100).cast(Money).as("o_totalprice"))
-      .unionByName(base.filter(col("o_orderkey") % 11 === 0)
-        .select((col("o_orderkey") + 30000000L).as("o_orderkey"),
-          lit("NEW").as("o_orderpriority"), col("o_totalprice")))
-    st.mergeInto("t", source, Seq("o_orderkey"),
-      matchedUpdate = Map(
-        "o_orderpriority" -> TableStore.src("o_orderpriority"),
-        "o_totalprice" -> TableStore.src("o_totalprice")),
-      matchedDelete = Some(col("o_orderkey") % 13 === 0))
-    val v1 = st.liveVersions("t").max
-    st.snapshotDiff("t", v0, v1)
-      .select(col("o_orderkey"), col("change"),
-        col("old_o_orderpriority").as("old_priority"),
-        col("new_o_orderpriority").as("new_priority"),
-        col("old_o_totalprice").cast("double").as("old_price"),
-        col("new_o_totalprice").cast("double").as("new_price"))
-      .orderBy("o_orderkey")
+    Epochs.scratchStore(s, "graft-diff") { st =>
+      val base = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_orderpriority"),
+          d2(col("o_totalprice")).as("o_totalprice"))
+      st.create("t", base,
+        Seq(graft.constraints.Constraints.PrimaryKey(Seq("o_orderkey"))))
+      val v0 = st.liveVersions("t").max
+      val source = base.filter(col("o_orderkey") % 7 === 0 || col("o_orderkey") % 13 === 0)
+        .select(col("o_orderkey"), lit("CHANGED").as("o_orderpriority"),
+          (col("o_totalprice") + 100).cast(Money).as("o_totalprice"))
+        .unionByName(base.filter(col("o_orderkey") % 11 === 0)
+          .select((col("o_orderkey") + 30000000L).as("o_orderkey"),
+            lit("NEW").as("o_orderpriority"), col("o_totalprice")))
+      st.mergeInto("t", source, Seq("o_orderkey"),
+        matchedUpdate = Map(
+          "o_orderpriority" -> TableStore.src("o_orderpriority"),
+          "o_totalprice" -> TableStore.src("o_totalprice")),
+        matchedDelete = Some(col("o_orderkey") % 13 === 0))
+      val v1 = st.liveVersions("t").max
+      st.snapshotDiff("t", v0, v1)
+        .select(col("o_orderkey"), col("change"),
+          col("old_o_orderpriority").as("old_priority"),
+          col("new_o_orderpriority").as("new_priority"),
+          col("old_o_totalprice").cast("double").as("old_price"),
+          col("new_o_totalprice").cast("double").as("new_price"))
+        .orderBy("o_orderkey")
+    }
   }
 
   /** q102: incremental materialized-view maintenance — the upsert (q87)
@@ -316,23 +316,23 @@ object DmlQueries {
       |  CAST(SUM(len(string_split(trim(text), ' '))) AS BIGINT) AS n_tokens
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     import graft.functions.TextFunctions.tokens
-    val st = new graft.sources.TableStore(s,
-      java.nio.file.Files.createTempDirectory("graft-mv").toString)
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
-      size(tokens(col("text"))).cast("long").as("ntok"))
-    def agg(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy("lang").agg(count(lit(1)).as("n_docs"), sum("ntok").as("n_tokens"))
-    st.create("mv", agg(docs.filter(col("doc_id") % 10 =!= 0)),
-      Seq(graft.constraints.Constraints.PrimaryKey(Seq("lang"))))
-    val delta = agg(docs.filter(col("doc_id") % 10 === 0))
-      .select(col("lang"), col("n_docs").as("d_docs"), col("n_tokens").as("d_toks"))
-    val merged = st.table("mv")
-      .join(delta, Seq("lang"), "full_outer")
-      .select(col("lang"),
-        (coalesce(col("n_docs"), lit(0L)) + coalesce(col("d_docs"), lit(0L))).as("n_docs"),
-        (coalesce(col("n_tokens"), lit(0L)) + coalesce(col("d_toks"), lit(0L))).as("n_tokens"))
-    st.upsert("mv", merged)
-    st.table("mv").orderBy("lang")
+    Epochs.scratchStore(s, "graft-mv") { st =>
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
+        size(tokens(col("text"))).cast("long").as("ntok"))
+      def agg(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("lang").agg(count(lit(1)).as("n_docs"), sum("ntok").as("n_tokens"))
+      st.create("mv", agg(docs.filter(col("doc_id") % 10 =!= 0)),
+        Seq(graft.constraints.Constraints.PrimaryKey(Seq("lang"))))
+      val delta = agg(docs.filter(col("doc_id") % 10 === 0))
+        .select(col("lang"), col("n_docs").as("d_docs"), col("n_tokens").as("d_toks"))
+      val merged = st.table("mv")
+        .join(delta, Seq("lang"), "full_outer")
+        .select(col("lang"),
+          (coalesce(col("n_docs"), lit(0L)) + coalesce(col("d_docs"), lit(0L))).as("n_docs"),
+          (coalesce(col("n_tokens"), lit(0L)) + coalesce(col("d_toks"), lit(0L))).as("n_tokens"))
+      st.upsert("mv", merged)
+      st.table("mv").orderBy("lang")
+    }
   }
 
   /** q104: schema evolution exercised END TO END through the store — not
@@ -349,13 +349,13 @@ object DmlQueries {
       |       ELSE 'unrated' END AS tier
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     import graft.functions.TextFunctions.tokens
-    val st = new graft.sources.TableStore(s,
-      java.nio.file.Files.createTempDirectory("graft-evolve-q").toString)
-    st.create("docs", Tables.documents(s, d)
-      .select(col("doc_id"), size(tokens(col("text"))).as("ntok")))
-    st.addColumn("docs", "tier", "STRING", "'unrated'")
-    st.update("docs", col("ntok") > 120, Map("tier" -> lit("long")))
-    st.table("docs").select("doc_id", "tier").orderBy("doc_id")
+    Epochs.scratchStore(s, "graft-evolve-q") { st =>
+      st.create("docs", Tables.documents(s, d)
+        .select(col("doc_id"), size(tokens(col("text"))).as("ntok")))
+      st.addColumn("docs", "tier", "STRING", "'unrated'")
+      st.update("docs", col("ntok") > 120, Map("tier" -> lit("long")))
+      st.table("docs").select("doc_id", "tier").orderBy("doc_id")
+    }
   }
 
   val all: Seq[QueryDef] = Seq(q32, q33, q34, q35, q36, q87, q102, q104, q116, q124)

@@ -35,69 +35,6 @@ object EventsOps {
     * single-batch replays with the bucketed join key). */
   private[graft] val StreamSliceHours = 240L
 
-  /** Stage each `(name, df, modSec)` replay batch into `streamDir` as an
-    * EQUAL number of parquet files and return that common width, which
-    * callers pass as `maxFilesPerTrigger` so file-count batch boundaries
-    * stay exact. Parts are written in parallel (`repartition(parts)`);
-    * narrower stages are padded with copies of an empty schema-bearing
-    * file — necessary because the parquet writer SKIPS empty partitions,
-    * so `repartition(n)` alone cannot guarantee n files (a 1-row sentinel
-    * yields one file, and a misaligned batch boundary silently merges a
-    * sentinel batch with its successor — caught by the q183 multi-file
-    * spec, where late rows slid into the spacer batch and were judged
-    * against a still-at-−∞ watermark). Stage names must be staged in
-    * replay order AND sort lexicographically in that order (mod time is
-    * the primary ordering; equal-second names keep ties deterministic). */
-  private[graft] def stageAligned(
-      streamDir: java.nio.file.Path,
-      stages: Seq[(String, org.apache.spark.sql.DataFrame, Int)],
-      parts: Int): Int = {
-    // register each stage's temp dir BEFORE writing it, so a mid-loop
-    // failure (disk full, write error) still removes every dir created so
-    // far instead of leaking stages 1..N-1
-    val staged = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Int, java.nio.file.Path, Array[java.io.File])]
-    try stages.foreach { case (name, df, modSec) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-stage-$name")
-      staged += ((name, modSec, tmp, Array.empty[java.io.File]))
-      df.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
-      val files = tmp.toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      staged(staged.length - 1) = (name, modSec, tmp, files)
-    } catch {
-      case e: Throwable => staged.foreach(t => rmTree(t._3)); throw e
-    }
-    val width = staged.map(_._4.length).max
-    val padTmp = java.nio.file.Files.createTempDirectory("graft-stage-pad")
-    try {
-      stages.head._2.limit(0).coalesce(1).write.mode("overwrite").parquet(padTmp.toString)
-      val pad = padTmp.toFile.listFiles()
-        .find(_.getName.endsWith(".parquet")).get.toPath
-      staged.foreach { case (name, modSec, tmp, files) =>
-        try {
-          files.zipWithIndex.foreach { case (f, j) =>
-            val dst = streamDir.resolve(f"$name%s_$j%03d.parquet")
-            java.nio.file.Files.move(f.toPath, dst)
-            dst.toFile.setLastModified(1000000000000L + modSec * 1000L)
-          }
-          (files.length until width).foreach { j =>
-            val dst = streamDir.resolve(f"$name%s_pad_$j%03d.parquet")
-            java.nio.file.Files.copy(pad, dst)
-            dst.toFile.setLastModified(1000000000000L + modSec * 1000L)
-            ()
-          }
-        } finally rmTree(tmp)
-      }
-    } catch {
-      // a pad-write or move failure (disk full) leaves later stages'
-      // temp dirs unvisited — remove them all (rmTree on an
-      // already-removed dir is a no-op), same discipline as the staging
-      // loop above
-      case e: Throwable => staged.foreach(t => rmTree(t._3)); throw e
-    } finally rmTree(padTmp)
-    width
-  }
-
   /** Linear strict cuts over [lo, hi]: cut 0 = −∞, cut `slices` = +∞, so
     * the half-open ranges (cuts(k), cuts(k+1)] partition the key space
     * and every later slice's keys strictly exceed every earlier
@@ -170,9 +107,9 @@ object EventsOps {
     ()
   }
 
-  /** Run `body` under the bounded-replay shuffle width the streamed
-    * epoch sinks already get from their foreachBatch clone (the q183
-    * 8-partition rule, see [[Epochs.streamed]]): the DIRECT-ingest
+  /** Run `body` under the bounded-replay shuffle width a bench-scale replay
+    * stream is built at (the q183 8-partition rule, see
+    * [[Epochs.replay]]): the DIRECT-ingest
     * gates (q201/q202/q228/q232/q234/q236…) drive the same
     * batch-bounded epochs without a stream, so their epoch shuffles
     * were planned at session width — 32 slices over candidate-bounded
@@ -186,18 +123,23 @@ object EventsOps {
     * floor — callers pass their input frame's [[planBytes]] / slices. */
   private[graft] def withReplayWidth[T](s: org.apache.spark.sql.SparkSession,
       estEpochBytes: Long = -1L)(
+      body: org.apache.spark.sql.SparkSession => T): T =
+    withWidth(s, if (estEpochBytes < 0L) 8 else replayWidth(estEpochBytes))(body)
+
+  /** Run `body` on a clone of `s` carrying every current runtime conf,
+    * with `spark.sql.shuffle.partitions` = `width`; `s` is not written. */
+  private[graft] def withWidth[T](s: org.apache.spark.sql.SparkSession, width: Int)(
       body: org.apache.spark.sql.SparkSession => T): T = {
     val c = s.newSession()
     s.conf.getAll.foreach { case (k, v) =>
       try c.conf.set(k, v) catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
-    val w = if (estEpochBytes < 0L) 8 else replayWidth(estEpochBytes)
-    c.conf.set("spark.sql.shuffle.partitions", w.toString)
+    c.conf.set("spark.sql.shuffle.partitions", width.toString)
     body(c)
   }
 
-  /** Recursively delete a temp tree (streaming staging dirs; also used by
-    * the Warehouse streaming gates for their store roots). */
+  /** Recursively delete a temp tree ([[Epochs]] removes every scratch
+    * and memo root with it). */
   private[graft] def rmTree(p: java.nio.file.Path): Unit = {
     val f = p.toFile
     if (f.isDirectory) {
@@ -209,26 +151,6 @@ object EventsOps {
     }
     java.nio.file.Files.deleteIfExists(p)
     ()
-  }
-
-  /** Directory path a streaming file source can monitor for the events
-    * table, plus the temp dir to clean up afterwards (if any). The file
-    * source monitors a DIRECTORY. A Spark-written table is already one
-    * (stream it in place); the driver's test tables are single FILES,
-    * which get staged into a temp dir — naive Files.copy of a directory
-    * path would copy only the empty dir and the stream would silently
-    * fold zero rows (caught by the 10× replica, whose events table IS a
-    * directory). Callers must `staged.foreach(rmTree)` in a finally once
-    * the stream has drained into its sink — repeated verify/bench runs
-    * must leave /tmp flat. */
-  private def stagedEventsPath(d: String): (String, Option[java.nio.file.Path]) = {
-    val src = java.nio.file.Paths.get(s"$d/events.parquet")
-    if (java.nio.file.Files.isDirectory(src)) (src.toString, None)
-    else {
-      val stageDir = java.nio.file.Files.createTempDirectory("graft-stream-gate")
-      java.nio.file.Files.copy(src, stageDir.resolve("events.parquet"))
-      (stageDir.toString, Some(stageDir))
-    }
   }
 
   /** Tumbling 1-hour rollup — Spark `window()` vs DuckDB `time_bucket`. */
@@ -419,9 +341,10 @@ object EventsOps {
     * spec-checked; this one is hash-compared to DuckDB): the incremental
     * funnel ([[graft.streaming.EventStream.funnelStream]]) runs over the
     * real events table as a bounded file-source stream (AvailableNow),
-    * its appended stage-advance records land in a memory sink, and the
-    * per-user maximum stage must equal the batch SQL's funnel — the
-    * stream-equals-batch contract, gated end to end.
+    * each micro-batch's appended stage-advance records are reduced to
+    * per-user maxima on the executors, and the per-user maximum stage
+    * must equal the batch SQL's funnel — the stream-equals-batch
+    * contract, gated end to end.
     *
     * Determinism: one input file → one micro-batch; within it the group
     * fold sorts by (ts, event_type), which reproduces the batch MIN/
@@ -444,26 +367,16 @@ object EventsOps {
       |ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.streaming.EventStream
     import s.implicits._
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val (streamPath, staged) = stagedEventsPath(d)
-    try {
-      val stream = s.readStream.schema(raw.schema).parquet(streamPath)
-      val tsMicros = unix_micros(Tables.tsAsTimestamp(raw.schema("ts").dataType))
-      val typed = stream
+    val ev = Epochs.events(s, d, sessionWidthPastOneFile = true)
+    val tsMicros = unix_micros(Tables.tsAsTimestamp(ev.input.schema("ts").dataType))
+    Epochs.reduced(s, ev, "q132_funnel_sink") { src =>
+      EventStream.funnelStream(src()
         .select(col("user_id"), tsMicros.as("ts"), col("event_type"))
-        .as[EventStream.TypedEvent]
-      val sinkName = "q132_funnel_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => () }
-      val q = EventStream.funnelStream(typed).writeStream
-        .format("memory").queryName(sinkName).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
-        .groupBy("user_id").agg(max(col("reached")).cast("int").as("reached"))
+        .as[EventStream.TypedEvent]).toDF()
+    }(_.groupBy("user_id").agg(max(col("reached")).as("reached")).coalesce(1)) {
+      _.groupBy("user_id").agg(max(col("reached")).cast("int").as("reached"))
         .orderBy("user_id")
-    } finally staged.foreach(rmTree)
+    }
   }
 
   /** Weekly retention cohorts — the product-analytics matrix: users are
@@ -590,9 +503,9 @@ object EventsOps {
     * covers WINDOWED AGGREGATION): the q40 hourly rollup computed by the
     * streaming engine — file-source stream, tumbling window aggregate in
     * Complete mode (append would withhold the trailing windows of a
-    * bounded stream behind the watermark), memory sink — hash-compared to
-    * the exact batch SQL. Decimal sums keep streaming-state merge order
-    * irrelevant to the bits. */
+    * bounded stream behind the watermark), each batch's full result
+    * replacing the last — hash-compared to the exact batch SQL. Decimal
+    * sums keep streaming-state merge order irrelevant to the bits. */
   val q145 = QueryDef(
     "q145_streaming_hourly_gate",
     """SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start, event_type,
@@ -600,29 +513,18 @@ object EventsOps {
       |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
       |FROM events
       |GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin) { (s, d) =>
-    import graft.functions.Dec._
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val (streamPath, staged) = stagedEventsPath(d)
-    try {
-      val tsCol = Tables.tsAsTimestamp(raw.schema("ts").dataType)
-      val sinkName = "q145_hourly_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => () }
-      val q = s.readStream.schema(raw.schema).parquet(streamPath)
-        .select(tsCol.as("ts"), col("event_type"), col("value"))
+    val ev = Epochs.events(s, d, sessionWidthPastOneFile = true)
+    val tsCol = Tables.tsAsTimestamp(ev.input.schema("ts").dataType)
+    Epochs.reduced(s, ev, "q145_hourly_sink", "complete") { src =>
+      src().select(tsCol.as("ts"), col("event_type"), col("value"))
         .groupBy(window(col("ts"), "1 hour").getField("start").as("hour_start"),
           col("event_type"))
         .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("value_sum"))
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName)
-        .select(col("hour_start"), col("event_type"), col("n_events"),
+    }(identity) {
+      _.select(col("hour_start"), col("event_type"), col("n_events"),
           col("value_sum").cast("double").as("value_sum"))
         .orderBy("hour_start", "event_type")
-    } finally staged.foreach(rmTree)
+    }
   }
 
   /** Third streaming oracle gate (q132: stateful flatMap; q145: windowed
@@ -650,47 +552,21 @@ object EventsOps {
     """SELECT event_type, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
-    import graft.functions.Dec._
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val (streamPath, staged) = stagedEventsPath(d)
-    val partials = java.nio.file.Files.createTempDirectory("graft-stream-partials")
-    try {
-      def sourceOnce = s.readStream.schema(raw.schema).parquet(streamPath)
-        .select(col("event_id"), col("event_type"), col("value"))
-      // one reduction shape shared by the sink and the final read: reading
-      // the partials with the reduction's STATIC schema lets a zero-row
-      // replay degrade to an empty result instead of failing parquet
-      // schema inference on an empty directory
-      def reduceBatch(b: org.apache.spark.sql.DataFrame) =
-        b.groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("vsum"))
-      val partialsSchema =
-        reduceBatch(raw.select(col("event_id"), col("event_type"), col("value")).limit(0)).schema
-      val sinkName = "q148_dedup_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      val q = sourceOnce.unionByName(sourceOnce)
-        .dropDuplicates("event_id")
-        .writeStream
-        .queryName(sinkName)
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // the reduced frame is per-type-bounded — one task, one file
-          // per batch, instead of session-width tiny files + commit dance
-          reduceBatch(batch).coalesce(1).write.mode("append").parquet(partials.toString)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema(partialsSchema).parquet(partials.toString)
-        .groupBy("event_type")
+    Epochs.reduced(s, Epochs.events(s, d, sessionWidthPastOneFile = true),
+        "q148_dedup_sink") { src =>
+      def once = src().select(col("event_id"), col("event_type"), col("value"))
+      once.unionByName(once).dropDuplicates("event_id")
+    } {
+      // the reduced frame is per-type-bounded — one task, one file per
+      // batch, instead of replay-width tiny files + commit dance
+      _.groupBy("event_type")
+        .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("vsum"))
+        .coalesce(1)
+    } {
+      _.groupBy("event_type")
         .agg(sum(col("n_events")).as("n_events"),
           sum(col("vsum")).cast("double").as("value_sum"))
         .orderBy("event_type")
-        .localCheckpoint(true) // pin: the partials dir is deleted below
-    } finally {
-      staged.foreach(rmTree)
-      rmTree(partials)
     }
   }
 
@@ -748,102 +624,72 @@ object EventsOps {
     val tsCol = Tables.tsAsTimestamp(raw.schema("ts").dataType)
     val ev = raw.filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), tsCol.as("ts"), col("event_type"))
-    val mn = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
-      count(lit(1))).head()
-    // the sink reduction, shared with the final read so the partials can
-    // be read with a STATIC schema (a zero-row replay degrades to an
-    // empty result, not a schema-inference error on an empty dir)
-    def reduceBatch(b: org.apache.spark.sql.DataFrame) =
-      b.groupBy(col("c_user"))
+    // ONE whole-corpus batch at bench scale (the minimal replay); a
+    // corpus past rowsPerFile slices into strict time ranges — see the
+    // scale-posture note above
+    val (lo, hi, rows) = timeRange(ev)
+    val slices = sliceCount(rows, rowsPerFile, lo, hi, sliceHours)
+    val filesPerSlice = math.max(1L, math.min(32L, rows / rowsPerFile / slices + 1)).toInt
+    // a corpus past one staged file (sliced or multi-file) keeps the
+    // caller's session width: the join's state-store puts scale per row
+    val staging = Epochs.Stages(ev,
+      slicedStages(ev, unix_micros(col("ts")), lo, hi, slices), filesPerSlice,
+      sessionWidth = rows >= rowsPerFile)
+    Epochs.reduced(s, staging, "q149_join_sink") { src =>
+      // BUCKETED join key (q82's binned range join, streamed): state is
+      // keyed by the equi-join key only, so a user-keyed join probes
+      // EVERY stored click of that user per purchase — quadratic in
+      // per-user density (the r9 100× floor). Adding the click's hour
+      // bucket to the key, with purchases exploded to their bucket and
+      // its predecessor, bounds each probe to ONE hour of one user's
+      // clicks. Lossless and duplicate-free: a qualifying pair has
+      // p_ts ∈ (c_ts, c_ts + 1h] ⇒ bucket(p) ∈ {bucket(c),
+      // bucket(c) + 1} ⇒ exactly ONE of the two exploded purchase rows
+      // carries bucket(c). Bucket arithmetic is exact (positive epochs,
+      // integer div).
+      val (clicks, purchases) = bucketedSides(src, "24 hours")
+      clicks.join(purchases,
+        col("p_user") === col("c_user") &&
+          col("p_b") === col("c_b") &&
+          col("p_ts") > col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
+    } {
+      // per-user-bounded reduced frame: one task per batch — at sliced
+      // replay the per-batch write commit is a real toll
+      _.groupBy(col("c_user"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(expr("unix_micros(p_ts) - unix_micros(c_ts)")).as("lag_us"))
-    val partialsSchema = reduceBatch(ev.select(col("user_id").as("c_user"),
-      col("ts").as("c_ts"), col("ts").as("p_ts")).limit(0)).schema
-    val partials = java.nio.file.Files.createTempDirectory("graft-stream-partials")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream-join")
-    try {
-      if (mn.getLong(2) > 0L) {
-        val (lo, hi) = (mn.getLong(0), mn.getLong(1))
-        // ONE whole-corpus batch at bench scale (the minimal replay); a
-        // corpus past rowsPerFile slices into strict time ranges — see
-        // the scale-posture note above
-        val hourUs = 3600L * 1000000L
-        val slices = sliceCount(mn.getLong(2), rowsPerFile, lo, hi, sliceHours)
-        val filesPerSlice = math.max(1L,
-          math.min(32L, mn.getLong(2) / rowsPerFile / slices + 1)).toInt
-        val width = stageAligned(streamDir,
-          slicedStages(ev, unix_micros(col("ts")), lo, hi, slices),
-          filesPerSlice)
-        def side(tp: String, userAs: String, tsAs: String) =
-          s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", width.toString)
-            .parquet(streamDir.toString)
-            .filter(col("event_type") === tp)
-            .select(col("user_id").as(userAs), col("ts").as(tsAs))
-            .withWatermark(tsAs, "24 hours")
-        // BUCKETED join key (q82's binned range join, streamed): state is
-        // keyed by the equi-join key only, so a user-keyed join probes
-        // EVERY stored click of that user per purchase — quadratic in
-        // per-user density (the r9 100× floor). Adding the click's hour
-        // bucket to the key, with purchases exploded to their bucket and
-        // its predecessor, bounds each probe to ONE hour of one user's
-        // clicks. Lossless and duplicate-free: a qualifying pair has
-        // p_ts ∈ (c_ts, c_ts + 1h] ⇒ bucket(p) ∈ {bucket(c),
-        // bucket(c) + 1} ⇒ exactly ONE of the two exploded purchase rows
-        // carries bucket(c). Bucket arithmetic is exact (positive epochs,
-        // integer div).
-        val hourBucket = (c: String) => expr(s"unix_micros($c) div ${hourUs}L")
-        val clicks = side("click", "c_user", "c_ts")
-          .withColumn("c_b", hourBucket("c_ts"))
-        val purchases = side("purchase", "p_user", "p_ts")
-          .withColumn("p_b",
-            explode(array(hourBucket("p_ts"), hourBucket("p_ts") - 1)))
-        val sinkName = "q149_join_sink"
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        // A stream-stream join materializes FOUR state stores per shuffle
-        // partition, each paying per-micro-batch checkpoint commits — at
-        // the session default (32) that fixed cost dwarfs a bench-scale
-        // replay's row work, so the single-slice single-file replay runs
-        // at 8 partitions to cut the commit fan-out 4×; sliced replays
-        // keep session width for put/probe parallelism. The partition
-        // count is frozen into the (fresh, per-run) checkpoint, so this
-        // never mismatches resumed state; restored only after
-        // termination: the micro-batch thread reads the conf when it
-        // plans the first batch, which happens after start().
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions",
-          if (slices == 1 && width == 1) "8" else prevShuffle)
-        try {
-          val q = clicks
-            .join(purchases,
-              col("p_user") === col("c_user") &&
-                col("p_b") === col("c_b") &&
-                col("p_ts") > col("c_ts") &&
-                col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-            .writeStream
-            .queryName(sinkName)
-            .outputMode("append")
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              // per-user-bounded reduced frame: one task per batch — at
-              // sliced replay the per-batch write commit is a real toll
-              reduceBatch(batch).coalesce(1).write.mode("append").parquet(partials.toString)
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
-      s.read.schema(partialsSchema).parquet(partials.toString)
-        .groupBy(col("c_user").as("user_id"))
+        .coalesce(1)
+    } {
+      _.groupBy(col("c_user").as("user_id"))
         .agg(sum(col("n_pairs")).as("n_pairs"),
           sum(col("lag_us")).as("total_lag_us"))
         .orderBy("user_id")
-        .localCheckpoint(true) // pin: the partials dir is deleted below
-    } finally {
-      rmTree(streamDir)
-      rmTree(partials)
     }
+  }
+
+  /** `(lo, hi, rows)` of `ev`'s `ts` in epoch micros (one job); an empty
+    * input reads as `(0, 0, 0)`. */
+  private def timeRange(ev: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
+    val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
+      count(lit(1))).head()
+    if (r.getLong(2) == 0L) (0L, 0L, 0L) else (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  /** The click and purchase sides of the q149/q187 stream-stream joins,
+    * each its own stream over the staged replay, watermarked `delay`
+    * behind its event time and keyed by hour bucket: clicks by their own
+    * bucket, purchases exploded to theirs and the one before. */
+  private def bucketedSides(src: () => org.apache.spark.sql.DataFrame, delay: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    def side(tp: String, userAs: String, tsAs: String) = src()
+      .filter(col("event_type") === tp)
+      .select(col("user_id").as(userAs), col("ts").as(tsAs))
+      .withWatermark(tsAs, delay)
+    val hourBucket = (c: String) => expr(s"unix_micros($c) div ${3600L * 1000000L}L")
+    (side("click", "c_user", "c_ts").withColumn("c_b", hourBucket("c_ts")),
+      side("purchase", "p_user", "p_ts")
+        .withColumn("p_b", explode(array(hourBucket("p_ts"), hourBucket("p_ts") - 1))))
   }
 
   /** q153: time-series gap fill — a dense per-user hourly spine over each
@@ -1029,31 +875,15 @@ object EventsOps {
       |  COUNT(*) AS n_events
       |FROM sessions GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
     import graft.streaming.EventStream
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val (streamPath, staged) = stagedEventsPath(d)
-    try {
-      val tsCol = Tables.tsAsTimestamp(raw.schema("ts").dataType)
-      val stream = s.readStream.schema(raw.schema).parquet(streamPath)
-        .select(col("user_id"), tsCol.as("ts"), col("value"))
-      val sinkName = "q167_session_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => () }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        // bounded replay: state shuffle sized to the replayed volume
-        s.conf.set("spark.sql.shuffle.partitions",
-          replayWidth(planBytes(raw)).toString)
-        val q = EventStream.sessionRollup(stream).writeStream
-          .format("memory").queryName(sinkName).outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(sinkName)
-        .groupBy("user_id")
+    val ev = Epochs.events(s, d)
+    val tsCol = Tables.tsAsTimestamp(ev.input.schema("ts").dataType)
+    Epochs.reduced(s, ev, "q167_session_sink", "complete") { src =>
+      EventStream.sessionRollup(src().select(col("user_id"), tsCol.as("ts"), col("value")))
+    }(_.select("user_id", "n_events")) {
+      _.groupBy("user_id")
         .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
         .orderBy("user_id")
-    } finally staged.foreach(rmTree)
+    }
   }
 
   /** q171: volume anomaly detection — hours whose event count sits more
@@ -1230,43 +1060,23 @@ object EventsOps {
       |WHERE (m.nh * c.x - m.sx) * (m.nh * c.x - m.sx)
       |    > 9 * (m.nh * m.sxx - m.sx * m.sx)
       |ORDER BY event_type, hour_start""".stripMargin) { (s, d) =>
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val (streamPath, staged) = stagedEventsPath(d)
-    val sinkName = "q179_anomaly_sink"
-    try {
-      val tsCol = Tables.tsAsTimestamp(raw.schema("ts").dataType)
-      val stream = s.readStream.schema(raw.schema).parquet(streamPath)
-        .select(col("event_type"), tsCol.as("ts"))
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => () }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        // bounded replay: state shuffle sized to the replayed volume
-        s.conf.set("spark.sql.shuffle.partitions",
-          replayWidth(planBytes(raw)).toString)
-        val q = stream
-          .groupBy(window(col("ts"), "1 hour").getField("start").as("hour_start"),
-            col("event_type"))
-          .agg(count(lit(1)).as("x"))
-          .writeStream
-          .format("memory").queryName(sinkName).outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    } finally staged.foreach(rmTree)
-    // MemoryPlan is not multi-instance: a self-join of the sink table
-    // fails to resolve. localCheckpoint rebases it onto an RDD scan,
-    // which the analyzer CAN instantiate twice (moments + flag sides).
-    val c = s.table(sinkName).localCheckpoint(true)
-    val m = c.groupBy("event_type").agg(
-      count(lit(1)).as("nh"), sum(col("x")).as("sx"),
-      sum(col("x") * col("x")).as("sxx"))
-    c.join(m, Seq("event_type"))
-      .filter((col("nh") * col("x") - col("sx")) * (col("nh") * col("x") - col("sx"))
-        > lit(9L) * (col("nh") * col("sxx") - col("sx") * col("sx")))
-      .select(col("event_type"), col("hour_start"), col("x").as("n_events"))
-      .orderBy("event_type", "hour_start")
+    val ev = Epochs.events(s, d)
+    val tsCol = Tables.tsAsTimestamp(ev.input.schema("ts").dataType)
+    Epochs.reduced(s, ev, "q179_anomaly_sink", "complete") { src =>
+      src().select(col("event_type"), tsCol.as("ts"))
+        .groupBy(window(col("ts"), "1 hour").getField("start").as("hour_start"),
+          col("event_type"))
+        .agg(count(lit(1)).as("x"))
+    }(identity) { c =>
+      val m = c.groupBy("event_type").agg(
+        count(lit(1)).as("nh"), sum(col("x")).as("sx"),
+        sum(col("x") * col("x")).as("sxx"))
+      c.join(m, Seq("event_type"))
+        .filter((col("nh") * col("x") - col("sx")) * (col("nh") * col("x") - col("sx"))
+          > lit(9L) * (col("nh") * col("sxx") - col("sx") * col("sx")))
+        .select(col("event_type"), col("hour_start"), col("x").as("n_events"))
+        .orderBy("event_type", "hour_start")
+    }
   }
 
   /** q183: SEVENTH streaming oracle gate — LATE DATA vs the WATERMARK,
@@ -1327,11 +1137,12 @@ object EventsOps {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val mn = ev.agg(max(expr("unix_micros(ts)")), count(lit(1))).head()
     val mMicros = mn.getLong(0)
-    // parallel multi-file staging via stageAligned: every replay batch
+    // parallel multi-file staging (Epochs.Stages): every replay batch
     // lands as the same number of files (sentinels padded), and
     // maxFilesPerTrigger = that width keeps the four-batch boundary
     // exact. One file per batch at bench scale, identical to the
-    // original single-file replay.
+    // original single-file replay; a multi-file corpus keeps the
+    // caller's session width.
     val nFiles = math.max(1L,
       math.min(32L, mn.getLong(1) / rowsPerFile + 1)).toInt
     val hourUs = 3600L * 1000000L
@@ -1342,55 +1153,26 @@ object EventsOps {
       lit(-1L).as("user_id"), lit(name).as("event_type"),
       lit(0.0).as("value"))
 
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream-late")
-    val sinkName = "q183_late_sink"
-    try {
-      val width = stageAligned(streamDir, Seq(
-        ("a_ontime", ev.filter(!isLate), 0),
-        ("b_spacer", sentinel("__spacer", mMicros), 10),
-        ("c_late", ev.filter(isLate), 20),
-        ("d_flush", sentinel("__flush", mMicros + 10 * hourUs), 30)), nFiles)
-
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => () }
-      // The four-batch replay pays one state-store commit per shuffle
-      // partition per batch; at session width (32) that fixed fan-out
-      // dwarfs a bench-scale batch's row work (the q149 rule). Single-
-      // file-width replays run the stateful agg at 8 partitions; staged
-      // multi-file corpora keep session width. Frozen into the fresh
-      // per-run checkpoint; restored only after termination.
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        if (width == 1) "8" else prevShuffle)
-      try {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", width.toString)
-          .parquet(streamDir.toString)
-          .withWatermark("ts", "2 hours")
-          // group by the window STRUCT (not .getField("start") as in the
-          // Complete-mode gates): append mode requires the watermark-tagged
-          // event-time window column in the grouping key
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("value_sum"))
-          .select(col("window.start").as("hour_start"), col("event_type"),
-            col("n_events"), col("value_sum"))
-          .writeStream.format("memory").queryName(sinkName)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      // localCheckpoint detaches the result from the memory sink, so the
-      // view and the staged files can be torn down before the caller
-      // evaluates it — repeated verify/bench runs leave /tmp flat.
-      s.table(sinkName).localCheckpoint(true)
-        .filter(!col("event_type").isin("__spacer", "__flush"))
+    val staging = Epochs.Stages(ev, Seq(
+      ("a_ontime", ev.filter(!isLate), 0),
+      ("b_spacer", sentinel("__spacer", mMicros), 10),
+      ("c_late", ev.filter(isLate), 20),
+      ("d_flush", sentinel("__flush", mMicros + 10 * hourUs), 30)), nFiles,
+      sessionWidth = nFiles > 1)
+    Epochs.reduced(s, staging, "q183_late_sink") {
+      _().withWatermark("ts", "2 hours")
+        // group by the window STRUCT (not .getField("start") as in the
+        // Complete-mode gates): append mode requires the watermark-tagged
+        // event-time window column in the grouping key
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("value_sum"))
+        .select(col("window.start").as("hour_start"), col("event_type"),
+          col("n_events"), col("value_sum"))
+    }(identity) {
+      _.filter(!col("event_type").isin("__spacer", "__flush"))
         .select(col("hour_start"), col("event_type"), col("n_events"),
           col("value_sum").cast("double").as("value_sum"))
         .orderBy("hour_start", "event_type")
-    } finally {
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => () }
-      rmTree(streamDir)
     }
   }
 
@@ -1435,9 +1217,7 @@ object EventsOps {
     * the two joined types are staged (3 columns, replay IO ∝ join
     * input); each slice is parallel-written and carrier batches are
     * PADDED to the common file width so `maxFilesPerTrigger` boundaries
-    * stay exact; the single-slice single-file replay runs at 8 shuffle
-    * partitions (state-store-commit sizing), sliced replays at session
-    * width; and the sink is `foreachBatch` reducing every batch to
+    * stay exact; and the sink is `foreachBatch` reducing every batch to
     * per-user count partials on the executors — the joined rows
     * (∝ corpus) NEVER land on the driver, unlike a memory sink, which
     * buffers them all. Counts are decomposable, so summing the partials
@@ -1468,8 +1248,6 @@ object EventsOps {
     // ∝ join input, not corpus
     val ev = raw.filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), tsCol.as("ts"), col("event_type"))
-    val mn = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
-      count(lit(1))).head()
     val hourUs = 3600L * 1000000L
     // one click + one purchase carrier so BOTH sides' post-filter
     // watermark domains observe the flush instant
@@ -1479,93 +1257,47 @@ object EventsOps {
         lit(tp).as("event_type"))
       row("click").unionByName(row("purchase"))
     }
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream-outer")
-    val partialsDir = java.nio.file.Files.createTempDirectory("graft-outer-partials")
-    val sinkName = "q187_outer_sink"
-    try {
-      // sink reduction shared with the final read (static partials schema:
-      // an all-filtered replay degrades to an empty result, never a
-      // schema-inference error on the empty partials dir)
-      def reduceBatch(b: org.apache.spark.sql.DataFrame) =
-        b.filter(col("c_user") =!= -1) // mask the watermark carriers
-          .groupBy(col("c_user"))
-          .agg(count(lit(1)).as("n_rows"), count(col("p_ts")).as("n_matched"))
-      val partialsSchema = reduceBatch(ev.select(col("user_id").as("c_user"),
-        col("ts").as("c_ts"), col("ts").as("p_ts")).limit(0)).schema
-      if (mn.getLong(2) > 0L) {
-        val (lo, hi) = (mn.getLong(0), mn.getLong(1))
-        // q149's strict time slicing (ONE whole-corpus slice at bench
-        // scale), with the two flush carriers appended after the last
-        // slice; aligned staging pads every batch to the common file
-        // width so the batch boundaries survive multi-file staging
-        val slices = sliceCount(mn.getLong(2), rowsPerFile, lo, hi, sliceHours)
-        val filesPerSlice = math.max(1L,
-          math.min(32L, mn.getLong(2) / rowsPerFile / slices + 1)).toInt
-        val width = stageAligned(streamDir,
-          slicedStages(ev, unix_micros(col("ts")), lo, hi, slices, prefix = "a_") ++ Seq(
-            ("b_flush", carriers(hi + 48 * hourUs), slices * 10),
-            ("c_flush", carriers(hi + 96 * hourUs), slices * 10 + 10)),
-          filesPerSlice)
-
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        def side(tp: String, userAs: String, tsAs: String) =
-          s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", width.toString)
-            .parquet(streamDir.toString)
-            .filter(col("event_type") === tp)
-            .select(col("user_id").as(userAs), col("ts").as(tsAs))
-            .withWatermark(tsAs, "1 hour")
-        // q149's bucketed join key (see there): bounds each probe to one
-        // hour-bucket of one user's clicks. For the OUTER join the left
-        // (click) side stays un-exploded, so null-extension multiplicity
-        // is untouched: a click matches exactly the purchases it matched
-        // on the unbucketed key (one exploded row carries its bucket),
-        // and an unmatched click still emits exactly one null row.
-        val hourBucket = (c: String) => expr(s"unix_micros($c) div ${hourUs}L")
-        val clicks = side("click", "c_user", "c_ts")
-          .withColumn("c_b", hourBucket("c_ts"))
-        val purchases = side("purchase", "p_user", "p_ts")
-          .withColumn("p_b",
-            explode(array(hourBucket("p_ts"), hourBucket("p_ts") - 1)))
-        val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-        // q149's state-store-commit sizing for the minimal replay; the
-        // full session width once the corpus slices
-        s.conf.set("spark.sql.shuffle.partitions",
-          if (slices == 1 && width == 1) "8" else prevShuffle)
-        try {
-          val q = clicks
-            .join(purchases,
-              col("p_user") === col("c_user") &&
-                col("p_b") === col("c_b") &&
-                col("p_ts") > col("c_ts") &&
-                col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-              "left_outer")
-            .writeStream
-            .queryName(sinkName)
-            .outputMode("append")
-            // executor-side reduction to per-user count partials: the joined
-            // rows themselves (∝ corpus) never reach the driver
-            .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              // per-user-bounded reduced frame: one task per batch
-              reduceBatch(batch).coalesce(1).write.mode("append").parquet(partialsDir.toString)
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
-      s.read.schema(partialsSchema).parquet(partialsDir.toString)
-        .groupBy(col("c_user").as("user_id"))
+    // q149's strict time slicing (ONE whole-corpus slice at bench scale),
+    // with the two flush carriers appended after the last slice; aligned
+    // staging pads every batch to the common file width so the batch
+    // boundaries survive multi-file staging
+    val (lo, hi, rows) = timeRange(ev)
+    val slices = sliceCount(rows, rowsPerFile, lo, hi, sliceHours)
+    val filesPerSlice = math.max(1L, math.min(32L, rows / rowsPerFile / slices + 1)).toInt
+    val staging = Epochs.Stages(ev,
+      slicedStages(ev, unix_micros(col("ts")), lo, hi, slices, prefix = "a_") ++ Seq(
+        ("b_flush", carriers(hi + 48 * hourUs), slices * 10),
+        ("c_flush", carriers(hi + 96 * hourUs), slices * 10 + 10)),
+      filesPerSlice, sessionWidth = rows >= rowsPerFile)
+    Epochs.reduced(s, staging, "q187_outer_sink") { src =>
+      // q149's bucketed join key (see there): bounds each probe to one
+      // hour-bucket of one user's clicks. For the OUTER join the left
+      // (click) side stays un-exploded, so null-extension multiplicity
+      // is untouched: a click matches exactly the purchases it matched
+      // on the unbucketed key (one exploded row carries its bucket),
+      // and an unmatched click still emits exactly one null row.
+      val (clicks, purchases) = bucketedSides(src, "1 hour")
+      clicks.join(purchases,
+        col("p_user") === col("c_user") &&
+          col("p_b") === col("c_b") &&
+          col("p_ts") > col("c_ts") &&
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
+        "left_outer")
+    } {
+      // executor-side reduction to per-user count partials (one task per
+      // batch): the joined rows themselves (∝ corpus) never reach the
+      // driver
+      _.filter(col("c_user") =!= -1) // mask the watermark carriers
+        .groupBy(col("c_user"))
+        .agg(count(lit(1)).as("n_rows"), count(col("p_ts")).as("n_matched"))
+        .coalesce(1)
+    } {
+      _.groupBy(col("c_user").as("user_id"))
         .agg(sum(col("n_rows")).as("n_rows"),
           sum(col("n_matched")).as("n_matched"))
         .select(col("user_id"), col("n_rows"), col("n_matched"),
           (col("n_rows") - col("n_matched")).as("n_unmatched"))
         .orderBy("user_id")
-        .localCheckpoint(true) // pin: the staging dirs are deleted below
-    } finally {
-      rmTree(streamDir)
-      rmTree(partialsDir)
     }
   }
 
@@ -1594,45 +1326,23 @@ object EventsOps {
       |  CAST(SUM(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
       |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id
       |GROUP BY 1, 2 ORDER BY segment, event_type""".stripMargin) { (s, d) =>
-    val raw = s.read.parquet(s"$d/events.parquet")
     val dim = broadcast(
       Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")))
-    val (streamPath, staged) = stagedEventsPath(d)
-    val partials = java.nio.file.Files.createTempDirectory("graft-enrich-partials")
-    try {
-      def reduceBatch(b: org.apache.spark.sql.DataFrame) =
-        b.groupBy(coalesce(col("c_mktsegment"), lit("(none)")).as("segment"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("vsum"))
-      def enrich(b: org.apache.spark.sql.DataFrame) =
-        b.select(col("user_id"), col("event_type"), col("value"))
-          .join(dim, col("user_id") === col("c_custkey"), "left")
-      // static schema for the partials read: a zero-row replay degrades to
-      // an empty result instead of failing parquet schema inference
-      val partialsSchema = reduceBatch(enrich(raw.limit(0))).schema
-      val sinkName = "q193_enrich_sink"
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      val q = enrich(s.readStream.schema(raw.schema).parquet(streamPath))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // segment×type-bounded reduced frame: one task, one file per batch
-          reduceBatch(batch).coalesce(1).write.mode("append").parquet(partials.toString)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema(partialsSchema).parquet(partials.toString)
-        .groupBy("segment", "event_type")
+    Epochs.reduced(s, Epochs.events(s, d, sessionWidthPastOneFile = true),
+        "q193_enrich_sink") {
+      _().select(col("user_id"), col("event_type"), col("value"))
+        .join(dim, col("user_id") === col("c_custkey"), "left")
+    } {
+      // segment×type-bounded reduced frame: one task, one file per batch
+      _.groupBy(coalesce(col("c_mktsegment"), lit("(none)")).as("segment"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum(d4(col("value"))).as("vsum"))
+        .coalesce(1)
+    } {
+      _.groupBy("segment", "event_type")
         .agg(sum(col("n_events")).as("n_events"),
           sum(col("vsum")).cast("double").as("value_sum"))
         .orderBy("segment", "event_type")
-        .localCheckpoint(true) // pin: the partials dir is deleted below
-    } finally {
-      staged.foreach(rmTree)
-      rmTree(partials)
     }
   }
 

@@ -453,20 +453,20 @@ object Extras {
       |       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
       |FROM events WHERE user_id BETWEEN 40 AND 60
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    import graft.sources.{FileStats, TableStore}
-    val st = new TableStore(s,
-      java.nio.file.Files.createTempDirectory("graft-skip").toString)
-    st.createClustered("ev",
-      Tables.events(s, d).select("event_id", "user_id", "value"),
-      Seq("user_id"), files = 16)
-    val (scan, rep) = st.scanSkipping("ev",
-      Seq(FileStats.ColumnRange("user_id", Some(40L), Some(60L))))
-    require(rep.filesRead < rep.filesTotal,
-      s"skipping ineffective: read ${rep.filesRead}/${rep.filesTotal} files")
-    scan.groupBy("user_id")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("value_sum"))
-      .orderBy("user_id")
+    import graft.sources.FileStats
+    Epochs.scratchStore(s, "graft-skip") { st =>
+      st.createClustered("ev",
+        Tables.events(s, d).select("event_id", "user_id", "value"),
+        Seq("user_id"), files = 16)
+      val (scan, rep) = st.scanSkipping("ev",
+        Seq(FileStats.ColumnRange("user_id", Some(40L), Some(60L))))
+      require(rep.filesRead < rep.filesTotal,
+        s"skipping ineffective: read ${rep.filesRead}/${rep.filesTotal} files")
+      scan.groupBy("user_id")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,4)")).cast("double").as("value_sum"))
+        .orderBy("user_id")
+    }
   }
 
   /** Integer-exact equi-width histogram: order totals in cents, 10 equal
@@ -1095,9 +1095,9 @@ object Extras {
          |  (SELECT COUNT(*) FROM s6) = (SELECT COUNT(*) FROM s5) AS converged
          |FROM s6 ORDER BY part_key""".stripMargin) { (s, d) =>
       val e0 = copurchaseEdges(s, d)
-      val ed = e0.select(col("u").as("s"), col("v").as("t"))
-        .unionByName(e0.select(col("v").as("s"), col("u").as("t")))
-        .localCheckpoint(true) // feeds every peel round
+      // feeds every peel round
+      val ed = Dedup.pin(e0.select(col("u").as("s"), col("v").as("t"))
+        .unionByName(e0.select(col("v").as("s"), col("u").as("t"))))
       var survivors = ed.select(col("s").as("node")).distinct()
       // k = floor(0.7 * mean degree): two bounded aggregate scalars
       val k = 7L * (ed.count() / survivors.count()) / 10L
@@ -1108,9 +1108,9 @@ object Extras {
         val alive = ed
           .join(survivors.toDF("s"), Seq("s"), "left_semi")
           .join(survivors.toDF("t"), Seq("t"), "left_semi")
-        withDeg = alive.groupBy(col("s").as("node")).agg(count(lit(1)).as("c"))
-          .filter(col("c") >= k)
-          .localCheckpoint(true) // consumed twice: next round's two semi-joins
+        // consumed twice: next round's two semi-joins
+        withDeg = Dedup.pin(alive.groupBy(col("s").as("node")).agg(count(lit(1)).as("c"))
+          .filter(col("c") >= k))
         survivors = withDeg.select("node")
         prevCount = lastCount
         lastCount = withDeg.count() // bounded scalar: surviving node count

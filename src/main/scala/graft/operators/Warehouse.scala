@@ -218,10 +218,7 @@ object Warehouse {
       |       LEAD(valid_from) OVER (PARTITION BY user_id
       |                              ORDER BY valid_from, tier) AS valid_to
       |FROM ch ORDER BY user_id, tier""".stripMargin) { (s, d) =>
-    import graft.sources.TableStore
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft-scd2")
-    try {
-      val st = new TableStore(s, storeRoot.toString)
+    Epochs.scratchStore(s, "graft-scd2") { st =>
       val ev = Tables.events(s, d)
       val range = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
       val cut = range.getLong(0) + (range.getLong(1) - range.getLong(0)) * 3 / 4
@@ -240,12 +237,9 @@ object Warehouse {
       // only — the same recompute q189 runs per micro-batch
       scd2Refresh(st, "dim")(
         ev.filter(unix_micros(col("ts")) > cut), epoch = 0L)
-      // pin: the store root (which the frame would lazily re-read) is
-      // deleted in the finally below
       st.table("dim").select("user_id", "tier", "valid_from", "valid_to")
         .orderBy("user_id", "tier")
-        .localCheckpoint(true)
-    } finally EventsOps.rmTree(storeRoot)
+    }
   }
 
   /** The SCD2 refresh shared by q188 (one-shot batch) and q189 (per

@@ -36,8 +36,7 @@ object Windows {
     // just to discover the frame is too big — VERDICT r6), the collect on
     // the small path reads the same materialization, and the distributed
     // fallback consumes it without re-running the aggregate.
-    val agg = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint(true)
+    val agg = Dedup.pin(df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt")))
     if (agg.count() > MaxRankDistinct)
       return distributedRankDesc(agg, valueCol, rankName)
     val rows = agg.collect()
@@ -80,10 +79,9 @@ object Windows {
     // only while Spark's exchange reuse deduplicated the two identical
     // shuffles. localCheckpoint freezes the bucket assignment so both
     // branches see the same partitioning regardless of plan reuse.
-    val buckets = agg
+    val buckets = Dedup.pin(agg
       .repartitionByRange(256, col(valueCol).desc)
-      .withColumn("__b", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__b", spark_partition_id()))
     // level 1: per-bucket totals (≤ 256 rows)
     val bucketSums = buckets.groupBy("__b").agg(sum(col("__cnt")).as("__bw"))
     // level 2: exclusive prefix over the tiny bucket frame only

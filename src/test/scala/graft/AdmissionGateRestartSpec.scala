@@ -29,7 +29,7 @@ class AdmissionGateRestartSpec extends SparkSpec {
         docs.withColumn("text", lit("")).withColumn("lang", lit(""))
           .withColumn("n_chars", lit(0L))
           .select("doc_id", "source", "ntok"))
-      val width = operators.EventsOps.stageAligned(srcDir,
+      val width = operators.Epochs.stageAligned(srcDir,
         operators.EventsOps.slicedStages(docs, col("doc_id"), 1L, 120L, 4), 1)
       var applied = Vector.empty[Long]
       def run(crashAfter: Option[Long]): Unit = {

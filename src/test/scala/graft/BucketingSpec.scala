@@ -11,8 +11,16 @@ class BucketingSpec extends SparkSpec {
 
   test("join of two tables bucketed on the key plans no shuffle exchange") {
     val sf = "/root/testdata/sf0.001"
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
+    def dropTables(): Unit = {
+      spark.sql("DROP TABLE IF EXISTS b_orders")
+      spark.sql("DROP TABLE IF EXISTS b_lineitem")
+      ()
+    }
+    dropTables()
+    try bucketedJoin(sf) finally dropTables()
+  }
+
+  private def bucketedJoin(sf: String): Unit = {
     Tables.orders(spark, sf)
       .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .saveAsTable("b_orders")

@@ -103,7 +103,7 @@ class ContamIngestSpec extends SparkSpec {
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val staged = corpus.select("doc_id", "text")
-      val width = graft.operators.EventsOps.stageAligned(srcDir,
+      val width = graft.operators.Epochs.stageAligned(srcDir,
         graft.operators.EventsOps.slicedStages(staged, col("doc_id"), 50L, 75L, 3), 1)
       var applied = Vector.empty[Long]
       def run(crashAfter: Option[Long]): Unit = {

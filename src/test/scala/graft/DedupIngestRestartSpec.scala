@@ -42,7 +42,7 @@ class DedupIngestRestartSpec extends SparkSpec {
       val st = new graft.sources.TableStore(spark, storeRoot.toString)
       val staged = docs.select("doc_id", "text")
       operators.Dedup.buildDedupState(st, staged.limit(0))
-      val width = operators.EventsOps.stageAligned(srcDir,
+      val width = operators.Epochs.stageAligned(srcDir,
         operators.EventsOps.slicedStages(staged, col("doc_id"), 1L, 120L, 4), 1)
       var applied = Vector.empty[Long]
       def run(crashAfter: Option[Long]): Unit = {

@@ -11,7 +11,8 @@ import graft.operators.{Epochs, SearchOps}
   * an empty input costs one job and no epoch, scratch roots never
   * outlive the gate run, both drives trace one span per epoch, and no
   * cached block outlives the pinned result. A source guard keeps every
-  * other file from re-growing its own epoch loop, span or store memo. */
+  * other file from re-growing its own epoch loop, span, store memo, temp
+  * dir or stream replay, and every file but `Dedup` from a bare pin. */
 class EpochsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -104,6 +105,35 @@ class EpochsSpec extends SparkSpec {
     got.values.asScala.flatten.toSeq.sorted shouldBe (1L to 60L)
   }
 
+  test("a replay runs at the bounded width unless its staging keeps the caller's") {
+    val df = (1L to 20L).toDF("k")
+    val caller = spark.conf.get("spark.sql.shuffle.partitions")
+    caller should not be "8"
+    def width(st: Epochs.Staging): String = {
+      var w = ""
+      Epochs.replay(spark, st, "epochs_width_sink") { src =>
+        val f = src()
+        w = f.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        f
+      }((_, _) => ())
+      w
+    }
+    width(Epochs.Stages(df, Seq(("a", df, 0)), 1)) shouldBe "8"
+    width(Epochs.Stages(df, Seq(("a", df, 0)), 1, sessionWidth = true)) shouldBe caller
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe caller
+
+    // an events table of more than one file keeps the caller's width
+    // only for the gates that ask for it; a single file never does
+    val d = tempDir("graft-epochs-events").toString
+    df.repartition(2).write.parquet(s"$d/events.parquet")
+    Epochs.events(spark, d).sessionWidth shouldBe false
+    Epochs.events(spark, d, sessionWidthPastOneFile = true).sessionWidth shouldBe true
+    width(Epochs.events(spark, d, sessionWidthPastOneFile = true)) shouldBe caller
+    val one = tempDir("graft-epochs-events").toString
+    df.coalesce(1).write.parquet(s"$one/events.parquet")
+    Epochs.events(spark, one, sessionWidthPastOneFile = true).sessionWidth shouldBe false
+  }
+
   test("a scratch-store drive leaves no persistent RDD but the pinned result") {
     def persisted: Set[Int] =
       spark.sparkContext.getPersistentRDDs.filter(_._2.getStorageLevel.isValid).keySet.toSet
@@ -121,23 +151,32 @@ class EpochsSpec extends SparkSpec {
 
   test("only the driver slices epochs, opens epoch spans or memoizes store roots") {
     val root = Paths.get("src/main/scala/graft")
-    val allowed = root.resolve("operators/Epochs.scala")
     val walk = Files.walk(root)
     val files: List[Path] = try walk.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.equals(allowed)).toList
+      .filter(_.toString.endsWith(".scala")).toList
     finally walk.close()
     files should not be empty
+    def quoted(s: String) = java.util.regex.Pattern.quote(s).r
+    // (owner file, what, pattern): the pattern may appear in the owner only
     val rules = Seq(
-      "slice step" -> """val\s+step\s*=\s*\(hi\s*-\s*lo\)""".r,
-      "epoch span" -> """Trace\.epoch\(""".r,
-      "store memo" -> ("""WeakHashMap\[\s*(?:org\.apache\.spark\.sql\.)?SparkSession\s*,\s*""" +
-        """(?:scala\.collection\.mutable\.)?Map\[String,\s*String\]\s*\]""").r)
+      ("operators/Epochs.scala", "slice step", """val\s+step\s*=\s*\(hi\s*-\s*lo\)""".r),
+      ("operators/Epochs.scala", "epoch span", """Trace\.epoch\(""".r),
+      ("operators/Epochs.scala", "store memo",
+        ("""WeakHashMap\[\s*(?:org\.apache\.spark\.sql\.)?SparkSession\s*,\s*""" +
+          """(?:scala\.collection\.mutable\.)?Map\[String,\s*String\]\s*\]""").r),
+      ("operators/Epochs.scala", "temp dir", quoted("createTempDirectory")),
+      ("operators/Epochs.scala", "replay trigger", quoted("Trigger.AvailableNow")),
+      ("operators/Epochs.scala", "replay wait", quoted("awaitTermination")),
+      ("operators/Epochs.scala", "memory sink", quoted("format(\"memory\")")),
+      ("operators/Epochs.scala", "stream lookup", quoted("streams.active")),
+      ("operators/Dedup.scala", "bare pin", quoted("localCheckpoint(")))
     val hits = files.flatMap { p =>
       val text = new String(Files.readAllBytes(p), "UTF-8")
       def line(at: Int) = text.substring(0, at).count(_ == '\n') + 1
-      rules.flatMap { case (what, re) =>
-        re.findAllMatchIn(text).map(m => s"$p:${line(m.start)}: $what")
-      }
+      rules.filterNot { case (owner, _, _) => p.equals(root.resolve(owner)) }
+        .flatMap { case (_, what, re) =>
+          re.findAllMatchIn(text).map(m => s"$p:${line(m.start)}: $what")
+        }
     }
     withClue(hits.mkString("\n", "\n", "\n")) { hits shouldBe empty }
   }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Invariants for the time-series operators over the real sf0.001 tables —
@@ -33,29 +34,65 @@ class EventsOpsSpec extends SparkSpec {
   test("streaming gates leave /tmp flat: staging dirs cleaned up across repeated runs") {
     def stageDirs(): Set[String] = {
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      import scala.jdk.CollectionConverters._
       val s = java.nio.file.Files.list(tmp)
       try s.iterator().asScala
         .map(_.getFileName.toString)
-        .filter(n => n.startsWith("graft-stream") || n.startsWith("graft-late") ||
-          n.startsWith("graft-outer") || n.startsWith("graft-scd2") ||
-          n.startsWith("graft-stage") || n.startsWith("graft-admit") ||
-          n.startsWith("graft-enrich"))
+        .filter(n => Seq("graft-stream", "graft-late", "graft-outer", "graft-scd2",
+          "graft-stage", "graft-admit", "graft-enrich", "graft-q", "graft-upsert",
+          "graft-merge", "graft-diff", "graft-mv", "graft-evolve-q", "graft-skip",
+          "graft-shard-store").exists(n.startsWith))
         .toSet
       finally s.close()
     }
     val before = stageDirs()
+    Seq(operators.DmlQueries.q87, operators.DmlQueries.q116, operators.DmlQueries.q124,
+      operators.DmlQueries.q102, operators.DmlQueries.q104, operators.Extras.q127,
+      operators.CorpusOps.q196).foreach(_.build(spark, dir).collect()) // store roots cleaned
+    operators.EventsOps.q132.build(spark, dir).collect()
     operators.EventsOps.q145.build(spark, dir).collect()
     operators.EventsOps.q148.build(spark, dir).collect() // partials dir cleaned
     operators.EventsOps.q149.build(spark, dir).collect() // partials dir cleaned
     operators.EventsOps.q183.build(spark, dir).collect()
     operators.EventsOps.q183.build(spark, dir).collect() // repeated run: no accumulation
+    operators.EventsOps.q167.build(spark, dir).collect()
+    operators.EventsOps.q179.build(spark, dir).collect()
     operators.EventsOps.q187.build(spark, dir).collect()
     operators.Warehouse.q188.build(spark, dir).collect() // store root cleaned
     operators.Warehouse.q189.build(spark, dir).collect() // staging + ckpt + store cleaned
     operators.CorpusOps.q191.build(spark, dir).collect() // staging + partials cleaned
     operators.EventsOps.q193.build(spark, dir).collect() // staging + partials cleaned
     stageDirs() shouldBe before
+  }
+
+  test("a streaming gate leaves its caller's conf, temp views and streams alone") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val poller = new Thread(() => while (running) {
+      seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+      Thread.sleep(1)
+    })
+    poller.start()
+    try operators.EventsOps.q167.build(spark, dir).collect()
+    finally { running = false; poller.join() }
+    seen.asScala.toSet shouldBe Set(width)
+
+    // the caller's own view and stream, named like q145's sink
+    val sink = "q145_hourly_sink"
+    spark.range(3).createOrReplaceTempView(sink)
+    val mine = spark.readStream.format("rate").load().writeStream
+      .format("noop").queryName(sink)
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
+      .start()
+    try {
+      operators.EventsOps.q145.build(spark, dir).collect() should not be empty
+      mine.isActive shouldBe true
+      spark.streams.active.map(_.id) should contain(mine.id)
+      spark.table(sink).count() shouldBe 3L
+    } finally {
+      mine.stop()
+      spark.catalog.dropTempView(sink)
+    }
   }
 
   test("q193 stream-static enrichment conserves facts and matches the batch join") {

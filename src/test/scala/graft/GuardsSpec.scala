@@ -15,6 +15,15 @@ class GuardsSpec extends SparkSpec {
       Dedup.assertGroundTruthScale(Dedup.MaxGroundTruthDocs + 1)
   }
 
+  test("a probe ceiling whose LIMIT would not fit an Int is refused") {
+    Dedup.boundedProbeLimit(Dedup.MaxBroadcastCandidateDocs) shouldBe
+      (Dedup.MaxBroadcastCandidateDocs + 1L).toInt
+    Dedup.boundedProbeLimit(-1L) shouldBe 0
+    Dedup.boundedProbeLimit(Int.MaxValue - 2L) shouldBe Int.MaxValue - 1
+    an[IllegalArgumentException] should be thrownBy Dedup.boundedProbeLimit(Int.MaxValue - 1L)
+    an[IllegalArgumentException] should be thrownBy Dedup.boundedProbeLimit(Long.MaxValue)
+  }
+
   test("windowlessRankDesc ranks reduced frames and rejects unreduced ones") {
     // dense-rank semantics check on a small histogram: RANK = 1 + count of
     // strictly-greater rows (ties share)

@@ -82,7 +82,7 @@ class IncrementalDedupSpec extends SparkSpec {
         try k.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         finally k.release()
       }
-      val hinted = run(Long.MaxValue)
+      val hinted = run(Dedup.MaxBroadcastCandidateDocs)
       val fallback = run(0L)
       hinted should not be empty
       fallback shouldBe hinted

@@ -116,7 +116,7 @@ class IndexIngestSpec extends SparkSpec {
     try {
       val st = new TableStore(spark, storeRoot.toString)
       SearchOps.buildSearchIndex(st, docs.limit(0))
-      val width = graft.operators.EventsOps.stageAligned(srcDir,
+      val width = graft.operators.Epochs.stageAligned(srcDir,
         graft.operators.EventsOps.slicedStages(docs, col("doc_id"), 1L, 24L, 4), 1)
       var applied = Vector.empty[Long]
       def run(crashAfter: Option[Long]): Unit = {

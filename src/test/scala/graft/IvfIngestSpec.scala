@@ -100,7 +100,7 @@ class IvfIngestSpec extends SparkSpec {
     try {
       val st = new TableStore(spark, storeRoot.toString)
       Similarity.buildIvfStore(st, vecs.limit(0))
-      val width = graft.operators.EventsOps.stageAligned(srcDir,
+      val width = graft.operators.Epochs.stageAligned(srcDir,
         graft.operators.EventsOps.slicedStages(vecs, col("vec_id"), 0L, 31L, 4), 1)
       var applied = Vector.empty[Long]
       def run(crashAfter: Option[Long]): Unit = {
@@ -296,7 +296,7 @@ class IvfIngestSpec extends SparkSpec {
     val ckpt = tempDir("graft-ivf-recl-restart-ckpt")
     val st = new TableStore(spark, storeRoot.toString)
     Similarity.buildIvfStore(st, vecs.limit(0))
-    val width = graft.operators.EventsOps.stageAligned(srcDir,
+    val width = graft.operators.Epochs.stageAligned(srcDir,
       graft.operators.EventsOps.slicedStages(vecs, col("vec_id"), 0L, 31L, 4), 1)
     def run(crashAfter: Option[Long]): Unit = {
       val q = spark.readStream.schema(vecs.schema)

@@ -64,7 +64,7 @@ class WarehouseSpec extends SparkSpec {
       val (lo, hi) = (r.getLong(0), r.getLong(1))
       val cuts = Seq(Long.MinValue, lo + (hi - lo) / 4, lo + (hi - lo) / 2,
         lo + (hi - lo) * 3 / 4, Long.MaxValue)
-      val width = operators.EventsOps.stageAligned(srcDir,
+      val width = operators.Epochs.stageAligned(srcDir,
         cuts.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
           (s"slice$i",
             ev.filter(unix_micros(col("ts")) > a && unix_micros(col("ts")) <= b),
