@@ -1068,23 +1068,26 @@ object Extras {
     * same per-round shuffle shape as q154, constant rounds, node/edge
     * frames only, nothing broadcast. */
   val q164 = {
+    // MATERIALIZED: each round reads the previous survivor set twice, so
+    // an inlined CTE chain grows 2^rounds-fold in DuckDB (6.5 GB resident
+    // and 190 s for this oracle alone at sf0.01, against 0.2 GB and 1 s)
     def roundCtes(i: Int): String = {
       val prev = if (i == 1) "n0" else s"s${i - 1}"
-      s"""d$i AS (SELECT ed.s AS node, COUNT(*) AS c FROM ed
+      s"""d$i AS MATERIALIZED (SELECT ed.s AS node, COUNT(*) AS c FROM ed
          |        WHERE ed.s IN (SELECT node FROM $prev)
          |          AND ed.t IN (SELECT node FROM $prev)
          |        GROUP BY 1),
-         |s$i AS (SELECT node, c FROM d$i WHERE c >= (SELECT k FROM kk))""".stripMargin
+         |s$i AS MATERIALIZED (SELECT node, c FROM d$i WHERE c >= (SELECT k FROM kk))""".stripMargin
     }
     QueryDef(
       "q164_kcore_backbone",
-      s"""WITH dd AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         |e0 AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+      s"""WITH dd AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+         |e0 AS MATERIALIZED (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
          |       FROM dd a JOIN dd b ON b.l_orderkey = a.l_orderkey
          |                          AND a.l_partkey < b.l_partkey),
-         |ed AS (SELECT u AS s, v AS t FROM e0 UNION ALL SELECT v, u FROM e0),
-         |n0 AS (SELECT DISTINCT s AS node FROM ed),
-         |kk AS (SELECT (7 * ((SELECT COUNT(*) FROM ed) // (SELECT COUNT(*) FROM n0))) // 10 AS k),
+         |ed AS MATERIALIZED (SELECT u AS s, v AS t FROM e0 UNION ALL SELECT v, u FROM e0),
+         |n0 AS MATERIALIZED (SELECT DISTINCT s AS node FROM ed),
+         |kk AS MATERIALIZED (SELECT (7 * ((SELECT COUNT(*) FROM ed) // (SELECT COUNT(*) FROM n0))) // 10 AS k),
          |${roundCtes(1)},
          |${roundCtes(2)},
          |${roundCtes(3)},

@@ -110,18 +110,34 @@ object HybridOps {
     val bm = SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50)
     val ann = Similarity.ivfProbe(ivf, nQueries = 1, k = 50)
       .select(col("neighbor_id").as("doc_id"), col("cosine"))
-    val fusedAnn = SearchOps.rrfFuse(bm, ann)
-    // exact dense reference (recall measurement only — see Scaladoc)
-    val exact = Similarity.scoredPairs(s, d, nQueries = 1)
+    fusedRecall10(SearchOps.rrfFuse(bm, ann), SearchOps.rrfFuse(bm, exactDense(s, d)), Nil)
+      .orderBy("frk")
+  }
+
+  /** The exact dense leg of the vec_id 0 query as (doc_id, cosine):
+    * brute-force cosine over every vector — the recall reference only,
+    * never a serving path. */
+  private def exactDense(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame =
+    Similarity.scoredPairs(s, d, nQueries = 1)
       .select(col("neighbor_id").as("doc_id"), col("cosine"))
-    val fusedExact = SearchOps.rrfFuse(bm, exact)
-      .select(col("doc_id").as("e_doc"))
+
+  /** Fused-vs-exact recall@10: each ANN-fused row is flagged `in_exact`
+    * when the exact-dense fusion also ranks its doc in its top-10, and
+    * `recall_10` (the flags' mean per `keys` partition) is attached to
+    * every row. */
+  private def fusedRecall10(fusedAnn: org.apache.spark.sql.DataFrame,
+      fusedExact: org.apache.spark.sql.DataFrame, keys: Seq[String])
+      : org.apache.spark.sql.DataFrame = {
     val flagged = fusedAnn
-      .join(broadcast(fusedExact), col("doc_id") === col("e_doc"), "left")
+      .join(broadcast(fusedExact.select(col("doc_id").as("e_doc"))),
+        col("doc_id") === col("e_doc"), "left")
       .withColumn("in_exact", when(col("e_doc").isNotNull, 1).otherwise(0))
       .drop("e_doc")
-    val rec = flagged.agg((sum(col("in_exact")) / lit(10.0)).as("recall_10"))
-    flagged.crossJoin(broadcast(rec)).orderBy("frk")
+    val rec = flagged.groupBy(keys.map(col): _*)
+      .agg((sum(col("in_exact")) / lit(10.0)).as("recall_10"))
+    if (keys.isEmpty) flagged.crossJoin(broadcast(rec))
+    else flagged.join(broadcast(rec), keys)
   }
 
   /** q227's oracle: the two-epoch-prefix recomputation of BOTH hybrid
@@ -372,24 +388,14 @@ object HybridOps {
     // pinned: reused by every per-nprobe fusion AND the exact fusion
     val bm = Dedup.pin(SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50))
     val dense = Dedup.pin(
-      Similarity.storeMultiprobeScored(ivf, s, nQ = 1)
+      Similarity.storeMultiprobeScored(ivf, nQ = 1)
         .select(col("nprobe"), col("neighbor_id").as("doc_id"), col("cosine")))
     val fusedAnn = Similarity.ProbeLevels.map { np =>
       SearchOps.rrfFuse(bm, dense.filter(col("nprobe") === np)
           .select("doc_id", "cosine"))
         .withColumn("nprobe", lit(np))
     }.reduce(_ unionByName _)
-    val exact = Similarity.scoredPairs(s, d, nQueries = 1)
-      .select(col("neighbor_id").as("doc_id"), col("cosine"))
-    val fusedExact = SearchOps.rrfFuse(bm, exact)
-      .select(col("doc_id").as("e_doc"))
-    val flagged = fusedAnn
-      .join(broadcast(fusedExact), col("doc_id") === col("e_doc"), "left")
-      .withColumn("in_exact", when(col("e_doc").isNotNull, 1).otherwise(0))
-      .drop("e_doc")
-    val rec = flagged.groupBy("nprobe")
-      .agg((sum(col("in_exact")) / lit(10.0)).as("recall_10"))
-    flagged.join(broadcast(rec), Seq("nprobe"))
+    fusedRecall10(fusedAnn, SearchOps.rrfFuse(bm, exactDense(s, d)), Seq("nprobe"))
       .select(col("nprobe").cast("int").as("nprobe"), col("doc_id"),
         col("bm25_rk"), col("dense_rk"), col("rrf"), col("frk"),
         col("in_exact"), col("recall_10"))
@@ -516,51 +522,46 @@ object HybridOps {
   val q230 = QueryDef(
     "q230_hybrid_dial_multiquery",
     hybridDialMultiOracleSql) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val nQ = 10
     val st = SearchOps.maintainedIndex(s, d)
-    val ivf = Similarity.maintainedIvf(s, d)
-    val bmr = Dedup.pin(SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50)
-      .withColumn("bm25_rk", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("int"))
-      .select("doc_id", "bm25_rk"))
-    val dnr = Dedup.pin(Similarity.storeMultiprobeScored(ivf, s, nQ)
-      .withColumn("dense_rk", row_number().over(
-        Window.partitionBy("nprobe", "query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("dense_rk") <= 50)
+    val bmr = Dedup.pin(Similarity.topK(SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50),
+      Nil, "score", "doc_id", 50, "bm25_rk").select("doc_id", "bm25_rk"))
+    // one lexical ranking, fanned across every query
+    multiQueryDial(s, d, nQ = 10)(qs => qs.crossJoin(bmr))
+  }
+
+  /** The multi-query dial body of q230 and q233: the dense leg swept over
+    * [[Similarity.ProbeLevels]] from the maintained IVF store, the exact
+    * dense leg (gate armor), both fused by [[SearchOps.rrfTop10]] with
+    * the lexical leg, then per-(query, nprobe) recall@10 of the ANN
+    * fusion against the exact fusion plus the per-nprobe mean. The
+    * fusion's query universe is the embedding queries `qs`, and
+    * `lexicalOver(qs)` is the lexical leg over it as (query_id, doc_id,
+    * bm25_rk). The lexical side is fanned out to every (query, nprobe)
+    * key explicitly: a key with no dense candidates must still emit its
+    * bm-only fusion, as the oracle does — deriving keys from the dense
+    * side would silently drop it. Fusion frames are
+    * (queries × levels × ≤60) rows — driver-bounded by construction. */
+  private def multiQueryDial(s: org.apache.spark.sql.SparkSession, d: String, nQ: Int)(
+      lexicalOver: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val dnr = Dedup.pin(Similarity.topK(
+        Similarity.storeMultiprobeScored(Similarity.maintainedIvf(s, d), nQ),
+        Seq("nprobe", "query_id"), "cosine", "neighbor_id", 50, "dense_rk")
       .select(col("nprobe"), col("query_id"), col("neighbor_id").as("doc_id"),
         col("dense_rk")))
-    val edr = Dedup.pin(Similarity.scoredPairs(s, d, nQ)
-      .withColumn("dense_rk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("dense_rk") <= 50)
+    val edr = Dedup.pin(Similarity.topK(Similarity.scoredPairs(s, d, nQ),
+        Seq("query_id"), "cosine", "neighbor_id", 50, "dense_rk")
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("dense_rk")))
-    // explicit key fan-out (queries × levels): a (query, nprobe) with no
-    // dense candidates must still emit its bm-only fusion, as the oracle
-    // does — deriving keys from the dense side would silently drop it
-    val qs = edr.select("query_id").distinct()
-    val npDf = Similarity.ProbeLevels.toDF("nprobe")
-    def fuseTop10(bmFan: org.apache.spark.sql.DataFrame,
-        dense: org.apache.spark.sql.DataFrame, keys: Seq[String])
-        : org.apache.spark.sql.DataFrame =
-      bmFan.join(dense, keys :+ "doc_id", "full_outer")
-        .withColumn("rrf",
-          coalesce(lit(1.0) / (lit(60) + col("bm25_rk")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("dense_rk")), lit(0.0)))
-        .withColumn("frk", row_number().over(
-          Window.partitionBy(keys.map(col): _*).orderBy(col("rrf").desc, col("doc_id"))))
-        .filter(col("frk") <= 10)
-        .select((keys :+ "doc_id").map(col): _*)
-    val fa10 = fuseTop10(npDf.crossJoin(qs).crossJoin(bmr), dnr,
-      Seq("nprobe", "query_id"))
-    val fe10 = fuseTop10(qs.crossJoin(bmr), edr, Seq("query_id"))
-    val flag = fa10
-      .join(fe10.withColumn("hit", lit(1)), Seq("query_id", "doc_id"), "left")
+    val lex = lexicalOver(edr.select("query_id").distinct())
+    val fa10 = SearchOps.rrfTop10(
+      lex.withColumn("nprobe", explode(array(Similarity.ProbeLevels.map(lit): _*))),
+      dnr, Seq("nprobe", "query_id"))
+    val fe10 = SearchOps.rrfTop10(lex, edr, Seq("query_id"))
+    val rq = fa10.select("nprobe", "query_id", "doc_id")
+      .join(fe10.select(col("query_id"), col("doc_id"), lit(1).as("hit")),
+        Seq("query_id", "doc_id"), "left")
       .withColumn("hit", coalesce(col("hit"), lit(0)))
-    val rq = flag.groupBy("query_id", "nprobe")
+      .groupBy("query_id", "nprobe")
       .agg(sum(col("hit")).as("hits"),
         (sum(col("hit")).cast("double") / 10).as("recall_10"))
     val mq = rq.groupBy("nprobe")
@@ -710,60 +711,14 @@ object HybridOps {
   val q233 = QueryDef(
     "q233_hybrid_perquery_lexical",
     hybridPerQueryOracleSql) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
     val nQ = 10
     val st = SearchOps.maintainedIndex(s, d)
-    val ivf = Similarity.maintainedIvf(s, d)
     val termMap = SearchOps.termWorkload(st, nQ, perQuery = 2)
     val bmr = Dedup.pin(SearchOps.bm25PerQueryFromIndex(st, termMap, 50)
       .select(col("query_id"), col("doc_id"), col("bm25_rk")))
-    val dnr = Dedup.pin(Similarity.storeMultiprobeScored(ivf, s, nQ)
-      .withColumn("dense_rk", row_number().over(
-        Window.partitionBy("nprobe", "query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("dense_rk") <= 50)
-      .select(col("nprobe"), col("query_id"), col("neighbor_id").as("doc_id"),
-        col("dense_rk")))
-    val edr = Dedup.pin(Similarity.scoredPairs(s, d, nQ)
-      .withColumn("dense_rk", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("dense_rk") <= 50)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("dense_rk")))
-    // the fusion's query universe is the embedding queries (qs): a
-    // lexical-workload query with no embedding has no dense universe to
-    // fuse against, and the oracle joins bmr to qs the same way; a
-    // (query, nprobe) with no dense candidates still emits its bm-only
-    // fusion because the bm side carries every (query, nprobe) key
-    val qs = edr.select("query_id").distinct()
-    val npDf = Similarity.ProbeLevels.toDF("nprobe")
-    def fuseTop10(bmFan: org.apache.spark.sql.DataFrame,
-        dense: org.apache.spark.sql.DataFrame, keys: Seq[String])
-        : org.apache.spark.sql.DataFrame =
-      bmFan.join(dense, keys :+ "doc_id", "full_outer")
-        .withColumn("rrf",
-          coalesce(lit(1.0) / (lit(60) + col("bm25_rk")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("dense_rk")), lit(0.0)))
-        .withColumn("frk", row_number().over(
-          Window.partitionBy(keys.map(col): _*).orderBy(col("rrf").desc, col("doc_id"))))
-        .filter(col("frk") <= 10)
-        .select((keys :+ "doc_id").map(col): _*)
-    val fa10 = fuseTop10(bmr.join(qs, Seq("query_id")).crossJoin(npDf), dnr,
-      Seq("nprobe", "query_id"))
-    val fe10 = fuseTop10(bmr.join(qs, Seq("query_id")), edr, Seq("query_id"))
-    val flag = fa10
-      .join(fe10.withColumn("hit", lit(1)), Seq("query_id", "doc_id"), "left")
-      .withColumn("hit", coalesce(col("hit"), lit(0)))
-    val rq = flag.groupBy("query_id", "nprobe")
-      .agg(sum(col("hit")).as("hits"),
-        (sum(col("hit")).cast("double") / 10).as("recall_10"))
-    val mq = rq.groupBy("nprobe")
-      .agg((sum(col("hits")).cast("double") / (10.0 * nQ)).as("mean_recall_10"))
-    rq.join(broadcast(mq), Seq("nprobe"))
-      .select(col("query_id"), col("nprobe").cast("int").as("nprobe"),
-        col("hits"), col("recall_10"), col("mean_recall_10"))
-      .orderBy("query_id", "nprobe")
+    // a lexical-workload query with no embedding has no dense universe
+    // to fuse against — the oracle joins bmr to qs the same way
+    multiQueryDial(s, d, nQ)(qs => bmr.join(qs, Seq("query_id")))
   }
 
   val all: Seq[QueryDef] = Seq(q217, q226, q227, q230, q233)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
 import graft.functions.CleanFunctions
@@ -35,14 +34,12 @@ object NativeOps {
       .withColumn("nrm", expr("dot_f64(v, v)"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    broadcast(q)
+    val scored = broadcast(q)
       .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
         col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         (expr("dot_f64(qv, v)") / (sqrt(col("qn")) * sqrt(col("nrm")))).as("cosine"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("rk") <= 5)
+    Similarity.topK(scored, Seq("query_id"), "cosine", "neighbor_id", 5)
       .select("query_id", "neighbor_id", "rk")
       .orderBy("query_id", "rk")
   }

@@ -121,24 +121,59 @@ object SearchOps {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val dl = toks.select(col("doc_id"), size(col("toks")).as("dl"))
-    val stats = dl.agg(
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
-      count(lit(1)).cast("double").as("n"))
     val tf = toks.select(col("doc_id"), explode(col("toks")).as("w"))
       .filter(col("w").isin(terms: _*))
       .groupBy("doc_id", "w").agg(count(lit(1)).cast("double").as("tf"))
+    okapiTop(tf, dl, lengthStats(dl), Seq("doc_id"), k)
+  }
+
+  /** THE log-free Okapi score every BM25 path sums (k1 = 1.2, b = 0.75,
+    * idf = (N - df + 0.5)/(df + 0.5); see [[bm25]] for the parity
+    * argument) — one literal expression tree, so each path stays
+    * bit-identical to its oracle mirror. `tf` is (w, tf, …) posting rows,
+    * df counts them per term, `dl` joins on the columns it shares with
+    * `tf` and carries `dl`, `stats` is one (avgdl, n) row. `queryTerms`
+    * (query_id, w), when given, fans each posting row out to the queries
+    * probing its term (df stays global). Returns (keys…, score). */
+  private def okapi(tf: org.apache.spark.sql.DataFrame,
+      dl: org.apache.spark.sql.DataFrame, stats: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], queryTerms: Option[org.apache.spark.sql.DataFrame] = None)
+      : org.apache.spark.sql.DataFrame = {
     val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    tf.crossJoin(broadcast(stats))
-      .join(broadcast(dfreq), "w")
-      .join(dl, "doc_id")
-      .select(col("doc_id"),
+    queryTerms.fold(tf)(tm => tf.join(broadcast(tm), Seq("w")))
+      .crossJoin(broadcast(stats))
+      .join(broadcast(dfreq), Seq("w"))
+      .join(dl, dl.columns.filter(tf.columns.contains).toSeq)
+      .select(keys.map(col) :+
         (((col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
           ((col("tf") * 2.2) /
             (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / col("avgdl"))))))
-          .as("s"))
-      .groupBy("doc_id").agg(sum(col("s")).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
+          .as("s"): _*)
+      .groupBy(keys.map(col): _*).agg(sum(col("s")).as("score"))
   }
+
+  /** The best `k` [[okapi]] scores, fully tiebroken by `keys`. */
+  private def okapiTop(tf: org.apache.spark.sql.DataFrame,
+      dl: org.apache.spark.sql.DataFrame, stats: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], k: Int): org.apache.spark.sql.DataFrame =
+    okapi(tf, dl, stats, keys).orderBy(col("score").desc +: keys.map(col): _*).limit(k)
+
+  /** One (avgdl, n) row over a frame of document (or chunk) lengths. */
+  private def lengthStats(dl: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    dl.agg(
+      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
+      count(lit(1)).cast("double").as("n"))
+
+  /** The (avgdl, n) row recomposed from an index table's kind-2
+    * per-epoch partials: exact integer sums of `sum_dl` and `units`
+    * (n_docs or n_chunks). */
+  private def partialStats(idx: org.apache.spark.sql.DataFrame, units: String)
+      : org.apache.spark.sql.DataFrame =
+    idx.filter(col("kind") === 2)
+      .agg((sum(col("sum_dl")).cast("double") /
+        sum(col(units)).cast("double")).as("avgdl"),
+        sum(col(units)).cast("double").as("n"))
 
   /** The 2-term BM25 oracle (monolithic corpus recomputation) — shared
     * verbatim by q101 (inline) and q206 (served from the maintained
@@ -301,18 +336,6 @@ object SearchOps {
         col("sc.score").as("cosine"))
   }
 
-  /** Per-query rank emission shared by q119 (corpus) and q211 (served
-    * from the maintained index): the top-k window over an already
-    * k-bounded per-query frame — tiny input, never the corpus. */
-  private def rankCosineTopK(scored: org.apache.spark.sql.DataFrame, k: Int)
-      : org.apache.spark.sql.DataFrame =
-    scored
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("doc_id"))).cast("int"))
-      .filter(col("rk") <= k)
-      .orderBy("query_id", "rk")
-
   /** The 20-query tf-idf cosine oracle (monolithic corpus
     * recomputation) — shared verbatim by q119 (inline) and q211 (served
     * from the maintained index store). */
@@ -345,7 +368,9 @@ object SearchOps {
   val q119 = QueryDef(
     "q119_tfidf_cosine_topk",
     tfidfOracleSql) { (s, d) =>
-    rankCosineTopK(sparseCosine(s, d, col("doc_id") < 20, k = 3), 3)
+    // the rank window sorts an already k-bounded per-query frame
+    Similarity.topK(sparseCosine(s, d, col("doc_id") < 20, k = 3),
+      Seq("query_id"), "cosine", "doc_id", 3).orderBy("query_id", "rk")
   }
 
   /** Reciprocal-rank fusion of a sparse (BM25) and a dense-style (tf-idf
@@ -423,27 +448,27 @@ object SearchOps {
     * bounded frames, never the corpus. */
   private[graft] def rrfFuse(bm: org.apache.spark.sql.DataFrame,
                       dense: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bmr = bm
-      .withColumn("bm25_rk", org.apache.spark.sql.functions.row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("int"))
-      .select("doc_id", "bm25_rk")
-    val dnr = dense
-      .withColumn("dense_rk", org.apache.spark.sql.functions.row_number().over(
-        Window.orderBy(col("cosine").desc, col("doc_id"))).cast("int"))
-      .filter(col("dense_rk") <= 50)
-      .select("doc_id", "dense_rk")
-    bmr.join(dnr, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60) + col("bm25_rk")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60) + col("dense_rk")), lit(0.0)))
-      .withColumn("frk", org.apache.spark.sql.functions.row_number().over(
-        Window.orderBy(col("rrf").desc, col("doc_id"))).cast("int"))
-      .filter(col("frk") <= 10)
+      : org.apache.spark.sql.DataFrame =
+    rrfTop10(
+      Similarity.topK(bm, Nil, "score", "doc_id", 50, "bm25_rk").select("doc_id", "bm25_rk"),
+      Similarity.topK(dense, Nil, "cosine", "doc_id", 50, "dense_rk").select("doc_id", "dense_rk"),
+      Nil)
       .select("doc_id", "bm25_rk", "dense_rk", "rrf", "frk")
       .orderBy("frk")
-  }
+
+  /** THE reciprocal-rank fusion: two ranked legs full-outer joined on
+    * (keys…, doc_id) — `lexical` carrying `bm25_rk`, `dense` carrying
+    * `dense_rk` — fused score rrf = Σ 1/(60 + rank) over the legs that
+    * hold the doc, top-10 per `keys` partition by (rrf DESC, doc_id) as
+    * `frk`. */
+  private[graft] def rrfTop10(lexical: org.apache.spark.sql.DataFrame,
+      dense: org.apache.spark.sql.DataFrame, keys: Seq[String])
+      : org.apache.spark.sql.DataFrame =
+    Similarity.topK(lexical.join(dense, keys :+ "doc_id", "full_outer")
+      .withColumn("rrf",
+        coalesce(lit(1.0) / (lit(60) + col("bm25_rk")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(60) + col("dense_rk")), lit(0.0))),
+      keys, "rrf", "doc_id", 10, "frk")
 
   val q125 = QueryDef(
     "q125_rrf_hybrid",
@@ -523,25 +548,16 @@ object SearchOps {
     chunkBm25OracleSql) { (s, d) =>
     val terms = Seq("dup", "window")
     val ch = chunkFrame(Tables.documents(s, d))
-    val stats = ch.agg(
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
-      count(lit(1)).cast("double").as("n"))
     val tf = ch.select(col("doc_id"), col("chunk_id"), explode(col("ctoks")).as("w"))
       .filter(col("w").isin(terms: _*))
       .groupBy("doc_id", "chunk_id", "w").agg(count(lit(1)).cast("double").as("tf"))
-    val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    tf.crossJoin(broadcast(stats))
-      .join(broadcast(dfreq), Seq("w"))
-      .join(ch.select("doc_id", "chunk_id", "start_tok", "dl"), Seq("doc_id", "chunk_id"))
-      .select(col("doc_id"), col("chunk_id"), col("start_tok"),
-        (((col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          ((col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) *
-              (col("dl").cast("double") / col("avgdl"))))))
-          .as("s"))
-      .groupBy("doc_id", "chunk_id", "start_tok").agg(sum(col("s")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_id")).limit(10)
+    okapiTop(tf, ch.select("doc_id", "chunk_id", "start_tok", "dl"), lengthStats(ch),
+      ChunkKeys, 10)
   }
+
+  /** A chunk's score key: (doc_id, chunk_id) is unique, start_tok rides
+    * along for the output. */
+  private val ChunkKeys = Seq("doc_id", "chunk_id", "start_tok")
 
   // ------------------------------------------------------------------
   // Incremental retrieval-index maintenance (q206/q207): the q98/q101
@@ -615,7 +631,7 @@ object SearchOps {
     * read, filtered exactly below). */
   private def prunedPostings(st: graft.sources.TableStore, terms: Seq[String])
       : org.apache.spark.sql.DataFrame = {
-    val (df, rep) = st.scanSkippingValues("index",
+    val (df, rep) = st.scanSkippingIn("index",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
     Trace.storeRead("index.postings", rep)
@@ -632,42 +648,45 @@ object SearchOps {
     * mirror of [[bm25]]'s. */
   private[graft] def bm25FromIndex(st: graft.sources.TableStore,
       terms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
-    val idx = st.table("index")
-    val tf0 = prunedPostings(st, terms)
-      .select(col("w"), col("doc_id"), col("tf").cast("double").as("tf"))
     // pin: tf feeds the df aggregate, the matched-id collect AND the
     // scoring join — one execution of the pruned posting read
-    val tf = Dedup.pin(tf0)
-    val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    val dl = matchedDocLengths(st, tf)
-    val stats = idx.filter(col("kind") === 2)
-      .agg((sum(col("sum_dl")).cast("double") /
-        sum(col("n_docs")).cast("double")).as("avgdl"),
-        sum(col("n_docs")).cast("double").as("n"))
-    okapiRank(tf, dfreq, dl, stats, k)
+    val tf = Dedup.pin(postingTf(st, terms))
+    okapiTop(tf, matchedDocLengths(st, tf), partialStats(st.table("index"), "n_docs"),
+      Seq("doc_id"), k)
   }
 
-  /** Doc lengths pruned to the docs a pinned `tf` posting frame matched
-    * (kind-1 rows sort by doc_id within their kind range, so the id
-    * probe skips files) — the dl read is then matched-bounded, not
-    * corpus-proportional. Guarded by the kernel's broadcast ceiling: a
-    * stop-term probe over the cap falls back to the full kind-1 slice
-    * instead of a driver collect. Shared by the single-ranking and the
-    * per-query BM25 serving reads. */
+  /** The probed terms' pruned postings as (w, doc_id, tf double). */
+  private def postingTf(st: graft.sources.TableStore, terms: Seq[String])
+      : org.apache.spark.sql.DataFrame =
+    prunedPostings(st, terms)
+      .select(col("w"), col("doc_id"), col("tf").cast("double").as("tf"))
+
+  /** Doc lengths of the docs a pinned `tf` posting frame matched. Shared
+    * by the single-ranking and the per-query BM25 serving reads. */
   private def matchedDocLengths(st: graft.sources.TableStore,
-      tf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val matched = tf.select("doc_id").distinct()
-    val n = matched.count()
-    if (n <= Dedup.MaxBroadcastCandidateDocs) {
-      val ids = matched.collect().map(_.getLong(0))
+      tf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    matchedSidecar(st, "index", tf, "index.doclen").select(col("doc_id"), col("dl"))
+
+  /** The kind-1 sidecar rows of `table` pruned to the docs a pinned `tf`
+    * posting frame matched (kind-1 rows sort by doc_id within their kind
+    * range, so the id probe skips files) — the read is then
+    * matched-bounded, not corpus-proportional. Guarded by the kernel's
+    * broadcast ceiling with ONE bounded collect (ceiling + 1 ids, then a
+    * length test — the `Dedup` idiom): a stop-term probe over the cap
+    * falls back to the full kind-1 slice instead of a driver collect. */
+  private def matchedSidecar(st: graft.sources.TableStore, table: String,
+      tf: org.apache.spark.sql.DataFrame, tag: String): org.apache.spark.sql.DataFrame = {
+    val ids = tf.select("doc_id").distinct()
+      .limit(Dedup.boundedProbeLimit(Dedup.MaxBroadcastCandidateDocs))
+      .collect().map(_.getLong(0))
+    if (ids.length <= Dedup.MaxBroadcastCandidateDocs) {
       java.util.Arrays.sort(ids)
-      val (df, rep) = st.scanSkippingIds("index",
+      val (df, rep) = st.scanSkippingIds(table,
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
         "doc_id", ids)
-      Trace.storeRead("index.doclen", rep)
-      df.filter(col("kind") === 1).select(col("doc_id"), col("dl"))
-    } else st.table("index").filter(col("kind") === 1)
-      .select(col("doc_id"), col("dl"))
+      Trace.storeRead(tag, rep)
+      df.filter(col("kind") === 1)
+    } else st.table(table).filter(col("kind") === 1)
   }
 
   /** A deterministic PER-QUERY lexical workload derived from the index
@@ -711,53 +730,14 @@ object SearchOps {
     val idx = st.table("index")
     val s = idx.sparkSession
     import s.implicits._
-    val tm = termMap.toDF("query_id", "w")
-    val tf = Dedup.pin(prunedPostings(st, termMap.map(_._2).distinct)
-      .select(col("w"), col("doc_id"), col("tf").cast("double").as("tf")))
-    val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    val dl = matchedDocLengths(st, tf)
-    val stats = idx.filter(col("kind") === 2)
-      .agg((sum(col("sum_dl")).cast("double") /
-        sum(col("n_docs")).cast("double")).as("avgdl"),
-        sum(col("n_docs")).cast("double").as("n"))
-    tf.join(broadcast(tm), Seq("w"))
-      .crossJoin(broadcast(stats))
-      .join(broadcast(dfreq), "w")
-      .join(dl, "doc_id")
-      .select(col("query_id"), col("doc_id"),
-        (((col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          ((col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / col("avgdl"))))))
-          .as("s"))
-      .groupBy("query_id", "doc_id").agg(sum(col("s")).as("score"))
-      .withColumn("bm25_rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("doc_id"))).cast("int"))
-      .filter(col("bm25_rk") <= k)
+    val tf = Dedup.pin(postingTf(st, termMap.map(_._2).distinct))
+    Similarity.topK(okapi(tf, matchedDocLengths(st, tf), partialStats(idx, "n_docs"),
+        Seq("query_id", "doc_id"), Some(termMap.toDF("query_id", "w"))),
+      Seq("query_id"), "score", "doc_id", k, "bm25_rk")
       // long ids: the fusion joins these against embedding vec_ids
       .select(col("query_id").cast("long").as("query_id"), col("doc_id"),
         col("bm25_rk"))
   }
-
-  /** The Okapi ranking tail shared by the pruned serving read
-    * ([[bm25FromIndex]]) and the time-travel snapshot read
-    * ([[bm25FromSnapshot]]): the same literal expression tree as
-    * [[bm25]]'s, so every consumer stays bit-identical to the
-    * monolithic oracle. */
-  private def okapiRank(tf: org.apache.spark.sql.DataFrame,
-      dfreq: org.apache.spark.sql.DataFrame, dl: org.apache.spark.sql.DataFrame,
-      stats: org.apache.spark.sql.DataFrame, k: Int)
-      : org.apache.spark.sql.DataFrame =
-    tf.crossJoin(broadcast(stats))
-      .join(broadcast(dfreq), "w")
-      .join(dl, "doc_id")
-      .select(col("doc_id"),
-        (((col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          ((col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / col("avgdl"))))))
-          .as("s"))
-      .groupBy("doc_id").agg(sum(col("s")).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
 
   /** [[bm25FromIndex]] over a TIME-TRAVEL snapshot frame
     * ([[graft.sources.TableStore.tableAt]]) instead of the current
@@ -768,13 +748,8 @@ object SearchOps {
       terms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
     val tf = Dedup.pin(idx.filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select(col("w"), col("doc_id"), col("tf").cast("double").as("tf")))
-    val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    val dl = idx.filter(col("kind") === 1).select(col("doc_id"), col("dl"))
-    val stats = idx.filter(col("kind") === 2)
-      .agg((sum(col("sum_dl")).cast("double") /
-        sum(col("n_docs")).cast("double")).as("avgdl"),
-        sum(col("n_docs")).cast("double").as("n"))
-    okapiRank(tf, dfreq, dl, stats, k)
+    okapiTop(tf, idx.filter(col("kind") === 1).select(col("doc_id"), col("dl")),
+      partialStats(idx, "n_docs"), Seq("doc_id"), k)
   }
 
   /** The maintained index store for `d`, memoized per session: whichever
@@ -929,8 +904,9 @@ object SearchOps {
     "q211_index_tfidf_serving",
     tfidfOracleSql) { (s, d) =>
     val st = maintainedIndex(s, d)
-    rankCosineTopK(sparseCosineFrom(docIdsFromIndex(st),
-      tfidfWeightsFromIndex(st), col("doc_id") < 20, k = 3), 3)
+    Similarity.topK(sparseCosineFrom(docIdsFromIndex(st),
+      tfidfWeightsFromIndex(st), col("doc_id") < 20, k = 3),
+      Seq("query_id"), "cosine", "doc_id", 3).orderBy("query_id", "rk")
   }
 
   /** q212: RRF hybrid retrieval SERVED from the maintained index — both
@@ -1010,8 +986,7 @@ object SearchOps {
     * the q206 reasons. */
   private[graft] def chunkBm25FromIndex(st: graft.sources.TableStore,
       terms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
-    val idx = st.table("chunkindex")
-    val (tfScan, rep) = st.scanSkippingValues("chunkindex",
+    val (tfScan, rep) = st.scanSkippingIn("chunkindex",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
     Trace.storeRead("chunkindex.postings", rep)
@@ -1019,37 +994,9 @@ object SearchOps {
       .filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select(col("doc_id"), col("chunk_id"), col("w"),
         col("tf").cast("double").as("tf")))
-    val dfreq = tf.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
-    val matched = tf.select("doc_id").distinct()
-    val ch = {
-      val n = matched.count()
-      if (n <= Dedup.MaxBroadcastCandidateDocs) {
-        val ids = matched.collect().map(_.getLong(0))
-        java.util.Arrays.sort(ids)
-        val (df, lrep) = st.scanSkippingIds("chunkindex",
-          Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
-          "doc_id", ids)
-        Trace.storeRead("chunkindex.lens", lrep)
-        df.filter(col("kind") === 1)
-          .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
-      } else idx.filter(col("kind") === 1)
-        .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
-    }
-    val stats = idx.filter(col("kind") === 2)
-      .agg((sum(col("sum_dl")).cast("double") /
-        sum(col("n_chunks")).cast("double")).as("avgdl"),
-        sum(col("n_chunks")).cast("double").as("n"))
-    tf.crossJoin(broadcast(stats))
-      .join(broadcast(dfreq), Seq("w"))
-      .join(ch, Seq("doc_id", "chunk_id"))
-      .select(col("doc_id"), col("chunk_id"), col("start_tok"),
-        (((col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          ((col("tf") * 2.2) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) *
-              (col("dl").cast("double") / col("avgdl"))))))
-          .as("s"))
-      .groupBy("doc_id", "chunk_id", "start_tok").agg(sum(col("s")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"), col("chunk_id")).limit(k)
+    val ch = matchedSidecar(st, "chunkindex", tf, "chunkindex.lens")
+      .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
+    okapiTop(tf, ch, partialStats(st.table("chunkindex"), "n_chunks"), ChunkKeys, k)
   }
 
   /** The maintained chunk store for `d`, memoized per session (the q206

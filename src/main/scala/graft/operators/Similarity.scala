@@ -75,6 +75,21 @@ object Similarity {
       .join(nrm.select(col("vec_id").as("neighbor_id"), col("nrm")), Seq("neighbor_id"))
   }
 
+  /** (query_id, neighbor_id, `as`) cosine rows of a [[pairSums]] frame. */
+  private def cosines(pairs: DataFrame, as: String = "cosine"): DataFrame =
+    pairs.select(col("query_id"), col("neighbor_id"),
+      cos(col("dt"), col("qn"), col("nrm")).as(as))
+
+  /** THE deterministic top-k cut of every retrieval ranking: rows numbered
+    * per `keys` partition by (`score` DESC, `id`) — the oracles'
+    * ROW_NUMBER tiebreak — as int column `rank`, ranks above `k` dropped.
+    * Empty `keys` ranks the whole frame. */
+  private[graft] def topK(df: DataFrame, keys: Seq[String], score: String,
+      id: String, k: Int, rank: String = "rk"): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col(score).desc, col(id))).cast("int"))
+      .filter(col(rank) <= k)
+
   private[operators] val normedSql =
     s"""SELECT vec_id, label, embedding AS v, ${dotSql("embedding", "embedding")} AS nrm
        |  FROM embeddings""".stripMargin
@@ -92,10 +107,8 @@ object Similarity {
     * is exact, so the groupBy's arbitrary order matches the oracle's
     * sequential list_sum bit-for-bit. */
   private[graft] def scoredPairs(s: SparkSession, d: String, nQueries: Int): DataFrame =
-    pairSums(elems(s, d).select(col("vec_id"), col("i"), col("xd").as("c")),
-      Seq("i"), nQueries)
-      .select(col("query_id"), col("neighbor_id"),
-        cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
+    cosines(pairSums(elems(s, d).select(col("vec_id"), col("i"), col("xd").as("c")),
+      Seq("i"), nQueries))
 
   private[operators] def topkOracleSql(k: Int, nQueries: Int): String =
     s"""WITH n AS ($normedSql),
@@ -131,10 +144,7 @@ object Similarity {
   val q50 = QueryDef(
     "q50_cosine_topk",
     topkOracleSql(k = 5, nQueries = 10)) { (s, d) =>
-    scoredPairs(s, d, nQueries = 10)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("rk") <= 5)
+    topK(scoredPairs(s, d, nQueries = 10), Seq("query_id"), "cosine", "neighbor_id", 5)
       .orderBy("query_id", "rk")
   }
 
@@ -157,18 +167,21 @@ object Similarity {
   val q51 = QueryDef(
     "q51_ann_ivf_probe",
     ivfOracleSql) { (s, d) =>
-    // the IVF restriction IS the join condition: keying pairSums on
-    // (label, i) means only same-cluster candidate components ever match —
-    // the probe-1 N-per-cluster shape, fully codegen'd
-    pairSums(elems(s, d).select(col("vec_id"), col("label"), col("i"), col("xd").as("c")),
-      Seq("label", "i"), 20)
-      .select(col("query_id"), col("neighbor_id"),
-        cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("rk") <= 3)
-      .orderBy("query_id", "rk")
+    probe1Top(elems(s, d), nQueries = 20, k = 3)
   }
+
+  /** The probe-1 scoring tail shared by q51 (corpus components) and the
+    * maintained-store probes ([[ivfProbe]], [[ivfProbeFromSnapshot]]):
+    * the IVF restriction IS the join condition — keying [[pairSums]] on
+    * (label, i) means only same-cluster candidate components ever match,
+    * the probe-1 N-per-cluster shape, fully codegen'd. `el` is
+    * (vec_id, label, i, xd); top-`k` per query, ranked. */
+  private def probe1Top(el: DataFrame, nQueries: Int, k: Int): DataFrame =
+    topK(cosines(pairSums(
+      el.select(col("vec_id"), col("label"), col("i"), col("xd").as("c")),
+      Seq("label", "i"), nQueries)),
+      Seq("query_id"), "cosine", "neighbor_id", k)
+      .orderBy("query_id", "rk")
 
   private val Planes = 16
 
@@ -300,12 +313,8 @@ object Similarity {
     val qz = elems(s, d)
       .select(col("vec_id"), col("i"),
         round(col("xd") * 127, 0).cast("long").as("c"))
-    pairSums(qz, Seq("i"), 10)
-      .select(col("query_id"), col("neighbor_id"),
-        cos(col("dt"), col("qn"), col("nrm")).as("qcos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("qcos").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("rk") <= 5)
+    topK(cosines(pairSums(qz, Seq("i"), 10), "qcos"),
+      Seq("query_id"), "qcos", "neighbor_id", 5)
       .orderBy("query_id", "rk")
   }
 
@@ -387,55 +396,81 @@ object Similarity {
     "q89_ivf_multiprobe_recall",
     multiprobeOracleSql) { (s, d) =>
     val nQ = 10
-    val npDf = probeLevelsDf(s)
     val el = elems(s, d) // (vec_id, label, i, xd) — i 0-based, a join key only
     val cent = el.groupBy("label", "i")
       .agg((sum(col("xd")).cast("double") / count(lit(1))).cast("decimal(9,7)").as("cd"))
     val qel = el.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("i"), col("xd").as("qc"))
-    // nearest-centroid ranking per query: K·Dim centroid rows broadcast,
-    // exact-decimal L2² like q76, deterministic (d2, label) tiebreak; the
-    // tiny ranked frame then fans out over the probe levels
-    val qd = qel.join(broadcast(cent), Seq("i"))
-      .groupBy(col("query_id"), col("label"))
-      .agg(sum((col("qc") - col("cd")) * (col("qc") - col("cd"))).as("d2"))
-    val probes = qd.withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d2"), col("label"))))
-      .crossJoin(npDf)
-      .filter(col("rn") <= col("nprobe")).select("nprobe", "query_id", "label")
-    val nrm = el.groupBy("vec_id").agg(sum(col("xd") * col("xd")).as("nrm"))
+    // query norms as the exact baseline's pairSums derives them, so the
+    // plan reuses that aggregate's exchange instead of re-reading the corpus
+    val qn = el.groupBy("vec_id").agg(sum(col("xd") * col("xd")).as("qn"))
+      .filter(col("vec_id") < nQ).withColumnRenamed("vec_id", "query_id")
     // candidates = vectors in probed clusters only: the (label) equi-join
     // against the broadcast probe set IS the IVF inverted-list lookup
-    val ivfTop = el.join(broadcast(probes), Seq("label"))
+    val ivf = multiprobeScored(rankedClusters(qel, cent, ProbeLevels.max), qel, qn,
+      el.select("vec_id", "label", "i", "xd"), ProbeLevels)
+    recall5(ivf, scoredPairs(s, d, nQ), ProbeLevels).orderBy("query_id", "nprobe")
+  }
+
+  /** Each query's clusters ranked ONCE by centroid distance — exact-decimal
+    * L2² like q76, deterministic (d2, label) tiebreak — up to `maxLevel`:
+    * (query_id, label, crank). `qel` is (query_id, i, qc), `cent`
+    * (label, i, cd); the K·Dim centroid rows broadcast. */
+  private def rankedClusters(qel: DataFrame, cent: DataFrame, maxLevel: Int): DataFrame =
+    qel.join(broadcast(cent), Seq("i"))
+      .groupBy(col("query_id"), col("label"))
+      .agg(sum((col("qc") - col("cd")) * (col("qc") - col("cd"))).as("d2"))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("d2"), col("label"))))
+      .filter(col("crank") <= maxLevel).select("query_id", "label", "crank")
+
+  /** THE multi-probe scorer, over the corpus (q89) or the maintained store
+    * ([[storeMultiprobeScored]]): each (query, candidate) pair in a ranked
+    * cluster is scored ONCE, carrying its cluster's rank, and only then
+    * fans out to the levels whose probe set holds it (`crank <= nprobe` —
+    * probe sets nest by level), so the dot-product aggregate reads the
+    * max(levels) nearest lists per query, not one copy per level (the
+    * score-once top-k of "Incremental Based Framework for Efficient Top-K
+    * Similarity Search", EDBT 2020). `probes` is (query_id, label,
+    * crank), `qel` (query_id, i, qc), `qn` the query norms (query_id,
+    * qn), `cel` the candidate lists (vec_id, label, i, xd); candidate
+    * norms come from exactly these rows (a vector's components live
+    * wholly inside its list). Returns (nprobe, query_id, neighbor_id,
+    * cosine). */
+  private def multiprobeScored(probes: DataFrame, qel: DataFrame, qn: DataFrame,
+      cel: DataFrame, levels: Seq[Int]): DataFrame = {
+    val nrm = cel.groupBy("vec_id").agg(sum(col("xd") * col("xd")).as("nrm"))
+    cel.join(broadcast(probes), Seq("label"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qel), Seq("query_id", "i"))
-      .groupBy(col("nprobe"), col("query_id"), col("vec_id").as("neighbor_id"))
+      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"), col("crank"))
       .agg(sum(col("xd") * col("qc")).as("dt"))
-      .join(broadcast(nrm.filter(col("vec_id") < nQ)
-        .select(col("vec_id").as("query_id"), col("nrm").as("qn"))), Seq("query_id"))
+      .join(broadcast(qn), Seq("query_id"))
       .join(nrm.select(col("vec_id").as("neighbor_id"), col("nrm")), Seq("neighbor_id"))
+      .withColumn("nprobe", explode(array(levels.map(lit): _*)))
+      .filter(col("crank") <= col("nprobe"))
       .select(col("nprobe"), col("query_id"), col("neighbor_id"),
         cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("nprobe", "query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rk") <= 5).select("nprobe", "query_id", "neighbor_id")
-    val exactTop = scoredPairs(s, d, nQ)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rk") <= 5).select("query_id", "neighbor_id")
-    exactTop.crossJoin(npDf)
-      .join(ivfTop.withColumn("hit", lit(1)), Seq("nprobe", "query_id", "neighbor_id"), "left")
+  }
+
+  /** recall@5 of a multi-probe sweep against the exact top-5: each
+    * (nprobe, query)'s top-5 of `scored` (nprobe, query_id, neighbor_id,
+    * cosine) against the top-5 of the exact pairs `exact` (query_id,
+    * neighbor_id, cosine), the exact side fanned over `levels` so a level
+    * without hits still emits its zero. Returns (query_id, nprobe, hits,
+    * recall5 = hits/5). */
+  private def recall5(scored: DataFrame, exact: DataFrame, levels: Seq[Int]): DataFrame = {
+    val approx = topK(scored, Seq("nprobe", "query_id"), "cosine", "neighbor_id", 5)
+      .select(col("nprobe"), col("query_id"), col("neighbor_id"), lit(1).as("hit"))
+    topK(exact, Seq("query_id"), "cosine", "neighbor_id", 5)
+      .select(col("query_id"), col("neighbor_id"),
+        explode(array(levels.map(lit): _*)).as("nprobe"))
+      .join(approx, Seq("nprobe", "query_id", "neighbor_id"), "left")
       .groupBy("query_id", "nprobe")
       .agg(count(col("hit")).as("hits"),
         (count(col("hit")).cast("double") / 5).as("recall5"))
       .select(col("query_id"), col("nprobe").cast("int").as("nprobe"),
         col("hits"), col("recall5"))
-      .orderBy("query_id", "nprobe")
-  }
-
-  private def probeLevelsDf(s: SparkSession) = {
-    import s.implicits._
-    ProbeLevels.toDF("nprobe")
   }
 
   private val PqM = 8      // subspaces (8 dims each)
@@ -870,27 +905,40 @@ object Similarity {
     * the (label, i) join restricts exactly); scoring is [[pairSums]]'
     * exact-decimal kernel, bit-identical to the monolithic oracle. */
   private[graft] def ivfProbe(st: graft.sources.TableStore,
-      nQueries: Int, k: Int): DataFrame = {
-    val dir = st.table("ivf").filter(col("kind") === 1)
-      .select(col("vec_id"), col("label"))
-    val probed = dir.filter(col("vec_id") < nQueries)
-      .select("label").distinct().collect()
+      nQueries: Int, k: Int): DataFrame =
+    probe1Top(prunedLists(st, queryLabels(st.table("ivf"), nQueries), "ivf.lists"),
+      nQueries, k)
+
+  /** The sorted list labels of the query vectors (vec_id < nQ), from the
+    * tiny kind-1 directory of an ivf table or snapshot — one small
+    * collect. */
+  private def queryLabels(ivf: DataFrame, nQ: Int): Array[Long] =
+    labelsOf(ivf.filter(col("kind") === 1 && col("vec_id") < nQ))
+
+  /** The distinct `label`s of a frame, sorted (what a pruned list read
+    * takes). */
+  private def labelsOf(df: DataFrame): Array[Long] = {
+    val labels = df.select("label").distinct().collect()
       .map(_.getAs[Number]("label").longValue())
-    java.util.Arrays.sort(probed)
+    java.util.Arrays.sort(labels)
+    labels
+  }
+
+  /** Kind-0 list rows of the `labels` clusters: (vec_id, label, i, xd). */
+  private def listRows(ivf: DataFrame, labels: Array[Long]): DataFrame =
+    ivf.filter(col("kind") === 0 && col("label").isin(labels.map(Long.box): _*))
+      .select(col("vec_id"), col("label"), col("i"), col("xd"))
+
+  /** [[listRows]] off the live store, reading ONLY files whose label
+    * range holds one of the sorted `labels` (a superset read; the label
+    * filter restricts exactly), traced as `tag`. */
+  private def prunedLists(st: graft.sources.TableStore, labels: Array[Long],
+      tag: String): DataFrame = {
     val (lists, rep) = st.scanSkippingIds("ivf",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
-      "label", probed)
-    Trace.storeRead("ivf.lists", rep)
-    val el = lists
-      .filter(col("kind") === 0 && col("label").isin(probed.map(Long.box): _*))
-      .select(col("vec_id"), col("label"), col("i"), col("xd").as("c"))
-    pairSums(el, Seq("label", "i"), nQueries)
-      .select(col("query_id"), col("neighbor_id"),
-        cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("rk") <= k)
-      .orderBy("query_id", "rk")
+      "label", labels)
+    Trace.storeRead(tag, rep)
+    listRows(lists, labels)
   }
 
   /** OPTIMIZE RECLUSTER for the maintained IVF store (VERDICT r17 next
@@ -1102,21 +1150,8 @@ object Similarity {
     * result is bit-identical to the live [[ivfProbe]] over the same
     * rows. */
   private[graft] def ivfProbeFromSnapshot(snap: DataFrame,
-      nQueries: Int, k: Int): DataFrame = {
-    val probed = snap.filter(col("kind") === 1 && col("vec_id") < nQueries)
-      .select("label").distinct().collect()
-      .map(_.getAs[Number]("label").longValue())
-    val el = snap
-      .filter(col("kind") === 0 && col("label").isin(probed.map(Long.box): _*))
-      .select(col("vec_id"), col("label"), col("i"), col("xd").as("c"))
-    pairSums(el, Seq("label", "i"), nQueries)
-      .select(col("query_id"), col("neighbor_id"),
-        cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))).cast("int"))
-      .filter(col("rk") <= k)
-      .orderBy("query_id", "rk")
-  }
+      nQueries: Int, k: Int): DataFrame =
+    probe1Top(listRows(snap, queryLabels(snap, nQueries)), nQueries, k)
 
   /** The maintained list store for `d`, memoized per session: the
     * embeddings ingested as four vec_id epochs with a layout-preserving
@@ -1169,6 +1204,29 @@ object Similarity {
     }
   }
 
+  /** Multi-probe scored candidates off the maintained store —
+    * (nprobe, query_id, neighbor_id, cosine) for queries vec_id < nQ at
+    * each of `levels`, through [[multiprobeScored]]: centroids recompose
+    * from the kind-2 additive partials, query components and candidates
+    * come from file-pruned list reads, norms from exactly those pruned
+    * rows. Shared by q223 (the recall sweep), q226/q230/q233 (the hybrid
+    * dials) and q228/q234 (recall at nprobe = 3). */
+  private[graft] def storeMultiprobeScored(st: graft.sources.TableStore,
+      nQ: Int, levels: Seq[Int] = ProbeLevels): DataFrame = {
+    // `levels` bounds the candidate read: probed labels (and so the list
+    // files scheduled) grow with max(levels) — a fixed-nprobe caller
+    // (q228's recall drill) must not pay the full sweep's widest probe.
+    // Query components: pruned to the query vectors' own labels
+    val qel = Dedup.pin(prunedLists(st, queryLabels(st.table("ivf"), nQ), "ivf.qlists")
+      .filter(col("vec_id") < nQ)
+      .select(col("vec_id").as("query_id"), col("i"), col("xd").as("qc")))
+    val probes = Dedup.pin(rankedClusters(qel, centroidsFromStore(st), levels.max))
+    val qn = qel.groupBy("query_id").agg(sum(col("qc") * col("qc")).as("qn"))
+    // candidates: ONLY the probed clusters' list files are scheduled
+    multiprobeScored(probes, qel, qn, prunedLists(st, labelsOf(probes), "ivf.mplists"),
+      levels)
+  }
+
   /** q223: MULTI-PROBE ANN served from the maintained IVF store — the
     * recall/cost dial a production stack tunes (q89's nprobe sweep),
     * with every store read bounded: centroids recompose from the kind-2
@@ -1184,88 +1242,13 @@ object Similarity {
     * recall figure included" is the gated claim. The exact baseline is
     * gate armor (q217's discipline) — at deployment scale only the
     * probed-cluster path runs. */
-  /** Multi-probe scored candidates off the maintained store —
-    * (nprobe, query_id, neighbor_id, cosine) for queries vec_id <
-    * nQueries at every [[ProbeLevels]] level: centroids recompose from
-    * the kind-2 additive partials, query components and candidates come
-    * from file-pruned list reads, norms from exactly those pruned rows.
-    * Shared by q223 (the recall sweep) and q226 (the hybrid fusion
-    * dial), so the store-serving kernel can never drift between them. */
-  private[graft] def storeMultiprobeScored(st: graft.sources.TableStore,
-      s: SparkSession, nQ: Int,
-      levels: Seq[Int] = ProbeLevels): DataFrame = {
-    // `levels` bounds the candidate read: probed labels (and so the list
-    // files scheduled) grow with max(levels) — a fixed-nprobe caller
-    // (q228's recall drill) must not pay the full sweep's widest probe
-    val npDf = { import s.implicits._; levels.toDF("nprobe") }
-    val cent = centroidsFromStore(st)
-    val dir = st.table("ivf").filter(col("kind") === 1)
-      .select(col("vec_id"), col("label"))
-    def prunedLists(labels: Array[Long], tag: String): DataFrame = {
-      val (lists, rep) = st.scanSkippingIds("ivf",
-        Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
-        "label", labels)
-      Trace.storeRead(tag, rep)
-      lists.filter(col("kind") === 0 && col("label").isin(labels.map(Long.box): _*))
-        .select(col("vec_id"), col("label"), col("i"), col("xd"))
-    }
-    // query components: pruned to the query vectors' own labels (from
-    // the tiny kind-1 directory)
-    val qLabels = dir.filter(col("vec_id") < nQ)
-      .select("label").distinct().collect()
-      .map(_.getAs[Number]("label").longValue())
-    java.util.Arrays.sort(qLabels)
-    val qel = Dedup.pin(prunedLists(qLabels, "ivf.qlists")
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("i"), col("xd").as("qc")))
-    // nearest-centroid ranking (q89's expression over store inputs)
-    val qd = qel.join(broadcast(cent), Seq("i"))
-      .groupBy(col("query_id"), col("label"))
-      .agg(sum((col("qc") - col("cd")) * (col("qc") - col("cd"))).as("d2"))
-    val probes = Dedup.pin(qd.withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d2"), col("label"))))
-      .crossJoin(npDf)
-      .filter(col("rn") <= col("nprobe")).select("nprobe", "query_id", "label"))
-    // candidates: ONLY the probed clusters' list files are scheduled
-    val probedLabels = probes.select("label").distinct().collect()
-      .map(_.getAs[Number]("label").longValue())
-    java.util.Arrays.sort(probedLabels)
-    val cel = prunedLists(probedLabels, "ivf.mplists")
-    val nrm = cel.groupBy("vec_id").agg(sum(col("xd") * col("xd")).as("nrm"))
-    val qn = qel.groupBy("query_id").agg(sum(col("qc") * col("qc")).as("qn"))
-    cel.join(broadcast(probes), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qel), Seq("query_id", "i"))
-      .groupBy(col("nprobe"), col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("xd") * col("qc")).as("dt"))
-      .join(broadcast(qn), Seq("query_id"))
-      .join(nrm.select(col("vec_id").as("neighbor_id"), col("nrm")), Seq("neighbor_id"))
-      .select(col("nprobe"), col("query_id"), col("neighbor_id"),
-        cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
-  }
-
   val q223 = QueryDef(
     "q223_maintained_multiprobe",
     multiprobeOracleSql) { (s, d) =>
     val nQ = 10
-    val npDf = probeLevelsDf(s)
-    val ivfTop = storeMultiprobeScored(maintainedIvf(s, d), s, nQ)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("nprobe", "query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rk") <= 5).select("nprobe", "query_id", "neighbor_id")
     // exact baseline — recall reference only (gate armor, never the
     // serving path); same q50 kernel as q89's
-    val exactTop = scoredPairs(s, d, nQ)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rk") <= 5).select("query_id", "neighbor_id")
-    exactTop.crossJoin(npDf)
-      .join(ivfTop.withColumn("hit", lit(1)), Seq("nprobe", "query_id", "neighbor_id"), "left")
-      .groupBy("query_id", "nprobe")
-      .agg(count(col("hit")).as("hits"),
-        (count(col("hit")).cast("double") / 5).as("recall5"))
-      .select(col("query_id"), col("nprobe").cast("int").as("nprobe"),
-        col("hits"), col("recall5"))
+    recall5(storeMultiprobeScored(maintainedIvf(s, d), nQ), scoredPairs(s, d, nQ), ProbeLevels)
       .orderBy("query_id", "nprobe")
   }
 
@@ -1411,31 +1394,20 @@ object Similarity {
       // everything from here on is store-wide (recall sweeps, recluster
       // rewrite, exact baseline) — full-volume width
       EventsOps.serveWidth(s, inBytes)
-      def recall5(tag: String): DataFrame = {
-        val ivfTop = storeMultiprobeScored(st, s, nQ, levels = Seq(3))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-          .filter(col("rk") <= 5).select("query_id", "neighbor_id")
-        val exactTop = scoredPairs(s, d, nQ)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-          .filter(col("rk") <= 5).select("query_id", "neighbor_id")
-        exactTop
-          .join(ivfTop.withColumn("hit", lit(1)), Seq("query_id", "neighbor_id"), "left")
-          .groupBy("query_id")
-          .agg(count(col("hit")).as(s"hits_$tag"),
-            (count(col("hit")).cast("double") / 5).as(s"recall_$tag"))
-      }
+      def recall(tag: String): DataFrame =
+        recall5(storeMultiprobeScored(st, nQ, levels = Seq(3)), scoredPairs(s, d, nQ), Seq(3))
+          .select(col("query_id"), col("hits").as(s"hits_$tag"),
+            col("recall5").as(s"recall_$tag"))
       if (empty) {
         // schema-only shape for an empty corpus (no probes to measure)
-        recall5("before").join(recall5("after"), Seq("query_id"))
+        recall("before").join(recall("after"), Seq("query_id"))
           .withColumn("mean_before", lit(0.0)).withColumn("mean_after", lit(0.0))
           .withColumn("non_regressed", lit(1))
       } else {
         // EAGER before-read: the recluster below rewrites the store
-        val before = Dedup.pin(recall5("before"))
+        val before = Dedup.pin(recall("before"))
         reclusterIvf(st)
-        val after = Dedup.pin(recall5("after"))
+        val after = Dedup.pin(recall("after"))
         val joined = before.join(after, Seq("query_id"))
         val m = joined.agg(
           (sum(col("hits_before")).cast("double") / (5.0 * nQ)).as("mean_before"),
@@ -1781,23 +1753,12 @@ object Similarity {
         // full-volume width from here on
         EventsOps.serveWidth(s, inBytes)
         // exact baseline over the SAME drifted corpus (gate armor)
-        val exactTop = pairSums(
+        val exact = cosines(pairSums(
           batchComponents(drifted).select(col("vec_id"), col("i"), col("xd").as("c")),
-          Seq("i"), nQ)
-          .select(col("query_id"), col("neighbor_id"),
-            cos(col("dt"), col("qn"), col("nrm")).as("cosine"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-          .filter(col("rk") <= 5).select("query_id", "neighbor_id")
-        def recallOf(st: graft.sources.TableStore, name: String): DataFrame = {
-          val top = storeMultiprobeScored(st, s, nQ, levels = Seq(3))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-            .filter(col("rk") <= 5).select("query_id", "neighbor_id")
-          exactTop.join(top.withColumn("hit", lit(1)),
-            Seq("query_id", "neighbor_id"), "left")
-            .agg((count(col("hit")).cast("double") / (5.0 * nQ)).as(name))
-        }
+          Seq("i"), nQ))
+        def recallOf(st: graft.sources.TableStore, name: String): DataFrame =
+          recall5(storeMultiprobeScored(st, nQ, levels = Seq(3)), exact, Seq(3))
+            .agg((coalesce(sum(col("hits")), lit(0L)).cast("double") / (5.0 * nQ)).as(name))
         val rec = recallOf(stM, "recall_maintained")
           .crossJoin(recallOf(stF, "recall_frozen"))
           .withColumn("non_regressed",

@@ -602,11 +602,15 @@ final class TableStore(spark: SparkSession, root: String) {
     * stats eliminated. Files without stats are always read. */
   def scanSkipping(name: String,
                    ranges: Seq[FileStats.ColumnRange]): (DataFrame, FileStats.ScanReport) = {
-    val pred = ranges.flatMap { r =>
-      r.lo.map(v => col(r.column) >= lit(v)) ++ r.hi.map(v => col(r.column) <= lit(v))
-    }.reduceOption(_ && _).getOrElse(lit(true))
-    scanWhere(name, FileStats.mightMatch(_, ranges), pred)
+    scanWhere(name, FileStats.mightMatch(_, ranges), rangePred(ranges))
   }
+
+  /** The exact row predicate of a skipping scan: every range's bounds AND
+    * the `extra` conjuncts (`true` when there are none). */
+  private def rangePred(ranges: Seq[FileStats.ColumnRange], extra: Column*): Column =
+    (ranges.flatMap { r =>
+      r.lo.map(v => col(r.column) >= lit(v)) ++ r.hi.map(v => col(r.column) <= lit(v))
+    } ++ extra).reduceOption(_ && _).getOrElse(lit(true))
 
   /** [[scanSkipping]] plus an IN-set prune: read only files that satisfy
     * every range AND whose stats admit at least one of `values` in
@@ -622,13 +626,10 @@ final class TableStore(spark: SparkSession, root: String) {
     // empty probe set: no row can match — only stat-less files are even
     // listed (conservatism contract) and the false predicate drops them
     if (values.isEmpty) return scanWhere(name, _ => false, lit(false))
-    val pred = (ranges.flatMap { r =>
-      r.lo.map(v => col(r.column) >= lit(v)) ++ r.hi.map(v => col(r.column) <= lit(v))
-    } :+ col(inCol).isin(values: _*)).reduce(_ && _)
     scanWhere(name,
       fs => FileStats.mightMatch(fs, ranges) &&
         FileStats.mightContainAny(fs, inCol, values),
-      pred)
+      rangePred(ranges, col(inCol).isin(values: _*)))
   }
 
   /** [[scanSkipping]] plus a sorted-id file prune: read only files that
@@ -647,27 +648,11 @@ final class TableStore(spark: SparkSession, root: String) {
                       idCol: String, sortedIds: Array[Long])
       : (DataFrame, FileStats.ScanReport) = {
     if (sortedIds.isEmpty) return scanWhere(name, _ => false, lit(false))
-    val pred = ranges.flatMap { r =>
-      r.lo.map(v => col(r.column) >= lit(v)) ++ r.hi.map(v => col(r.column) <= lit(v))
-    }.reduceOption(_ && _).getOrElse(lit(true))
     scanWhere(name,
       fs => FileStats.mightMatch(fs, ranges) &&
         FileStats.mightContainAnyId(fs, idCol, sortedIds),
-      pred)
+      rangePred(ranges))
   }
-
-  /** The small-probe-set sibling of [[scanSkippingIds]] for arbitrary
-    * (e.g. string) values — the term-lookup prune of a token-clustered
-    * index table. Probe sets here are a few terms by contract, so the
-    * IN-set is cheap as a row predicate too and this is exactly
-    * [[scanSkippingIn]] (ADVICE r15: the two bodies had drifted into
-    * near-identical triplicate); kept as a named entry point because
-    * "values" callers read the result as a SUPERSET and re-apply their
-    * own exact filter — which is idempotent over the delegate's. */
-  def scanSkippingValues(name: String, ranges: Seq[FileStats.ColumnRange],
-                         valueCol: String, values: Seq[Any])
-      : (DataFrame, FileStats.ScanReport) =
-    scanSkippingIn(name, ranges, valueCol, values)
 
   /** Parsed stats sidecars of a snapshot's `files`, keyed by rel path —
     * shared by [[scanWhere]] and the metadata-only counters below. Pure

@@ -60,7 +60,7 @@ class IndexIngestSpec extends SparkSpec {
     // a one-term probe schedules strictly fewer kind-0 files than the
     // snapshot holds (string min/max pruning is REAL, and it survived
     // the policy compaction above)
-    val (df, rep) = st.scanSkippingValues("index",
+    val (df, rep) = st.scanSkippingIn("index",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", Seq("w00_0"))
     rep.filesRead should be < rep.filesTotal
@@ -273,5 +273,18 @@ class IndexIngestSpec extends SparkSpec {
     val mono = SearchOps.q165.build(spark, dir).collect().map(_.toSeq)
     streamed should not be empty
     streamed.toSeq shouldBe mono.toSeq
+  }
+
+  test("a BM25 serve bounds its matched-doc collect in one job") {
+    val st = SearchOps.maintainedIndex(spark, "/root/testdata/sf0.001")
+    val terms = Seq("dup", "window")
+    val warm = SearchOps.bm25FromIndex(st, terms, 20).collect()
+    warm should not be empty
+    // matched doc ids are read once, bounded at the ceiling + 1, instead
+    // of a count() and then a collect() of the same frame (4 SQL
+    // executions and 13 jobs before)
+    val serve = sparkActivity(SearchOps.bm25FromIndex(st, terms, 20).collect())
+    serve.sqlExecutions shouldBe 3
+    serve.jobs should be <= 10
   }
 }

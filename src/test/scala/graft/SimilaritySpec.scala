@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Multiply
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import graft.operators.Similarity
 
 /** Recall invariants of the multi-probe IVF gate query (q89). The corpus
@@ -50,5 +56,54 @@ class SimilaritySpec extends SparkSpec {
     val kept = Similarity.q114.build(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     kept shouldBe Map(0L -> true, 1L -> false, 2L -> false, 3L -> true, 4L -> true)
+  }
+
+  /** Grouping columns of every aggregate in `df`'s optimized plan that
+    * sums products (dot products, norms, centroid distances). */
+  private def productSumGroupings(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.find {
+          case s: Sum => s.child.isInstanceOf[Multiply]
+          case _ => false
+        }.isDefined) =>
+        a.groupingExpressions.flatMap(_.references.map(_.name))
+    }
+
+  test("a multiprobe candidate is scored once across nprobe levels") {
+    // the dot-product aggregate groups by (query, neighbour) and the
+    // neighbour's cluster rank; the levels fan out after it
+    val q89 = productSumGroupings(Similarity.q89.build(spark, sf))
+    val store = productSumGroupings(Similarity.storeMultiprobeScored(
+      Similarity.maintainedIvf(spark, sf), nQ = 10))
+    for ((name, groupings) <- Seq("q89" -> q89, "storeMultiprobeScored" -> store)) {
+      withClue(s"$name: $groupings ") {
+        groupings.foreach(_ should not contain "nprobe")
+        groupings.exists(_.contains("crank")) shouldBe true
+      }
+    }
+  }
+
+  test("the retrieval ranking kernels are written once, in their home module") {
+    val root = Paths.get("src/main/scala/graft/operators")
+    val walk = Files.walk(root)
+    val files: List[Path] = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+    files should not be empty
+    // (home file, what, literal): the literal may appear in its home only
+    val rules = Seq(
+      ("Similarity.scala", "cosine top-k tiebreak", "orderBy(col(\"cosine\").desc"),
+      ("SearchOps.scala", "RRF constant", "lit(60)"),
+      ("SearchOps.scala", "Okapi expression", "lit(1.2) * (lit(0.25)"))
+    val hits = files.flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      def line(at: Int) = text.substring(0, at).count(_ == '\n') + 1
+      rules.filterNot { case (home, _, _) => p.equals(root.resolve(home)) }
+        .flatMap { case (_, what, lit) =>
+          java.util.regex.Pattern.quote(lit).r.findAllMatchIn(text)
+            .map(m => s"$p:${line(m.start)}: $what")
+        }
+    }
+    withClue(hits.mkString("\n", "\n", "\n")) { hits shouldBe empty }
   }
 }

@@ -14,9 +14,15 @@ exactly the driver gate's round-1 verdict — 59 PASS + the 11 hash-fails
 decimal-rendering rule in render_issues() — zero false positives/negatives
 over 70 oracled queries.
 """
-import sys, json, glob, os
+import sys, json, glob, os, shutil, tempfile
 from decimal import Decimal
 import duckdb
+
+# DuckDB defaults to 80% of RAM and holds it; past this limit it spills to
+# a scratch dir under /tmp instead (an oracle that cannot spill reports an
+# out-of-memory FAIL), so checking a dump stays a small neighbour to a
+# Verify or test JVM on the same machine.
+MEMORY_LIMIT = "2GB"
 
 def canon(rows):
     out = []
@@ -43,8 +49,9 @@ def render_issues(row):
                 bad.append((padded, norm))
     return bad
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
+def main(sf_dir, out_dir, spill_dir):
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                 "temp_directory": spill_dir})
     for p in glob.glob(f"{sf_dir}/*.parquet"):
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
@@ -99,4 +106,9 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    spill = tempfile.mkdtemp(prefix="graft-check-", dir="/tmp")
+    try:
+        rc = main(sys.argv[1], sys.argv[2], spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+    sys.exit(rc)
