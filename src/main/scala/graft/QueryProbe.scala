@@ -16,7 +16,8 @@ import graft.obs.Trace
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   *      SPARK_GRAFT_PROBE_RUNS (default 2), SPARK_GRAFT_PROBE_PLAN=1 to
   *      run each query once and dump its executed (AQE-final)
-  *      .explain("formatted") plan instead of timing,
+  *      .explain("formatted") plan, without AQE's per-run numbering
+  *      ([[stablePlan]]), instead of timing,
   *      SPARK_GRAFT_PROBE_JOBS=1 to attribute every Spark job and SQL
   *      execution to its call site, SPARK_GRAFT_PROBE_CONF="k=v;k=v" to
   *      A/B session confs.
@@ -73,8 +74,8 @@ object QueryProbe {
         // the repair fingerprint uses control-char concat separators, which
         // leak into the printed plan and make the output "binary" to
         // grep/diff tooling — render them as visible hex escapes instead
-        println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+        println(stablePlan(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
           .flatMap(c => if (c < 0x20 && c != '\n' && c != '\t' && c != '\r')
             f"\\x${c.toInt}%02x" else c.toString))
       } else (1 to runs).foreach { i =>
@@ -106,6 +107,21 @@ object QueryProbe {
       }
     }
     spark.stop()
+  }
+
+  /** `plan` without AQE's run-to-run numbering: exchange plan ids are
+    * dropped, and whole-stage-codegen and query-stage ids, which follow
+    * the order stages happen to finish, are renumbered 1, 2, … in order
+    * of first appearance. Two dumps of one commit then diff clean. */
+  private[graft] def stablePlan(plan: String): String = {
+    def renumber(s: String, r: scala.util.matching.Regex): String = {
+      val rank = r.findAllMatchIn(s).map(_.group(2)).distinct.zipWithIndex.toMap
+      r.replaceAllIn(s, m =>
+        scala.util.matching.Regex.quoteReplacement(s"${m.group(1)}${rank(m.group(2)) + 1}"))
+    }
+    Seq("""(\[codegen id : )(\d+)""".r,
+        """(QueryStage\nOutput \[\d+\]: [^\n]*\nArguments: )(\d+)""".r)
+      .foldLeft(plan.replaceAll("""(, )?\[plan_id=\d+\]""", ""))(renumber)
   }
 
   private def render(e: Trace.Event): String = e match {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryDef, Tables}
 import graft.functions.TextFunctions._
@@ -623,20 +623,19 @@ object Dedup {
       ceiling: Long = MaxBroadcastCandidateDocs)
       : Option[(Array[Long], DataFrame)] = {
     val plan = bandsN(newSig)
-    val rows = plan.limit(boundedProbeLimit(ceiling)).collect()
-    if (rows.length > ceiling) return None
-    val keySet = new scala.collection.mutable.LongMap[Boolean]()
-    rows.foreach { r =>
-      val k = (r.getInt(2).toLong << 60) +
-        java.lang.Long.parseLong(r.getString(3).substring(0, 15), 16)
-      keySet.update(k, true)
+    collectUnder(plan, ceiling).map { rows =>
+      val keySet = new scala.collection.mutable.LongMap[Boolean]()
+      rows.foreach { r =>
+        val k = (r.getInt(2).toLong << 60) +
+          java.lang.Long.parseLong(r.getString(3).substring(0, 15), 16)
+        keySet.update(k, true)
+      }
+      val keys = new Array[Long](keySet.size)
+      var i = 0
+      keySet.foreach { case (k, _) => keys(i) = k; i += 1 }
+      java.util.Arrays.sort(keys)
+      (keys, s.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema))
     }
-    val keys = new Array[Long](keySet.size)
-    var i = 0
-    keySet.foreach { case (k, _) => keys(i) = k; i += 1 }
-    java.util.Arrays.sort(keys)
-    Some((keys,
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema)))
   }
 
   /** Incremental near-dup pairs (VERDICT r2 #6): dedupe `newDocs` against
@@ -722,11 +721,15 @@ object Dedup {
     * broadcast if runtime stats allow. ~4M ids ≈ tens of MB broadcast. */
   private[graft] val MaxBroadcastCandidateDocs = 4000000L
 
-  /** ceiling+1 as an Int LIMIT. A ceiling whose +1 does not fit an Int
-    * is refused: no probe may collect that many rows to the driver. */
-  private[graft] def boundedProbeLimit(ceiling: Long): Int = {
+  /** The one bounded driver collect: `df`'s rows when it has at most
+    * `ceiling`, else None. One LIMIT ceiling + 1 proves which side of the
+    * ceiling the frame is on AND returns the rows when under it, so no
+    * count runs first. A ceiling whose + 1 does not fit an Int LIMIT is
+    * refused: no probe may collect that many rows to the driver. */
+  private[graft] def collectUnder(df: DataFrame, ceiling: Long): Option[Array[Row]] = {
     require(ceiling < Int.MaxValue - 1L, s"probe ceiling $ceiling exceeds the driver collect bound")
-    (ceiling + 1L).toInt
+    val rows = df.limit((ceiling + 1L).toInt).collect()
+    if (rows.length > ceiling) None else Some(rows)
   }
 
   /** [[incrementalLshKernelPruned]] over plain signature frames — the
@@ -870,18 +873,18 @@ object Dedup {
         // CollectLimitExec may take several scale-up waves on a
         // many-partition frame, so "one job" is the under-ceiling norm,
         // not a guarantee.
-        val probe = candDocsBase.limit(boundedProbeLimit(maxBroadcastCand))
-          .collect().map(_.getLong(0))
-        if (probe.length <= maxBroadcastCand) {
-          val n = probe.length.toLong
-          Trace.record(Trace.Candidates(n))
-          java.util.Arrays.sort(probe)
-          import s.implicits._
-          (broadcast(probe.toSeq.toDF("doc_id")), Some(probe), Some(n))
-        } else {
-          val n = candDocsBase.count()
-          Trace.record(Trace.Candidates(n))
-          (candDocsBase, None, Some(n))
+        collectUnder(candDocsBase, maxBroadcastCand) match {
+          case Some(rows) =>
+            val probe = rows.map(_.getLong(0))
+            val n = probe.length.toLong
+            Trace.record(Trace.Candidates(n))
+            java.util.Arrays.sort(probe)
+            import s.implicits._
+            (broadcast(probe.toSeq.toDF("doc_id")), Some(probe), Some(n))
+          case None =>
+            val n = candDocsBase.count()
+            Trace.record(Trace.Candidates(n))
+            (candDocsBase, None, Some(n))
         }
       }
     // verification set = stored corpus hashes ∪ batch hashes, pruned to
@@ -1764,14 +1767,15 @@ object Dedup {
     // (the pruned kind-5 scan + min-per-component aggregate) instead of
     // the ids-collect + checkpoint + count triple the distributed loop
     // needed. Identical hop semantics, same round budget.
-    val rawArr = raw.limit(boundedProbeLimit(MaxBroadcastCandidateDocs))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (rawArr.length <= MaxBroadcastCandidateDocs) {
-      val s = raw.sparkSession
-      val resolved = driverResolveMappings(s, st, rawArr)
-      import s.implicits._
-      return rawArr.map { case (d, _) => (d, resolved(d)) }.toSeq
-        .toDF("doc_id", "component")
+    collectUnder(raw, MaxBroadcastCandidateDocs) match {
+      case Some(rows) =>
+        val rawArr = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val s = raw.sparkSession
+        val resolved = driverResolveMappings(s, st, rawArr)
+        import s.implicits._
+        return rawArr.map { case (d, _) => (d, resolved(d)) }.toSeq
+          .toDF("doc_id", "component")
+      case None => ()
     }
     var cur = pin(raw)
     var rounds = 0
@@ -1922,11 +1926,10 @@ object Dedup {
       // skew): the distributed dataflow below, unchanged.
       val pairsLocal: Either[DataFrame, Array[(Long, Long)]] =
         try {
-          val a = k.pairs.select(col("doc_a"), col("doc_b"))
-            .limit(boundedProbeLimit(MaxBroadcastCandidateDocs)).collect()
-          if (a.length <= MaxBroadcastCandidateDocs)
-            Right(a.map(r => (r.getLong(0), r.getLong(1))))
-          else Left(pin(k.pairs.select(col("doc_a"), col("doc_b"))))
+          val pairs = k.pairs.select(col("doc_a"), col("doc_b"))
+          collectUnder(pairs, MaxBroadcastCandidateDocs)
+            .map(a => a.map(r => (r.getLong(0), r.getLong(1))))
+            .toRight(pin(pairs))
         } finally k.release()
       val (labelRows, maps) = pairsLocal match {
         case Right(prs) => driverEpochContraction(s, st, prs)
@@ -1937,15 +1940,12 @@ object Dedup {
       // endpoint ids under the kernel's broadcast ceiling drive the
       // kind-4/kind-5 file prunes; over it, the same skew fallback as
       // the kernel — unpruned scans, no driver collect
-      val epIds = {
-        // one bounded collect (ceiling+1) instead of count-then-collect —
-        // same driver bound, one job fewer per epoch
-        val a = endpoints.limit(boundedProbeLimit(MaxBroadcastCandidateDocs))
-          .collect().map(_.getLong(0))
-        if (a.length <= MaxBroadcastCandidateDocs) {
-          java.util.Arrays.sort(a)
-          Some(a)
-        } else None
+      // one bounded collect instead of count-then-collect — same driver
+      // bound, one job fewer per epoch
+      val epIds = collectUnder(endpoints, MaxBroadcastCandidateDocs).map { rows =>
+        val a = rows.map(_.getLong(0))
+        java.util.Arrays.sort(a)
+        a
       }
       val rawStored = stateLabelsFor(st)(epIds)
         .join(endpoints, Seq("doc_id"), "left_semi")

@@ -163,19 +163,21 @@ object DedupClusters {
     // checkpoint+count barriers. Over the ceiling: the distributed loop
     // below, unchanged (the same skew trade as the kernel's candidate
     // collect; the probe's limit scan is the only extra cost).
-    val lim = Dedup.boundedProbeLimit(driverCeiling)
-    val eArr = edges0.select("src", "dst").limit(lim).collect()
-    if (eArr.length <= driverCeiling) {
-      val iArr = init.map(_.select("doc_id", "component").limit(lim).collect())
-      if (iArr.forall(_.length <= driverCeiling)) {
+    val local = for {
+      eArr <- Dedup.collectUnder(edges0.select("src", "dst"), driverCeiling)
+      iArr <- init.fold(Option(Array.empty[org.apache.spark.sql.Row]))(i =>
+        Dedup.collectUnder(i.select("doc_id", "component"), driverCeiling))
+    } yield (eArr, iArr)
+    local match {
+      case Some((eArr, iArr)) =>
         val s = edges0.sparkSession
         // seeded label = min init component per doc, else the doc itself
         // (exactly the distributed loop's coalesce(min(c0), doc_id))
         val initMap = new scala.collection.mutable.LongMap[Long]()
-        iArr.foreach(_.foreach { r =>
+        iArr.foreach { r =>
           val d = r.getLong(0); val c = r.getLong(1)
           if (c < initMap.getOrElse(d, Long.MaxValue)) initMap.update(d, c)
-        })
+        }
         val edges = eArr.map(r => (r.getLong(0), r.getLong(1)))
         val extra = new scala.collection.mutable.ArrayBuffer[Long]()
         initMap.foreach { case (k, _) => extra += k }
@@ -191,7 +193,7 @@ object DedupClusters {
         initMap.foreach { case (k, _) => emit(k) }
         import s.implicits._
         return out.toSeq.toDF("doc_id", "component")
-      }
+      case None => ()
     }
     val edges = edges0.cache()
     val nodes = edges.select(col("src").as("doc_id")).distinct()

@@ -671,22 +671,22 @@ object SearchOps {
     * posting frame matched (kind-1 rows sort by doc_id within their kind
     * range, so the id probe skips files) — the read is then
     * matched-bounded, not corpus-proportional. Guarded by the kernel's
-    * broadcast ceiling with ONE bounded collect (ceiling + 1 ids, then a
-    * length test — the `Dedup` idiom): a stop-term probe over the cap
-    * falls back to the full kind-1 slice instead of a driver collect. */
+    * broadcast ceiling with ONE bounded collect
+    * ([[Dedup.collectUnder]]): a stop-term probe over the cap falls back
+    * to the full kind-1 slice instead of a driver collect. */
   private def matchedSidecar(st: graft.sources.TableStore, table: String,
       tf: org.apache.spark.sql.DataFrame, tag: String): org.apache.spark.sql.DataFrame = {
-    val ids = tf.select("doc_id").distinct()
-      .limit(Dedup.boundedProbeLimit(Dedup.MaxBroadcastCandidateDocs))
-      .collect().map(_.getLong(0))
-    if (ids.length <= Dedup.MaxBroadcastCandidateDocs) {
-      java.util.Arrays.sort(ids)
-      val (df, rep) = st.scanSkippingIds(table,
-        Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
-        "doc_id", ids)
-      Trace.storeRead(tag, rep)
-      df.filter(col("kind") === 1)
-    } else st.table(table).filter(col("kind") === 1)
+    Dedup.collectUnder(tf.select("doc_id").distinct(), Dedup.MaxBroadcastCandidateDocs) match {
+      case Some(rows) =>
+        val ids = rows.map(_.getLong(0))
+        java.util.Arrays.sort(ids)
+        val (df, rep) = st.scanSkippingIds(table,
+          Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
+          "doc_id", ids)
+        Trace.storeRead(tag, rep)
+        df.filter(col("kind") === 1)
+      case None => st.table(table).filter(col("kind") === 1)
+    }
   }
 
   /** A deterministic PER-QUERY lexical workload derived from the index

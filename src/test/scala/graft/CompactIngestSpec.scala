@@ -19,9 +19,9 @@ class CompactIngestSpec extends SparkSpec {
       st.create("t", batch(0).limit(0))
       st.appendBatch("t", 0L, batch(0).repartition(4))
       st.appendBatch("t", 1L, batch(1).repartition(4))
-      val filesBefore = st.currentFileCount("t")
+      val filesBefore = st.fileCount("t")
       st.compact("t")
-      val filesAfter = st.currentFileCount("t")
+      val filesAfter = st.fileCount("t")
       filesAfter should be < filesBefore
       st.table("t").count() shouldBe 100L
       // a committed epoch replayed AFTER compaction must still no-op

@@ -16,12 +16,15 @@ class GuardsSpec extends SparkSpec {
   }
 
   test("a probe ceiling whose LIMIT would not fit an Int is refused") {
-    Dedup.boundedProbeLimit(Dedup.MaxBroadcastCandidateDocs) shouldBe
-      (Dedup.MaxBroadcastCandidateDocs + 1L).toInt
-    Dedup.boundedProbeLimit(-1L) shouldBe 0
-    Dedup.boundedProbeLimit(Int.MaxValue - 2L) shouldBe Int.MaxValue - 1
-    an[IllegalArgumentException] should be thrownBy Dedup.boundedProbeLimit(Int.MaxValue - 1L)
-    an[IllegalArgumentException] should be thrownBy Dedup.boundedProbeLimit(Long.MaxValue)
+    val df = spark.range(3).toDF("id")
+    Dedup.collectUnder(df, Dedup.MaxBroadcastCandidateDocs).map(_.length) shouldBe Some(3)
+    Dedup.collectUnder(df, -1L) shouldBe None // LIMIT 0: no row fits
+    Dedup.collectUnder(df, Int.MaxValue - 2L).map(_.length) shouldBe Some(3)
+    an[IllegalArgumentException] should be thrownBy Dedup.collectUnder(df, Int.MaxValue - 1L)
+    an[IllegalArgumentException] should be thrownBy Dedup.collectUnder(df, Long.MaxValue)
+    // the ceiling + 1st row is what tells "over" from "exactly at"
+    Dedup.collectUnder(df, 2L) shouldBe None
+    Dedup.collectUnder(df, 3L).map(_.map(_.getLong(0)).toSeq) shouldBe Some(Seq(0L, 1L, 2L))
   }
 
   test("windowlessRankDesc ranks reduced frames and rejects unreduced ones") {

@@ -169,13 +169,23 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("a sidecar pre-written without a version flip is not adopted by the next publish") {
     val st = freshStore()
-    st.create("t", Seq((1, "a")).toDF("id", "v"))
-    // simulate an ALTER that crashed after writing its sidecar but before
-    // flipping VERSION: v1.addcols exists, VERSION still says 0
-    Files.write(Paths.get(s"${st.rootDir}/t/v1.addcols"),
-      "ADD\t1\tphantom\tBIGINT\t99".getBytes)
-    st.update("t", col("id") === 1, Map("v" -> lit("z"))) // publishes v1
-    st.table("t").columns should not contain "phantom"
+    st.create("t", Seq((1, "a")).toDF("id", "v"), Seq(PrimaryKey(Seq("id"))))
+    // simulate an ALTER that crashed after writing its record but before
+    // flipping VERSION: v1.snap exists, VERSION still says 0. The record
+    // carries a phantom column, a phantom constraint and a phantom
+    // ledger entry
+    Files.write(Paths.get(s"${st.rootDir}/t/v1.snap"), Seq(
+      "PART\t", "ENTRY\t.\tv0", "ADD\t1\tphantom\tBIGINT\t99",
+      "PK\tid", "UNIQUE\tv", "BATCH\tghost\t7").mkString("\n").getBytes)
+    // publishes v1 over v0's files too, so an adopted ADD (newer than v0)
+    // would fill the phantom column into v0's rows
+    st.appendBatch("t", 0L, Seq((2, "b")).toDF("id", "v")) shouldBe true
+    st.table("t").columns.toSeq shouldBe Seq("id", "v")
+    val reopened = new TableStore(spark, st.rootDir)
+    reopened.table("t").columns.toSeq shouldBe Seq("id", "v")
+    reopened.constraintsOf("t") shouldBe Seq(PrimaryKey(Seq("id")))
+    reopened.batchCommitted("t", 7L, "ghost") shouldBe false
+    reopened.batchCommitted("t", 0L) shouldBe true
   }
 
   test("physical rewrite after a drop leaves the bytes behind for good") {

@@ -115,4 +115,27 @@ class TraceSpec extends SparkSpec {
     }
     withClue(hits.mkString("\n", "\n", "\n")) { hits shouldBe empty }
   }
+
+  test("QueryProbe's plan dump takes out AQE's run-to-run numbering") {
+    // one plan as two runs print it: the two stages finished in the
+    // other order, so their codegen and stage ids swap, and the exchange
+    // plan ids differ
+    def run(a: Int, b: Int, stageA: Int, stageB: Int, planId: Int) =
+      s"""(1) Scan [codegen id : $a]
+         |(2) Exchange
+         |Arguments: hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=$planId]
+         |(3) ShuffleQueryStage
+         |Output [1]: [k#1]
+         |Arguments: $stageA
+         |(4) Scan [codegen id : $b]
+         |(5) BroadcastQueryStage
+         |Output [1]: [k#2]
+         |Arguments: $stageB
+         |(6) Join [codegen id : $a]""".stripMargin
+    val first = QueryProbe.stablePlan(run(4, 5, 3, 4, 101))
+    QueryProbe.stablePlan(run(5, 4, 4, 3, 207)) shouldBe first
+    first should include("(6) Join [codegen id : 1]") // same stage as (1)
+    first should include("Output [1]: [k#2]\nArguments: 2")
+    first should not include "plan_id"
+  }
 }
