@@ -7,8 +7,8 @@ import graft.obs.Trace
   * against SPARK_GRAFT_SF_DIR, timing each run inside a
   * [[graft.obs.Trace]] capture and printing its events after the run's
   * `[probe]` line — per-epoch walls, phase walls (q227's build/serve),
-  * pruned store reads (files read of files total) and dedup candidate
-  * counts — so a slow maintained-store gate decomposes into its
+  * pruned store reads (files read of files total), dedup candidate
+  * counts and session-memo hits and builds — so a slow maintained-store gate decomposes into its
   * epoch/maintenance/serve parts instead of one opaque number. Same
   * session shape as Bench.
   *
@@ -129,5 +129,6 @@ object QueryProbe {
     case Trace.Phase(name, sec) => f"phase $name: $sec%.2f s"
     case Trace.StoreRead(tag, total, read) => s"read $tag: $read/$total files"
     case Trace.Candidates(n) => s"candidates: $n"
+    case Trace.Memo(kind, hit) => s"memo $kind: ${if (hit) "hit" else "built"}"
   }
 }

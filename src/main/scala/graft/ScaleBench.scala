@@ -150,23 +150,19 @@ object ScaleBench {
 
     buildReplica(spark, base, out)
 
-    // SPARK_GRAFT_COLD_MEMO=1: release the memoized LSH pair frames, the
-    // co-purchase graph and every memoized store (Epochs.release: the
-    // index, chunk, IVF, cluster and q90 signature stores) before EVERY
-    // timed run, so best-of-2 times the cold build instead of warm cache
-    // reads — the honest mode for the memoized families (q48/q71/q131,
-    // graph q141/q154/q160/q161/q164, the maintained stores)
-    // that SCALE.md r5 had to exclude from the 100× probe. Releases go
-    // through the spec-tested lifecycle API between runs (never inside a
-    // running plan, which would free checkpointed blocks mid-lineage).
+    // SPARK_GRAFT_COLD_MEMO=1: release every session memo of the dir
+    // (Resources.release: the LSH pairs, the co-purchase items and edges,
+    // the index, chunk, IVF, cluster and q90 signature stores) before
+    // EVERY timed run, so best-of-2 times the cold build instead of warm
+    // memo reads — the honest mode for the memoized families
+    // (q48/q71/q131, graph q141/q154/q160/q161/q164, the maintained
+    // stores) that SCALE.md r5 had to exclude from the 100× probe. The
+    // release runs between runs, never inside a running plan, which
+    // would delete the parquet roots it reads.
     val coldMemo = sys.env.contains("SPARK_GRAFT_COLD_MEMO")
     def time(name: String, dir: String): Double =
       (1 to 2).map { _ =>
-        if (coldMemo) {
-          operators.Dedup.releaseLshCache(dir)
-          operators.Extras.releaseGraphMemo(dir)
-          operators.Epochs.release(dir)
-        }
+        if (coldMemo) core.Resources.release(dir)
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir).count()
         (System.nanoTime() - t0) / 1e9

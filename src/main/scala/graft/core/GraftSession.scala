@@ -39,7 +39,7 @@ object GraftSession {
   def local(appName: String = "graft-test", cores: Int = 4): SparkSession = {
     val warehouse = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft-warehouse-${ProcessHandle.current().pid()}")
-    graft.operators.Epochs.deleteAtExit(warehouse)
+    Resources.deleteAtExit(warehouse)
     val s = builder(appName, cores)
       .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()

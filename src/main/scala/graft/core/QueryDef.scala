@@ -12,6 +12,4 @@ final case class QueryDef(
 object QueryDef {
   def apply(name: String, oracle: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, Some(oracle))
-  def noOracle(name: String)(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, build, None)
 }

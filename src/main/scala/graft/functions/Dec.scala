@@ -36,10 +36,4 @@ object Dec {
     * SQL mirrors this with `CAST(<same decimal expr> AS DOUBLE)`. */
   def out(c: Column, scale: Int = 2): Column =
     c.cast(DecimalType(38, scale)).cast("double")
-
-  /** Exact integer-ratio as double: both engines do the identical IEEE
-    * division of exact integers, so results are bit-identical without any
-    * rounding step (rounding doubles is NOT cross-engine stable). */
-  def pctOf(num: Column, den: Column): Column =
-    (num * 100).cast("double") / den.cast("double")
 }

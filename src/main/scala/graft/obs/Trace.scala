@@ -30,6 +30,8 @@ object Trace {
   final case class StoreRead(tag: String, filesTotal: Int, filesRead: Int) extends Event
   /** Distinct candidate docs of one materialized dedup-kernel call. */
   final case class Candidates(n: Long) extends Event
+  /** One session-memo lookup: `hit` when the memo was already built. */
+  final case class Memo(kind: String, hit: Boolean) extends Event
 
   private final class Sink(val parent: Sink) {
     val events = new ConcurrentLinkedQueue[Event]()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.functions.TextFunctions._
 
 /** Corpus-preparation operators rounding out the training-data pipeline:
@@ -459,7 +459,7 @@ object CorpusOps {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("ntok"))
-    Epochs.scratchStore(s, "graft-admit-store") { st =>
+    Resources.scratchStore(s, "graft-admit-store") { st =>
       admitCreateTables(st, docs)
       val gate = new AdmissionGate(st, budget)
       // four strict doc_id quarter-range slices (the q189 staging shape)
@@ -639,7 +639,7 @@ object CorpusOps {
     contaminationOracle) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val (bench, prune) = benchGramSet(docs)
-    try Epochs.scratchStore(s, "graft-contam") { st =>
+    try Resources.scratchStore(s, "graft-contam") { st =>
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
@@ -672,7 +672,7 @@ object CorpusOps {
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val (bench, prune) = benchGramSet(docs)
-    try Epochs.scratchStore(s, "graft-contam-stream") { st =>
+    try Resources.scratchStore(s, "graft-contam-stream") { st =>
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
@@ -945,7 +945,7 @@ object CorpusOps {
   private[graft] def globalRowIndex(df: org.apache.spark.sql.DataFrame,
       order: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val buckets = Dedup.pin(rangeBuckets(df, order: _*))
+    val buckets = Resources.pin(rangeBuckets(df, order: _*))
     val offsets = buckets.groupBy("__b").agg(count(lit(1)).as("__bn"))
       .withColumn("__off", coalesce(sum(col("__bn")).over(
         Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -1016,7 +1016,7 @@ object CorpusOps {
        |  CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
        |FROM sh GROUP BY shard ORDER BY shard""".stripMargin) { (s, d) =>
-    Epochs.scratchStore(s, "graft-shard-store") { st =>
+    Resources.scratchStore(s, "graft-shard-store") { st =>
       writeShards(st, shardPlan(s, d, payload = Seq("source", "text")))
       st.table("shards")
         .select(col("shard").cast("long").as("shard"), col("doc_id"),

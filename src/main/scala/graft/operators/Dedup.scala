@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
+import graft.core.Resources.{collectUnder, pin, MaxBroadcastCandidateDocs}
 import graft.functions.TextFunctions._
 import graft.obs.Trace
 
@@ -166,74 +167,14 @@ object Dedup {
     * pruned, exact-Jaccard verified at ≥ 0.8 — the scalable (RefinedWeb /
     * FineWeb-shaped) near-dup pair generator, reused by q48 and as the
     * edge source for q71's connected components. Memoized per
-    * (session, dir): the shingle/minhash frames inside carry `.cache()`,
-    * and rebuilding them per caller would pin redundant copies of the
-    * suite's largest intermediates in executor storage. */
-  // weak session keys: a stopped SparkSession (per-suite test sessions,
-  // repeated driver runs in one JVM) must stay collectible — a strong
-  // (session, dir) map would pin it plus its cached frames forever.
-  // Inputs are immutable driver-generated parquet, so no invalidation
-  // beyond session lifetime is needed.
-  private val lshPairsMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, MemoEntry]]()
-
-  /** A memoized frame plus the storage it pinned: the RDD ids that
-    * [[buildLshVerifiedPairs]]'s caches and localCheckpoint registered,
-    * captured so [[releaseLshCache]] can unpersist exactly those blocks
-    * (a localCheckpointed Dataset exposes no unpersist of its own). */
-  private[graft] final case class MemoEntry(df: DataFrame, rddIds: Set[Int]) {
-    /** Unpersist exactly the blocks the build registered. */
-    def release(): Unit = {
-      val sc = df.sparkSession.sparkContext
-      rddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
-    }
-  }
-
-  /** Run `build` and record which persistent RDDs it newly registered.
-    * Memo builds are serialized under the memo lock, so the before/after
-    * diff attributes blocks to this build alone. */
-  private[graft] def trackedBuild(s: SparkSession, build: => DataFrame): MemoEntry = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val df = build
-    MemoEntry(df, (s.sparkContext.getPersistentRDDs.keySet -- before).toSet)
-  }
-
+    * (session, dir) as parquet ([[Resources.memoFrame]]): q71's fixpoint
+    * loop and q131's leak join each consume the pair list, and every
+    * consumer reads the stored, candidate-bounded pairs instead of
+    * re-running the candidate+verify join tree; the build's shingle and
+    * minhash caches are gone once the pairs are written. */
   private[graft] def lshVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    lshPairsMemo.synchronized {
-      val perDir = {
-        val cur = lshPairsMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, MemoEntry]();
-               lshPairsMemo.put(s, m); m }
-      }
-      perDir.getOrElseUpdate(d,
-        trackedBuild(s, buildLshVerifiedPairs(s, d))).df
-    }
-
-  /** Drop memoized pair frames for `dir` (all sessions) AND unpersist the
-    * executor storage they pinned (shingle/minhash caches + the
-    * checkpointed pair blocks). Call after rewriting the parquet under a
-    * previously-read directory — the memo otherwise assumes
-    * driver-generated inputs are immutable and would serve pairs computed
-    * from the old files — or from a long-lived service session that is
-    * done with a corpus (the blocks otherwise live for the session). */
-  private[graft] def releaseLshCache(dir: String): Unit =
-    lshPairsMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- lshPairsMemo.values.asScala; e <- perDir.remove(dir))
-        e.release()
-    }
-
-  /** Release every memoized corpus (the session-shutdown hygiene hook). */
-  private[graft] def clearLshCache(): Unit =
-    lshPairsMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      lshPairsMemo.values.asScala.flatMap(_.keys).toSet[String]
-        .foreach(releaseLshCache)
-    }
-
-  private[graft] def invalidateLshCache(dir: String): Unit = releaseLshCache(dir)
+    Resources.memoFrame(s, d, "graft-lsh-pairs")(path =>
+      lshPairsPlan(s, d)(_.write.parquet(path)))
 
   /** (doc_id, band, bv) band keys of a signature frame carrying h0..h15.
     * ONE scan of the source: the 4 band keys explode from an in-row array
@@ -322,41 +263,11 @@ object Dedup {
     df.repartitionByRange(files, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
 
-  /** Materialize `df` eagerly and truncate its lineage — the engine's
-    * one checkpoint seam (VERDICT r14 next #3): no other file pins a
-    * frame (EpochsSpec's source guard). Default: `localCheckpoint`,
-    * whose blocks are executor-local and unreplicated — exactly right
-    * for the single-JVM local[*] topology this library benches on, but
-    * LOST on executor failure in a multi-executor deployment. Setting
-    * `spark.graft.checkpointDir` to a cluster-visible path (HDFS/S3)
-    * switches every pin to a RELIABLE `checkpoint()` rooted there,
-    * surviving executor loss at the price of a filesystem round trip.
-    * The conf is read from the FRAME's session, so a stream's
-    * cloned-session setting governs its own epochs. */
-  private[graft] def pin(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // setCheckpointDir appends a per-set UUID subdir; re-set only when
-        // the configured root actually changed
-        if (!sc.getCheckpointDir.exists(_.startsWith(dir))) sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint(true)
-    }
-
-  private def buildLshVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    // Materialize the verified pair list eagerly: q71's fixpoint loop and
-    // q131's leak join each consume this frame, and without a checkpoint
-    // every consumer re-executes the candidate+verify join tree from the
-    // cached shingles. The pair list is candidate-bounded (tiny relative
-    // to the corpus), so storing it is cheap and every downstream plan
-    // starts from stored blocks instead of a re-running join.
-    pin(lshPairsPlan(s, d))
-
-  /** The un-materialized LSH pair plan — what [[buildLshVerifiedPairs]]
-    * checkpoints. Exposed so plan tests can assert the candidate join is
-    * banded (the checkpoint truncates lineage to a LogicalRDD). */
-  private[graft] def lshPairsPlan(s: SparkSession, d: String): DataFrame = {
+  /** `use` over the LSH pair plan, whose shingle and minhash frames are
+    * cached while `use` runs and unpersisted after it. [[lshVerifiedPairs]]
+    * writes it; plan tests assert on it that the candidate join is
+    * banded. */
+  private[graft] def lshPairsPlan[A](s: SparkSession, d: String)(use: DataFrame => A): A = {
     val sh = shingleDf(s, d).cache()
     val th = sh.select(col("doc_id"), graft.functions.TextFunctions.hash60(col("s")).as("h"))
     // ONE groupBy computes the 16 signature mins AND the set size — no
@@ -386,11 +297,12 @@ object Dedup {
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
     val jac = col("i").cast("double") /
       (col("na") + col("nb") - col("i")).cast("double")
-    inter
+    try use(inter
       .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
       .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
-      .filter(col("jaccard") >= 0.8)
+      .filter(col("jaccard") >= 0.8))
+    finally { mh.unpersist(); sh.unpersist(); () }
   }
 
   /** MinHash + LSH banding near-dup pairs, verified with exact Jaccard. */
@@ -616,8 +528,9 @@ object Dedup {
     * batch bands were already collected per epoch for the keys; reusing
     * the rows makes every re-plan of the kernel's broadcast probe side
     * driver-only (a LocalTableScan broadcast launches no job), cutting
-    * the per-epoch job count. None when the batch exceeds the ceiling —
-    * callers fall back to the distributed keys collect and in-flight
+    * the per-epoch job count. None when the batch exceeds the ceiling
+    * (in rows, or in bytes: each row carries a 32-char md5) — callers
+    * fall back to the distributed keys collect and in-flight
     * band computation (the skew trade). */
   private def batchBandsLocal(s: SparkSession, newSig: DataFrame,
       ceiling: Long = MaxBroadcastCandidateDocs)
@@ -687,9 +600,9 @@ object Dedup {
             store.table("shh").filter(col("h").isNotNull), newSig, newTh)
       // eager pin: the pair set is tiny (≥ 0.8-verified) and the caller
       // must inherit no live reference to the kernel caches. The
-      // single-JVM-vs-cluster trade lives in [[pin]]: local blocks by
-      // default, a reliable checkpoint when spark.graft.checkpointDir
-      // is set.
+      // single-JVM-vs-cluster trade lives in [[Resources.pin]]: local
+      // blocks by default, a reliable checkpoint when
+      // spark.graft.checkpointDir is set.
       try pin(k.pairs) finally k.release()
     } finally { newSig.unpersist(); newTh.unpersist(); () }
   }
@@ -708,28 +621,6 @@ object Dedup {
     def release(): Unit = {
       cand0.unpersist(); candTh.unpersist(); ()
     }
-  }
-
-  /** Ceiling on distinct candidate doc ids for the forced
-    * `broadcast(candDocs)` hint (ADVICE r12): candidates = batch band
-    * keys × matching stored docs, so under band-value skew (boilerplate
-    * docs sharing a band hash across a large store) the set grows with
-    * the CORPUS, and a forced hint would collect a store-proportional
-    * frame to the driver. Above the ceiling the hint is dropped — the
-    * semi-joins degrade to shuffles (store-proportional exchange,
-    * deliberately traded for not OOMing the driver) and AQE still picks
-    * broadcast if runtime stats allow. ~4M ids ≈ tens of MB broadcast. */
-  private[graft] val MaxBroadcastCandidateDocs = 4000000L
-
-  /** The one bounded driver collect: `df`'s rows when it has at most
-    * `ceiling`, else None. One LIMIT ceiling + 1 proves which side of the
-    * ceiling the frame is on AND returns the rows when under it, so no
-    * count runs first. A ceiling whose + 1 does not fit an Int LIMIT is
-    * refused: no probe may collect that many rows to the driver. */
-  private[graft] def collectUnder(df: DataFrame, ceiling: Long): Option[Array[Row]] = {
-    require(ceiling < Int.MaxValue - 1L, s"probe ceiling $ceiling exceeds the driver collect bound")
-    val rows = df.limit((ceiling + 1L).toInt).collect()
-    if (rows.length > ceiling) None else Some(rows)
   }
 
   /** [[incrementalLshKernelPruned]] over plain signature frames — the
@@ -914,7 +805,7 @@ object Dedup {
   /** The q90 signature store for `d` (corpus = doc_id % 5 ≠ 0),
     * memoized per session. */
   private def corpusStore(s: SparkSession, d: String): graft.sources.TableStore =
-    Epochs.memo(s, d, "graft-sigstore") { st =>
+    Resources.store(s, d, "graft-sigstore") { st =>
       buildSignatureStore(st, Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0))
     }
 
@@ -1348,8 +1239,6 @@ object Dedup {
     state.filter(col("kind") === 0).select("doc_id", "h")
   private[graft] def stateCuts(state: DataFrame): DataFrame =
     state.filter(col("kind") === 1).select("doc_id")
-  private[graft] def stateBands(state: DataFrame): DataFrame =
-    state.filter(col("kind") === 3).select("doc_id", "n", "band", "bv")
 
   /** Stored band rows (kind 3) of the state table, file-pruned to the
     * batch's sorted band keys: only files whose kind stats admit 3 AND
@@ -1436,7 +1325,7 @@ object Dedup {
       // inline pairs pipeline would run the verify joins twice; the pin
       // runs them once and lets the kernel caches release before the
       // write (local blocks by default, reliable under
-      // spark.graft.checkpointDir — see [[pin]]).
+      // spark.graft.checkpointDir — see [[Resources.pin]]).
       val cut =
         try pin(k.pairs.select(col("doc_b").as("doc_id")).distinct())
         finally k.release()
@@ -1557,7 +1446,7 @@ object Dedup {
   private[graft] def q199Impl(rowsPerFile: Long = EventsOps.OuterStageRowsPerFile)(
       s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-dedup-ingest") { st =>
+    Resources.scratchStore(s, "graft-dedup-ingest") { st =>
       buildDedupState(st, docs.limit(0)) // empty state: the stream bootstraps it
       // 2 doc_id slices × nFiles aligned files. Two epochs are the
       // minimum that exercises cross-epoch dedup (stored-vs-batch pairs
@@ -1610,7 +1499,7 @@ object Dedup {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-dedup-compact") { st =>
+    Resources.scratchStore(s, "graft-dedup-compact") { st =>
       buildDedupState(st, docs.limit(0))
       Epochs.direct(Epochs.slice(docs, col("doc_id"), 4)) { (batch, e) =>
         dedupIngestEpoch(st)(batch, e)
@@ -1668,7 +1557,7 @@ object Dedup {
     val confKey = "spark.graft.state.autoCompactVersions"
     val prev = s.conf.getOption(confKey)
     s.conf.set(confKey, "3")
-    try Epochs.scratchStore(s, "graft-dedup-policy") { st =>
+    try Resources.scratchStore(s, "graft-dedup-policy") { st =>
       buildDedupState(st, docs.limit(0))
       // no maintenance call anywhere: the policy inside the epoch
       // fires whenever the chain reaches the configured trigger

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 
 /** Near-duplicate cluster resolution: connected components over the
   * verified near-dup pair graph, assigning every document to a component
@@ -102,7 +102,7 @@ object DedupClusters {
     * chains, whose root IS the min because merges always adopt the
     * smaller component id).
     *
-    * Every round materializes via [[Dedup.pin]] (localCheckpoint on a
+    * Every round materializes via [[Resources.pin]] (localCheckpoint on a
     * single JVM, reliable checkpoint under `spark.graft.checkpointDir`)
     * so the next round's plan starts from stored blocks — constant-depth
     * lineage, no recursive re-execution. Rounds needed = graph diameter;
@@ -152,7 +152,7 @@ object DedupClusters {
 
   private[graft] def propagateMin(edges0: org.apache.spark.sql.DataFrame,
       init: Option[org.apache.spark.sql.DataFrame] = None,
-      driverCeiling: Long = Dedup.MaxBroadcastCandidateDocs)
+      driverCeiling: Long = Resources.MaxBroadcastCandidateDocs)
       : org.apache.spark.sql.DataFrame = {
     // Driver fast path (guide §1.2/§5: the fixed cost here is actions ×
     // per-action scheduling overhead, not task width): every caller passes
@@ -164,9 +164,9 @@ object DedupClusters {
     // below, unchanged (the same skew trade as the kernel's candidate
     // collect; the probe's limit scan is the only extra cost).
     val local = for {
-      eArr <- Dedup.collectUnder(edges0.select("src", "dst"), driverCeiling)
+      eArr <- Resources.collectUnder(edges0.select("src", "dst"), driverCeiling)
       iArr <- init.fold(Option(Array.empty[org.apache.spark.sql.Row]))(i =>
-        Dedup.collectUnder(i.select("doc_id", "component"), driverCeiling))
+        Resources.collectUnder(i.select("doc_id", "component"), driverCeiling))
     } yield (eArr, iArr)
     local match {
       case Some((eArr, iArr)) =>
@@ -205,7 +205,7 @@ object DedupClusters {
         .select(col("doc_id"), coalesce(col("c0"), col("doc_id")).as("component"))
       case None => nodes.withColumn("component", col("doc_id"))
     }
-    var labels = Dedup.pin(seeded)
+    var labels = Resources.pin(seeded)
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < MaxRounds) {
@@ -213,7 +213,7 @@ object DedupClusters {
         .join(labels.toDF("dst", "nbr_component"), Seq("dst"))
         .groupBy(col("src").as("doc_id"))
         .agg(min(col("nbr_component")).as("best_nbr"))
-      val stepped = Dedup.pin(labels.join(viaNeighbor, Seq("doc_id"), "left")
+      val stepped = Resources.pin(labels.join(viaNeighbor, Seq("doc_id"), "left")
         .select(col("doc_id"), col("component"),
           least(col("component"), coalesce(col("best_nbr"), col("component"))).as("next_component")))
       changed = stepped.filter(col("next_component") =!= col("component")).count()
@@ -519,7 +519,7 @@ object DedupClusters {
     * queries share one warehouse table. */
   private def clusterIngestedStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    Epochs.memo(s, d, "graft-cluster-ingest")(ingestClusterEpochs(_, s, d))
+    Resources.store(s, d, "graft-cluster-ingest")(ingestClusterEpochs(_, s, d))
 
   /** Arrival-time per-doc metadata for the maintained aggregates, in the
     * clusterIngestEpoch sidecar shape (doc_id, kind, bkt, h, n):
@@ -686,7 +686,7 @@ object DedupClusters {
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
-    Epochs.scratchStore(s, "graft-cluster-stream") { st =>
+    Resources.scratchStore(s, "graft-cluster-stream") { st =>
       Dedup.buildDedupState(st, docs.limit(0))
       st.create("card", cardRows(docs.limit(0)))
       Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), slices), rowsPerFile,
@@ -884,7 +884,7 @@ object DedupClusters {
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
-    Epochs.scratch("graft-cluster-release", "graft-cluster-relcat") { roots =>
+    Resources.scratch("graft-cluster-release", "graft-cluster-relcat") { roots =>
       val st = new graft.sources.TableStore(s, roots(0))
       val cat = new graft.sources.ReleaseCatalog(roots(1), s)
       Dedup.buildDedupState(st, docs.limit(0))
@@ -920,7 +920,7 @@ object DedupClusters {
         cat.tableAt("corpus-r1", "card")
           .select("source", "lang", "n_chars", "ntok"))
       // pinned frame: the store roots are deleted when this returns
-      Dedup.pin(card.crossJoin(broadcast(summ)).orderBy("source"))
+      Resources.pin(card.crossJoin(broadcast(summ)).orderBy("source"))
     }
     }
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.functions.Dec._
 
 /** The reference's mutation operators (SURVEY.md §2.9 D1-D6) expressed as
@@ -160,7 +160,7 @@ object DmlQueries {
       |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM base))
       |SELECT o_orderkey, o_orderpriority, CAST(price AS DOUBLE) AS o_totalprice
       |FROM merged ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-    Epochs.scratchStore(s, "graft-upsert") { st =>
+    Resources.scratchStore(s, "graft-upsert") { st =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
           d2(col("o_totalprice")).as("o_totalprice"))
@@ -214,7 +214,7 @@ object DmlQueries {
       |SELECT o_orderkey, o_orderpriority, CAST(price AS DOUBLE) AS o_totalprice
       |FROM merged ORDER BY o_orderkey""".stripMargin) { (s, d) =>
     import graft.sources.TableStore
-    Epochs.scratchStore(s, "graft-merge") { st =>
+    Resources.scratchStore(s, "graft-merge") { st =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
           d2(col("o_totalprice")).as("o_totalprice"))
@@ -270,7 +270,7 @@ object DmlQueries {
       |FROM base WHERE o_orderkey % 11 = 0
       |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
     import graft.sources.TableStore
-    Epochs.scratchStore(s, "graft-diff") { st =>
+    Resources.scratchStore(s, "graft-diff") { st =>
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"),
           d2(col("o_totalprice")).as("o_totalprice"))
@@ -316,7 +316,7 @@ object DmlQueries {
       |  CAST(SUM(len(string_split(trim(text), ' '))) AS BIGINT) AS n_tokens
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     import graft.functions.TextFunctions.tokens
-    Epochs.scratchStore(s, "graft-mv") { st =>
+    Resources.scratchStore(s, "graft-mv") { st =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
         size(tokens(col("text"))).cast("long").as("ntok"))
       def agg(df: org.apache.spark.sql.DataFrame) =
@@ -349,7 +349,7 @@ object DmlQueries {
       |       ELSE 'unrated' END AS tier
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     import graft.functions.TextFunctions.tokens
-    Epochs.scratchStore(s, "graft-evolve-q") { st =>
+    Resources.scratchStore(s, "graft-evolve-q") { st =>
       st.create("docs", Tables.documents(s, d)
         .select(col("doc_id"), size(tokens(col("text"))).as("ntok")))
       st.addColumn("docs", "tier", "STRING", "'unrated'")

@@ -5,13 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+import graft.core.Resources
 import graft.obs.Trace
-import graft.sources.TableStore
 
 /** The maintained-store epoch driver: the one place that decides how a
   * gate cuts its input into epochs, drives them (directly or through a
-  * real `writeStream` replay), traces them, and owns the temp dirs they
-  * stage, reduce and store into.
+  * real `writeStream` replay) and traces them. The driver resources a
+  * gate holds meanwhile — pins, bounded collects, scratch and memo dirs,
+  * the session memo — belong to [[graft.core.Resources]].
   *
   *  - **Slicing** ([[slice]]): one `agg(min, max, count)` job; direct
   *    batch `e` is `lo + e·step <= key < lo + (e+1)·step` with
@@ -19,16 +20,11 @@ import graft.sources.TableStore
   *    prefix and drift oracles recompute exactly these cuts.
   *  - **Drives**: [[direct]] calls the epoch body per batch; [[replay]]
   *    drives a `foreachBatch` sink through a file-source stream over
-  *    aligned stages or the events table in place; [[streamed]] replays
-  *    a slice's strict stages ([[EventsOps.slicedStages]]) and
-  *    [[reduced]] reads a reducing sink's partials back. Every drive
-  *    records one [[Trace.Epoch]] per epoch or micro-batch.
-  *  - **Scratch dirs** ([[scratch]], [[scratchStore]], [[stageAligned]]):
-  *    fresh temp roots for one gate run, the served frame pinned, the
-  *    roots deleted in a `finally`. No other file creates a temp dir.
-  *  - **Memoized stores** ([[memo]]): one store per (session, dir,
-  *    kind), a single [[release]] per dir, and one JVM-exit cleanup for
-  *    every memo root (the graph memo's included).
+  *    aligned stages ([[stageAligned]]) or the events table in place;
+  *    [[streamed]] replays a slice's strict stages
+  *    ([[EventsOps.slicedStages]]) and [[reduced]] reads a reducing
+  *    sink's partials back. Every drive records one [[Trace.Epoch]] per
+  *    epoch or micro-batch.
   *
   * The bounded replay width of direct drives stays with the caller
   * ([[EventsOps.withReplayWidth]]); a replay builds its stream on such a
@@ -134,7 +130,7 @@ object Epochs {
   def replay(s: SparkSession, staging: Staging, sinkName: String,
       outputMode: String = "append")(plan: (() => DataFrame) => DataFrame)(
       sink: (DataFrame, Long) => Unit): StructType =
-    scratch(s"graft-$sinkName") { roots =>
+    Resources.scratch(s"graft-$sinkName") { roots =>
       val dir = Paths.get(roots.head)
       val (path, filesPerTrigger) = staging match {
         case Stages(_, stages, parts, _) => (dir, Some(stageAligned(dir, stages, parts)))
@@ -174,14 +170,14 @@ object Epochs {
   def reduced(s: SparkSession, staging: Staging, sinkName: String,
       outputMode: String = "append")(plan: (() => DataFrame) => DataFrame)(
       reduce: DataFrame => DataFrame)(finish: DataFrame => DataFrame): DataFrame =
-    scratch(s"graft-$sinkName-partials") { roots =>
+    Resources.scratch(s"graft-$sinkName-partials") { roots =>
       val mode = if (outputMode == "complete") "overwrite" else "append"
       val planned = replay(s, staging, sinkName, outputMode)(plan) { (batch, _) =>
         reduce(batch).write.mode(mode).parquet(roots.head)
       }
       val schema =
         reduce(s.createDataFrame(java.util.Collections.emptyList[Row](), planned)).schema
-      Dedup.pin(finish(s.read.schema(schema).parquet(roots.head)))
+      Resources.pin(finish(s.read.schema(schema).parquet(roots.head)))
     }
 
   /** [[replay]] of `sl` as `sl.n` strict stages of aligned parquet files
@@ -213,7 +209,7 @@ object Epochs {
     * write or move fails. */
   private[graft] def stageAligned(streamDir: Path,
       stages: Seq[(String, DataFrame, Int)], parts: Int): Int =
-    scratch("graft-stage") { roots =>
+    Resources.scratch("graft-stage") { roots =>
       val work = Paths.get(roots.head)
       def parquetFiles(dir: Path): Array[java.io.File] =
         dir.toFile.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -238,86 +234,4 @@ object Epochs {
       }
       width
     }
-
-  /** Run `body` over one fresh temp root per prefix and delete the roots
-    * afterwards, also when `body` throws. What `body` returns must not
-    * read the roots: pin a served frame ([[Dedup.pin]]) inside it. */
-  def scratch[A](prefixes: String*)(body: Seq[String] => A): A = {
-    val roots = scala.collection.mutable.ArrayBuffer.empty[Path]
-    try {
-      prefixes.foreach(p => roots += Files.createTempDirectory(p))
-      body(roots.map(_.toString).toSeq)
-    } finally roots.foreach(EventsOps.rmTree)
-  }
-
-  /** [[scratch]] with a single root opened as a [[TableStore]] on `s`;
-    * the frame `body` serves is pinned before the root goes. */
-  def scratchStore(s: SparkSession, prefix: String)(body: TableStore => DataFrame): DataFrame =
-    scratch(prefix)(roots => Dedup.pin(body(new TableStore(s, roots.head))))
-
-  // weak session keys: a stopped session (per-suite test sessions,
-  // repeated driver runs in one JVM) must stay collectible. Values are
-  // store ROOT PATHS, not TableStores — a TableStore holds its session,
-  // and a WeakHashMap whose values strongly reach their own keys never
-  // collects anything. A fresh handle over an existing root is free.
-  // Inputs are immutable driver-generated parquet, so nothing is
-  // invalidated before the session goes.
-  private val stores = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, String), String]]()
-
-  /** Every memo root ever created (and the test sessions' warehouse
-    * dir): deleted at JVM exit unless released earlier (rmTree of a
-    * released root is a no-op). Bench, Verify and test JVMs never
-    * release, and a store on disk would otherwise outlive them. */
-  private val exitRoots = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
-  sys.addShutdownHook(exitRoots.forEach(p => EventsOps.rmTree(p)))
-
-  /** Delete `p` (which need not exist yet) at JVM exit. */
-  private[graft] def deleteAtExit(p: Path): Unit = { exitRoots.add(p); () }
-
-  /** A fresh temp dir `prefix…` that is deleted at JVM exit. */
-  private[graft] def memoRoot(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    deleteAtExit(p)
-    p
-  }
-
-  /** The store kind `prefix` memoized for (`s`, `dir`): the first call
-    * runs `build` over a fresh memo root named `prefix…`; every call
-    * returns a fresh handle over that root. Builds serialize on the memo
-    * lock; a failed build leaves nothing behind. */
-  private[graft] def memo(s: SparkSession, dir: String, prefix: String)(
-      build: TableStore => Unit): TableStore = stores.synchronized {
-    val perDir = Option(stores.get(s)).getOrElse {
-      val m = scala.collection.mutable.Map[(String, String), String]()
-      stores.put(s, m)
-      m
-    }
-    val root = perDir.getOrElseUpdate((dir, prefix), {
-      val r = memoRoot(prefix)
-      try build(new TableStore(s, r.toString))
-      catch { case t: Throwable => EventsOps.rmTree(r); throw t }
-      r.toString
-    })
-    new TableStore(s, root)
-  }
-
-  /** Memo roots built for `dir` in session `s`, by prefix (spec hook). */
-  private[graft] def memoized(s: SparkSession, dir: String): Map[String, String] =
-    stores.synchronized {
-      Option(stores.get(s)).map(_.collect { case ((`dir`, k), root) => k -> root }.toMap)
-        .getOrElse(Map.empty)
-    }
-
-  /** Drop every store memoized for `dir` (all sessions, all kinds) and
-    * delete its root: the next gate call pays a fresh build.
-    * ScaleBench's cold-memo hook; idempotent. */
-  def release(dir: String): Unit = stores.synchronized {
-    import scala.jdk.CollectionConverters._
-    for {
-      perDir <- stores.values.asScala
-      key <- perDir.keys.filter(_._1 == dir).toList
-      root <- perDir.remove(key)
-    } EventsOps.rmTree(Paths.get(root))
-  }
 }

@@ -138,8 +138,8 @@ object EventsOps {
     body(c)
   }
 
-  /** Recursively delete a temp tree ([[Epochs]] removes every scratch
-    * and memo root with it). */
+  /** Recursively delete a temp tree ([[graft.core.Resources]] removes
+    * every scratch and memo root with it). */
   private[graft] def rmTree(p: java.nio.file.Path): Unit = {
     val f = p.toFile
     if (f.isDirectory) {

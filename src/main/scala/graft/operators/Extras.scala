@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.functions.Dec._
 
 /** Engine-completeness operators beyond the reference's surface (SURVEY.md
@@ -14,11 +14,11 @@ object Extras {
 
   /** Memoized co-purchase graph per (session, dir) — the (order, part)
     * distinct projection and the distinct undirected edge list (u < v),
-    * each materialized ONCE as PARQUET in a memo temp dir and shared by
-    * the five graph queries (q141 affinity, q154 PageRank, q160 rules,
-    * q161 triangles, q164 k-core). Without the memo each query re-runs
-    * the two largest shuffles of the family (fact distinct + within-order
-    * self-join distinct).
+    * each written ONCE as PARQUET to its own memo root
+    * ([[Resources.memoFrame]]) and shared by the five graph queries (q141
+    * affinity, q154 PageRank, q160 rules, q161 triangles, q164 k-core).
+    * Without the memo each query re-runs the two largest shuffles of the
+    * family (fact distinct + within-order self-join distinct).
     *
     * The two components build INDEPENDENTLY, on first demand: q141/q160
     * aggregate within-order pairs directly off `items` and never touch
@@ -26,97 +26,21 @@ object Extras {
     * self-join — the single most expensive shuffle of the family — for a
     * frame it never read (the r10 100× probes' worst residual row).
     * Edges imply items (they are derived from it), so the dependency
-    * only ever runs one way.
-    *
-    * Parquet, not localCheckpoint (r9 watch item): block-manager blocks
-    * for a 100×-corpus edge list sit in MEMORY_AND_DISK executor storage
-    * and made the cold q141 probe swing 12.8–22.8× run to run
-    * (GC/eviction noise); a parquet round-trip costs one extra encode but
-    * reads back through the scan path with sized splits and ZERO
-    * long-lived JVM storage — deterministic cost, and release is a
-    * directory delete. Weak session keys, same contract as
-    * Dedup.lshVerifiedPairs: inputs are immutable driver-generated
-    * parquet, so no invalidation beyond session lifetime is needed. */
-  private final class GraphMemoEntry(val memoDir: java.nio.file.Path) {
-    var items: Option[org.apache.spark.sql.DataFrame] = None
-    var edges: Option[org.apache.spark.sql.DataFrame] = None
-  }
-
-  private val graphMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, GraphMemoEntry]]()
-
-  /** Memo parquet dir for `dir` in session `s`, if built (spec hook). */
-  private[graft] def graphMemoDir(s: org.apache.spark.sql.SparkSession,
-      d: String): Option[java.nio.file.Path] =
-    graphMemo.synchronized {
-      Option(graphMemo.get(s)).flatMap(_.get(d)).map(_.memoDir)
-    }
-
-  private def memoEntry(s: org.apache.spark.sql.SparkSession, d: String): GraphMemoEntry = {
-    val perDir = {
-      val cur = graphMemo.get(s)
-      if (cur != null) cur
-      else {
-        val m = scala.collection.mutable.Map[String, GraphMemoEntry]()
-        graphMemo.put(s, m); m
-      }
-    }
-    perDir.getOrElseUpdate(d, {
-      // deleted at JVM exit unless released first: Bench/Verify/test
-      // JVMs never call the lifecycle API (releaseGraphMemo)
-      new GraphMemoEntry(Epochs.memoRoot("graft-graph-memo"))
-    })
-  }
-
-  /** Distinct (order, part) market baskets — what q141/q160 aggregate. */
+    * only ever runs one way. */
   private def copurchaseItems(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graphMemo.synchronized {
-      val e = memoEntry(s, d)
-      e.items.getOrElse {
-        Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-          .distinct().write.mode("overwrite").parquet(s"${e.memoDir}/items.parquet")
-        val df = s.read.parquet(s"${e.memoDir}/items.parquet")
-        e.items = Some(df)
-        df
-      }
-    }
+    Resources.memoFrame(s, d, "graft-graph-memo")(path =>
+      Tables.lineitem(s, d).select("l_orderkey", "l_partkey").distinct().write.parquet(path))
 
   /** Distinct undirected co-purchase edges (u < v) — what the iterative
     * graph queries (q154/q161/q164) traverse. */
   private def copurchaseEdges(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    graphMemo.synchronized {
-      val e = memoEntry(s, d)
-      e.edges.getOrElse {
-        val items = copurchaseItems(s, d) // reentrant lock; builds if cold
-        items.toDF("k", "u").join(items.toDF("k", "v"), Seq("k"))
-          .filter(col("u") < col("v")).select("u", "v").distinct()
-          .write.mode("overwrite").parquet(s"${e.memoDir}/edges.parquet")
-        val df = s.read.parquet(s"${e.memoDir}/edges.parquet")
-        e.edges = Some(df)
-        df
-      }
-    }
-
-  /** Drop the memoized co-purchase graph for `dir` (all sessions) and
-    * delete its parquet memo dir — the lifecycle hook a long-lived
-    * service session calls when done with a corpus; without it the edge
-    * list occupies local disk for the session lifetime. */
-  private[graft] def releaseGraphMemo(dir: String): Unit =
-    graphMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- graphMemo.values.asScala; e <- perDir.remove(dir))
-        EventsOps.rmTree(e.memoDir)
-    }
-
-  /** Release every memoized corpus graph (session-shutdown hygiene). */
-  private[graft] def clearGraphMemo(): Unit =
-    graphMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      graphMemo.values.asScala.flatMap(_.keys).toSet[String]
-        .foreach(releaseGraphMemo)
+    Resources.memoFrame(s, d, "graft-graph-edges") { path =>
+      val items = copurchaseItems(s, d) // builds if cold
+      items.toDF("k", "u").join(items.toDF("k", "v"), Seq("k"))
+        .filter(col("u") < col("v")).select("u", "v").distinct()
+        .write.parquet(path)
     }
 
   /** Explicit ROWS BETWEEN frame: 4-event moving average per user.
@@ -454,7 +378,7 @@ object Extras {
       |FROM events WHERE user_id BETWEEN 40 AND 60
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     import graft.sources.FileStats
-    Epochs.scratchStore(s, "graft-skip") { st =>
+    Resources.scratchStore(s, "graft-skip") { st =>
       st.createClustered("ev",
         Tables.events(s, d).select("event_id", "user_id", "value"),
         Seq("user_id"), files = 16)
@@ -1099,7 +1023,7 @@ object Extras {
          |FROM s6 ORDER BY part_key""".stripMargin) { (s, d) =>
       val e0 = copurchaseEdges(s, d)
       // feeds every peel round
-      val ed = Dedup.pin(e0.select(col("u").as("s"), col("v").as("t"))
+      val ed = Resources.pin(e0.select(col("u").as("s"), col("v").as("t"))
         .unionByName(e0.select(col("v").as("s"), col("u").as("t"))))
       var survivors = ed.select(col("s").as("node")).distinct()
       // k = floor(0.7 * mean degree): two bounded aggregate scalars
@@ -1112,7 +1036,7 @@ object Extras {
           .join(survivors.toDF("s"), Seq("s"), "left_semi")
           .join(survivors.toDF("t"), Seq("t"), "left_semi")
         // consumed twice: next round's two semi-joins
-        withDeg = Dedup.pin(alive.groupBy(col("s").as("node")).agg(count(lit(1)).as("c"))
+        withDeg = Resources.pin(alive.groupBy(col("s").as("node")).agg(count(lit(1)).as("c"))
           .filter(col("c") >= k))
         survivors = withDeg.select("node")
         prevCount = lastCount

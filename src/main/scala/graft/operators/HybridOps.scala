@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.obs.Trace
 
 /** Hybrid retrieval with an ANN dense leg — the shape a production
@@ -274,13 +274,13 @@ object HybridOps {
     val inBytes = EventsOps.planBytes(graft.core.Tables.documents(s0, d)) +
       EventsOps.planBytes(graft.core.Tables.embeddings(s0, d))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
-    Epochs.scratch("graft-relidx", "graft-relivf", "graft-relcat") { roots =>
+    Resources.scratch("graft-relidx", "graft-relivf", "graft-relcat") { roots =>
       val cat = Trace.phase("build")(buildPinnedStack(s, d,
         roots(0), roots(1), roots(2)))
       // serve reads the pinned store-wide snapshots — full-volume width
       EventsOps.serveWidth(s, inBytes)
       // pinned frame: the store roots are deleted when this returns
-      Trace.phase("serve")(Dedup.pin(servePinnedStack(cat)))
+      Trace.phase("serve")(Resources.pin(servePinnedStack(cat)))
     }
     }
   }
@@ -385,9 +385,9 @@ object HybridOps {
     hybridDialOracleSql) { (s, d) =>
     val st = SearchOps.maintainedIndex(s, d)
     val ivf = Similarity.maintainedIvf(s, d)
-    // pinned: reused by every per-nprobe fusion AND the exact fusion
-    val bm = Dedup.pin(SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50))
-    val dense = Dedup.pin(
+    // driver-local: reused by every per-nprobe fusion AND the exact fusion
+    val bm = SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50)
+    val dense = Resources.pin(
       Similarity.storeMultiprobeScored(ivf, nQ = 1)
         .select(col("nprobe"), col("neighbor_id").as("doc_id"), col("cosine")))
     val fusedAnn = Similarity.ProbeLevels.map { np =>
@@ -523,7 +523,7 @@ object HybridOps {
     "q230_hybrid_dial_multiquery",
     hybridDialMultiOracleSql) { (s, d) =>
     val st = SearchOps.maintainedIndex(s, d)
-    val bmr = Dedup.pin(Similarity.topK(SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50),
+    val bmr = Resources.pin(Similarity.topK(SearchOps.bm25FromIndex(st, Seq("dup", "window"), 50),
       Nil, "score", "doc_id", 50, "bm25_rk").select("doc_id", "bm25_rk"))
     // one lexical ranking, fanned across every query
     multiQueryDial(s, d, nQ = 10)(qs => qs.crossJoin(bmr))
@@ -544,12 +544,12 @@ object HybridOps {
   private def multiQueryDial(s: org.apache.spark.sql.SparkSession, d: String, nQ: Int)(
       lexicalOver: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val dnr = Dedup.pin(Similarity.topK(
+    val dnr = Resources.pin(Similarity.topK(
         Similarity.storeMultiprobeScored(Similarity.maintainedIvf(s, d), nQ),
         Seq("nprobe", "query_id"), "cosine", "neighbor_id", 50, "dense_rk")
       .select(col("nprobe"), col("query_id"), col("neighbor_id").as("doc_id"),
         col("dense_rk")))
-    val edr = Dedup.pin(Similarity.topK(Similarity.scoredPairs(s, d, nQ),
+    val edr = Resources.pin(Similarity.topK(Similarity.scoredPairs(s, d, nQ),
         Seq("query_id"), "cosine", "neighbor_id", 50, "dense_rk")
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("dense_rk")))
     val lex = lexicalOver(edr.select("query_id").distinct())
@@ -714,8 +714,7 @@ object HybridOps {
     val nQ = 10
     val st = SearchOps.maintainedIndex(s, d)
     val termMap = SearchOps.termWorkload(st, nQ, perQuery = 2)
-    val bmr = Dedup.pin(SearchOps.bm25PerQueryFromIndex(st, termMap, 50)
-      .select(col("query_id"), col("doc_id"), col("bm25_rk")))
+    val bmr = SearchOps.bm25PerQueryFromIndex(st, termMap, 50)
     // a lexical-workload query with no embedding has no dense universe
     // to fuse against — the oracle joins bmr to qs the same way
     multiQueryDial(s, d, nQ)(qs => bmr.join(qs, Seq("query_id")))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.functions.TextFunctions._
 import graft.obs.Trace
 
@@ -645,14 +645,16 @@ object SearchOps {
     * kind-2 partials. Bit-identical to the monolithic scores: tf and df
     * are the same counts (a doc lands in exactly one epoch), n/sum_dl
     * are exact integer sums, and the double expression tree is a literal
-    * mirror of [[bm25]]'s. */
+    * mirror of [[bm25]]'s. The ranking comes back driver-local
+    * ([[Resources.local]]), and the posting pin behind it is released. */
   private[graft] def bm25FromIndex(st: graft.sources.TableStore,
       terms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
-    // pin: tf feeds the df aggregate, the matched-id collect AND the
-    // scoring join — one execution of the pruned posting read
-    val tf = Dedup.pin(postingTf(st, terms))
-    okapiTop(tf, matchedDocLengths(st, tf), partialStats(st.table("index"), "n_docs"),
-      Seq("doc_id"), k)
+    // pinned: tf feeds the df aggregate, the matched-id collect AND the
+    // scoring join — one execution of the pruned posting read, released
+    // once the top-k is on the driver
+    Resources.pinned(postingTf(st, terms))(tf => Resources.local(
+      okapiTop(tf, matchedDocLengths(st, tf), partialStats(st.table("index"), "n_docs"),
+        Seq("doc_id"), k)))
   }
 
   /** The probed terms' pruned postings as (w, doc_id, tf double). */
@@ -672,11 +674,12 @@ object SearchOps {
     * range, so the id probe skips files) — the read is then
     * matched-bounded, not corpus-proportional. Guarded by the kernel's
     * broadcast ceiling with ONE bounded collect
-    * ([[Dedup.collectUnder]]): a stop-term probe over the cap falls back
+    * ([[Resources.collectUnder]]): a stop-term probe over the cap falls back
     * to the full kind-1 slice instead of a driver collect. */
   private def matchedSidecar(st: graft.sources.TableStore, table: String,
       tf: org.apache.spark.sql.DataFrame, tag: String): org.apache.spark.sql.DataFrame = {
-    Dedup.collectUnder(tf.select("doc_id").distinct(), Dedup.MaxBroadcastCandidateDocs) match {
+    Resources.collectUnder(tf.select("doc_id").distinct(),
+        Resources.MaxBroadcastCandidateDocs) match {
       case Some(rows) =>
         val ids = rows.map(_.getLong(0))
         java.util.Arrays.sort(ids)
@@ -724,19 +727,19 @@ object SearchOps {
     * that term, and scoring/ranking runs PER QUERY. df per term is
     * global (every posting row of a probed term is read), so scores are
     * bit-identical to the monolithic per-query recomputation. Returns
-    * (query_id, doc_id, bm25_rk) with rk <= k per query. */
+    * (query_id, doc_id, bm25_rk) with rk <= k per query, driver-local. */
   private[graft] def bm25PerQueryFromIndex(st: graft.sources.TableStore,
       termMap: Seq[(Int, String)], k: Int): org.apache.spark.sql.DataFrame = {
     val idx = st.table("index")
     val s = idx.sparkSession
     import s.implicits._
-    val tf = Dedup.pin(postingTf(st, termMap.map(_._2).distinct))
-    Similarity.topK(okapi(tf, matchedDocLengths(st, tf), partialStats(idx, "n_docs"),
-        Seq("query_id", "doc_id"), Some(termMap.toDF("query_id", "w"))),
-      Seq("query_id"), "score", "doc_id", k, "bm25_rk")
-      // long ids: the fusion joins these against embedding vec_ids
-      .select(col("query_id").cast("long").as("query_id"), col("doc_id"),
-        col("bm25_rk"))
+    Resources.pinned(postingTf(st, termMap.map(_._2).distinct))(tf => Resources.local(
+      Similarity.topK(okapi(tf, matchedDocLengths(st, tf), partialStats(idx, "n_docs"),
+          Seq("query_id", "doc_id"), Some(termMap.toDF("query_id", "w"))),
+        Seq("query_id"), "score", "doc_id", k, "bm25_rk")
+        // long ids: the fusion joins these against embedding vec_ids
+        .select(col("query_id").cast("long").as("query_id"), col("doc_id"),
+          col("bm25_rk"))))
   }
 
   /** [[bm25FromIndex]] over a TIME-TRAVEL snapshot frame
@@ -746,10 +749,10 @@ object SearchOps {
     * snapshot) — correct first, hot-path second. */
   private[graft] def bm25FromSnapshot(idx: org.apache.spark.sql.DataFrame,
       terms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
-    val tf = Dedup.pin(idx.filter(col("kind") === 0 && col("w").isin(terms: _*))
-      .select(col("w"), col("doc_id"), col("tf").cast("double").as("tf")))
-    okapiTop(tf, idx.filter(col("kind") === 1).select(col("doc_id"), col("dl")),
-      partialStats(idx, "n_docs"), Seq("doc_id"), k)
+    Resources.pinned(idx.filter(col("kind") === 0 && col("w").isin(terms: _*))
+      .select(col("w"), col("doc_id"), col("tf").cast("double").as("tf")))(tf => Resources.local(
+        okapiTop(tf, idx.filter(col("kind") === 1).select(col("doc_id"), col("dl")),
+          partialStats(idx, "n_docs"), Seq("doc_id"), k)))
   }
 
   /** The maintained index store for `d`, memoized per session: whichever
@@ -757,7 +760,7 @@ object SearchOps {
     * build, all serve from the same store. */
   private[graft] def maintainedIndex(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    Epochs.memo(s, d, "graft-search-index") { st =>
+    Resources.store(s, d, "graft-search-index") { st =>
       val docs = Tables.documents(s, d).select("doc_id", "text")
       buildSearchIndex(st, docs.limit(0))
       Epochs.direct(Epochs.slice(docs, col("doc_id"), 4))(indexIngestEpoch(st))
@@ -821,7 +824,7 @@ object SearchOps {
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-index-stream") { st =>
+    Resources.scratchStore(s, "graft-index-stream") { st =>
       buildSearchIndex(st, docs.limit(0))
       Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), slices), rowsPerFile,
         "q209_index_sink")(graft.streaming.IndexIngest.indexIngestSink(st))
@@ -849,7 +852,7 @@ object SearchOps {
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-chunk-stream") { st =>
+    Resources.scratchStore(s, "graft-chunk-stream") { st =>
       buildChunkIndex(st, docs.limit(0))
       Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), slices), rowsPerFile,
         "q218_chunkindex_sink")(graft.streaming.IndexIngest.chunkIndexIngestSink(st))
@@ -990,20 +993,22 @@ object SearchOps {
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
     Trace.storeRead("chunkindex.postings", rep)
-    val tf = Dedup.pin(tfScan
+    Resources.pinned(tfScan
       .filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select(col("doc_id"), col("chunk_id"), col("w"),
-        col("tf").cast("double").as("tf")))
-    val ch = matchedSidecar(st, "chunkindex", tf, "chunkindex.lens")
-      .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
-    okapiTop(tf, ch, partialStats(st.table("chunkindex"), "n_chunks"), ChunkKeys, k)
+        col("tf").cast("double").as("tf"))) { tf =>
+      val ch = matchedSidecar(st, "chunkindex", tf, "chunkindex.lens")
+        .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
+      Resources.local(okapiTop(tf, ch, partialStats(st.table("chunkindex"), "n_chunks"),
+        ChunkKeys, k))
+    }
   }
 
   /** The maintained chunk store for `d`, memoized per session (the q206
     * discipline). */
   private def maintainedChunkIndex(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    Epochs.memo(s, d, "graft-chunk-index") { st =>
+    Resources.store(s, d, "graft-chunk-index") { st =>
       val docs = Tables.documents(s, d).select("doc_id", "text")
       buildChunkIndex(st, docs.limit(0))
       Epochs.direct(Epochs.slice(docs, col("doc_id"), 4))(chunkIndexIngestEpoch(st))
@@ -1090,7 +1095,7 @@ object SearchOps {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-index-tt") { st =>
+    Resources.scratchStore(s, "graft-index-tt") { st =>
       buildSearchIndex(st, docs.limit(0))
       val sl = Epochs.slice(docs, col("doc_id"), 4)
       Epochs.direct(sl) { (batch, e) =>
@@ -1137,7 +1142,7 @@ object SearchOps {
       Tables.documents(s0, d).select("doc_id", "text"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-index-window") { st =>
+    Resources.scratchStore(s, "graft-index-window") { st =>
       buildSearchIndex(st, docs.limit(0))
       val versions = Epochs.direct(Epochs.slice(docs, col("doc_id"), 4)) { (batch, e) =>
         indexIngestEpoch(st, compactLimit = Some(2),
@@ -1176,7 +1181,7 @@ object SearchOps {
     "q231_streamed_pinned_index",
     twoStageBm25OracleSql) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    Epochs.scratchStore(s, "graft-index-stream-pin") { st =>
+    Resources.scratchStore(s, "graft-index-stream-pin") { st =>
       buildSearchIndex(st, docs.limit(0))
       Epochs.streamed(s, Epochs.slice(docs, col("doc_id"), 4),
         EventsOps.OuterStageRowsPerFile, "q231_pinned_index_sink") { (batch, e) =>

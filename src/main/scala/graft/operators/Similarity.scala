@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.obs.Trace
 
 /** Similarity search over the embedding column (`Array[Float]`, 64-dim).
@@ -184,11 +184,6 @@ object Similarity {
       .orderBy("query_id", "rk")
 
   private val Planes = 16
-
-  /** ±1 hyperplane coefficient for (plane p, dim i), derived from md5 so
-    * both engines build the identical random projection. */
-  private def coefSql(p: String, i: String): String =
-    s"CASE WHEN substr(md5($p || ':' || $i), 1, 1) <= '7' THEN 1 ELSE -1 END"
 
   /** Corpus-size ceiling for [[q52]]'s pair mining. The 4-bit bands
     * collide by chance at 1/16, so the candidate scan is N²-shaped; and
@@ -990,7 +985,7 @@ object Similarity {
       // the frame is a plain pruned parquet scan read twice (cheaper to
       // re-scan than to materialize corpus × Dim rows), while every
       // extra Lloyd round re-reads it 2 more times
-      val lists = if (iters > 1) Dedup.pin(lists0) else lists0
+      val lists = if (iters > 1) Resources.pin(lists0) else lists0
       // deterministic k-means from store rows: seed with the CURRENT
       // centroids (kind-2 partials), then `iters` Lloyd rounds — each
       // assignment is checkpointed (one small row per vector) because it
@@ -1000,13 +995,13 @@ object Similarity {
       // convergence spec pins that iterations STABILIZE (a fixpoint
       // reassigns nothing).
       var assign = precomputedAssign.getOrElse(
-        Dedup.pin(lloydAssign(lists, centroidsFromStore(st))))
+        Resources.pin(lloydAssign(lists, centroidsFromStore(st))))
       (1 until iters).foreach { _ =>
         val cent = lists.join(assign, Seq("vec_id"))
           .groupBy("label", "i")
           .agg((sum(col("xd")).cast("double") / count(lit(1)))
             .cast("decimal(9,7)").as("cd"))
-        assign = Dedup.pin(lloydAssign(lists, cent))
+        assign = Resources.pin(lloydAssign(lists, cent))
       }
       val nulS = lit(null).cast("decimal(28,7)")
       val nulL = lit(null).cast("long")
@@ -1124,15 +1119,12 @@ object Similarity {
       // policy never pays the assignment join twice per fire. Its
       // blocks are released once both have run: the post-probe reads
       // the rewritten store, not this assignment.
-      val assign = Dedup.trackedBuild(batch.sparkSession,
-        Dedup.pin(ivfCurrentAssign(st)))
-      val ((n, mis, ppm), maintain) =
-        try {
-          val pre = stats(ivfMisassignmentFrom(st, assign.df))
-          val fire = epoch == 0L || pre._3 > limit
-          if (fire) reclusterIvf(st, precomputedAssign = Some(assign.df))
-          (pre, fire)
-        } finally assign.release()
+      val ((n, mis, ppm), maintain) = Resources.pinned(ivfCurrentAssign(st)) { assign =>
+        val pre = stats(ivfMisassignmentFrom(st, assign))
+        val fire = epoch == 0L || pre._3 > limit
+        if (fire) reclusterIvf(st, precomputedAssign = Some(assign))
+        (pre, fire)
+      }
       val (_, postMis, postPpm) =
         if (maintain) stats(ivfMisassignment(st)) else (n, mis, ppm)
       (n, mis, ppm, maintain && epoch > 0L, postMis, postPpm)
@@ -1158,7 +1150,7 @@ object Similarity {
     * compaction after epoch 1 — the oracle gates across it (q201's
     * discipline applied to the ANN lists). */
   private[graft] def maintainedIvf(s: SparkSession, d: String): graft.sources.TableStore =
-    Epochs.memo(s, d, "graft-ivf") { st =>
+    Resources.store(s, d, "graft-ivf") { st =>
       val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
       buildIvfStore(st, vecs.limit(0))
       Epochs.direct(Epochs.slice(vecs, col("vec_id"), 4)) { (batch, e) =>
@@ -1196,7 +1188,7 @@ object Similarity {
       rowsPerFile: Long = EventsOps.OuterStageRowsPerFile, slices: Int = 2)(
       s: SparkSession, d: String): DataFrame = {
     val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    Epochs.scratchStore(s, "graft-ivf-stream") { st =>
+    Resources.scratchStore(s, "graft-ivf-stream") { st =>
       buildIvfStore(st, vecs.limit(0))
       Epochs.streamed(s, Epochs.slice(vecs, col("vec_id"), slices), rowsPerFile,
         "q210_ivf_sink")(graft.streaming.IndexIngest.ivfIngestSink(st))
@@ -1217,10 +1209,10 @@ object Similarity {
     // files scheduled) grow with max(levels) — a fixed-nprobe caller
     // (q228's recall drill) must not pay the full sweep's widest probe.
     // Query components: pruned to the query vectors' own labels
-    val qel = Dedup.pin(prunedLists(st, queryLabels(st.table("ivf"), nQ), "ivf.qlists")
+    val qel = Resources.pin(prunedLists(st, queryLabels(st.table("ivf"), nQ), "ivf.qlists")
       .filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("i"), col("xd").as("qc")))
-    val probes = Dedup.pin(rankedClusters(qel, centroidsFromStore(st), levels.max))
+    val probes = Resources.pin(rankedClusters(qel, centroidsFromStore(st), levels.max))
     val qn = qel.groupBy("query_id").agg(sum(col("qc") * col("qc")).as("qn"))
     // candidates: ONLY the probed clusters' list files are scheduled
     multiprobeScored(probes, qel, qn, prunedLists(st, labelsOf(probes), "ivf.mplists"),
@@ -1389,7 +1381,7 @@ object Similarity {
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val nQ = 10
     val raw = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    Epochs.scratchStore(s, "graft-ivf-recluster") { st =>
+    Resources.scratchStore(s, "graft-ivf-recluster") { st =>
       val empty = !ingestDriftedIvf(st, raw)
       // everything from here on is store-wide (recall sweeps, recluster
       // rewrite, exact baseline) — full-volume width
@@ -1405,9 +1397,9 @@ object Similarity {
           .withColumn("non_regressed", lit(1))
       } else {
         // EAGER before-read: the recluster below rewrites the store
-        val before = Dedup.pin(recall("before"))
+        val before = Resources.pin(recall("before"))
         reclusterIvf(st)
-        val after = Dedup.pin(recall("after"))
+        val after = Resources.pin(recall("after"))
         val joined = before.join(after, Seq("query_id"))
         val m = joined.agg(
           (sum(col("hits_before")).cast("double") / (5.0 * nQ)).as("mean_before"),
@@ -1503,7 +1495,7 @@ object Similarity {
       Tables.embeddings(s0, d).select("vec_id", "label", "embedding"))
     EventsOps.withReplayWidth(s0, inBytes / 4) { s =>
     val raw = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    Epochs.scratchStore(s, "graft-ivf-driftprobe") { st =>
+    Resources.scratchStore(s, "graft-ivf-driftprobe") { st =>
       ingestDriftedIvf(st, raw)
       // the probes and the recluster rewrite are store-wide — full-volume
       // width from here on
@@ -1512,8 +1504,8 @@ object Similarity {
       // pinned assignment feeds the before-statistic AND the recluster's
       // first Lloyd step (same snapshot, same expression) — one
       // store-wide assignment join, not two
-      val assign = Dedup.pin(ivfCurrentAssign(st))
-      val before = Dedup.pin(ivfMisassignmentFrom(st, assign)
+      val assign = Resources.pin(ivfCurrentAssign(st))
+      val before = Resources.pin(ivfMisassignmentFrom(st, assign)
         .select(col("n_vectors"), col("mis").as("mis_before")))
       reclusterIvf(st, precomputedAssign = Some(assign))
       val after = ivfMisassignment(st).select(col("mis").as("mis_after"))
@@ -1736,7 +1728,7 @@ object Similarity {
         when(col("vec_id") >= sl.start(2),
           transform(col("embedding"), x => x.cast("double") + lit(0.15)))
           .otherwise(transform(col("embedding"), x => x.cast("double"))))
-      Epochs.scratch("graft-ivf-policy", "graft-ivf-frozen") { roots =>
+      Resources.scratch("graft-ivf-policy", "graft-ivf-frozen") { roots =>
         val stM = new graft.sources.TableStore(s, roots(0))
         val stF = new graft.sources.TableStore(s, roots(1))
         buildIvfStore(stM, drifted.limit(0))
@@ -1764,7 +1756,7 @@ object Similarity {
           .withColumn("non_regressed",
             (col("recall_maintained") >= col("recall_frozen")).cast("int"))
         // pinned frame: the store roots are deleted when this returns
-        Dedup.pin(traceDf(trace).crossJoin(broadcast(rec)).orderBy("epoch"))
+        Resources.pin(traceDf(trace).crossJoin(broadcast(rec)).orderBy("epoch"))
       }
     }
     }
@@ -1852,7 +1844,7 @@ object Similarity {
     "q235_streamed_recluster",
     streamedReclusterOracleSql) { (s, d) =>
     val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    Epochs.scratchStore(s, "graft-ivf-stream-recluster") { st =>
+    Resources.scratchStore(s, "graft-ivf-stream-recluster") { st =>
       buildIvfStore(st, vecs.limit(0))
       val sl = Epochs.slice(vecs, col("vec_id"), 4)
       if (sl.epochs > 0) {

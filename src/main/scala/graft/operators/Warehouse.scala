@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 
 /** Warehouse idioms beyond the reference's surface: SCD2 dimension
   * maintenance + as-of lookup, session path mining, and one-pass column
@@ -218,7 +218,7 @@ object Warehouse {
       |       LEAD(valid_from) OVER (PARTITION BY user_id
       |                              ORDER BY valid_from, tier) AS valid_to
       |FROM ch ORDER BY user_id, tier""".stripMargin) { (s, d) =>
-    Epochs.scratchStore(s, "graft-scd2") { st =>
+    Resources.scratchStore(s, "graft-scd2") { st =>
       val ev = Tables.events(s, d)
       val range = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
       val cut = range.getLong(0) + (range.getLong(1) - range.getLong(0)) * 3 / 4
@@ -347,7 +347,7 @@ object Warehouse {
     val evBytes = EventsOps.planBytes(Tables.events(s0, d)
       .select("event_id", "ts", "user_id", "event_type", "value"))
     EventsOps.withReplayWidth(s0, evBytes / 4) { s =>
-    Epochs.scratchStore(s, "graft-scd2-stream") { st =>
+    Resources.scratchStore(s, "graft-scd2-stream") { st =>
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value")
       // empty dimension: the first refresh bootstraps it
@@ -389,7 +389,7 @@ object Warehouse {
       |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS value_sum
       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin) { (s, d) =>
     import graft.functions.Dec._
-    Epochs.scratchStore(s, "graft-compact-stream") { st =>
+    Resources.scratchStore(s, "graft-compact-stream") { st =>
       val ev = Tables.events(s, d).select("event_id", "ts", "event_type", "value")
       st.create("ev", ev.limit(0))
       Epochs.streamed(s, Epochs.slice(ev, unix_micros(col("ts")), 4),

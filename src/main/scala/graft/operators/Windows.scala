@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{QueryDef, Resources, Tables}
 import graft.functions.Dec._
 
 /** Window functions, sorts, top-k (SURVEY.md §2.5, §2.6).
@@ -36,7 +36,7 @@ object Windows {
     // just to discover the frame is too big — VERDICT r6), the collect on
     // the small path reads the same materialization, and the distributed
     // fallback consumes it without re-running the aggregate.
-    val agg = Dedup.pin(df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt")))
+    val agg = Resources.pin(df.groupBy(col(valueCol)).agg(count(lit(1)).as("__cnt")))
     if (agg.count() > MaxRankDistinct)
       return distributedRankDesc(agg, valueCol, rankName)
     val rows = agg.collect()
@@ -79,7 +79,7 @@ object Windows {
     // only while Spark's exchange reuse deduplicated the two identical
     // shuffles. localCheckpoint freezes the bucket assignment so both
     // branches see the same partitioning regardless of plan reuse.
-    val buckets = Dedup.pin(agg
+    val buckets = Resources.pin(agg
       .repartitionByRange(256, col(valueCol).desc)
       .withColumn("__b", spark_partition_id()))
     // level 1: per-bucket totals (≤ 256 rows)

@@ -1533,7 +1533,7 @@ final class TableStore(spark: SparkSession, root: String) {
     // this scan cheap when pred constrains the partition column; the
     // distinct values land on the driver, so at most MaxPartitions + 1 are
     // collected and more fail loudly as a mis-keyed partition column
-    val affected = graft.operators.Dedup.collectUnder(
+    val affected = graft.core.Resources.collectUnder(
       table(name).filter(pred).select(col(partCol).cast("string")).distinct(),
       TableStore.MaxPartitions)
     require(affected.isDefined,

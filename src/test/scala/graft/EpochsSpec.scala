@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.col
+import graft.core.Resources
 import graft.obs.Trace
 import graft.operators.{Epochs, SearchOps}
 
@@ -10,9 +11,9 @@ import graft.operators.{Epochs, SearchOps}
   * direct-epoch gate used (the prefix and drift oracles depend on it),
   * an empty input costs one job and no epoch, scratch roots never
   * outlive the gate run, both drives trace one span per epoch, and no
-  * cached block outlives the pinned result. A source guard keeps every
-  * other file from re-growing its own epoch loop, span, store memo, temp
-  * dir or stream replay, and every file but `Dedup` from a bare pin. */
+  * cached block outlives the pinned result. A source guard keeps epoch
+  * slicing, spans and stream replays in `Epochs`, and the session memo,
+  * temp dirs and bare pins in `Resources`. */
 class EpochsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -62,7 +63,7 @@ class EpochsSpec extends SparkSpec {
 
   test("scratch roots are gone after the body returns and after it throws") {
     var seen: Seq[String] = Nil
-    val n = Epochs.scratch("graft-epochs-a", "graft-epochs-b") { roots =>
+    val n = Resources.scratch("graft-epochs-a", "graft-epochs-b") { roots =>
       seen = roots
       roots.foreach(r => Files.isDirectory(Paths.get(r)) shouldBe true)
       roots.size
@@ -71,7 +72,7 @@ class EpochsSpec extends SparkSpec {
     seen.foreach(r => Files.exists(Paths.get(r)) shouldBe false)
 
     val boom = intercept[IllegalStateException] {
-      Epochs.scratchStore(spark, "graft-epochs-c") { st =>
+      Resources.scratchStore(spark, "graft-epochs-c") { st =>
         seen = Seq(st.rootDir)
         throw new IllegalStateException("boom")
       }
@@ -80,7 +81,7 @@ class EpochsSpec extends SparkSpec {
     seen.foreach(r => Files.exists(Paths.get(r)) shouldBe false)
 
     // the served frame is pinned: it answers after its store root is gone
-    val served = Epochs.scratchStore(spark, "graft-epochs-d") { st =>
+    val served = Resources.scratchStore(spark, "graft-epochs-d") { st =>
       seen = Seq(st.rootDir)
       st.create("t", (1L to 5L).toDF("k"))
       st.table("t")
@@ -135,21 +136,19 @@ class EpochsSpec extends SparkSpec {
   }
 
   test("a scratch-store drive leaves no persistent RDD but the pinned result") {
-    def persisted: Set[Int] =
-      spark.sparkContext.getPersistentRDDs.filter(_._2.getStorageLevel.isValid).keySet.toSet
     val docs = (1L to 40L).map(i => (i, s"doc $i window dup " + ("w" + i % 7))).toDF("doc_id", "text")
-    val before = persisted
-    val served = Epochs.scratchStore(spark, "graft-epochs-pin") { st =>
+    val before = persistedRdds
+    val served = Resources.scratchStore(spark, "graft-epochs-pin") { st =>
       SearchOps.buildSearchIndex(st, docs.limit(0))
       // each epoch persists its postings frame for the range layout
       Epochs.direct(Epochs.slice(docs, col("doc_id"), 3))(SearchOps.indexIngestEpoch(st))
       st.table("index").groupBy("kind").count()
     }
-    (persisted -- before).size shouldBe 1
+    (persistedRdds -- before).size shouldBe 1
     served.count() shouldBe 3L
   }
 
-  test("only the driver slices epochs, opens epoch spans or memoizes store roots") {
+  test("only Epochs slices epochs; only Resources pins, memoizes or makes temp dirs") {
     val root = Paths.get("src/main/scala/graft")
     val walk = Files.walk(root)
     val files: List[Path] = try walk.iterator().asScala
@@ -157,19 +156,25 @@ class EpochsSpec extends SparkSpec {
     finally walk.close()
     files should not be empty
     def quoted(s: String) = java.util.regex.Pattern.quote(s).r
+    // a per-session map of any value type: its key must stay weak
+    val sessionMap =
+      """(?s)WeakHashMap\[\s*(?:org\.apache\.spark\.sql\.)?SparkSession\s*,(.*?)\]\(\)""".r
     // (owner file, what, pattern): the pattern may appear in the owner only
     val rules = Seq(
       ("operators/Epochs.scala", "slice step", """val\s+step\s*=\s*\(hi\s*-\s*lo\)""".r),
       ("operators/Epochs.scala", "epoch span", """Trace\.epoch\(""".r),
-      ("operators/Epochs.scala", "store memo",
-        ("""WeakHashMap\[\s*(?:org\.apache\.spark\.sql\.)?SparkSession\s*,\s*""" +
-          """(?:scala\.collection\.mutable\.)?Map\[String,\s*String\]\s*\]""").r),
-      ("operators/Epochs.scala", "temp dir", quoted("createTempDirectory")),
+      ("core/Resources.scala", "session memo", sessionMap),
+      ("core/Resources.scala", "temp dir", quoted("createTempDirectory")),
       ("operators/Epochs.scala", "replay trigger", quoted("Trigger.AvailableNow")),
       ("operators/Epochs.scala", "replay wait", quoted("awaitTermination")),
       ("operators/Epochs.scala", "memory sink", quoted("format(\"memory\")")),
       ("operators/Epochs.scala", "stream lookup", quoted("streams.active")),
-      ("operators/Dedup.scala", "bare pin", quoted("localCheckpoint(")))
+      ("core/Resources.scala", "bare pin", quoted("localCheckpoint(")))
+    // the one session memo holds root paths: no value may reach its key
+    val memos = sessionMap.findAllMatchIn(
+      new String(Files.readAllBytes(root.resolve("core/Resources.scala")), "UTF-8")).toList
+    memos.size shouldBe 1
+    memos.head.group(1) should not include regex("DataFrame|Dataset|TableStore|SparkSession")
     val hits = files.flatMap { p =>
       val text = new String(Files.readAllBytes(p), "UTF-8")
       def line(at: Int) = text.substring(0, at).count(_ == '\n') + 1

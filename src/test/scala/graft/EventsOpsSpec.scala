@@ -32,18 +32,9 @@ class EventsOpsSpec extends SparkSpec {
   }
 
   test("streaming gates leave /tmp flat: staging dirs cleaned up across repeated runs") {
-    def stageDirs(): Set[String] = {
-      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val s = java.nio.file.Files.list(tmp)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => Seq("graft-stream", "graft-late", "graft-outer", "graft-scd2",
-          "graft-stage", "graft-admit", "graft-enrich", "graft-q", "graft-upsert",
-          "graft-merge", "graft-diff", "graft-mv", "graft-evolve-q", "graft-skip",
-          "graft-shard-store").exists(n.startsWith))
-        .toSet
-      finally s.close()
-    }
+    def stageDirs(): Set[String] = tmpEntries("graft-stream", "graft-late", "graft-outer",
+      "graft-scd2", "graft-stage", "graft-admit", "graft-enrich", "graft-q", "graft-upsert",
+      "graft-merge", "graft-diff", "graft-mv", "graft-evolve-q", "graft-skip", "graft-shard-store")
     val before = stageDirs()
     Seq(operators.DmlQueries.q87, operators.DmlQueries.q116, operators.DmlQueries.q124,
       operators.DmlQueries.q102, operators.DmlQueries.q104, operators.Extras.q127,

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Resources
 import graft.operators.{Dedup, Windows}
 
 /** Scale-contract guards: the deliberately-quadratic validation paths must
@@ -17,14 +18,14 @@ class GuardsSpec extends SparkSpec {
 
   test("a probe ceiling whose LIMIT would not fit an Int is refused") {
     val df = spark.range(3).toDF("id")
-    Dedup.collectUnder(df, Dedup.MaxBroadcastCandidateDocs).map(_.length) shouldBe Some(3)
-    Dedup.collectUnder(df, -1L) shouldBe None // LIMIT 0: no row fits
-    Dedup.collectUnder(df, Int.MaxValue - 2L).map(_.length) shouldBe Some(3)
-    an[IllegalArgumentException] should be thrownBy Dedup.collectUnder(df, Int.MaxValue - 1L)
-    an[IllegalArgumentException] should be thrownBy Dedup.collectUnder(df, Long.MaxValue)
+    Resources.collectUnder(df, Resources.MaxBroadcastCandidateDocs).map(_.length) shouldBe Some(3)
+    Resources.collectUnder(df, -1L) shouldBe None // LIMIT 0: no row fits
+    Resources.collectUnder(df, Int.MaxValue - 2L).map(_.length) shouldBe Some(3)
+    an[IllegalArgumentException] should be thrownBy Resources.collectUnder(df, Int.MaxValue - 1L)
+    an[IllegalArgumentException] should be thrownBy Resources.collectUnder(df, Long.MaxValue)
     // the ceiling + 1st row is what tells "over" from "exactly at"
-    Dedup.collectUnder(df, 2L) shouldBe None
-    Dedup.collectUnder(df, 3L).map(_.map(_.getLong(0)).toSeq) shouldBe Some(Seq(0L, 1L, 2L))
+    Resources.collectUnder(df, 2L) shouldBe None
+    Resources.collectUnder(df, 3L).map(_.map(_.getLong(0)).toSeq) shouldBe Some(Seq(0L, 1L, 2L))
   }
 
   test("windowlessRankDesc ranks reduced frames and rejects unreduced ones") {

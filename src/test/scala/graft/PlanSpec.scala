@@ -102,17 +102,19 @@ class PlanSpec extends SparkSpec {
 
   test("q71 edge source: banded LSH candidates, never an all-pairs shingle join") {
     // assert on the UN-materialized pair plan: the memoized
-    // lshVerifiedPairs is localCheckpoint'ed (lineage = one LogicalRDD),
-    // so the candidate-generation shape is only visible pre-checkpoint
-    val pairs = Dedup.lshPairsPlan(spark, sf)
-    val plan = planOf(pairs)
-    plan should not include "CartesianProduct"
-    plan should not include "BroadcastNestedLoopJoin"
-    // the band-bucket join key must be what generates candidates
-    pairs.queryExecution.analyzed.toString should include("band")
-    // and the frame consumers actually get is the materialized checkpoint
-    Dedup.lshVerifiedPairs(spark, sf).queryExecution.analyzed.toString should
-      include("LogicalRDD")
+    // lshVerifiedPairs reads the written pairs back, so the
+    // candidate-generation shape is only visible before the write
+    Dedup.lshPairsPlan(spark, sf) { pairs =>
+      val plan = planOf(pairs)
+      plan should not include "CartesianProduct"
+      plan should not include "BroadcastNestedLoopJoin"
+      // the band-bucket join key must be what generates candidates
+      pairs.queryExecution.analyzed.toString should include("band")
+    }
+    // and the frame consumers actually get is one stored relation (a
+    // single leaf: no join is re-planned per consumer)
+    Dedup.lshVerifiedPairs(spark, sf).queryExecution.analyzed.collectLeaves()
+      .map(_.getClass.getSimpleName) shouldBe Seq("LogicalRelation")
   }
 
   test("q74/q76: quantized ANN and k-means training plan no nested loops") {
@@ -255,11 +257,11 @@ class PlanSpec extends SparkSpec {
     // With auto-broadcast disabled, every BroadcastExchange left in the
     // plan can only come from an explicit broadcast() hint — so each one
     // must be a bounded frame: a query-side doc_id filter, a scalar
-    // keys=[] aggregate, a query-term IN filter, or the checkpointed pair
-    // list (Scan ExistingRDD). A per-document or per-token frame showing
-    // up here is the 100 TB broadcast-OOM the `sizes` no-broadcast
-    // contract in Dedup forbids.
-    val boundedMarkers = Seq("< 20", "= 0", "keys=[]", "ExistingRDD", " IN (")
+    // keys=[] aggregate, a query-term IN filter, or the memoized pair
+    // list (a scan of its graft-lsh-pairs root). A per-document or
+    // per-token frame showing up here is the 100 TB broadcast-OOM the
+    // `sizes` no-broadcast contract in Dedup forbids.
+    val boundedMarkers = Seq("< 20", "= 0", "keys=[]", "graft-lsh-pairs", " IN (")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

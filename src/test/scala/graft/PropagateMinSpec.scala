@@ -25,7 +25,7 @@ class PropagateMinSpec extends SparkSpec {
       init: Option[Seq[(Long, Long)]]): (Map[Long, Long], Map[Long, Long]) = {
     // callers always pass both directions — mirror that convention
     val edges = edges0 ++ edges0.map(_.swap)
-    (run(edges, init, ceiling = graft.operators.Dedup.MaxBroadcastCandidateDocs),
+    (run(edges, init, ceiling = graft.core.Resources.MaxBroadcastCandidateDocs),
       run(edges, init, ceiling = -1L)) // force the distributed loop
   }
 

@@ -70,6 +70,18 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Entries of the JVM temp dir whose names start with one of `prefixes`. */
+  def tmpEntries(prefixes: String*): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(n => prefixes.exists(n.startsWith)).toSet
+    finally s.close()
+  }
+
+  /** Ids of the RDDs holding persisted or pinned blocks. */
+  def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.filter(_._2.getStorageLevel.isValid).keySet.toSet
+
   /** The (tag, filesTotal, filesRead) store reads among captured trace
     * events, in record order. */
   def storeReads(events: Seq[graft.obs.Trace.Event]): Seq[(String, Int, Int)] =

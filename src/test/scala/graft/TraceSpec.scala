@@ -86,6 +86,20 @@ class TraceSpec extends SparkSpec {
     events.collect { case Trace.Candidates(n) => n } should not be empty
   }
 
+  test("a session-memo lookup records one Trace.Memo: built when cold, hit after") {
+    val dir = tempDir("graft-trace-memo").toString
+    val (_, events) = Trace.capture {
+      graft.core.Resources.memo(spark, dir, "graft-trace-outer") { _ =>
+        graft.core.Resources.memo(spark, dir, "graft-trace-inner")(_ => ())
+        ()
+      }
+      graft.core.Resources.memo(spark, dir, "graft-trace-outer")(_ => fail("built twice"))
+    }
+    graft.core.Resources.release(dir)
+    events shouldBe Seq(Trace.Memo("graft-trace-outer", hit = false),
+      Trace.Memo("graft-trace-inner", hit = false), Trace.Memo("graft-trace-outer", hit = true))
+  }
+
   test("only graft.obs.Trace reads a system property as a switch; no operator holds a trace queue") {
     val root = Paths.get("src/main/scala/graft")
     val allowed = root.resolve("obs/Trace.scala")
