@@ -20,6 +20,21 @@ import org.apache.spark.sql.SparkSession
   *    pins the current encoding).
   *  - The native functions ([[graft.plans.GraftExtensions]]) are injected
   *    once per session; `newSession()`/`cloneSession()` inherit them.
+  *  - `spark.sql.icu.caseMappings.enabled` off: with it on (the Spark 4.1
+  *    default), the first `lower`/`upper` in a JVM builds ICU's case table
+  *    by title-casing all 1,114,112 code points, about 1.4 s of one task
+  *    and 3.3 GB of garbage on a cold batch run, which grows the heap past
+  *    `-Xms` (BENCH_NOTES "Cold-JVM allocation"). Off, ASCII strings take
+  *    the locale-free ASCII path as before and other strings the JVM's
+  *    case mapping (the Spark 3 behaviour), which follows the JVM's
+  *    default locale (tr, az and lt map some letters differently);
+  *    SessionSpec pins the results, so a Turkish JVM fails loudly.
+  *  - `spark.broadcast.blockSize` = 256k: every broadcast (each stage's
+  *    task binary, each scan's Hadoop conf, each hash-join build) allocates
+  *    one chunk of this size, and the 4 MB default is a humongous object
+  *    under any G1 region size up to 8 MB (1.62 GB of them per cold ETL
+  *    pass); 256 KB is under the 512 KB humongous threshold of the
+  *    smallest region.
   */
 object GraftSession {
   def builder(appName: String = "graft", cores: Int = 32): SparkSession.Builder =
@@ -33,6 +48,8 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.icu.caseMappings.enabled", "false")
+      .config("spark.broadcast.blockSize", "256k")
 
   /** A local session whose warehouse dir is private to this JVM and
     * deleted when it exits. */

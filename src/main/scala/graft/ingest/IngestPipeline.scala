@@ -2,7 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.DataType
 import graft.constraints.Constraints
 import graft.functions.CleanFunctions._
 

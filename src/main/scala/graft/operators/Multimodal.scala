@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.core.{QueryDef, Tables}
 
 /** Multimodal columns: media as opaque `binary` + typed metadata struct.

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.col
 import graft.core.{QueryDef, Tables}
 
 /** The `spark.sql(...)` entry point (SURVEY.md §3.1: every query is

@@ -39,7 +39,6 @@ object TextAnalysis {
     * alphabetical tiebreak. On real corpora the lists are the top-k
     * function words per language; mechanism is what matters here. */
   val q43 = {
-    val scoreCols = StopWords.map { case (lang, words) => lang -> s"score_$lang" }
     val sqlScores = StopWords.map { case (lang, words) =>
       s"  ${stopHitsSql("t", words)} AS score_$lang"
     }.mkString(",\n")

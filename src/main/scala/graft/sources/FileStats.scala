@@ -47,7 +47,7 @@ object FileStats {
                             schema: Option[String] = None)
 
   /** Footer key-value entry holding a Spark writer's schema JSON. */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+  private[sources] val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   // ---- footer reading -------------------------------------------------
 

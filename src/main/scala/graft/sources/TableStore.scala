@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -236,10 +236,36 @@ final class TableStore(spark: SparkSession, root: String) {
   private def publish(name: String, df: DataFrame,
                       constraints: Option[Seq[Constraint]] = None): Int =
     commit(name, lastRead.get.getOrElse(name, currentVersion(name))) { (v, prev) =>
-      df.write.mode("overwrite").parquet(dataPath(name, v))
+      // a statically empty frame (LIMIT 0, an empty local relation: its
+      // analyzed plan's maxRows is 0, known without optimizing the plan)
+      // gets the one footer-only file Spark's write of it would leave,
+      // written here without a Spark job
+      if (df.queryExecution.analyzed.maxRows.contains(0L)) writeFooterOnly(df.schema, dataPath(name, v))
+      else df.write.mode("overwrite").parquet(dataPath(name, v))
       prev.copy(partCol = "", entries = Seq("." -> s"v$v"),
         constraints = constraints.getOrElse(prev.constraints))
     }
+
+  /** One zero-row parquet file in `dir` carrying `schema` the way a Spark
+    * writer records it (every column nullable, the Spark schema JSON in
+    * the footer), so its stats sidecar and every read see what they see
+    * for a Spark-written empty version. */
+  private def writeFooterOnly(schema: StructType, dir: String): Unit = {
+    import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+    import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+    import scala.jdk.CollectionConverters._
+    val st = nullable(schema)
+    val file = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/part-00000-empty.parquet"),
+      spark.sparkContext.hadoopConfiguration)
+    val w = new ParquetFileWriter(file,
+      new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(st),
+      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE,
+      ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
+    w.start()
+    w.end(Map(FileStats.SparkSchemaKey -> st.json,
+      "org.apache.spark.version" -> spark.version).asJava)
+  }
 
   // ------------------------------------------------------------------
   // The snapshot record: one v{N}.snap per version holds everything a
@@ -606,22 +632,29 @@ final class TableStore(spark: SparkSession, root: String) {
   private def readParquet(name: String, dirs: Seq[String],
                           basePath: Option[String] = None)(paths: String*): DataFrame = {
     val reader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    recordedSchema(name, dirs).fold(reader.parquet(paths: _*))(reader.schema(_).parquet(paths: _*))
+  }
+
+  /** The schema every one of `dirs`' sidecars recorded, as Spark reads
+    * it (all columns nullable); None when one recorded none or they
+    * disagree. */
+  private def recordedSchema(name: String, dirs: Seq[String]): Option[StructType] = {
     val schemas = dirs.distinct.map(dirSchema(name, _))
     val known = if (schemas.forall(_.isDefined)) schemas.flatten else Nil
     known.map(nullable).distinct match {
-      case Seq(st) => reader.schema(st).parquet(paths: _*)
-      case _ => reader.parquet(paths: _*)
+      case Seq(st) => Some(st)
+      case _ => None
     }
   }
 
   private def nullable(st: StructType): StructType =
     StructType(st.fields.map(_.copy(nullable = true)))
 
-  /** Version `v`'s files as (path relative to the table dir, owning
-    * version dir). */
-  private def filesAt(name: String, v: Int): Seq[(String, String)] = {
+  /** The files a record's `entries` stitch together, as (path relative to
+    * the table dir, owning version dir). */
+  private def filesOf(name: String, entries: Seq[(String, String)]): Seq[(String, String)] = {
     val tableDir = Paths.get(s"$root/$name")
-    snapAt(name, v).entries.flatMap { e =>
+    entries.flatMap { e =>
       listParquetFiles(entryDir(name, e)).map(p => tableDir.relativize(p).toString -> e._2)
     }
   }
@@ -630,7 +663,7 @@ final class TableStore(spark: SparkSession, root: String) {
   private def currentFiles(name: String): Seq[(String, String)] = {
     val v = currentVersion(name)
     require(v >= 0, s"no such table: $name")
-    filesAt(name, v)
+    filesOf(name, snapAt(name, v).entries)
   }
 
   /** Scan with file-level skipping: read only files whose min/max stats
@@ -701,8 +734,8 @@ final class TableStore(spark: SparkSession, root: String) {
       if (Files.exists(p)) FileStats.parse(new String(Files.readAllBytes(p))) else Nil
     }.map(f => f.relPath -> f).toMap
 
-  /** Exact row count of version `v` from the stats sidecars alone (parquet
-    * footer counts are exact) — Some only when EVERY file of `v` has a
+  /** Exact row count of a record's `entries` from the stats sidecars alone
+    * (parquet footer counts are exact) — Some only when EVERY file has a
     * recorded stat, None if any is foreign/unstated, and the caller falls
     * back to a count() scan. No Spark job: [[analyze]] reports a
     * just-compacted table's rows without re-reading it, and [[insert]],
@@ -714,8 +747,9 @@ final class TableStore(spark: SparkSession, root: String) {
     * filtering — a read path that ever adds tombstones/constraints must
     * route analyze() and those DML return values back through count()
     * (ADVICE r19). */
-  private def statsExactRowCount(name: String, v: Int): Option[Long] = {
-    val files = filesAt(name, v)
+  private def statsExactRowCount(name: String,
+                                 entries: Seq[(String, String)]): Option[Long] = {
+    val files = filesOf(name, entries)
     val stats = currentStats(name, files)
     val known = files.flatMap { case (rel, _) => stats.get(rel).map(_.rows) }
     if (known.size == files.size) Some(known.sum) else None
@@ -727,7 +761,8 @@ final class TableStore(spark: SparkSession, root: String) {
     * statement's inputs, which stay readable: the snapshot is not
     * vacuumed by a publish. */
   private def growth(name: String, v: Int): Option[Long] =
-    for (after <- statsExactRowCount(name, v); before <- statsExactRowCount(name, v - 1))
+    for (after <- statsExactRowCount(name, snapAt(name, v).entries);
+         before <- statsExactRowCount(name, snapAt(name, v - 1).entries))
       yield after - before
 
   /** Total rows of the current snapshot, summed from the per-file stats
@@ -1204,9 +1239,17 @@ final class TableStore(spark: SparkSession, root: String) {
     // whole version dir: the per-version split below plans (and
     // footer-samples) one parquet relation per dir, an O(append-chain)
     // planning cost per read that dominates long-chain epochs; without
-    // deltas or partition subdirs it buys nothing.
-    if (deltas.isEmpty && entries.forall(_._1 == "."))
-      readParquet(name, entries.map(_._2))(entries.map { case (_, vd) => s"$root/$name/$vd" }: _*)
+    // deltas or partition subdirs it buys nothing. A snapshot whose stats
+    // hold no row reads as an empty local relation with its recorded
+    // schema, so Catalyst folds the joins and unions over it away instead
+    // of scanning its footer-only file.
+    if (deltas.isEmpty && entries.forall(_._1 == ".")) {
+      val dirs = entries.map(_._2)
+      val emptySchema =
+        if (statsExactRowCount(name, entries).contains(0L)) recordedSchema(name, dirs) else None
+      emptySchema.fold(readParquet(name, dirs)(dirs.map(vd => s"$root/$name/$vd"): _*))(
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
+    }
     else entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (vd, es) =>
       val raw =
         if (es.exists(_._1 == "."))
@@ -1429,12 +1472,18 @@ final class TableStore(spark: SparkSession, root: String) {
     * vacuum reclaims superseded ones). Fails loudly on a vacuumed or
     * never-existing version rather than returning partial data. */
   def tableAt(name: String, v: Int): DataFrame = {
+    requireLive(name, v)
+    readSnap(name, snapAt(name, v))
+  }
+
+  /** Fail loudly unless version `v` of `name` exists and is still on
+    * disk: the record answers it, no read is planned. */
+  private def requireLive(name: String, v: Int): Unit = {
     val cur = currentVersion(name)
     require(cur >= 0, s"no such table: $name")
     require(v >= 0 && v <= cur, s"$name has no version $v (current: v$cur)")
     require(isLive(name, v), s"$name version $v was vacuumed; time travel only " +
       "reaches versions analyze() has not reclaimed")
-    readSnap(name, snapAt(name, v))
   }
 
   /** Versions of `name` whose record and data are still on disk
@@ -1622,7 +1671,7 @@ final class TableStore(spark: SparkSession, root: String) {
     val cur = currentVersion(name)
     require(cur >= 0, s"no such table: $name")
     val v = if (version < 0) cur else version
-    tableAt(name, v) // loud failure on a vacuumed or never-existing version
+    requireLive(name, v)
     TableStore.pinsLock.synchronized {
       writePins(name, pinnedVersions(name).updated(label, v))
     }
@@ -1708,7 +1757,7 @@ final class TableStore(spark: SparkSession, root: String) {
     // live bytes: sum exactly the record's entries, not whole dirs
     val bytes = cur.entries.map(e => sizeOf(entryDir(name, e))).sum
     TableStore.TableStats(
-      statsExactRowCount(name, v).getOrElse(table(name).count()), bytes, v)
+      statsExactRowCount(name, cur.entries).getOrElse(table(name).count()), bytes, v)
   }
 
   /** §2.1 S11 — catalog introspection (the reference reads pg_constraint,

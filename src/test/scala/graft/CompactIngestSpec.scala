@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** q200's mechanics, pinned at the store level: a mid-chain compaction
   * must collapse the per-epoch file chain without changing a row, the

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.functions._
 import graft.sources.TableStore

@@ -41,7 +41,7 @@ class ConcurrentScd2Spec extends SparkSpec {
         // on the store, not on Spark job scheduling
         val pinned = slice.localCheckpoint(true)
         new Thread(() => {
-          var epoch = 0L
+          val epoch = 0L
           var done = false
           while (!done) {
             try {

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.constraints.Constraints._
 import graft.sources.{FileStats, TableStore}
 import graft.sources.FileStats.ColumnRange
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.Dedup
 import graft.sources.TableStore

@@ -14,7 +14,6 @@ import graft.sources.TableStore
   * re-ingest → Task-10 high-value-customers analytics → all-zero audits.
   */
 class EndToEndSpec extends SparkSpec {
-  import spark.implicits._
 
   private val c1 = "898ca408-050f-4a22-9b07-6e5ed27ab101"
   private val c2 = "898ca408-050f-4a22-9b07-6e5ed27ab102"

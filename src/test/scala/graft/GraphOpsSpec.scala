@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Invariants for the graph-iteration operators (PageRank, canonical
   * selection) on the real sf0.001 tables — conservation and membership

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.Dedup
 import graft.sources.TableStore
 

@@ -30,19 +30,6 @@ class IncrementalPlanSpec extends SparkSpec {
       (if (name < 0) l.length else name, l)
     }
 
-  /** Ancestor lines of line `i` (nearest-enclosing first): the preceding
-    * lines whose indent strictly decreases. */
-  private def ancestors(lines: Seq[(Int, String)], i: Int): Seq[String] = {
-    var depth = lines(i)._1
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var j = i - 1
-    while (j >= 0) {
-      if (lines(j)._1 < depth) { out += lines(j)._2; depth = lines(j)._1 }
-      j -= 1
-    }
-    out.toSeq
-  }
-
   /** Store FileScan nodes of a physical plan with their ancestor chains
     * (nearest first). Tree traversal, not string parsing: cached subtrees
     * hide behind InMemoryTableScanExec LEAVES, so a scan found here is one

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType}
 import graft.ingest.IngestPipeline
 import graft.ingest.IngestPipeline._

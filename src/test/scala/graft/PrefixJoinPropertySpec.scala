@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.Dedup
@@ -25,7 +24,7 @@ class PrefixJoinPropertySpec extends SparkSpec {
       val n = 8 + rnd.nextInt(12)
       i.toLong -> Vector.fill(n)(vocab(rnd.nextInt(vocab.size)))
     }
-    val mutants = base.take(6).zipWithIndex.map { case ((id, toks), k) =>
+    val mutants = base.take(6).zipWithIndex.map { case ((_, toks), k) =>
       val t = rnd.nextInt(3) match {
         case 0 => toks.updated(toks.size - 1, vocab(rnd.nextInt(vocab.size))) // last-token swap
         case 1 => toks :+ vocab(rnd.nextInt(vocab.size))                      // append

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.analytics.ReferenceTasks._
 import graft.ingest.Normalizer
 

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.{FileStats, TableStore}
+import graft.sources.TableStore
 import graft.sources.FileStats.ColumnRange
 
 /** Property: for ANY data and ANY ranges, the skipped scan returns exactly

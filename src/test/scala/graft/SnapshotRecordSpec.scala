@@ -39,9 +39,10 @@ class SnapshotRecordSpec extends SparkSpec {
       "day", Seq(PrimaryKey(Seq("id"))))
     st.updateWherePruned("p", col("day") === "x", Map("amt" -> lit(9.0))) shouldBe Seq("x")
     st.analyze("p")
+    st.create("e", Seq((1L, "a")).toDF("id", "v").limit(0), Seq(PrimaryKey(Seq("id"))))
 
     val allowed = """VERSION|PINS|v\d+|v\d+\.(stats|claim|snap)""".r
-    for (t <- Seq("t", "p")) {
+    for (t <- Seq("t", "p", "e")) {
       val names = new java.io.File(s"${st.rootDir}/$t").listFiles().toSeq
       names.map(_.getName).filterNot(allowed.matches) shouldBe empty
       names.filter(_.getName.matches("""v\d+""")).forall(_.isDirectory) shouldBe true
@@ -51,8 +52,9 @@ class SnapshotRecordSpec extends SparkSpec {
     Files.exists(Paths.get(s"${st.rootDir}/t/v6.snap")) shouldBe false
 
     val reopened = new TableStore(spark, st.rootDir)
-    for (t <- Seq("t", "p")) {
+    for (t <- Seq("t", "p", "e")) {
       rows(reopened.table(t)) shouldBe rows(st.table(t))
+      reopened.table(t).schema shouldBe st.table(t).schema
       reopened.constraintsOf(t) shouldBe st.constraintsOf(t)
     }
     rows(reopened.table("t")) shouldBe

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.constraints.Constraints._
@@ -472,4 +473,50 @@ class TableStoreSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.size shouldBe before
   }
 
+  test("an empty CREATE commits without a Spark job, and its version reads, inserts, travels and analyzes") {
+    val st = freshStore()
+    sparkActivity {
+      st.create("e", typed.limit(0), Seq(PrimaryKey(Seq("id"))))
+    }.jobs shouldBe 0
+    // the schema a Spark write of an empty frame records, in the sidecar
+    // and in the file's footer
+    st.create("s", typed.filter(col("id") < 0))
+    st.table("e").schema shouldBe st.table("s").schema
+    spark.read.parquet(s"${st.rootDir}/e/v0").schema shouldBe
+      spark.read.parquet(s"${st.rootDir}/s/v0").schema
+    st.table("e").schema.map(f => f.name -> f.dataType.simpleString) shouldBe Seq("id" -> "int",
+      "price" -> "decimal(12,2)", "day" -> "date", "flag" -> "boolean", "name" -> "string")
+    // a snapshot of zero rows is a local relation: reading it runs no job
+    st.table("e").queryExecution.analyzed shouldBe a[LocalRelation]
+    sparkActivity { st.table("e").collect() shouldBe empty }.jobs shouldBe 0
+    val stats = st.analyze("e")
+    (stats.rows, stats.version) shouldBe ((0L, 0))
+
+    st.insert("e", typed, onConflictDoNothing = true) shouldBe 2
+    st.insert("e", typed, onConflictDoNothing = true) shouldBe 0
+    st.pinVersion("e", "empty", 0) shouldBe 0
+    st.analyze("e").rows shouldBe 2
+    st.tableAt("e", 0).collect() shouldBe empty
+    st.tableAt("e", 0).schema shouldBe st.table("s").schema
+    st.table("e").orderBy("id").select("id", "price").as[(Int, BigDecimal)].collect().toSeq shouldBe
+      Seq((1, BigDecimal("10.50")), (2, BigDecimal("0.01")))
+  }
+
+  test("pinVersion answers from the record: no job, the same failure for a vacuumed or missing version") {
+    val st = freshStore()
+    st.create("t", typed)                                              // v0
+    st.update("t", col("id") === 1, Map("name" -> lit("z")))           // v1
+    // with no recorded schema any planned read would infer one in a job
+    withoutSchemaLines(st) {
+      sparkActivity { st.pinVersion("t", "first", 0) shouldBe 0 }.jobs shouldBe 0
+    }
+    st.update("t", col("id") === 2, Map("name" -> lit("y")))           // v2
+    st.analyze("t")                                                    // v1 vacuumed
+    the[IllegalArgumentException] thrownBy st.pinVersion("t", "gone", 1) should have message
+      "requirement failed: t version 1 was vacuumed; time travel only reaches versions " +
+        "analyze() has not reclaimed"
+    the[IllegalArgumentException] thrownBy st.pinVersion("t", "ahead", 3) should have message
+      "requirement failed: t has no version 3 (current: v2)"
+    st.tableAtPin("t", "first").filter(col("name") === "z").count() shouldBe 0
+  }
 }
